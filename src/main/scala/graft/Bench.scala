@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line per run (driver → BENCH_r{N}.json).
   *
@@ -27,26 +26,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // between entries, return the block manager to a clean slate:
-    // path-query closure checkpoints (and any stray persisted frame)
-    // would otherwise stay pinned for the JVM lifetime and tax
-    // whichever entries happen to run after them — the round-6
-    // sparql_* cluster "regression" was exactly that
-    def clearPinnedBlocks(): Unit = {
-      graft.sparql.Sparql.releaseClosures()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    val spark = Harness.session(cpus)
     // fixed-size deterministic job (shuffle + agg, no I/O): wall time
     // varies only with machine conditions, so its spread across the
     // run IS the contention measurement
@@ -67,10 +49,10 @@ object Bench {
     // shared JVM-wide and otherwise lands on whichever timed entry
     // runs first (the round-5 proj_* "regressions" were exactly that)
     for (name <- Seq("q1_pricing_summary", "sparql_bgp", "proj_zero_lag"))
-      try SparkEntry.queries.get(name).foreach(_(spark, sfDir).count())
+      try Harness.entry(spark, name)(
+        SparkEntry.queries.get(name).foreach(_(spark, sfDir).count()))
       catch { case _: Throwable => () }
     calibrate() // untimed warmup of the calibration plan itself
-    clearPinnedBlocks()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val times = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.ArrayBuffer[Double]]()
@@ -80,14 +62,18 @@ object Bench {
     val calib = scala.collection.mutable.ArrayBuffer[Double]()
     for (_ <- 1 to reps) {
       calib += calibrate()
+      // Harness.entry frees whatever an entry pinned before the next
+      // one runs, so a leak cannot tax the entries after it — the
+      // round-6 sparql_* cluster "regression" was exactly that
       queries.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); times(name) += (System.nanoTime() - t0) / 1e9 }
-        catch {
+        try Harness.entry(spark, name) {
+          fn(spark, sfDir).count(); times(name) += (System.nanoTime() - t0) / 1e9
+        } catch {
           case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
             times(name) += -1.0
-        } finally clearPinnedBlocks()
+        }
       }
     }
     calib += calibrate()
@@ -114,10 +100,11 @@ object Bench {
     val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"errors":$errs,"calibration":$cal,"sf":"$sfDir"}"""
     // also persist the line next to the plan dumps: a capture that
     // truncates stdout can be cross-checked against this byte-identical
-    // copy (best-effort — the bench result is the printed line)
+    // copy (best-effort — the bench result is the printed line). One
+    // file per core count, so runs at 8 and 32 cores keep both results.
     try {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_COPY", "plans/r09/bench_official.json"))
+      val out = java.nio.file.Paths.get(sys.env.getOrElse(
+        "SPARK_GRAFT_BENCH_COPY", s"plans/bench_official_${cpus}c.json"))
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

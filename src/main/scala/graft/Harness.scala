@@ -1,0 +1,44 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+import graft.plans.Checkpoints
+
+/** The shared harness for the command-line mains (Bench, Verify and
+  * the test-scope PlanDump/Scratch) and the test session: one session
+  * builder and one per-entry lifetime wrapper.
+  */
+object Harness {
+
+  /** Local session with `cpus` cores and as many shuffle partitions.
+    * `nanosAsLong` lets the fixtures' TIMESTAMP(NANOS) columns load
+    * (see [[graft.queries.Tables]]); UTC pins date rendering.
+    */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Run one entry inside a [[Checkpoints.withScope]] — the body must
+    * consume its result — then sweep whatever the scope did not free,
+    * so a leak cannot tax the entries after it. The sweep is a safety
+    * net, not the mechanism: anything it finds is reported on stderr
+    * as a leak of `name`.
+    */
+  def entry[T](spark: SparkSession, name: String)(body: => T): T =
+    try Checkpoints.withScope(body)
+    finally {
+      val leaked = spark.sparkContext.getPersistentRDDs.values
+      if (leaked.nonEmpty) {
+        System.err.println(s"[harness] $name: swept ${leaked.size} leaked persistent RDD(s)")
+        leaked.foreach(_.unpersist(blocking = false))
+      }
+    }
+}

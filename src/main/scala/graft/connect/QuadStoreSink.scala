@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.plans.Checkpoints
 import graft.rdf.{Quad, RdfPatchParser, Term}
 import graft.sparql.SparqlUpdate
 import graft.store.QuadStore
@@ -69,7 +70,15 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     b.join(t, cond, "left_anti").select(QUAD_COLS.map(col): _*).unionByName(adds)
   }
 
-  override def apply(batchId: Long, events: Seq[MaterialisedEvent]): Unit = {
+  /** Runs in its own [[Checkpoints.withScope]]: everything the commit
+    * pins (fold-chain cuts, a WHERE path's fixpoint) is dead once
+    * `commitOps` has written the segment, and a long-running connector
+    * must not accumulate pinned blocks across batches.
+    */
+  override def apply(batchId: Long, events: Seq[MaterialisedEvent]): Unit =
+    Checkpoints.withScope(commit(batchId, events))
+
+  private def commit(batchId: Long, events: Seq[MaterialisedEvent]): Unit = {
     import spark.implicits._
     // patch op streams resolve batch-wide: a transaction opened by one
     // event may be committed (or aborted) by a later one
@@ -101,11 +110,6 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
       state
     }
     var foldsSinceCut = 0
-    // lazy checkpoint cuts made this batch: their blocks materialize
-    // (at most once) inside the commitOps write and are dead after it,
-    // so they are unpersisted once the commit returns — a long-running
-    // streaming job must not accumulate pinned blocks across batches
-    val checkpointCuts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def foldResolved(df: DataFrame): Unit = {
       // stays LAZY: the resolved plan runs ONCE, inside the single
       // commitOps write — replay is safe because commitOps never
@@ -122,8 +126,9 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
       state = applyDelta(currentState(), touched, adds)
       foldsSinceCut += 1
       if (foldsSinceCut >= 8) {
-        state = state.localCheckpoint(false)
-        checkpointCuts += state
+        // a lazy cut: its blocks materialize (at most once) inside the
+        // commitOps write and are dead after it
+        state = Checkpoints.register(state.localCheckpoint(false))
         foldsSinceCut = 0
       }
     }
@@ -239,8 +244,7 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
         }.toDF())
     }
     val ops = (resolved ++ bulkOps).foldLeft(local.toSeq.toDF())(_.unionByName(_))
-    try store.commitOps(batchId, ops)
-    finally checkpointCuts.foreach(graft.plans.Checkpoints.unpersist(_))
+    store.commitOps(batchId, ops)
     // PA/PD prefix ops update the dataset prefix map in event order
     // (RDFChangesApply semantics; SURVEY §2.1 row 6)
     val prefixOps = events.flatMap { m =>

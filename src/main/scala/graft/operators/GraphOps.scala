@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.plans.Checkpoints
+
 /** Distributed graph analytics over edge DataFrames. Companion to the
   * fixpoint machinery already in the engine (connected components in
   * [[graft.pipeline.Dedup.clusterComponents]], transitive closure in
@@ -76,10 +78,17 @@ object GraphOps {
         .localCheckpoint()
       // free the superseded round's blocks (Dataset.unpersist never
       // touches localCheckpoint blocks — see Checkpoints)
-      pinned.foreach(graft.plans.Checkpoints.unpersist(_))
+      pinned.foreach(Checkpoints.unpersist(_))
       pinned = Some(next)
       ranks = next
     }
-    ranks
+    // the last round is self-contained (a checkpoint has no lineage),
+    // so the edge and node tables are dead once it exists; with zero
+    // rounds the result still reads `nodes`
+    Checkpoints.unpersist(e)
+    pinned match {
+      case Some(last) => Checkpoints.unpersist(nodes); Checkpoints.register(last)
+      case None => Checkpoints.register(nodes); ranks
+    }
   }
 }

@@ -75,7 +75,9 @@ object Bpe {
     * Each round localCheckpoints the small word table (cuts the
     * per-round lineage so round k is not a k-deep nested fold) and
     * frees the superseded round's blocks via [[Checkpoints]] — the
-    * same per-round hygiene as the SPARQL path closure.
+    * same per-round hygiene as the SPARQL path closure. The final table
+    * is registered with the caller's scope; a caller that only needs
+    * the merges may unpersist it at once.
     */
   def learn(docs: DataFrame, nMerges: Int, textCol: String = "text")
       : (Seq[Merge], DataFrame) = {
@@ -108,7 +110,7 @@ object Bpe {
         rank += 1
       }
     }
-    (merges.result(), wt)
+    (merges.result(), Checkpoints.register(wt))
   }
 
   /** The learned merge list as a DataFrame (rank, lhs, rhs,

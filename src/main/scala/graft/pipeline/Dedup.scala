@@ -301,8 +301,7 @@ object Dedup {
     // smaller than the keyed corpus relation), so the keyed checkpoint
     // can be freed right here instead of pinning corpus-scale blocks
     // for the JVM lifetime (guide §5); the candidate checkpoint itself
-    // registers for scoped release (Checkpoints.withScope callers —
-    // harnesses sweep the block manager between entries either way)
+    // registers with the caller's Checkpoints.withScope
     val within = a.join(b, col("a.band") === col("b.band") &&
         col("a.key") === col("b.key") && col("a.id") < col("b.id") &&
         hamming(col("a.chunks"), col("b.chunks")) <= maxHamming)
@@ -526,6 +525,6 @@ object Dedup {
       else { Checkpoints.unpersist(cur); cur = next; curSum = nextSum }
     }
     Checkpoints.unpersist(edges) // cur is materialized; edges are done
-    cur.select(col("id").as(idCol), col("comp").as("cluster"))
+    Checkpoints.register(cur).select(col("id").as(idCol), col("comp").as("cluster"))
   }
 }

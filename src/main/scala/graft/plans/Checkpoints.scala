@@ -4,7 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Block-manager hygiene for checkpointed DataFrames.
+/** Block-manager hygiene for checkpointed DataFrames — the ONE
+  * lifetime mechanism for every materialized intermediate.
   *
   * `Dataset.localCheckpoint()` pins the materialized rows in the block
   * manager via the INTERNAL row RDD it wraps in a [[LogicalRDD]];
@@ -13,6 +14,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpoint per round (transitive closure, long update scripts)
   * must therefore unpersist at the RDD level or they pin
   * O(rounds × data) storage for the JVM lifetime.
+  *
+  * Two rules cover every operator: a checkpoint that is dead when the
+  * function returns is [[unpersist]]ed there; one the returned plan
+  * still reads is [[register]]ed, and the caller's [[withScope]] frees
+  * it once the result is consumed. Long-lived callers each own one
+  * scope: the HTTP server per request, the connector sink per commit,
+  * the harnesses per entry ([[graft.Harness.entry]]).
   */
 object Checkpoints {
 
@@ -36,11 +44,9 @@ object Checkpoints {
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]()
 
   /** Register a checkpointed frame for release when the enclosing
-    * [[withScope]] completes; with no enclosing scope the frame stays
-    * pinned for the caller to release (the bench/verify harnesses
-    * sweep the block manager between entries). Mirrors the SPARQL
-    * engine's closureScope discipline for pipeline operators whose
-    * returned plan still reads a checkpoint.
+    * [[withScope]] completes. With no enclosing scope nothing tracks
+    * the frame: it stays pinned until a harness sweep, which
+    * [[graft.Harness.entry]] reports as a leak.
     */
   def register(df: DataFrame): DataFrame = {
     Option(scope.get()).foreach(_ += df)
@@ -48,8 +54,10 @@ object Checkpoints {
   }
 
   /** Run `f` with every [[register]]ed checkpoint on THIS thread freed
-    * when `f` completes — the per-request discipline for long-running
-    * callers: compile AND consume the result inside `f`.
+    * when `f` completes: compile AND consume the result inside `f`.
+    * Scopes nest, and each frees only its own registrations, so an
+    * inner scope never touches a frame an outer plan still reads (nor
+    * another thread's — the registry is thread-local).
     */
   def withScope[T](f: => T): T = {
     val outer = scope.get()

@@ -77,9 +77,9 @@ object RdfCanonical {
       graft.plans.Checkpoints.unpersist(h)
       h = next
     }
-    val out = h.select(col("b").as("blank"), col("h").as("canon"))
     graft.plans.Checkpoints.unpersist(base)
-    out
+    graft.plans.Checkpoints.register(h)
+      .select(col("b").as("blank"), col("h").as("canon"))
   }
 
   /** The dataset as canonical N-Quads lines: blank labels replaced by
@@ -189,7 +189,8 @@ object RdfCanonical {
         coalesce(col("orend"), col("ont"))).as("line"))
     // materialize the (small — one row per graph) result EAGERLY so
     // the base/round blocks can be freed now instead of pinning the
-    // blank-occurrence table for the caller's lifetime
+    // blank-occurrence table for the caller's lifetime; the result
+    // itself is registered with the caller's scope
     val out = lines.groupBy(col("g"))
       .agg(md5(concat_ws("\n", array_sort(collect_list(col("line")))))
         .as("fingerprint"))
@@ -197,6 +198,6 @@ object RdfCanonical {
       .localCheckpoint()
     graft.plans.Checkpoints.unpersist(h)
     graft.plans.Checkpoints.unpersist(base)
-    out
+    graft.plans.Checkpoints.register(out)
   }
 }

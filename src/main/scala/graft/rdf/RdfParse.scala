@@ -164,15 +164,21 @@ object RdfParse {
     * (SURVEY.md §2.3 row 26 exactly-once note).
     *
     * The parser emits InternalRows directly (via
-    * [[org.apache.spark.sql.graftbridge.InternalRows]]) instead of
+    * [[org.apache.spark.sql.graft.bridge.toDataFrame]]) instead of
     * round-tripping Seq[Quad] through the case-class
     * ExpressionEncoder: the serializer re-walked every nested Term
     * object per row (MapObjects loops), a per-quad cost the parser —
     * which already knows the exact output shape — need not pay. Same
     * rows, same schema; only the construction layer changes.
+    *
+    * Batch-only: the rows are built from `queryExecution.toRdd`, which
+    * a streaming frame does not have — streaming ingest decodes per
+    * micro-batch (see [[graft.streaming.IngestPipeline]]).
     */
   def decodeEvents(df: DataFrame,
       jsonLdContexts: Map[String, String] = Map.empty): DataFrame = {
+    require(!df.isStreaming,
+      "decodeEvents is batch-only; decode each micro-batch instead")
     val spark = df.sparkSession
     // the registry is a plain immutable map captured by the decode
     // closure — it ships once per task like any broadcast-small state
@@ -200,6 +206,6 @@ object RdfParse {
           UTF8String.fromString(d._corrupt))): InternalRow
       }
     }
-    org.apache.spark.sql.graftbridge.InternalRows.toDataFrame(spark, rdd, DECODED_SCHEMA)
+    org.apache.spark.sql.graft.bridge.toDataFrame(spark, rdd, DECODED_SCHEMA)
   }
 }

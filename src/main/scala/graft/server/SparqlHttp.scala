@@ -12,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.connect.{Event, MaterialisedEvent, QuadStoreSink}
+import graft.plans.Checkpoints
 import graft.rdf.{NtWriter, RdfParse, RdfParseException, Term, TurtleWriter}
 import graft.sparql.{ResultsWriter, Sparql, SparqlService}
 import graft.store.{AggView, QuadStore}
@@ -129,11 +130,11 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
 
   private final class Router extends HttpHandler {
     override def handle(ex: HttpExchange): Unit =
-      // per-request closure scope: a property-path query's fixpoint
-      // checkpoints free when the response finishes streaming, so a
-      // long-running server never accumulates pinned blocks across
-      // requests (the bench-harness leak fix, applied per request)
-      try Sparql.withClosureScope(route(ex))
+      // one checkpoint scope per request: whatever the request's plans
+      // pinned (path fixpoints, operator checkpoints) frees when the
+      // response finishes streaming, so a long-running server never
+      // accumulates pinned blocks across requests
+      try Checkpoints.withScope(route(ex))
       catch {
         case e: HttpError => respond(ex, e.code, "text/plain", e.getMessage)
         case e: RdfParseException => respond(ex, 400, "text/plain", e.getMessage)

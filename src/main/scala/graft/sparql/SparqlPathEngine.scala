@@ -8,10 +8,13 @@ import graft.rdf.{RdfParseException, Term}
 
 /** Property-path engine: evaluates a [[Sparql.PathExpr]] to a
   * (ps, po) pair relation — sequence/alternative/inverse by relational
-  * composition, `+`/`*` as a distributed doubling fixpoint over
-  * localCheckpoint'd closures (released via [[Sparql.releaseClosures]]).
-  * Mixed into [[Sparql]]; split out for reviewability only — no
-  * behavior or API change.
+  * composition, `+`/`*` as a distributed fixpoint over
+  * localCheckpoint'd rounds. A round that is dead when its fixpoint
+  * function returns is unpersisted there; every checkpoint the
+  * returned plan still reads (fixpoint, seeded parts, dictionary,
+  * zero-length nodes) is [[Checkpoints.register]]ed, so the caller's
+  * [[Checkpoints.withScope]] frees it once the result is consumed.
+  * Mixed into [[Sparql]]; split out for reviewability only.
   */
 private[sparql] trait SparqlPathEngine { this: Sparql.type =>
   import Sparql._
@@ -130,7 +133,7 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     * against the flipped relation and flips the result back (the
     * object-seeded case). Checkpoint hygiene mirrors [[closure]]:
     * per-round localCheckpoints, superseded rounds unpersisted
-    * immediately, the fixpoint registered for release.
+    * immediately, the parts registered with the caller's scope.
     */
   private[sparql] def seededClosure(edges: DataFrame, seed: Term,
       grouped: Boolean, forward: Boolean): DataFrame = {
@@ -212,12 +215,7 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     }
     // every part is materialized; nothing reads the step relation again
     Checkpoints.unpersist(step)
-    handles.foreach { h =>
-      Option(closureScope.get()) match {
-        case Some(scope) => scope += h
-        case None => liveClosures.synchronized { liveClosures += h }
-      }
-    }
+    handles.foreach(Checkpoints.register)
     val tl = termLit(seed)
     val all = parts.reduce(_.unionByName(_))
     if (forward) all.select(pg() ++ Seq(tl.as("ps"), col("po")): _*)
@@ -278,9 +276,9 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     * immediately (at closure sizes proportional to the data, leaking
     * one copy per doubling round pins O(rounds × closure) storage for
     * the JVM lifetime). Only the fixpoint result stays pinned, because
-    * the caller's plan still reads it; it is registered in
-    * [[liveClosures]] so [[releaseClosures]] can free it once the
-    * query's result has been consumed.
+    * the caller's plan still reads it; it is
+    * [[Checkpoints.register]]ed for the caller's scope to free once
+    * the query's result has been consumed.
     */
   /** Whether a path's one-step relation is a bare scan shape
     * (filter+project over the quads — cheap to re-execute) as opposed
@@ -361,16 +359,9 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
       // checkpointed result feeds BOTH the dictionary and the encoded
       // union below, so the scoped-quads scan and the distinct are
       // paid once, not per consumer
-      val zeroDistinct = zeroNodes.map { nodes =>
-        val zd = nodes
-          .dropDuplicates((if (grouped) Seq("pg") else Seq.empty) :+ "n")
-          .localCheckpoint()
-        Option(closureScope.get()) match {
-          case Some(scope) => scope += zd
-          case None => liveClosures.synchronized { liveClosures += zd }
-        }
-        zd
-      }
+      val zeroDistinct = zeroNodes.map(nodes => Checkpoints.register(nodes
+        .dropDuplicates((if (grouped) Seq("pg") else Seq.empty) :+ "n")
+        .localCheckpoint()))
       // one exchange, one job: group raw term occurrences by their
       // hash id; the injectivity check (max distinct terms per id,
       // 1 = injective) rides the dictionary's checkpoint via observe.
@@ -394,10 +385,7 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
         Checkpoints.unpersist(dict)
         withZeroStruct(structLoop())
       } else {
-        Option(closureScope.get()) match {
-          case Some(scope) => scope += dict
-          case None => liveClosures.synchronized { liveClosures += dict }
-        }
+        Checkpoints.register(dict)
         // encode + dedup + pre-partition in ONE exchange: the
         // (pg?, ps) repartition both satisfies dropDuplicates'
         // clustering and leaves round 1's build side exchange-free
@@ -481,51 +469,9 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
       if (n == size) { Checkpoints.unpersist(next); fixed = true }
       else { size = n; Checkpoints.unpersist(cur); cur = next }
     }
-    Option(closureScope.get()) match {
-      case Some(scope) => scope += cur
-      case None => liveClosures.synchronized { liveClosures += cur }
-    }
-    cur
+    Checkpoints.register(cur)
   }
 
-  private[sparql] val closureScope =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]()
-
-  /** Run `f` with every closure fixpoint materialized on THIS thread
-    * collected into a scope freed when `f` completes — the per-request
-    * discipline for long-running multi-tenant callers (the HTTP
-    * server wraps each request): one request's path queries cannot pin
-    * blocks past their response, and releasing them never touches a
-    * concurrent request's still-streaming closures, which the global
-    * [[releaseClosures]] would. The compile AND the result consumption
-    * must both happen inside `f` (both do, for a request handler).
-    */
-  def withClosureScope[T](f: => T): T = {
-    val outer = closureScope.get()
-    val mine = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    closureScope.set(mine)
-    try f
-    finally {
-      closureScope.set(outer)
-      mine.foreach(Checkpoints.unpersist(_))
-    }
-  }
-
-  /** Fixpoint results whose checkpoint blocks are still pinned (the
-    * caller's lazy plan reads them). A long-running session — or the
-    * bench harness between entries — calls [[releaseClosures]] after
-    * consuming results to return the block manager to its pre-query
-    * footprint.
-    */
-  private[sparql] val liveClosures = scala.collection.mutable.ArrayBuffer[DataFrame]()
-
-  /** Unpersist every closure checkpoint still pinned by past path
-    * queries. Safe once their results have been consumed; a plan that
-    * still references one would recompute from a freed checkpoint and
-    * fail, so call between queries, not mid-consumption.
-    */
-  def releaseClosures(): Unit = liveClosures.synchronized {
-    liveClosures.foreach(Checkpoints.unpersist(_))
-    liveClosures.clear()
-  }
+  /** Kept for callers that predate [[Checkpoints.withScope]]. */
+  def withClosureScope[T](f: => T): T = Checkpoints.withScope(f)
 }

@@ -189,8 +189,12 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     val finalRef =
       if (obs.get("nonAdds").asInstanceOf[Long] == 0L) {
         val marked = ref.name + "-a"
-        Files.move(dir.resolve(ref.name), dir.resolve(marked),
-          StandardCopyOption.ATOMIC_MOVE)
+        // a crash between an earlier attempt's rename and its version
+        // write leaves this name behind; no version references it, and
+        // the move below cannot replace a non-empty directory
+        val target = dir.resolve(marked)
+        if (Files.exists(target)) deleteRecursively(target)
+        Files.move(dir.resolve(ref.name), target, StandardCopyOption.ATOMIC_MOVE)
         ref.copy(name = marked, addsOnly = true)
       } else ref
     val segs = existing match {
@@ -672,12 +676,6 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     var removed = 0
     val retired = readRetired()
     val stillDead = scala.collection.mutable.LinkedHashMap[String, Long]()
-    def deleteRecursively(p: java.nio.file.Path): Unit = {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally st.close()
-    }
     // delete only once the path has been dead for the full grace
     // window; otherwise (re-)journal it and leave the files alone
     def reap(p: java.nio.file.Path, key: String): Unit = {
@@ -711,6 +709,13 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     } finally top.close()
     writeRetired(stillDead.toMap)
     removed
+  }
+
+  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+    val st = Files.walk(p)
+    try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(f => Files.delete(f))
+    finally st.close()
   }
 
   private def retiredFile = dir.resolve("_retired")

@@ -143,41 +143,31 @@ object StreamingQueries {
     // cluster the operator inherits the session's partitioning, and
     // this session-scoped override restores afterwards either way.
     val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // State-store provider: RocksDB + changelog checkpointing by
-    // default. The HDFS-backed store writes one snapshot file per
-    // partition per stateful operator per commit — the stream-stream
-    // join entries (FOUR stores per partition) paid it hardest, and
-    // the head-to-head (OPTIMIZATION_r09.md: join 5.2→4.0 s median,
-    // join_outer 5.5→3.3 s; aggregations flat; custom-state +0.3 s)
-    // favors RocksDB locally. At scale the choice is structural, not a
-    // tuning knob: the HDFS store holds state in JVM heap maps, so
-    // state beyond memory NEEDS RocksDB. SPARK_GRAFT_STREAM_STATESTORE
-    // =hdfs restores the old provider for A/Bs.
-    val provConf = "spark.sql.streaming.stateStore.providerClass"
-    val chgConf =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProv = spark.conf.getOption(provConf)
-    val useRocks =
-      !sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").contains("hdfs")
-    if (useRocks) {
-      spark.conf.set(provConf, "org.apache.spark.sql.execution.streaming" +
-        ".state.RocksDBStateStoreProvider")
-      spark.conf.set(chgConf, "true")
-    }
+    // State-store provider: RocksDB + changelog checkpointing. The
+    // HDFS-backed store writes one snapshot file per partition per
+    // stateful operator per commit — the stream-stream join entries
+    // (FOUR stores per partition) paid it hardest, and the head-to-head
+    // (OPTIMIZATION_r09.md: join 5.2→4.0 s median, join_outer 5.5→3.3 s;
+    // aggregations flat; custom-state +0.3 s) favors RocksDB locally.
+    // At scale the choice is structural, not a tuning knob: the HDFS
+    // store holds state in JVM heap maps, so state beyond memory NEEDS
+    // RocksDB. Every override is session-scoped and restored below.
+    val overrides = Seq(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
         .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      if (useRocks) prevProv match {
-        case Some(p) => spark.conf.set(provConf, p)
-        case None => spark.conf.unset(provConf)
-      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
     df.sparkSession.table(name)
   }

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (optimization guide §1): dump `.explain("formatted")`
   * for named entries to files, and optionally time each one against the
   * noop sink (computes every column, no output cost — §1.4).
@@ -20,16 +18,8 @@ object PlanDump {
     val time = args.contains("--time")
     val suffix = args.find(_.startsWith("--suffix=")).map(_.drop(9)).getOrElse("")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    names.foreach { name => Harness.entry(spark, name) {
       val fn = SparkEntry.queries(name)
       spark.sparkContext.setJobDescription(name)
       val df = fn(spark, sfDir)
@@ -43,9 +33,7 @@ object PlanDump {
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"[plandump] $name noop=$dt%.3f s")
       }
-      graft.sparql.Sparql.releaseClosures()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    }}
     spark.stop()
   }
 }

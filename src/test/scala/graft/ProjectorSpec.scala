@@ -114,6 +114,27 @@ class ProjectorSpec extends AnyFunSuite {
     assert(preds == Set("http://g/p", "http://g/copy"))
   }
 
+  test("a committed update whose WHERE runs a path closure leaves nothing pinned") {
+    // the sink owns one checkpoint scope per commit: the fixpoint the
+    // WHERE's `+` path materializes is dead once the segment is written
+    val store = new graft.store.QuadStore(TestSpark.spark,
+      Files.createTempDirectory("sinkpath").toString)
+    val chain = (0 until 6).map(i =>
+      s"<http://g/n$i> <http://g/next> <http://g/n${i + 1}> .").mkString("\n")
+    val update = "INSERT { ?s <http://g/reach> ?o } WHERE { ?s <http://g/next>+ ?o }"
+    val evs = Seq(
+      Event("t", 0, 0, Array.empty, chain.getBytes("UTF-8"),
+        Map("Content-Type" -> "application/n-quads")),
+      Event("t", 0, 1, Array.empty, update.getBytes("UTF-8"),
+        Map("Content-Type" -> "application/sparql-update")))
+    val before = TestSpark.pinned()
+    new Projector(new MemoryEventSource(evs), new QuadStoreSink(TestSpark.spark, store),
+      ProjectorConfig(batchSize = 10)).runToCompletion()
+    assert(TestSpark.awaitPinned(before) == before, "the commit left persistent RDDs")
+    import org.apache.spark.sql.functions.col
+    assert(store.quads().filter(col("predicate.lex") === "http://g/reach").count() == 21)
+  }
+
   test("cross-event TA aborts ops carried from the opening event") {
     val store = new graft.store.QuadStore(TestSpark.spark,
       java.nio.file.Files.createTempDirectory("txnabort").toString)

@@ -3,15 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.Checkpoints
+
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
+
+  /** Ids of the RDDs currently persisted (checkpoints included). */
+  def pinned(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** [[pinned]] once it equals `expected`, or after 10 s — unpersist
+    * may complete asynchronously, so callers poll before asserting.
+    */
+  def awaitPinned(expected: Set[Int]): Set[Int] = {
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (pinned() != expected && System.nanoTime() < deadline) Thread.sleep(50)
+    pinned()
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {
@@ -29,10 +36,34 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("all queries execute at sf0.001 and are non-degenerate") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      val n = df.count()
+    // and leak-free: whatever an entry materializes is either freed in
+    // the function that made it or registered with the caller's scope,
+    // so the block manager returns to its pre-entry state with no sweep
+    val leaks = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val before = TestSpark.pinned()
+      val n = Checkpoints.withScope(fn(spark, sf).count())
       withClue(s"$name: ") { assert(n >= 0) }
+      val left = TestSpark.awaitPinned(before) -- before
+      if (left.isEmpty) None else Some(s"$name: ${left.size}")
+    }
+    assert(leaks.isEmpty, s"entries left persistent RDDs: ${leaks.mkString(", ")}")
+  }
+
+  test("streaming entries restore every session conf they override") {
+    // starting values no override uses, so a leaked one cannot match —
+    // whatever earlier tests left on the shared session
+    val start = Seq("spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false")
+    val saved = start.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      start.foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(SparkEntry.queries("streaming_window")(spark, sf).count() > 0)
+      assert(start.map { case (k, _) => k -> spark.conf.get(k) } == start)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

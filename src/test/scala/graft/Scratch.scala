@@ -1,34 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-// Dev-only profiling scratchpad (test scope — never ships): times
-// sub-steps of heavy entries. sbt 'Test/runMain graft.Scratch <which>'
+// Dev-only profiling scratchpad (test scope — never ships):
+//   sbt 'Test/runMain graft.Scratch entrybench <entry>[,entry...] [reps]'
+//   sbt 'Test/runMain graft.Scratch floor <entry>[,entry...] [reps]'
 object Scratch {
-  def time[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[scratch] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    r
-  }
-  def noop(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.queries.Tables.t
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    def run(n: String): Unit =
+      Harness.entry(spark, n)(SparkEntry.queries(n)(spark, sfDir).count())
 
-    args.headOption.getOrElse("ngram") match {
+    args(0) match {
       case "entrybench" =>
         // dev-only: min-of-N is robust to sandbox contention spikes
         def calibrate(): Double = {
@@ -41,64 +23,14 @@ object Scratch {
         println(f"[entrybench] calibration ${(1 to 3).map(_ => calibrate()).min}%.3f")
         val names = args(1).split(",").toSeq
         val reps = args.lift(2).map(_.toInt).getOrElse(5)
-        names.foreach { n => // warmup
-          SparkEntry.queries(n)(spark, sfDir).count()
-          graft.sparql.Sparql.releaseClosures()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+        names.foreach(run) // warmup
         names.foreach { n =>
           val ts = (1 to reps).map { _ =>
             val t0 = System.nanoTime()
-            SparkEntry.queries(n)(spark, sfDir).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            graft.sparql.Sparql.releaseClosures()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-            dt
+            run(n)
+            (System.nanoTime() - t0) / 1e9
           }
           println(f"[entrybench] $n%-28s min=${ts.min}%7.3f med=${ts.sorted.apply(ts.length / 2)}%7.3f all=${ts.map(t => f"$t%.2f").mkString(",")}")
-        }
-      case "countab" =>
-        // count() identity variants over the adds-only scale store:
-        // (1) current hash-pair fold, (2) adds-only hash distinct,
-        // (3) per-term-id distinct + injectivity check (exact),
-        // (4) struct distinct (exact, wide)
-        import java.nio.file.Files
-        val storePath = Files.createTempDirectory("scalestore").toString
-        val store = new graft.store.QuadStore(spark, storePath)
-        val events = streaming.IngestPipeline.syntheticEvents(spark, 10000L, 1000)
-        (0 until 4).foreach { b =>
-          streaming.IngestPipeline.ingest(
-            events.filter(expr("offset div 2500") === b), store, b.toLong,
-            countApplied = false)
-        }
-        val paths = store.committedSegments().map(n => s"$storePath/$n")
-        val raw = spark.read.parquet(paths: _*)
-        val Q = Seq("graph", "subject", "predicate", "obj")
-        for (rep <- 1 to 3) {
-          time(s"$rep: store.count (hash-pair fold)")(println(store.count()))
-          time(s"$rep: hash-pair distinct") {
-            println(raw.select(xxhash64(Q.map(col): _*).as("h64"),
-                hash(Q.map(col): _*).as("h32"))
-              .dropDuplicates("h64", "h32").count())
-          }
-          time(s"$rep: term-id distinct + inj check") {
-            val terms = raw.select(explode(array(Q.map(col): _*)).as("t"))
-              .filter(col("t").isNotNull)
-            val inj = terms.groupBy(xxhash64(col("t")).as("tid"))
-              .agg(countDistinct(col("t")).as("nd"))
-              .agg(max(col("nd"))).head().getLong(0)
-            require(inj == 1L, "not injective")
-            val ids = raw.select(Q.map(c =>
-              when(col(c).isNotNull, xxhash64(col(c))).as(c)): _*)
-            println(ids.dropDuplicates(Q).count())
-          }
-          time(s"$rep: term-id distinct only") {
-            val ids = raw.select(Q.map(c =>
-              when(col(c).isNotNull, xxhash64(col(c))).as(c)): _*)
-            println(ids.dropDuplicates(Q).count())
-          }
-          time(s"$rep: struct distinct")(
-            println(raw.select(Q.map(col): _*).distinct().count()))
         }
       case "floor" =>
         // where do sub-second entries spend time? per-entry: wall vs
@@ -119,504 +51,14 @@ object Scratch {
           override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
             if (t.taskInfo != null) taskTime.addAndGet(t.taskInfo.duration)
         })
-        names.foreach { n => // warmup
-          SparkEntry.queries(n)(spark, sfDir).count()
-          graft.sparql.Sparql.releaseClosures()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+        names.foreach(run) // warmup
         names.foreach { n =>
           val t0 = System.nanoTime(); jobs.set(0); stages.set(0); tasks.set(0); taskTime.set(0)
-          (1 to reps).foreach { _ =>
-            SparkEntry.queries(n)(spark, sfDir).count()
-            graft.sparql.Sparql.releaseClosures()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          }
+          (1 to reps).foreach(_ => run(n))
           Thread.sleep(300) // let the listener bus drain
           val wall = ((System.nanoTime() - t0) / 1e9 - 0.3) / reps
           println(f"[floor] $n%-26s wall=$wall%6.3f jobs=${jobs.get / reps}%3d stages=${stages.get / reps}%3d tasks=${tasks.get / reps}%5d taskSec=${taskTime.get / 1e3 / reps}%7.2f")
         }
-      case "starplan" =>
-        // PStar plan + timing: a `*` path over the scale chain graph
-        // (no declared entry uses `*`; this pins the encoded-union
-        // shape for the optimization record)
-        import graft.rdf.Term
-        val NS = "http://graft.example/"
-        val termType = "struct<termType:string,lex:string,datatype:string,lang:string>"
-        def node(c: org.apache.spark.sql.Column) = struct(
-          lit(Term.IRI).as("termType"),
-          concat(lit(s"${NS}n/"), c.cast("string")).as("lex"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang"))
-        val quads = t(spark, sfDir, "events")
-          .select(col("event_id").cast("long").as("id"))
-          .filter(col("id") % 20 =!= 19)
-          .select(
-            lit(null).cast(termType).as("graph"),
-            node(col("id")).as("subject"),
-            struct(lit(Term.IRI).as("termType"), lit(s"${NS}next").as("lex"),
-              lit(null).cast("string").as("datatype"),
-              lit(null).cast("string").as("lang")).as("predicate"),
-            node(col("id") + 1).as("obj"))
-        for (rep <- 1 to 3) {
-          val t0 = System.nanoTime()
-          val res = graft.sparql.Sparql.execute(quads,
-            s"SELECT ?s ?o { ?s <${NS}next>* ?o }")
-          val n = res.count()
-          println(f"[starplan] rep $rep n=$n ${(System.nanoTime() - t0) / 1e9}%.3f s")
-          if (rep == 1) java.nio.file.Files.write(
-            java.nio.file.Paths.get(args.lift(1).getOrElse("/tmp/starplan.txt")),
-            res.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-          graft.sparql.Sparql.releaseClosures()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
-      case "ngramab" =>
-        // in-JVM A/B: current operator vs no-checkpoint vs no-posfilter
-        import org.apache.spark.sql.expressions.Window
-        val docs = t(spark, sfDir, "documents")
-        val threshold = 0.5
-        def variant(ckpt: Boolean, posFilter: Boolean): DataFrame = {
-          val withSh = docs.select(col("doc_id").as("id"),
-            pipeline.Dedup.shingles(col("text"), 3).as("sh"))
-          val sized = withSh.withColumn("len", size(col("sh"))).filter(col("len") > 0)
-          val tok = sized.select(col("id"), col("len"), explode(col("sh")).as("tok"))
-          val freq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
-          val prefix0 = tok.join(freq, "tok")
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))))
-            .filter(col("rk") <= col("len") - ceil(col("len") * lit(threshold)) + 1)
-            .select(col("id"), col("len"), col("rk"), xxhash64(col("tok")).as("tok"))
-          val prefix = if (ckpt) prefix0.localCheckpoint() else prefix0
-          val a = prefix.alias("a"); val b = prefix.alias("b")
-          val overlapNeeded =
-            (col("a.len") + col("b.len")) * lit(threshold / (1 + threshold)) - lit(1e-9)
-          val baseCond = col("a.tok") === col("b.tok") &&
-            col("a.id") < col("b.id") &&
-            col("b.len") * lit(threshold) <= col("a.len") &&
-            col("a.len") * lit(threshold) <= col("b.len")
-          val cond = if (posFilter) baseCond &&
-            (least(col("a.len") - col("a.rk"), col("b.len") - col("b.rk")) + 1)
-              .cast("double") >= overlapNeeded else baseCond
-          val cands = a.join(b, cond)
-            .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-          val shA = withSh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-          val shB = withSh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-          cands.join(shA, "id_a").join(shB, "id_b")
-            .select(col("id_a"), col("id_b"),
-              pipeline.Dedup.jaccard(col("sh_a"), col("sh_b")).as("j"))
-            .filter(col("j") >= threshold)
-        }
-        noop(variant(ckpt = true, posFilter = true)) // warm
-        (1 to 3).foreach { r =>
-          time(s"rep$r ckpt+pos (current)")(noop(variant(true, true)))
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          time(s"rep$r lazy+pos")(noop(variant(false, true)))
-          time(s"rep$r ckpt+nopos")(noop(variant(true, false)))
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          time(s"rep$r lazy+nopos (old)")(noop(variant(false, false)))
-        }
-      case "simhashab" =>
-        val docs = t(spark, sfDir, "documents")
-        def variant(ckptKeyed: Boolean, ckptSh: Boolean): DataFrame = {
-          val withSh0 = docs.select(col("doc_id").as("id"),
-            pipeline.Dedup.shingles(col("text"), 3).as("sh"))
-          val withSh = if (ckptSh) withSh0.localCheckpoint() else withSh0
-          val keyed0 = docs
-            .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-            .select(col("id"), functions.Sketches.simhashChunks(col("toks")).as("chunks"),
-              posexplode(functions.Sketches.simhashPairKeys(col("toks"))).as(Seq("band", "key")))
-          val small = keyed0.groupBy(col("band"), col("key"))
-            .agg(count(lit(1)).as("_n")).filter(col("_n") <= 64)
-            .select(col("band"), col("key"))
-          val keyed1 = keyed0.join(small, Seq("band", "key"), "left_semi")
-          val keyed = if (ckptKeyed) keyed1.localCheckpoint() else keyed1
-          val a = keyed.alias("a"); val b = keyed.alias("b")
-          val within = a.join(b, col("a.band") === col("b.band") &&
-              col("a.key") === col("b.key") && col("a.id") < col("b.id") &&
-              pipeline.Dedup.hamming(col("a.chunks"), col("b.chunks")) <= 9)
-            .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-            .distinct()
-          val shA = withSh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-          val shB = withSh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-          within.join(shA, "id_a").join(shB, "id_b")
-            .select(col("id_a"), col("id_b"),
-              pipeline.Dedup.jaccard(col("sh_a"), col("sh_b")).as("j"))
-            .filter(col("j") >= 0.5)
-        }
-        noop(variant(true, true)) // warm
-        (1 to 3).foreach { r =>
-          time(s"rep$r ckpt both (current)")(noop(variant(true, true)))
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          time(s"rep$r lazy both (old)")(noop(variant(false, false)))
-          time(s"rep$r ckpt keyed only")(noop(variant(true, false)))
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
-      case "ngram2" =>
-        val docs = t(spark, sfDir, "documents")
-        // warm
-        noop(pipeline.Dedup.nearDupNgramJaccard(docs))
-        time("full ngram noop (warm)")(noop(pipeline.Dedup.nearDupNgramJaccard(docs)))
-        // pieces with the NEW pipeline
-        import org.apache.spark.sql.expressions.Window
-        val threshold = 0.5
-        val withSh = docs.select(col("doc_id").as("id"),
-          pipeline.Dedup.shingles(col("text"), 3).as("sh"))
-        val sized = withSh.withColumn("len", size(col("sh"))).filter(col("len") > 0)
-        val tok = sized.select(col("id"), col("len"), explode(col("sh")).as("tok"))
-        val freq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
-        val prefix0 = tok.join(freq, "tok")
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))))
-          .filter(col("rk") <= col("len") - ceil(col("len") * lit(threshold)) + 1)
-          .select(col("id"), col("len"), col("rk"), xxhash64(col("tok")).as("tok"))
-        val prefix = time("prefix checkpoint")(prefix0.localCheckpoint())
-        val a = prefix.alias("a"); val b = prefix.alias("b")
-        val overlapNeeded =
-          (col("a.len") + col("b.len")) * lit(threshold / (1 + threshold)) - lit(1e-9)
-        val cands = a.join(b, col("a.tok") === col("b.tok") &&
-            col("a.id") < col("b.id") &&
-            col("b.len") * lit(threshold) <= col("a.len") &&
-            col("a.len") * lit(threshold) <= col("b.len") &&
-            (least(col("a.len") - col("a.rk"), col("b.len") - col("b.rk")) + 1)
-              .cast("double") >= overlapNeeded)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        time("cand count (pre-distinct)")(println(cands.count()))
-        val cd = cands.distinct()
-        time("cand distinct ckpt")(cd.localCheckpoint())
-        time("cand distinct count")(println(cd.count()))
-        val shA = withSh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        val shB = withSh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        val rr = cd.join(shA, "id_a").join(shB, "id_b")
-          .select(col("id_a"), col("id_b"),
-            pipeline.Dedup.jaccard(col("sh_a"), col("sh_b")).as("j"))
-          .filter(col("j") >= threshold)
-        time("rerank noop")(noop(rr))
-        time("rerank noop 2")(noop(rr))
-        val rrB = cd.join(broadcast(shA), "id_a").join(broadcast(shB), "id_b")
-          .select(col("id_a"), col("id_b"),
-            pipeline.Dedup.jaccard(col("sh_a"), col("sh_b")).as("j"))
-          .filter(col("j") >= threshold)
-        time("rerank broadcast noop")(noop(rrB))
-        time("rerank broadcast noop 2")(noop(rrB))
-        val shCk = withSh.localCheckpoint()
-        val rrC = cd.join(shCk.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-          .join(shCk.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-          .select(col("id_a"), col("id_b"),
-            pipeline.Dedup.jaccard(col("sh_a"), col("sh_b")).as("j"))
-          .filter(col("j") >= threshold)
-        time("rerank ckpt-sh noop")(noop(rrC))
-        println(rr.queryExecution.executedPlan.toString.take(2500))
-      case "ngram" =>
-        val docs = t(spark, sfDir, "documents")
-        time("docs count")(println(docs.count()))
-        val withSh = docs.select(col("doc_id").as("id"),
-          pipeline.Dedup.shingles(col("text"), 3).as("sh"))
-        time("shingle noop")(noop(withSh))
-        val sized = withSh.withColumn("len", size(col("sh"))).filter(col("len") > 0)
-        val tok = sized.select(col("id"), col("len"), explode(col("sh")).as("tok"))
-        time("tok count")(println(tok.count()))
-        val freq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
-        time("freq noop")(noop(freq))
-        import org.apache.spark.sql.expressions.Window
-        val prefix = tok.join(freq, "tok")
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))))
-          .filter(col("rk") <= col("len") - ceil(col("len") * lit(0.5)) + 1)
-          .select(col("id"), col("len"), col("tok"))
-        time("prefix noop")(noop(prefix))
-        val a = prefix.alias("a"); val b = prefix.alias("b")
-        val cands = a.join(b, col("a.tok") === col("b.tok") &&
-            col("a.id") < col("b.id") &&
-            col("b.len") * lit(0.5) <= col("a.len") &&
-            col("a.len") * lit(0.5) <= col("b.len"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        time("cand count (pre-distinct)")(println(cands.count()))
-        val cd = cands.distinct()
-        time("cand distinct count")(println(cd.count()))
-        val full = pipeline.Dedup.nearDupNgramJaccard(docs)
-        time("full ngram noop")(noop(full))
-      case "simhash" =>
-        val docs = t(spark, sfDir, "documents")
-        val keyed0 = docs
-          .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-          .select(col("id"), functions.Sketches.simhashChunks(col("toks")).as("chunks"),
-            posexplode(functions.Sketches.simhashPairKeys(col("toks"))).as(Seq("band", "key")))
-        time("keyed0 count")(println(keyed0.count()))
-        val small = keyed0.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("_n")).filter(col("_n") <= 64)
-          .select(col("band"), col("key"))
-        val keyed = keyed0.join(small, Seq("band", "key"), "left_semi")
-        time("keyed semi count")(println(keyed.count()))
-        val a = keyed.alias("a"); val b = keyed.alias("b")
-        val within = a.join(b, col("a.band") === col("b.band") &&
-            col("a.key") === col("b.key") && col("a.id") < col("b.id") &&
-            pipeline.Dedup.hamming(col("a.chunks"), col("b.chunks")) <= 9)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        time("within count")(println(within.count()))
-        val wd = within.distinct()
-        time("within distinct count")(println(wd.count()))
-        val full = pipeline.Dedup.nearDupSimhash(docs)
-        time("full simhash noop")(noop(full))
-      case "decodeab" =>
-        import spark.implicits._
-        val events = streaming.IngestPipeline.syntheticEvents(spark, 10000L, 1000)
-        time("events noop")(noop(events))
-        time("events noop 2")(noop(events))
-        // parse only: run the same parser, emit just the quad count
-        val parsed = events.select(col("value"), col("contentType"))
-          .as[(Array[Byte], String)]
-          .mapPartitions { it =>
-            it.map { case (v, ct) =>
-              rdf.NQuadsParser.parse(new String(v, java.nio.charset.StandardCharsets.UTF_8),
-                allowGraph = true).size.toLong }
-          }
-        time("parse-only sum")(println(parsed.reduce(_ + _)))
-        time("parse-only sum 2")(println(parsed.reduce(_ + _)))
-        val decoded = rdf.RdfParse.decodeEvents(events)
-        time("decode noop")(noop(decoded.toDF()))
-        time("decode noop 2")(noop(decoded.toDF()))
-        // decode + the ops projection the ingest writes (minus the write)
-        time("full ingest-ops noop") {
-          val good = decoded.filter(col("_corrupt").isNull)
-          val ops = good.select(col("partition"), col("offset"),
-              when(col("kind") === "dataset",
-                transform(col("quads"), q => struct(lit("A").as("op"),
-                  q.getField("graph").as("graph"), q.getField("subject").as("subject"),
-                  q.getField("predicate").as("predicate"), q.getField("obj").as("obj"))))
-              .otherwise(lit(null)).as("xs"))
-            .select(posexplode(col("xs")).as(Seq("opIdx", "x")))
-          noop(ops)
-        }
-      case "ingest" =>
-        import java.nio.file.Files
-        val storePath = Files.createTempDirectory("scalestore").toString
-        val qstore = new graft.store.QuadStore(spark, storePath)
-        val store = qstore
-        val events = streaming.IngestPipeline.syntheticEvents(spark, 10000L, 1000)
-        time("events noop")(noop(events))
-        val decoded = rdf.RdfParse.decodeEvents(events)
-        time("decode noop")(noop(decoded.toDF()))
-        (0 until 4).foreach { b =>
-          time(s"ingest batch $b")(
-            streaming.IngestPipeline.ingest(
-              events.filter(expr("offset div 2500") === b), store, b.toLong,
-              countApplied = false))
-        }
-        time("store.count")(println(store.count()))
-        val segs = qstore.committedSegments()
-        val paths = segs.map(n => s"$storePath/$n")
-        val raw = spark.read.parquet(paths: _*)
-        time("raw ops noop")(noop(raw))
-        time("raw ops count")(println(raw.count()))
-        val ord = regexp_extract(input_file_name(), "/s(\\d+)-[^/]+/[^/]+$", 1).cast("long")
-        val withOrd = raw.withColumn("gseq", struct(ord.as("ord"), col("seq").as("seq")))
-        time("withOrd noop")(noop(withOrd))
-        val folded = withOrd.groupBy(Seq("graph", "subject", "predicate", "obj").map(col): _*)
-          .agg(max_by(col("op"), col("gseq")).as("last_op"))
-          .filter(col("last_op") === "A")
-        time("fold count")(println(folded.count()))
-        // variant: cheap ord extraction via fixed-width substring
-        val dirn = substring_index(substring_index(input_file_name(), "/", -2), "/", 1)
-        val ord2 = substring(dirn, 2, 8).cast("long")
-        val withOrd2 = raw.withColumn("gseq", struct(ord2.as("ord"), col("seq").as("seq")))
-        time("withOrd2 noop (substr)")(noop(withOrd2))
-        val folded2 = withOrd2.groupBy(Seq("graph", "subject", "predicate", "obj").map(col): _*)
-          .agg(max_by(col("op"), col("gseq")).as("last_op"))
-          .filter(col("last_op") === "A")
-        time("fold2 count")(println(folded2.count()))
-        // where does fold time go: pure repartition of same bytes
-        time("repart noop")(noop(withOrd2.repartition(col("subject"))))
-        // count-distinct on quads only (no op/gseq riding along)
-        val cd2 = raw.select(col("graph"), col("subject"), col("predicate"), col("obj")).distinct()
-        time("distinct quads count")(println(cd2.count()))
-      case "semantic2" =>
-        val base = t(spark, sfDir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-        val planted = base.filter(col("vec_id") % 50 === 0)
-          .select((col("vec_id") + 1000).as("vec_id"),
-            transform(col("embedding"),
-              (x, i) => x * (lit(1.0) + ((i * lit(0.1)) / lit(64.0)))).as("embedding"))
-        val embs = base.unionByName(planted)
-        val e = embs.select(col("vec_id").cast("long").as("id"),
-          col("embedding").cast("array<double>").as("v"))
-        noop(e) // warm
-        val centroids = time("trainCentroids") {
-          val m = pipeline.Similarity.getClass.getDeclaredMethods
-            .find(_.getName == "trainCentroids").get
-          m.setAccessible(true)
-          m.invoke(pipeline.Similarity, e, Int.box(16), Int.box(2))
-            .asInstanceOf[Array[Array[Double]]]
-        }
-        val assigned = time("assignCells job") {
-          val m = pipeline.Similarity.getClass.getDeclaredMethods
-            .find(_.getName == "assignCells").get
-          m.setAccessible(true)
-          val a = m.invoke(pipeline.Similarity, e, centroids)
-            .asInstanceOf[DataFrame]
-          a.localCheckpoint()
-        }
-        val cells = assigned.select(col("id"), col("cell"))
-        val cands = cells.alias("a")
-          .join(cells.alias("b"), col("a.cell") === col("b.cell") &&
-            col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        val vecs = e.select(col("id"), col("v"))
-        val pairs = cands
-          .join(vecs.select(col("id").as("id_a"), col("v").as("va")), "id_a")
-          .join(vecs.select(col("id").as("id_b"), col("v").as("vb")), "id_b")
-          .filter(pipeline.Similarity.cosine(col("va"), col("vb")) >= 0.95)
-          .select(col("id_a"), col("id_b"))
-        time("pairs noop")(noop(pairs))
-        val labels = time("clusterComponents")(
-          pipeline.Dedup.clusterComponents(pairs, e.select(col("id")), "id"))
-        time("final noop")(noop(assigned.select(col("id"), col("cell"))
-          .join(labels, Seq("id"))))
-        time("entry full")(SparkEntry.queries("pl_dedup_semantic")(spark, sfDir).count())
-      case "train2" =>
-        val base = t(spark, sfDir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-        val e = base.select(col("vec_id").cast("long").as("id"),
-          col("embedding").cast("array<double>").as("v"))
-        noop(e)
-        val Seq(n, poisoned) = time("precheck agg")(
-          e.agg(count(lit(1)),
-            sum(when(exists(col("v"), x => isnan(x) ||
-              x === Double.PositiveInfinity || x === Double.NegativeInfinity), 1L)
-              .otherwise(0L)))
-          .head().toSeq.map(v => Option(v).fold(0L)(_.asInstanceOf[Long])))
-        val dim = time("dim head")(e.select(size(col("v"))).head().getInt(0))
-        val sample = time("strideSample") {
-          val m = pipeline.Similarity.getClass.getDeclaredMethods
-            .find(_.getName == "strideSample").get
-          m.setAccessible(true)
-          m.invoke(pipeline.Similarity, e, Int.box(16), Long.box(n))
-            .asInstanceOf[Array[Array[Double]]]
-        }
-        var centroids = sample
-        (1 to 2).foreach { r =>
-          val meanCols = (0 until dim).map(i =>
-            avg(element_at(col("v"), i + 1).cast("decimal(28,14)"))
-              .cast("double").as(s"m$i"))
-          val assignM = pipeline.Similarity.getClass.getDeclaredMethods
-            .find(_.getName == "assignCells").get
-          assignM.setAccessible(true)
-          val assigned = assignM.invoke(pipeline.Similarity, e, centroids)
-            .asInstanceOf[DataFrame]
-          val grouped = assigned.groupBy(col("cell")).agg(meanCols.head, meanCols.tail: _*)
-          time(s"round $r plan+optimize")(grouped.queryExecution.executedPlan)
-          val rows = time(s"round $r collect")(grouped.collect())
-          println(s"  round $r cells ${rows.length}")
-        }
-      case "semantic" =>
-        val base = t(spark, sfDir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-        val planted = base.filter(col("vec_id") % 50 === 0)
-          .select((col("vec_id") + 1000).as("vec_id"),
-            transform(col("embedding"),
-              (x, i) => x * (lit(1.0) + ((i * lit(0.1)) / lit(64.0)))).as("embedding"))
-        val embs = base.unionByName(planted)
-        val e = embs.select(col("vec_id").cast("long").as("id"),
-          col("embedding").cast("array<double>").as("v"))
-        time("embs count")(println(e.count()))
-        val centroids = time("trainCentroids") {
-          val m = pipeline.Similarity.getClass.getDeclaredMethods
-            .find(_.getName == "trainCentroids").get
-          m.setAccessible(true)
-          m.invoke(pipeline.Similarity, e, Int.box(16), Int.box(2))
-            .asInstanceOf[Array[Array[Double]]]
-        }
-        println(s"centroids ${centroids.length}")
-        val full = pipeline.Dedup.semanticDedup(embs)
-        time("full semantic agg")(noop(full.agg(count(lit(1)))))
-      case "pagerank" =>
-        val pairs = t(spark, sfDir, "orders")
-          .join(t(spark, sfDir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").as("c"), (col("l_suppkey") + 10000000L).as("s"))
-          .distinct()
-        val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-          .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
-        time("edges count")(println(edges.count()))
-        val pr = operators.GraphOps.pagerankInt(edges, 3)
-        time("pagerank consume")(noop(pr))
-      case "pathrounds" =>
-        // replicate the encoded doubling closure with per-round timing
-        val NS = "http://graft.example/"
-        val termType = "struct<termType:string,lex:string,datatype:string,lang:string>"
-        def node(c: org.apache.spark.sql.Column) = struct(
-          lit("IRI").as("termType"),
-          concat(lit(s"${NS}n/"), c.cast("string")).as("lex"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang"))
-        val quads = t(spark, sfDir, "events")
-          .select(col("event_id").cast("long").as("id"))
-          .filter(col("id") % 20 =!= 19)
-          .select(node(col("id")).as("ps"), node(col("id") + 1).as("po"))
-        val first = time("first distinct+ckpt")(quads.distinct().localCheckpoint())
-        val n0 = time("first count")(first.count())
-        println(s"edges $n0")
-        val dict = time("dict build")(
-          first.select(col("ps").as("t")).unionByName(first.select(col("po").as("t")))
-            .distinct().select(xxhash64(col("t")).as("tid"), col("t")).localCheckpoint())
-        val inj = time("injectivity agg")(
-          dict.agg(count(lit(1)), count_distinct(col("tid"))).head())
-        println(inj)
-        var cur = time("encode ckpt")(
-          first.select(xxhash64(col("ps")).as("ps"), xxhash64(col("po")).as("po"))
-            .localCheckpoint())
-        var size = n0
-        var fixed = false
-        var round = 0
-        while (!fixed) {
-          round += 1
-          val obs = org.apache.spark.sql.Observation()
-          val next = time(s"round $round join+distinct+ckpt")(
-            cur.alias("l").join(cur.alias("r"), col("l.po") <=> col("r.ps"))
-              .select(col("l.ps").as("ps"), col("r.po").as("po"))
-              .unionByName(cur).distinct()
-              .observe(obs, count(lit(1)).as("n")).localCheckpoint())
-          val n = obs.get("n").asInstanceOf[Long]
-          println(s"  size $size -> $n")
-          if (n == size) fixed = true else { size = n; cur = next }
-        }
-        // variant: dedup fused into a ps-repartition; right join side
-        // then pre-partitioned for the next round
-        var cur2 = time("encode ckpt v2")(
-          first.select(xxhash64(col("ps")).as("ps"), xxhash64(col("po")).as("po"))
-            .repartition(col("ps")).localCheckpoint())
-        var size2 = n0
-        var fixed2 = false
-        var round2 = 0
-        while (!fixed2) {
-          round2 += 1
-          val obs = org.apache.spark.sql.Observation()
-          val next = time(s"v2 round $round2")(
-            cur2.alias("l").join(cur2.alias("r"), col("l.po") <=> col("r.ps"))
-              .select(col("l.ps").as("ps"), col("r.po").as("po"))
-              .unionByName(cur2)
-              .repartition(col("ps")).dropDuplicates(Seq("ps", "po"))
-              .observe(obs, count(lit(1)).as("n")).localCheckpoint())
-          val n = obs.get("n").asInstanceOf[Long]
-          println(s"  v2 size $size2 -> $n")
-          if (n == size2) fixed2 = true else { size2 = n; cur2 = next }
-        }
-        val decoded = cur
-          .join(dict.select(col("tid").as("ps"), col("t").as("ps_t")), Seq("ps"))
-          .join(dict.select(col("tid").as("po"), col("t").as("po_t")), Seq("po"))
-          .select(col("ps_t").as("s"), col("po_t").as("o"))
-        time("decode noop")(noop(decoded))
-        val fin = decoded.select(
-            regexp_extract(col("s").getField("lex"), "n/(\\d+)$", 1).cast("long").as("s"),
-            regexp_extract(col("o").getField("lex"), "n/(\\d+)$", 1).cast("long").as("o"))
-          .orderBy(col("s"), col("o"))
-        time("final count")(println(fin.count()))
-        time("entry full")(SparkEntry.queries("scale_sparql_path")(spark, sfDir).count())
-        time("entry full 2")(SparkEntry.queries("scale_sparql_path")(spark, sfDir).count())
-      case "sparqlpath" =>
-        val full = SparkEntry.queries("scale_sparql_path")(spark, sfDir)
-        time("scale_sparql_path full")(noop(full))
-        graft.sparql.Sparql.releaseClosures()
-        val full2 = SparkEntry.queries("scale_sparql_path")(spark, sfDir)
-        time("scale_sparql_path again")(noop(full2))
     }
     spark.stop()
   }

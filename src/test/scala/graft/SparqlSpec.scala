@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.connect._
+import graft.plans.Checkpoints
 import graft.rdf.Term
 import graft.sparql.Sparql
 import graft.store.QuadStore
@@ -474,61 +475,53 @@ class SparqlSpec extends AnyFunSuite {
   test("path closure frees superseded checkpoints (block-manager stable)") {
     // a depth-9 chain forces ~4 doubling rounds; every superseded
     // round's localCheckpoint must be unpersisted as soon as the next
-    // round materializes, and the final fixpoint must be releasable —
-    // otherwise each path query pins O(rounds × closure) blocks for
-    // the JVM lifetime (the round-6 bench-noise scale-killer)
-    Sparql.releaseClosures() // drop leftovers from earlier tests
+    // round materializes, and the final fixpoint must be freed by the
+    // enclosing scope — otherwise each path query pins
+    // O(rounds × closure) blocks for the JVM lifetime (the round-6
+    // bench-noise scale-killer)
     val chain = (0 until 9).map(i =>
       s"<http://x/b$i> <http://x/next> <http://x/b${i + 1}> .").mkString("\n")
     val store = ingest((chain + "\n") -> "application/n-quads")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val rows = Sparql.execute(store.quads(),
-      "SELECT ?s ?o { ?s <http://x/next>+ ?o }").collect()
-    assert(rows.length == 45)
-    val afterRun = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // only the final fixpoint checkpoint survives the loop
-    assert(afterRun.size <= 1,
-      s"closure loop leaked ${afterRun.size} checkpoints: $afterRun")
-    Sparql.releaseClosures()
-    // unpersist(blocking=false) is async — poll briefly for drain
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while ((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty
-        && System.nanoTime() < deadline) Thread.sleep(50)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "releaseClosures did not return the block manager to its pre-query size")
+    val before = TestSpark.pinned()
+    Checkpoints.withScope {
+      val rows = Sparql.execute(store.quads(),
+        "SELECT ?s ?o { ?s <http://x/next>+ ?o }").collect()
+      assert(rows.length == 45)
+      val afterRun = TestSpark.pinned() -- before
+      // only the final fixpoint checkpoint survives the loop
+      assert(afterRun.size <= 1,
+        s"closure loop leaked ${afterRun.size} checkpoints: $afterRun")
+    }
+    assert(TestSpark.awaitPinned(before) == before,
+      "scope exit did not return the block manager to its pre-query size")
   }
 
   test("withClosureScope frees a request's closures without touching others") {
     // the HTTP server's per-request discipline: closures made inside
-    // the scope unpersist when it exits; a closure pinned OUTSIDE the
-    // scope (another in-flight request, here the global registry)
-    // survives
-    Sparql.releaseClosures()
+    // an inner scope unpersist when it exits; a closure the OUTER
+    // scope pinned (another in-flight request's plan) stays readable
     val chain = (0 until 9).map(i =>
       s"<http://x/c$i> <http://x/next> <http://x/c${i + 1}> .").mkString("\n")
     val store = ingest((chain + "\n") -> "application/n-quads")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // "other request": global-registry closure, stays pinned
-    val outside = Sparql.execute(store.quads(),
-      "SELECT ?s ?o { ?s <http://x/next>+ ?o }")
-    assert(outside.count() == 45)
-    val pinnedOutside = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(pinnedOutside.nonEmpty)
-    Sparql.withClosureScope {
-      val rows = Sparql.execute(store.quads(),
-        "SELECT ?s ?o { ?s <http://x/next>+ ?o }").collect()
-      assert(rows.length == 45)
+    val before = TestSpark.pinned()
+    Checkpoints.withScope {
+      val outside = Sparql.execute(store.quads(),
+        "SELECT ?s ?o { ?s <http://x/next>+ ?o }")
+      assert(outside.count() == 45)
+      val pinnedOutside = TestSpark.pinned()
+      assert((pinnedOutside -- before).nonEmpty)
+      Sparql.withClosureScope {
+        val rows = Sparql.execute(store.quads(),
+          "SELECT ?s ?o { ?s <http://x/next>+ ?o }").collect()
+        assert(rows.length == 45)
+        assert(TestSpark.pinned().size > pinnedOutside.size)
+      }
+      assert(TestSpark.awaitPinned(pinnedOutside) == pinnedOutside,
+        "inner scope exit should free exactly its own closure")
+      // the outer plan still reads from its pinned checkpoint
+      assert(outside.count() == 45)
     }
-    // scope exit freed only the scoped closure (async — poll)
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while ((spark.sparkContext.getPersistentRDDs.keySet -- before)
-        .size > pinnedOutside.size && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before) == pinnedOutside,
-      "scope exit should free exactly the scoped closure")
-    // the outside plan still reads from its pinned checkpoint
-    assert(outside.count() == 45)
-    Sparql.releaseClosures()
+    assert(TestSpark.awaitPinned(before) == before)
   }
 
   test("EXISTS as an expression operand combines with || && and !") {

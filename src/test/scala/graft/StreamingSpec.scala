@@ -65,6 +65,15 @@ class StreamingSpec extends AnyFunSuite {
       .exists(_.contains("ordered projector path")))
   }
 
+  test("decodeEvents is batch-only: a streaming frame is rejected up front") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val events = MemoryStream[(String, Int, Long, Array[Byte], Array[Byte], String)]
+      .toDF().toDF("topic", "partition", "offset", "key", "value", "contentType")
+    val e = intercept[IllegalArgumentException](graft.rdf.RdfParse.decodeEvents(events))
+    assert(e.getMessage.contains("batch-only"))
+  }
+
   test("mapGroupsWithState: running per-key counts survive across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
