@@ -204,6 +204,11 @@ final class Projector(
     val scope = s"${event.topic}:${event.partition}:${event.offset}"
     val d = RdfParse.decode(event.value, event.contentType, scope)
     if (d._corrupt != null) throw new PayloadException(d._corrupt)
+    // an event whose ops overflow the op-log packing would reorder the
+    // next event's ops in the store: route it to the DLQ on arrival
+    val ops = math.max(Option(d.quads).fold(0)(_.size), Option(d.ops).fold(0)(_.size))
+    graft.store.OpLog.overBudget(ops).foreach(why =>
+      throw new PayloadException(s"event decodes to $why"))
     MaterialisedEvent(event, d)
   }
 

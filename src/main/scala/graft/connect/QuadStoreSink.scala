@@ -3,12 +3,12 @@ package graft.connect
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 
 import graft.plans.Checkpoints
-import graft.rdf.{Quad, RdfPatchParser, Term}
+import graft.rdf.{RdfParse, RdfPatchParser, Term}
 import graft.sparql.SparqlUpdate
-import graft.store.QuadStore
+import graft.store.{OpLog, QuadStore}
 
 /** BatchSink applying committed batches to a [[QuadStore]] — the
   * engine's FusekiSink (FusekiSink.java:38-77): dataset payloads
@@ -16,10 +16,10 @@ import graft.store.QuadStore
   * stream, SPARQL Update payloads their resolved quad ops, all as ONE
   * atomic parquet segment per commit.
   *
-  * `seq` encodes (event index in batch, op index in event) so
-  * latest-op-wins inside the store respects event order — the ordered
-  * delete contract (README.md:152-153) without the reference's
-  * single-partition restriction.
+  * `seq` packs (event index in batch, op index in event) through
+  * [[OpLog.seq]], so latest-op-wins inside the store respects event
+  * order — the ordered delete contract (README.md:152-153) without the
+  * reference's single-partition restriction.
   *
   * SPARQL Update WHERE-clauses see the SEQUENTIAL state: the store as
   * of the last commit plus every batch op before them. That state is a
@@ -32,16 +32,18 @@ import graft.store.QuadStore
   * driver-side op buffer (whose `toDF` embeds every row in the plan
   * as a LocalRelation — fine at the reference's 50 MiB batch
   * envelope, a driver bottleneck beyond it). Instead the RAW payload
-  * bytes ship to executors — one row per event — and decode there,
-  * the [[graft.streaming.IngestPipeline]] shape. Batches carrying a
-  * SPARQL Update stay on the driver path: update WHERE resolution
-  * needs the sequential in-batch state, which folds driver-buffered
-  * ops.
+  * bytes ship to executors — one row per event — and decode there
+  * through [[RdfParse.decodeEvents]] and [[OpLog.lower]], the same
+  * lowering [[graft.streaming.IngestPipeline]] runs, keyed by each
+  * event's index in the batch so bulk and driver-path events of one
+  * batch interleave in event order. Batches carrying a SPARQL Update
+  * stay on the driver path: update WHERE resolution needs the
+  * sequential in-batch state, which folds driver-buffered ops.
   */
 final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     bulkBytesThreshold: Long = QuadStoreSink.DefaultBulkBytes,
     override val loadRoot: Option[java.nio.file.Path] = None) extends BatchSink {
-  import QuadStore.OpRow
+  import OpLog.OpRow
 
   /** One past the store's committed history (un-compacted tail AND
     * compaction high-water): a projector restart or an HTTP mutation
@@ -57,18 +59,6 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     * sinks per request).
     */
   override def exclusively[T](f: => T): T = store.writeLock.synchronized(f)
-
-  private val QUAD_COLS = QuadStore.QUAD_COLUMNS
-
-  /** `state` minus `touched` plus `adds` (both small/derived sides;
-    * null-safe per-column equality — default graph is NULL).
-    */
-  private def applyDelta(state: DataFrame, touched: DataFrame, adds: DataFrame): DataFrame = {
-    val b = state.alias("b")
-    val t = touched.alias("t")
-    val cond = QUAD_COLS.map(c => col(s"b.$c") <=> col(s"t.$c")).reduce(_ && _)
-    b.join(t, cond, "left_anti").select(QUAD_COLS.map(col): _*).unionByName(adds)
-  }
 
   /** Runs in its own [[Checkpoints.withScope]]: everything the commit
     * pins (fold-chain cuts, a WHERE path's fixpoint) is dead once
@@ -92,19 +82,11 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     // when a batch actually carries an update
     var state: DataFrame = null
     var folded = 0 // local ops already folded into `state`
-    def quadsDf(qs: Seq[Quad]): DataFrame =
-      qs.toDF().select(QUAD_COLS.map(col): _*)
     def currentState(): DataFrame = {
       if (state == null) state = store.quads()
       if (folded < local.size) {
-        // fold the pending local rows: effective last op per quad
-        val eff = local.drop(folded)
-          .groupBy(o => (o.graph, o.subject, o.predicate, o.obj))
-          .map { case (_, ops) => ops.maxBy(_.seq) }.toSeq
-        val touched = eff.map(o => Quad(o.graph, o.subject, o.predicate, o.obj))
-        val adds = eff.filter(_.op == "A")
-          .map(o => Quad(o.graph, o.subject, o.predicate, o.obj))
-        state = applyDelta(state, quadsDf(touched), quadsDf(adds))
+        val pending = local.drop(folded).toSeq.toDF()
+        state = OpLog.overlay(state, OpLog.tailState(pending, addsOnly = false, order = "seq"))
         folded = local.size
       }
       state
@@ -121,9 +103,9 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
       // cut with a lazy checkpoint so plan DEPTH stays bounded for
       // long update scripts without materializing per-op
       resolved += df
-      val touched = df.select(QUAD_COLS.map(col): _*)
-      val adds = df.filter(col("op") === "A").select(QUAD_COLS.map(col): _*)
-      state = applyDelta(currentState(), touched, adds)
+      // a resolved op's inserts (seq + 1) follow its deletes (seq), so
+      // each of its rows already is the latest op for its quad
+      state = OpLog.overlay(currentState(), df.withColumnRenamed("op", "last_op"))
       foldsSinceCut += 1
       if (foldsSinceCut >= 8) {
         // a lazy cut: its blocks materialize (at most once) inside the
@@ -143,16 +125,15 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     val bulkEvents = scala.collection.mutable.ArrayBuffer[(MaterialisedEvent, Int)]()
 
     events.zipWithIndex.foreach { case (m, ei) =>
-      val base = ei.toLong << 24
       m.decoded.kind match {
         case "dataset" if bulkRoute => bulkEvents += ((m, ei))
         case "dataset" =>
           m.decoded.quads.zipWithIndex.foreach { case (q, qi) =>
-            local += OpRow("A", base | qi.toLong, q.graph, q.subject, q.predicate, q.obj)
+            local += OpRow("A", OpLog.seq(ei, qi), q.graph, q.subject, q.predicate, q.obj)
           }
         case "patch" =>
           effPatchOps(ei).zipWithIndex.foreach { case (o, oi) =>
-            local += OpRow(o.op, base | oi.toLong, o.graph, o.subject, o.predicate, o.obj)
+            local += OpRow(o.op, OpLog.seq(ei, oi), o.graph, o.subject, o.predicate, o.obj)
           }
         case "update" =>
           // deterministic re-parse (decode already validated); blank
@@ -162,41 +143,38 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
             new String(m.event.value, StandardCharsets.UTF_8))
           val scope = s"${m.event.topic}:${m.event.partition}:${m.event.offset}"
           var oi = 0L
-          // `base | oi` packs (event << 24) | op-index: past 2^24 the
-          // index would bleed into the event bits and silently corrupt
-          // latest-op-wins ordering. The arrival probe
-          // (SparqlUpdate.probeArrival) rejects overflowing scripts to
-          // the DLQ before they buffer; this guard is the loud
-          // backstop so corruption is impossible even if a document
-          // grew between probe and apply.
+          // past the OpLog budget the op index would bleed into the
+          // event bits and silently corrupt latest-op-wins ordering.
+          // The arrival probe (SparqlUpdate.probeArrival) rejects
+          // overflowing scripts to the DLQ before they buffer; this
+          // guard is the loud backstop so corruption is impossible even
+          // if a document grew between probe and apply.
           def guardOi(slots: Long): Unit =
-            if (oi + slots > SparqlUpdate.MaxEventOps)
-              throw new ProjectorException(
-                s"event ordinal budget exhausted (${SparqlUpdate.MaxEventOps} " +
-                "ops in one event) — the arrival probe should have routed " +
-                "this event to the DLQ")
+            OpLog.overBudget(oi + slots).foreach(why => throw new ProjectorException(
+              s"event ordinal budget exhausted ($why) — the arrival probe " +
+              "should have routed this event to the DLQ"))
           script.foreach {
             case SparqlUpdate.QuadDataOp(op, quads) =>
               quads.foreach { q0 =>
                 def sc(t: Term): Term =
                   if (t != null && t.isBlank) Term.blank(scope + ":" + t.lex) else t
                 guardOi(1)
-                local += OpRow(op, base | oi,
+                local += OpRow(op, OpLog.seq(ei, oi),
                   sc(q0.graph), sc(q0.subject), q0.predicate, sc(q0.obj))
                 oi += 1
               }
             case mo: SparqlUpdate.ModifyOp =>
               guardOi(2) // deletes at oi, inserts at oi + 1
-              SparqlUpdate.resolveModify(currentState(), mo, base | oi, scope)
+              SparqlUpdate.resolveModify(currentState(), mo, OpLog.seq(ei, oi), scope)
                 .foreach(foldResolved)
               oi += 2
             case cl: SparqlUpdate.ClearOp =>
               guardOi(1)
-              foldResolved(SparqlUpdate.resolveClear(currentState(), cl, base | oi))
+              foldResolved(SparqlUpdate.resolveClear(currentState(), cl, OpLog.seq(ei, oi)))
               oi += 1
             case gm: SparqlUpdate.GraphManageOp =>
               guardOi(2) // deletes at oi, re-labelled inserts at oi + 1
-              SparqlUpdate.resolveGraphManage(currentState(), gm, base | oi)
+              SparqlUpdate.resolveGraphManage(currentState(), gm, OpLog.seq(ei, oi))
                 .foreach(foldResolved)
               oi += 2
             case ld: SparqlUpdate.LoadOp =>
@@ -217,7 +195,7 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
                 catch { case scala.util.control.NonFatal(_) => Seq.empty[graft.rdf.Quad] }
               loaded.foreach { q =>
                 guardOi(1)
-                local += OpRow("A", base | oi, q.graph, q.subject, q.predicate, q.obj)
+                local += OpRow("A", OpLog.seq(ei, oi), q.graph, q.subject, q.predicate, q.obj)
                 oi += 1
               }
           }
@@ -230,18 +208,21 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     // per-quad explosion happens on executors — same blank-node scope
     // as the driver path, so labels are identical either way
     val bulkOps: Option[DataFrame] = if (bulkEvents.isEmpty) None else {
-      val rows = bulkEvents.toSeq.map { case (m, ei) =>
-        (ei, s"${m.event.topic}:${m.event.partition}:${m.event.offset}",
+      val raw = bulkEvents.toSeq.map { case (m, _) =>
+        (m.event.topic, m.event.partition, m.event.offset, m.event.key,
           m.event.value, m.event.contentType)
-      }
-      Some(rows.toDS()
-        .repartition(math.min(rows.size, spark.sparkContext.defaultParallelism))
-        .flatMap { case (ei, scope, value, ct) =>
-          graft.rdf.RdfParse.decode(value, ct, scope).quads.zipWithIndex.map {
-            case (q, qi) => OpRow("A", (ei.toLong << 24) | qi.toLong,
-              q.graph, q.subject, q.predicate, q.obj)
-          }
-        }.toDF())
+      }.toDF("topic", "partition", "offset", "key", "value", "contentType")
+        .repartition(math.min(bulkEvents.size, spark.sparkContext.defaultParallelism))
+      // the event's batch index, looked up per event row by its
+      // identity: a broadcast join back to an (identity, index) frame
+      // copied every wide decoded row (~10 % of a 39 MB bulk commit,
+      // 4 cores)
+      val ordOf = bulkEvents.map { case (m, ei) =>
+        (m.event.topic, m.event.partition, m.event.offset) -> ei.toLong
+      }.toMap
+      val ord = udf((t: String, p: Int, o: Long) => ordOf((t, p, o)))
+      Some(OpLog.lower(RdfParse.decodeEvents(raw),
+        ord(col("topic"), col("partition"), col("offset"))))
     }
     val ops = (resolved ++ bulkOps).foldLeft(local.toSeq.toDF())(_.unionByName(_))
     store.commitOps(batchId, ops)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.rdf._
-import graft.store.QuadStore
+import graft.store.{OpLog, QuadStore}
 
 /** RDF-layer entries for the verify gate. The oracle trick: round-trip
   * a relational table through RDF serialization → parser → quads →
@@ -175,15 +175,15 @@ object RdfQueries {
       // every region-1 name triple (no-op), delete a never-present
       // quad (no-op), add one fresh triple (real)
       val ops = nations.toSeq.collect { case (k, n, 0L) =>
-        QuadStore.OpRow("D", k, null, Term.iri(s"${NS}nation/$k"),
+        OpLog.OpRow("D", k, null, Term.iri(s"${NS}nation/$k"),
           Term.iri(s"${NS}name"), Term.lit(n)) } ++
         nations.toSeq.collect { case (k, n, 1L) =>
-          QuadStore.OpRow("A", 100 + k, null, Term.iri(s"${NS}nation/$k"),
+          OpLog.OpRow("A", 100 + k, null, Term.iri(s"${NS}nation/$k"),
             Term.iri(s"${NS}name"), Term.lit(n)) } ++
         Seq(
-          QuadStore.OpRow("D", 200L, null, Term.iri(s"${NS}nation/999"),
+          OpLog.OpRow("D", 200L, null, Term.iri(s"${NS}nation/999"),
             Term.iri(s"${NS}regionkey"), Term.lit("9")),
-          QuadStore.OpRow("A", 201L, null, Term.iri(s"${NS}meta"),
+          OpLog.OpRow("A", 201L, null, Term.iri(s"${NS}meta"),
             Term.iri(s"${NS}version"), Term.lit("2")))
       store.commitOps(1, ops.toDF())
       view.refresh() // incremental
@@ -217,19 +217,19 @@ object RdfQueries {
           Term.typed(bal.toString, Term.XSD_DOUBLE))) })
       view.refresh() // full init at batch 0
       val ops = supps.toSeq.collect { case (k, _, nk, _) if k % 3 == 0 =>
-        QuadStore.OpRow("D", k, null, Term.iri(s"${NS}supp/$k"), preds(1),
+        OpLog.OpRow("D", k, null, Term.iri(s"${NS}supp/$k"), preds(1),
           Term.typed(nk.toString, Term.XSD_INTEGER)) } ++
         supps.toSeq.collect { case (k, n, _, _) if k % 3 == 1 =>
-          QuadStore.OpRow("A", 1000 + k, null, Term.iri(s"${NS}supp/$k"),
+          OpLog.OpRow("A", 1000 + k, null, Term.iri(s"${NS}supp/$k"),
             preds(0), Term.lit(n)) } ++
         Seq(
-          QuadStore.OpRow("A", 5000L, null, Term.iri(s"${NS}supp/999999"),
+          OpLog.OpRow("A", 5000L, null, Term.iri(s"${NS}supp/999999"),
             preds(0), Term.lit("zz")),
-          QuadStore.OpRow("A", 5001L, null, Term.iri(s"${NS}supp/999999"),
+          OpLog.OpRow("A", 5001L, null, Term.iri(s"${NS}supp/999999"),
             preds(1), Term.typed("7", Term.XSD_INTEGER)),
-          QuadStore.OpRow("A", 5002L, null, Term.iri(s"${NS}supp/999999"),
+          OpLog.OpRow("A", 5002L, null, Term.iri(s"${NS}supp/999999"),
             preds(2), Term.typed("1.5", Term.XSD_DOUBLE)),
-          QuadStore.OpRow("A", 5003L, null, Term.iri(s"${NS}supp/999998"),
+          OpLog.OpRow("A", 5003L, null, Term.iri(s"${NS}supp/999998"),
             preds(0), Term.lit("dangling")))
       store.commitOps(1, ops.toDF())
       view.refresh() // incremental: touched subjects only
@@ -274,7 +274,7 @@ object RdfQueries {
           lit(null).cast("struct<termType:string,lex:string,datatype:string,lang:string>").as("graph"), subj.as("subject"),
           termI(lit(s"${NS}inOrder")).as("predicate"),
           termI(concat(lit(s"${NS}order/"), col("ok"))).as("obj"))
-        val meta = Seq(QuadStore.OpRow("A", -1L, null,
+        val meta = Seq(OpLog.OpRow("A", -1L, null,
           Term.iri(s"${NS}meta/0"), Term.iri(s"${NS}quantity"),
           Term.typed("0", Term.XSD_INTEGER))).toDF()
         st.commitOps(0, quantity.unionByName(inOrder).unionByName(meta))
@@ -287,9 +287,9 @@ object RdfQueries {
       val n = ctr.incrementAndGet()
       val batch = store.nextBatchId
       store.commitOps(batch, Seq(
-        QuadStore.OpRow("D", 0L, null, Term.iri(s"${NS}meta/${n - 1}"),
+        OpLog.OpRow("D", 0L, null, Term.iri(s"${NS}meta/${n - 1}"),
           Term.iri(s"${NS}quantity"), Term.typed("0", Term.XSD_INTEGER)),
-        QuadStore.OpRow("A", 1L, null, Term.iri(s"${NS}meta/$n"),
+        OpLog.OpRow("A", 1L, null, Term.iri(s"${NS}meta/$n"),
           Term.iri(s"${NS}quantity"), Term.typed("0", Term.XSD_INTEGER))).toDF())
       view.refresh()
       view.result()

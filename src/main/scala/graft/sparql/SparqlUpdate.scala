@@ -292,24 +292,11 @@ object SparqlUpdate {
 
   // --- resolution -----------------------------------------------------------
 
-  /** Resolve a modify op against `state` into delete rows (at `seq`)
-    * and insert rows (at `seq + 1`): solve WHERE once, instantiate
-    * both templates from the same solutions. Instantiations using an
-    * unbound variable are skipped (spec §3.1.3.2); duplicate
-    * instantiations are left to the store's set semantics rather than
-    * paying a dedup shuffle here.
+  /** Ordinal-space guard: a single event's ops must fit the per-event
+    * budget of the op-log `seq` packing ([[graft.store.OpLog]]), with
+    * headroom for the script's other ops.
     */
-  /** Ordinal-space guard: a single event's ops must fit the 24-bit
-    * per-event ordinal range of the sink's `(event << 24) | op` order
-    * encoding, with headroom for the script's other ops.
-    */
-  val MaxLoadQuads: Int = (1 << 24) - (1 << 12)
-
-  /** Ordinal budget per event: op indices pack as `(event << 24) | oi`
-    * in the sink's commit encoding, so one event holds at most 2^24
-    * ops before the index would bleed into the event bits.
-    */
-  val MaxEventOps: Long = 1L << 24
+  val MaxLoadQuads: Int = (graft.store.OpLog.MaxEventOps - (1 << 12)).toInt
 
   private val LoadToken = java.util.regex.Pattern.compile(
     "(?i)(?<![A-Za-z0-9_])LOAD(?![A-Za-z0-9_])")
@@ -322,11 +309,12 @@ object SparqlUpdate {
     * / unparseable document must surface here. Also totals the
     * script's ordinal budget (inline quads + resolved load sizes +
     * fixed costs per WHERE-driven op) and rejects scripts whose ops
-    * would overflow [[MaxEventOps]] — e.g. two near-cap LOADs whose
-    * CUMULATIVE count passes 2^24 even though each document is under
-    * [[MaxLoadQuads]]. Cheap word-boundary pre-filter: scripts with no
-    * LOAD token skip the re-parse (they cannot reach 2^24 ops without
-    * a payload the decode gate already choked on).
+    * would overflow the op-log budget ([[graft.store.OpLog.overBudget]])
+    * — e.g. two near-cap LOADs whose CUMULATIVE count passes 2^24 even
+    * though each document is under [[MaxLoadQuads]]. Cheap
+    * word-boundary pre-filter: scripts with no LOAD token skip the
+    * re-parse (they cannot reach 2^24 ops without a payload the decode
+    * gate already choked on).
     */
   def probeArrival(text: String, root: Option[java.nio.file.Path]): Unit = {
     if (!LoadToken.matcher(text).find()) return
@@ -341,10 +329,8 @@ object SparqlUpdate {
         // probing them only feeds the budget total
         budget += resolveLoad(ld, "arrival-probe", root).size
     }
-    if (budget >= MaxEventOps)
-      throw new RdfParseException(
-        s"update script resolves to $budget ops, past the per-event " +
-        s"ordinal budget ($MaxEventOps) — split the script across events")
+    graft.store.OpLog.overBudget(budget).foreach(why =>
+      throw new RdfParseException(s"update script resolves to $why"))
   }
 
   /** Resolve a LOAD to the quads to add: read the `file:` document,
@@ -410,6 +396,13 @@ object SparqlUpdate {
           s"LOAD <${l.iri}> failed: ${e.getMessage}")
     }
 
+  /** Resolve a modify op against `state` into delete rows (at `seq`)
+    * and insert rows (at `seq + 1`): solve WHERE once, instantiate
+    * both templates from the same solutions. Instantiations using an
+    * unbound variable are skipped (spec §3.1.3.2); duplicate
+    * instantiations are left to the store's set semantics rather than
+    * paying a dedup shuffle here.
+    */
   def resolveModify(state: DataFrame, m: ModifyOp, seq: Long,
       blankScope: String = ""): Option[DataFrame] = {
     // USING/USING NAMED scope only what the WHERE sees; the templates

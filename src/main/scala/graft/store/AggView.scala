@@ -46,7 +46,7 @@ import org.apache.spark.sql.functions._
 final class AggView(spark: SparkSession, store: QuadStore, path: String,
     groupCols: Seq[String] = Seq("predicate")) {
   require(groupCols.nonEmpty &&
-    groupCols.forall(QuadStore.QUAD_COLUMNS.contains),
+    groupCols.forall(OpLog.QUAD_COLUMNS.contains),
     s"groupCols must be quad columns, got $groupCols")
 
   private val dir = Paths.get(path)
@@ -116,10 +116,10 @@ final class AggView(spark: SparkSession, store: QuadStore, path: String,
           // left-outer join against the pruned as-of state (a set —
           // at most one match per quad)
           val asOf = store.quadsAtBuckets(f, buckets)
-            .select(QuadStore.QUAD_COLUMNS.map(col) :+
+            .select(OpLog.QUAD_COLUMNS.map(col) :+
               lit(true).as("present0"): _*).alias("s")
           val c = cdc.alias("c")
-          val cond = QuadStore.QUAD_COLUMNS
+          val cond = OpLog.QUAD_COLUMNS
             .map(q => col(s"c.$q") <=> col(s"s.$q")).reduce(_ && _)
           val signed = c.join(asOf, cond, "left_outer")
             .select(groupCols.map(g => col(s"c.$g").as(g)) :+

@@ -1,0 +1,129 @@
+package graft.store
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+/** The op-row format every store writer and reader shares: rows of
+  * (op A|D, seq, graph, subject, predicate, obj), where `seq` orders
+  * the ops of one committed segment and the latest op per quad wins
+  * (RDF set semantics — README.md:148-150: "regardless of the order of
+  * event application the dataset will eventually reach the same
+  * state"). This object owns the four decisions of that format:
+  *  - packing: `seq` = (event ordinal << [[OpBits]]) | op index, with
+  *    one per-event op budget;
+  *  - lowering: decoded events ([[graft.rdf.RdfParse.decodeEvents]])
+  *    → op rows, in one columnar pass;
+  *  - fold: a log → its latest op per quad (`last_op`);
+  *  - overlay: a folded log applied over a base state.
+  */
+object OpLog {
+  /** An op row as a case class, for driver-side buffers and tests. */
+  final case class OpRow(op: String, seq: Long,
+      graph: graft.rdf.Term, subject: graft.rdf.Term,
+      predicate: graft.rdf.Term, obj: graft.rdf.Term)
+
+  val QUAD_COLUMNS: Seq[String] = Seq("graph", "subject", "predicate", "obj")
+  val OP_COLUMNS: Seq[String] = Seq("op", "seq") ++ QUAD_COLUMNS
+
+  /** The fixed schema [[QuadStore.commitOps]] writes — passed
+    * explicitly on every segment read so no read pays per-call
+    * footer-based inference.
+    */
+  private[store] val TERM_SCHEMA: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("termType", StringType), StructField("lex", StringType),
+      StructField("datatype", StringType), StructField("lang", StringType)))
+  }
+  private[store] val OP_SCHEMA: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("op", StringType), StructField("seq", LongType)) ++
+      QUAD_COLUMNS.map(c => StructField(c, TERM_SCHEMA)))
+  }
+
+  // --- packing --------------------------------------------------------------
+
+  /** Bits of `seq` holding the op index within one event. */
+  val OpBits = 24
+
+  /** Per-event op budget: an op index at or past it would bleed into
+    * the event bits and silently reorder a later event's ops.
+    */
+  val MaxEventOps: Long = 1L << OpBits
+
+  /** Event ordinals at or past this overflow the sign bit of `seq`. */
+  val MaxEventOrdinal: Long = 1L << (63 - OpBits)
+
+  def seq(event: Long, op: Long): Long = (event << OpBits) | op
+
+  /** Why `ops` ops of one event cannot take ordinals, or None. */
+  def overBudget(ops: Long): Option[String] =
+    if (ops < MaxEventOps) None
+    else Some(s"$ops ops, past the per-event ordinal budget ($MaxEventOps) " +
+      "— split them across events")
+
+  // --- lowering -------------------------------------------------------------
+
+  /** Why a decoded event (at ordinal `ord`) cannot pack into `seq`, or
+    * null — the `_corrupt` reason that routes it to the DLQ instead of
+    * wrapping its ordinals. A patch counts every op, markers included,
+    * since [[lower]] indexes its ops in document order.
+    */
+  def unpackable(ord: Column): Column = {
+    val n = greatest(size(col("quads")), size(col("ops")))
+    when(n >= MaxEventOps, concat(lit("event holds "), n.cast("string"),
+        lit(s" ops, past the per-event ordinal budget ($MaxEventOps)")))
+      .when(ord >= MaxEventOrdinal, concat(lit("event ordinal "), ord.cast("string"),
+        lit(s" does not fit the op-log packing (< $MaxEventOrdinal)")))
+  }
+
+  /** Lower decoded events to op rows: dataset quads as adds, patch A/D
+    * ops in document order. `ord` is the event's position in the log's
+    * order (a partition offset, or an index within one batch). Blank
+    * nodes keep the decode's `topic:partition:offset` scope.
+    *
+    * A decoded row carries `quads` (dataset) or `ops` (patch), never
+    * both, so two outer explodes in a row yield each event's ops once;
+    * this keeps every step in generated code, where a `transform` of
+    * the quads into op structs ran interpreted per element.
+    */
+  def lower(decoded: DataFrame, ord: Column): DataFrame =
+    // `ord` evaluates once per event: beside a generator it would run
+    // once per op
+    decoded.select(ord.as("ord"), col("quads"), col("ops"))
+      .select(col("ord"), col("ops"), posexplode_outer(col("quads")).as(Seq("qi", "q")))
+      .select(col("ord"), col("qi"), col("q"), posexplode_outer(col("ops")).as(Seq("pi", "p")))
+      .filter(col("q").isNotNull || col("p.op").isin("A", "D"))
+      .select(coalesce(col("p.op"), lit("A")).as("op") +:
+        shiftleft(col("ord"), OpBits).bitwiseOR(coalesce(col("qi"), col("pi"))).as("seq") +:
+        QUAD_COLUMNS.map(c => coalesce(col(s"q.$c"), col(s"p.$c")).as(c)): _*)
+
+  // --- fold and overlay -----------------------------------------------------
+
+  /** Latest op per quad of an op log, as (quad columns, last_op). An
+    * adds-only log degenerates to DISTINCT — no order column, no
+    * max_by, no op bytes through the exchange; otherwise the log
+    * carries its order in `order` (lexicographic when a struct, so a
+    * segment's (ord, seq) pair never overflows).
+    */
+  def tailState(log: DataFrame, addsOnly: Boolean, order: String = "gseq"): DataFrame =
+    if (addsOnly)
+      log.select(QUAD_COLUMNS.map(col): _*).dropDuplicates(QUAD_COLUMNS)
+        .withColumn("last_op", lit("A"))
+    else log.groupBy(QUAD_COLUMNS.map(col): _*)
+      .agg(max_by(col("op"), col(order)).as("last_op"))
+
+  /** Quads a folded log leaves present. */
+  def live(state: DataFrame): DataFrame =
+    state.filter(col("last_op") === "A").select(QUAD_COLUMNS.map(col): _*)
+
+  /** `base` minus every quad `tail` touched, plus the quads `tail`
+    * leaves present. Keys compare null-safe: the default graph is a
+    * null `graph`, and a plain equality never matches null to null.
+    */
+  def overlay(base: DataFrame, tail: DataFrame): DataFrame = {
+    val cond = QUAD_COLUMNS.map(c => col(s"b.$c") <=> col(s"t.$c")).reduce(_ && _)
+    base.alias("b")
+      .join(tail.select(QUAD_COLUMNS.map(col): _*).alias("t"), cond, "left_anti")
+      .unionByName(live(tail))
+  }
+}

@@ -56,8 +56,11 @@ import graft.rdf.{PatchOp, Quad}
   *  - Compaction records a high-water batchId in the version file;
   *    [[commitOps]] drops replayed epochs at or below it, so epoch
   *    replay stays idempotent even across compactions.
-  */
-/** @param autoCompactTail fold the tail into the bucketed base
+  *
+  * The op-row format itself — `seq` packing, event lowering, the
+  * latest-op fold and the base overlay — lives in [[OpLog]].
+  *
+  * @param autoCompactTail fold the tail into the bucketed base
   *   whenever the committed tail reaches this many epoch segments
   *   (0 = manual [[compact]] only). Without a bound, merge-on-read
   *   cost grows with every epoch — at 100 TB the tail MUST be folded
@@ -69,6 +72,7 @@ import graft.rdf.{PatchOp, Quad}
 final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     autoCompactTail: Int = 0) {
   import QuadStore._
+  import OpLog.{OpRow, OP_COLUMNS, OP_SCHEMA, QUAD_COLUMNS}
 
   private val dir = Paths.get(path)
   Files.createDirectories(dir)
@@ -145,9 +149,10 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 
   /** Commit one batch of ops (columns: op STRING, seq LONG, graph,
     * subject, predicate, obj term structs). Idempotent per batchId:
-    * a replayed epoch overwrites its own segment (same directory) and
-    * leaves the pointer unchanged, and an epoch already folded into the
-    * base by [[compact]] (batchId ≤ high-water) is dropped outright —
+    * a replayed epoch writes a fresh copy of its segment that takes the
+    * old one's place in the pointer (copy-on-write, below), and an
+    * epoch already folded into the base by [[compact]] (batchId ≤
+    * high-water) is dropped outright —
     * Spark epoch replay is therefore safe in both regimes (replaces the
     * reference's abort/replay machinery, FusekiProjector.java:362-379).
     */
@@ -229,14 +234,6 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 
   // --- reads ----------------------------------------------------------------
 
-  /** Read a set of segments as ONE multi-path parquet scan, recovering
-    * each row's commit ordinal from its file path (flat planning cost
-    * regardless of epoch count). Order is the PAIR (ord, seq) — kept
-    * as a struct, never packed into one long: a packed ord<<40+seq
-    * silently corrupts cross-segment ordering once seq exceeds 2^40
-    * (offsets past ~1M with a 20-bit op index), which 100 TB topics
-    * reach trivially.
-    */
   /** Epoch-segment scan WITHOUT the ordinal recovery — for reads that
     * never order ops (adds-only folds). The op schema is fixed by
     * [[commitOps]]'s writer, so it is passed explicitly: schema
@@ -248,6 +245,14 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     spark.read.schema(OP_SCHEMA).parquet(paths: _*)
   }
 
+  /** Read a set of segments as ONE multi-path parquet scan, recovering
+    * each row's commit ordinal from its file path (flat planning cost
+    * regardless of epoch count). Order is the PAIR (ord, seq) — kept
+    * as a struct, never packed into one long: a packed ord<<40+seq
+    * silently corrupts cross-segment ordering once seq exceeds 2^40
+    * (offsets past 2^16 under [[OpLog]]'s 24-bit op field), which
+    * 100 TB topics reach trivially.
+    */
   private def readSegments(segs: Seq[SegRef]): DataFrame = {
     // file path = …/s<ord>-<tag>/part-….parquet — the commit ordinal is
     // in the parent directory name, which always starts `s<digits>-`
@@ -261,35 +266,24 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       .withColumn("gseq", struct(ord.as("ord"), col("seq").as("seq")))
   }
 
-  /** Whether every segment of `segs` committed as adds-only (recorded
-    * in the segment name by [[commitOps]]): the latest-op fold then
-    * degenerates to DISTINCT — no ordinal recovery from file paths, no
-    * max_by, no op/seq bytes through the exchange.
+  /** Latest op per quad over the segments `segs` ([[OpLog.tailState]]).
+    * When every segment committed adds-only (recorded in its name by
+    * [[commitOps]]) the fold degenerates to DISTINCT and skips the
+    * ordinal recovery from file paths. `only` restricts to a bucket
+    * subset: the tail filters on the hash expression the base read
+    * partition-prunes on.
     */
-  private def allAddsOnly(segs: Seq[SegRef]): Boolean = segs.forall(_.addsOnly)
-
-  /** Latest-op-per-quad aggregation of an op DataFrame (max_by over
-    * the (ord, seq) struct — lexicographic, overflow-free).
-    */
-  private def foldOps(log: DataFrame): DataFrame =
-    log.groupBy(QUAD_COLUMNS.map(col): _*)
-      .agg(max_by(col("op"), col("gseq")).as("last_op"))
-      .filter(col("last_op") === "A")
-      .drop("last_op")
+  private def tailState(segs: Seq[SegRef], only: Option[Seq[Int]] = None): DataFrame = {
+    val addsOnly = segs.forall(_.addsOnly)
+    val log = if (addsOnly) readSegmentsRaw(segs) else readSegments(segs)
+    OpLog.tailState(only.fold(log)(sel => log.filter(bucketCol.isin(sel: _*))), addsOnly)
+  }
 
   private def emptyQuads(): DataFrame = {
     import spark.implicits._
     Seq.empty[OpRow].toDF().select(QUAD_COLUMNS.map(col): _*)
   }
 
-  /** Current state as a quads DataFrame (graph, subject, predicate,
-    * obj) with set semantics.
-    *
-    * Physical shape: with no base, one hash-aggregate shuffle over the
-    * whole log; with a base, the base is scanned WITHOUT a shuffle and
-    * only the tail is aggregated + anti-joined (AQE broadcasts the
-    * small tail side).
-    */
   /** Bucket partition key of a quad row. */
   private def bucketCol =
     pmod(hash(QUAD_COLUMNS.map(col): _*), lit(numBuckets))
@@ -338,6 +332,14 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     dfs.reduceOption(_.unionByName(_)).getOrElse(emptyQuads())
   }
 
+  /** Current state as a quads DataFrame (graph, subject, predicate,
+    * obj) with set semantics.
+    *
+    * Physical shape: with no base, one hash-aggregate shuffle over the
+    * whole log; with a base, the base is scanned WITHOUT a shuffle and
+    * only the tail is aggregated + anti-joined (AQE broadcasts the
+    * small tail side).
+    */
   def quads(): DataFrame = merge(readVersion(), None)
 
   /** Materialize the current state as a SUBJECT-bucketed, per-bucket
@@ -437,62 +439,16 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     if (segs.isEmpty)
       return emptyQuads().withColumn("op", lit("A")).limit(0)
         .select(col("op") +: QUAD_COLUMNS.map(col): _*)
-    if (allAddsOnly(segs))
-      // every op is an add: the net op per quad is A, no fold needed
-      readSegmentsRaw(segs).select(QUAD_COLUMNS.map(col): _*)
-        .dropDuplicates(QUAD_COLUMNS)
-        .select(lit("A").as("op") +: QUAD_COLUMNS.map(col): _*)
-    else readSegments(segs)
-      .groupBy(QUAD_COLUMNS.map(col): _*)
-      .agg(max_by(col("op"), col("gseq")).as("op"))
-      .select(col("op") +: QUAD_COLUMNS.map(col): _*)
+    tailState(segs).select(col("last_op").as("op") +: QUAD_COLUMNS.map(col): _*)
   }
 
   private def merge(v: Version, asOf: Option[Long],
       only: Option[Seq[Int]] = None): DataFrame = {
     val (bases, tail0) = v.segments.partition(_.isBase)
-    val tail1 = asOf match {
-      case Some(b) => tail0.filter(_.batchId.exists(_ <= b))
-      case None => tail0
-    }
-    // bucket restriction: the base read partition-prunes; the (small)
-    // tail filters on the same hash expression
-    def prune(df: DataFrame): DataFrame = only match {
-      case Some(sel) => df.filter(bucketCol.isin(sel: _*))
-      case None => df
-    }
-    val tail = tail1
-    // adds-only tail (the dominant additive workload, recorded per
-    // segment by commitOps): latest-op-wins degenerates to DISTINCT —
-    // no file-path ordinal recovery, no max_by, no op/seq bytes through
-    // the exchange, and every surviving row is an add
-    def addsOnlyState(segs: Seq[SegRef]): DataFrame =
-      prune(readSegmentsRaw(segs).select(QUAD_COLUMNS.map(col): _*))
-        .dropDuplicates(QUAD_COLUMNS)
-    if (bases.isEmpty && tail.isEmpty) emptyQuads()
-    else if (bases.isEmpty) {
-      if (allAddsOnly(tail)) addsOnlyState(tail)
-      else prune(foldOps(readSegments(tail)))
-    } else {
-      val base = baseQuads(bases, only)
-      if (tail.isEmpty) base
-      else {
-        // tailState: latest op per quad key touched since compaction
-        val tailState =
-          if (allAddsOnly(tail)) addsOnlyState(tail).withColumn("last_op", lit("A"))
-          else prune(readSegments(tail))
-            .groupBy(QUAD_COLUMNS.map(col): _*)
-            .agg(max_by(col("op"), col("gseq")).as("last_op"))
-        val b = base.alias("b")
-        val touched = tailState.select(QUAD_COLUMNS.map(col): _*).alias("t")
-        // null-safe equality: graph is null for the default graph, and
-        // EqualTo(null, null) is null — a plain using-columns anti-join
-        // would never match default-graph quads
-        val cond = QUAD_COLUMNS.map(c => col(s"b.$c") <=> col(s"t.$c")).reduce(_ && _)
-        b.join(touched, cond, "left_anti")
-          .unionByName(tailState.filter(col("last_op") === "A").drop("last_op"))
-      }
-    }
+    val tail = asOf.fold(tail0)(b => tail0.filter(_.batchId.exists(_ <= b)))
+    if (tail.isEmpty) baseQuads(bases, only)
+    else if (bases.isEmpty) OpLog.live(tailState(tail, only))
+    else OpLog.overlay(baseQuads(bases, only), tailState(tail, only))
   }
 
   /** Write a base segment with PREDICATE-LOCAL layout: hash `bucket`
@@ -534,23 +490,12 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     val nextOrd = v.segments.map(_.ord).maxOption.getOrElse(-1L) + 1
     if (bases.isEmpty) {
       val ref = SegRef(f"s$nextOrd%08d-base", nextOrd, None)
-      val state = if (allAddsOnly(tail))
-        readSegmentsRaw(tail).select(QUAD_COLUMNS.map(col): _*)
-          .dropDuplicates(QUAD_COLUMNS)
-      else foldOps(readSegments(tail))
-      writeBase(state, ref)
+      writeBase(OpLog.live(tailState(tail)), ref)
       writeVersion(Version(Seq(ref), hw))
     } else {
-      val tailState = (if (allAddsOnly(tail))
-          readSegmentsRaw(tail).select(QUAD_COLUMNS.map(col): _*)
-            .dropDuplicates(QUAD_COLUMNS).withColumn("last_op", lit("A"))
-        else readSegments(tail)
-          .groupBy(QUAD_COLUMNS.map(col): _*)
-          .agg(max_by(col("op"), col("gseq")).as("last_op")))
-        .withColumn("bucket", bucketCol)
-        .cache()
+      val state = tailState(tail).withColumn("bucket", bucketCol).cache()
       try {
-        val touched = tailState.select(col("bucket")).distinct()
+        val touched = state.select(col("bucket")).distinct()
           .collect().map(_.getInt(0)).toSeq.sorted
         if (touched.isEmpty) { // tail segments carried no effective ops
           writeVersion(Version(bases, hw))
@@ -558,15 +503,9 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
         }
         val ref = SegRef(f"s$nextOrd%08d-base-k${touched.mkString("_")}",
           nextOrd, None, Some(touched))
-        val b = baseQuads(bases, Some(touched)).alias("b")
-        val t = tailState.select(QUAD_COLUMNS.map(col): _*).alias("t")
-        val cond = QUAD_COLUMNS.map(c => col(s"b.$c") <=> col(s"t.$c")).reduce(_ && _)
-        val merged = b.join(t, cond, "left_anti")
-          .unionByName(tailState.filter(col("last_op") === "A")
-            .select(QUAD_COLUMNS.map(col): _*))
-        writeBase(merged, ref)
+        writeBase(OpLog.overlay(baseQuads(bases, Some(touched)), state), ref)
         writeVersion(Version(bases :+ ref, hw))
-      } finally tailState.unpersist()
+      } finally state.unpersist()
     }
   }
 
@@ -582,9 +521,10 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * astronomically unlikely collision the fold simply runs on the
     * original structs. Nulls map to a null id (Spark hash functions
     * skip null inputs, which would alias a null graph with a term
-    * hashing to the seed), so the id tuple is null-safe like merge()'s
-    * per-column `<=>`. [[quads]] itself is untouched — only the count,
-    * which discards the quads anyway, takes this path.
+    * hashing to the seed), so the id tuple is null-safe like
+    * [[OpLog.overlay]]'s per-column `<=>`. [[quads]] itself is
+    * untouched — only the count, which discards the quads anyway,
+    * takes this path.
     */
   def count(): Long = countWith(c => xxhash64(c))
 
@@ -596,60 +536,33 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       org.apache.spark.sql.Column): Long = {
     val v = readVersion()
     val (bases, tail) = v.segments.partition(_.isBase)
-    if (bases.isEmpty && tail.isEmpty) return 0L
-    if (tail.isEmpty) return baseQuads(bases).count()
-    def termIds(df: DataFrame, extra: Seq[String] = Seq.empty): DataFrame =
-      df.select(QUAD_COLUMNS.map(c =>
-        when(col(c).isNotNull, idOf(col(c))).as(c)) ++ extra.map(col): _*)
+    if (tail.isEmpty) return if (bases.isEmpty) 0L else baseQuads(bases).count()
+    // adds-only with no base: count = DISTINCT quads, exact on the
+    // structs with no fold machinery at all. Measured on the 5M-op
+    // scale corpus the struct distinct (0.85–1.1 s warm) ties the
+    // unguarded hash-pair distinct (0.9–1.0 s) — dropping max_by/gseq
+    // was the real win, so exactness here costs nothing and needs no
+    // guard
+    val addsOnly = tail.forall(_.addsOnly)
+    if (bases.isEmpty && addsOnly) return tailState(tail).count()
+    def termIds(df: DataFrame): DataFrame =
+      df.select(QUAD_COLUMNS.map(c => when(col(c).isNotNull, idOf(col(c))).as(c)) ++
+        df.columns.filterNot(QUAD_COLUMNS.contains).map(col): _*)
+    val base = if (bases.isEmpty) None else Some(baseQuads(bases))
+    val log = if (addsOnly) readSegmentsRaw(tail) else readSegments(tail)
     // injectivity of the term-id hash over every term the count will
-    // compare (tail ops, plus the base when the anti-join crosses the
+    // compare (tail ops, plus the base when the overlay crosses the
     // two): max terms per id, 1 = injective
-    def injective(termSources: Seq[DataFrame]): Boolean = {
-      val terms = termSources.map(df =>
-          df.select(explode(array(QUAD_COLUMNS.map(col): _*)).as("t")))
-        .reduce(_.unionByName(_))
-        .filter(col("t").isNotNull)
-      terms.groupBy(idOf(col("t")).as("tid"))
-        .agg(countDistinct(col("t")).as("nd"))
-        .agg(max(col("nd"))).head().getLong(0) == 1L
-    }
-    if (bases.isEmpty) {
-      if (allAddsOnly(tail)) {
-        // adds-only: count = DISTINCT quads, exact on the structs with
-        // no fold machinery at all. Measured on the 5M-op scale corpus
-        // the struct distinct (0.85–1.1 s warm) ties the unguarded
-        // hash-pair distinct (0.9–1.0 s) — dropping max_by/gseq was the
-        // real win, so exactness here costs nothing and needs no guard
-        readSegmentsRaw(tail).select(QUAD_COLUMNS.map(col): _*)
-          .dropDuplicates(QUAD_COLUMNS).count()
-      } else {
-        val log = readSegments(tail)
-        if (injective(Seq(log)))
-          termIds(log, Seq("op", "gseq"))
-            .groupBy(QUAD_COLUMNS.map(col): _*)
-            .agg(max_by(col("op"), col("gseq")).as("last_op"))
-            .filter(col("last_op") === "A").count()
-        else foldOps(log).count()
-      }
-    } else {
-      val base = baseQuads(bases)
-      val log = readSegments(tail)
-      if (!injective(Seq(log, base))) return quads().count()
-      val tailState = termIds(log, Seq("op", "gseq"))
-        .groupBy(QUAD_COLUMNS.map(col): _*)
-        .agg(max_by(col("op"), col("gseq")).as("last_op"))
-        .cache()
-      try {
-        val touched = tailState.select(QUAD_COLUMNS.map(col): _*)
-        // id tuples may carry nulls (null graph): null-safe equality,
-        // like merge()'s anti-join
-        val b = termIds(base).alias("b")
-        val t = touched.alias("t")
-        val cond = QUAD_COLUMNS.map(c => col(s"b.$c") <=> col(s"t.$c")).reduce(_ && _)
-        val survivors = b.join(t, cond, "left_anti").count()
-        survivors + tailState.filter(col("last_op") === "A").count()
-      } finally tailState.unpersist()
-    }
+    val terms = (log +: base.toSeq)
+      .map(_.select(explode(array(QUAD_COLUMNS.map(col): _*)).as("t")))
+      .reduce(_.unionByName(_))
+      .filter(col("t").isNotNull)
+    val injective = terms.groupBy(idOf(col("t")).as("tid"))
+      .agg(countDistinct(col("t")).as("nd"))
+      .agg(max(col("nd"))).head().getLong(0) == 1L
+    if (!injective) return quads().count()
+    val state = OpLog.tailState(termIds(log), addsOnly)
+    base.fold(OpLog.live(state))(b => OpLog.overlay(termIds(b), state)).count()
   }
 
   /** Remove files no read can reach: segment directories absent from
@@ -770,13 +683,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 }
 
 object QuadStore {
-  /** op row as a case class so tests get encoders for free. */
-  final case class OpRow(op: String, seq: Long,
-      graph: graft.rdf.Term, subject: graft.rdf.Term,
-      predicate: graft.rdf.Term, obj: graft.rdf.Term)
-
-  val QUAD_COLUMNS: Seq[String] = Seq("graph", "subject", "predicate", "obj")
-  val OP_COLUMNS: Seq[String] = Seq("op", "seq") ++ QUAD_COLUMNS
+  import OpLog.QUAD_COLUMNS
 
   /** A committed segment: `s<ord>-b<batchId>` (epoch segment;
     * `-g<n>` suffix = nth copy-on-write replay of that epoch; trailing
@@ -802,23 +709,10 @@ object QuadStore {
     }
   }
 
-  /** The fixed schema [[commitOps]] writes — passed explicitly on every
-    * segment read so no read pays per-call footer-based inference.
-    */
-  private[store] val TERM_SCHEMA: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("termType", StringType), StructField("lex", StringType),
-      StructField("datatype", StringType), StructField("lang", StringType)))
-  }
-  private[store] val OP_SCHEMA: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("op", StringType), StructField("seq", LongType)) ++
-      QUAD_COLUMNS.map(c => StructField(c, TERM_SCHEMA)))
-  }
   /** Base-segment schema: quad columns + the `bucket` partition dir. */
   private[store] val BASE_SCHEMA: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    StructType(QUAD_COLUMNS.map(c => StructField(c, TERM_SCHEMA)) :+
+    StructType(QUAD_COLUMNS.map(c => StructField(c, OpLog.TERM_SCHEMA)) :+
       StructField("bucket", IntegerType))
   }
 }

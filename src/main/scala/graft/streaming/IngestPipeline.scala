@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.connect.OffsetStore
 import graft.rdf.RdfParse
-import graft.store.QuadStore
+import graft.store.{OpLog, QuadStore}
 
 /** The distributed ingest path — the Spark shape of the reference's
   * whole pipeline (SURVEY.md §3.1: readStream(kafka) → decode →
@@ -16,8 +16,8 @@ import graft.store.QuadStore
   * decode happens in executors (RdfParse.decodeEvents mapPartitions —
   * one pass, no shuffle), the corrupt split is a column filter, and
   * each micro-batch commits one atomic store segment, so epoch replay
-  * is idempotent end-to-end (QuadStore.commitOps overwrites its own
-  * segment).
+  * is idempotent end-to-end (QuadStore.commitOps replays an epoch
+  * copy-on-write into its original log position).
   */
 object IngestPipeline {
 
@@ -40,11 +40,13 @@ object IngestPipeline {
     // SPARQL Update events are sequential by nature (WHERE clauses see
     // the state left by earlier events); the bulk path is unordered
     // across partitions, so they route to the DLQ rather than silently
-    // dropping — the Projector path applies them (QuadStoreSink)
-    val decoded = decoded0.withColumn("_corrupt",
-      when(col("_corrupt").isNull && col("kind") === "update",
+    // dropping — the Projector path applies them (QuadStoreSink).
+    // Events whose ops or offset do not fit the `seq` packing route
+    // there too, rather than wrapping into another event's ordinals
+    val decoded = decoded0.withColumn("_corrupt", coalesce(col("_corrupt"),
+      when(col("kind") === "update",
         lit("sparql-update requires the ordered projector path"))
-      .otherwise(col("_corrupt")))
+        .otherwise(OpLog.unpackable(col("offset")))))
     locally {
       val bad = decoded.filter(col("_corrupt").isNotNull)
       val dlqCount = dlqDir match {
@@ -63,29 +65,14 @@ object IngestPipeline {
         case None => 0L
       }
       val good = decoded.filter(col("_corrupt").isNull)
-      // dataset payloads: quads as adds; patch payloads: effective A/D
-      // stream. seq = offset<<20 | opIdx preserves event order WITHIN a
-      // partition; cross-partition order is undefined — the same
-      // contract as the reference ("order of events matters … you MUST
-      // have only a single partition", README.md:152-153). Additive
-      // (delete-free) ingestion is order-insensitive by set semantics.
-      val ops = good.select(col("partition"), col("offset"),
-          when(col("kind") === "dataset",
-            transform(col("quads"), q => struct(lit("A").as("op"),
-              q.getField("graph").as("graph"), q.getField("subject").as("subject"),
-              q.getField("predicate").as("predicate"), q.getField("obj").as("obj"))))
-          .otherwise(
-            transform(filter(col("ops"), o => o.getField("op").isin("A", "D")),
-              o => struct(o.getField("op").as("op"),
-                o.getField("graph").as("graph"), o.getField("subject").as("subject"),
-                o.getField("predicate").as("predicate"), o.getField("obj").as("obj"))))
-          .as("xs"))
-        .select(col("partition"), col("offset"), posexplode(col("xs")).as(Seq("opIdx", "x")))
-        .select(col("x.op").as("op"),
-          (shiftleft(col("offset"), 20) + col("opIdx")).as("seq"),
-          col("x.graph").as("graph"), col("x.subject").as("subject"),
-          col("x.predicate").as("predicate"), col("x.obj").as("obj"))
-      store.commitOps(batchId, ops)
+      // dataset payloads: quads as adds; patch payloads: their A/D
+      // stream. The offset is the event ordinal, which preserves event
+      // order WITHIN a partition; cross-partition order is undefined —
+      // the same contract as the reference ("order of events matters …
+      // you MUST have only a single partition", README.md:152-153).
+      // Additive (delete-free) ingestion is order-insensitive by set
+      // semantics.
+      store.commitOps(batchId, OpLog.lower(good, col("offset")))
       val applied = if (countApplied) good.count() else -1L
       offsets.foreach { os =>
         good.groupBy(col("topic"), col("partition"))

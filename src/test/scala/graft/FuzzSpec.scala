@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.rdf.{NQuadsParser, Quad, RdfParseException, Term, TurtleParser}
 import graft.sparql.Sparql
-import graft.store.QuadStore
+import graft.store.{OpLog, QuadStore}
 
 /** Property-based robustness: serializer/parser round-trips over
   * generated terms (escapes, unicode, surrogate halves, control
@@ -134,7 +134,7 @@ class FuzzSpec extends AnyFunSuite {
     val validQuad = genValidQuad
     // each sample runs a Spark job — bounded count, still 4 terms/quad
     check(Prop.forAll(Gen.listOfN(4, validQuad)) { qs =>
-      val df = qs.map(q => QuadStore.OpRow("A", 0L, q.graph, q.subject,
+      val df = qs.map(q => OpLog.OpRow("A", 0L, q.graph, q.subject,
           q.predicate, q.obj)).toDF()
         .select(col("graph"), col("subject"), col("predicate"), col("obj"))
       val doc = rdf.NtWriter.ntLines(df).collect().map(_.getString(0)).mkString("\n")
@@ -150,7 +150,7 @@ class FuzzSpec extends AnyFunSuite {
     val starFree = genValidQuad.retryUntil(
       q => !q.subject.isTriple && !q.obj.isTriple, 100)
     check(Prop.forAll(Gen.listOfN(4, starFree)) { qs =>
-      val df = qs.map(q => QuadStore.OpRow("A", 0L, q.graph, q.subject,
+      val df = qs.map(q => OpLog.OpRow("A", 0L, q.graph, q.subject,
           q.predicate, q.obj)).toDF()
         .select(col("graph"), col("subject"), col("predicate"), col("obj"))
       val doc = "[" + rdf.JsonLdWriter.jsonLdLines(df)
@@ -166,7 +166,7 @@ class FuzzSpec extends AnyFunSuite {
     // into object lists only when byte-identical, so the SET is
     // preserved; parse back in TriG mode (named-graph blocks)
     check(Prop.forAll(Gen.listOfN(4, genValidQuad)) { qs =>
-      val df = qs.map(q => QuadStore.OpRow("A", 0L, q.graph, q.subject,
+      val df = qs.map(q => OpLog.OpRow("A", 0L, q.graph, q.subject,
           q.predicate, q.obj)).toDF()
         .select(col("graph"), col("subject"), col("predicate"), col("obj"))
       val doc = rdf.TurtleWriter.turtleLines(df, Map.empty)
@@ -191,7 +191,7 @@ class FuzzSpec extends AnyFunSuite {
       s <- genLocal; o <- genLocal
     } yield Quad(null, Term.iri(ns + s), Term.iri(Term.RDF_TYPE), Term.iri(ns + o))
     check(Prop.forAll(Gen.listOfN(4, genQ)) { qs =>
-      val df = qs.map(q => QuadStore.OpRow("A", 0L, q.graph, q.subject,
+      val df = qs.map(q => OpLog.OpRow("A", 0L, q.graph, q.subject,
           q.predicate, q.obj)).toDF()
         .select(col("graph"), col("subject"), col("predicate"), col("obj"))
       val hdr = rdf.TurtleWriter.prefixHeader(Map("v" -> ns)).mkString("\n")

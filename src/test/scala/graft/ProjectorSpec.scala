@@ -74,19 +74,27 @@ class ProjectorSpec extends AnyFunSuite {
 
   test("bulk auto-route: oversized dataset batches decode executor-side, same result") {
     // threshold 1 byte forces the bulk route; blank nodes included so
-    // scope-label parity with the driver path is exercised
+    // scope-label parity with the driver path is exercised. In the one
+    // batch, driver-path patches interleave with bulk-routed dataset
+    // events: event 3 deletes quads bulk events 0 and 1 added, and
+    // bulk event 4 re-adds one of them — each must win in event order
     def run(threshold: Long): Set[String] = {
       val store = new graft.store.QuadStore(TestSpark.spark,
         java.nio.file.Files.createTempDirectory("bulkroute").toString)
       val sink = new QuadStoreSink(TestSpark.spark, store, bulkBytesThreshold = threshold)
+      def nq(i: Long, body: String) = Event("t", 0, i, Array.empty,
+        body.getBytes("UTF-8"), Map("Content-Type" -> "application/n-quads"))
       val evs = (0L until 3L).map { i =>
-        Event("t", 0, i, Array.empty,
-          (s"""<http://g/s$i> <http://g/p> "v$i" .""" + "\n" +
-           s"""_:b <http://g/q> <http://g/o$i> .""").getBytes("UTF-8"),
-          Map("Content-Type" -> "application/n-quads"))
-      } :+ patchEv(3, "TX .\nA <http://g/px> <http://g/p> \"patched\" .\nTC .")
+        nq(i, s"""<http://g/s$i> <http://g/p> "v$i" .""" + "\n" +
+          s"""_:b <http://g/q> <http://g/o$i> .""")
+      } ++ Seq(
+        patchEv(3, "D <http://g/s0> <http://g/p> \"v0\" .\n" +
+          "D <http://g/s1> <http://g/p> \"v1\" ."),
+        nq(4, "<http://g/s1> <http://g/p> \"v1\" ."),
+        patchEv(5, "TX .\nA <http://g/px> <http://g/p> \"patched\" .\nTC ."))
       new Projector(new MemoryEventSource(evs), sink,
         ProjectorConfig(batchSize = 10)).runToCompletion()
+      assert(store.committedSegments().size == 1, "the events must commit as one batch")
       store.quads().collect().map { r =>
         val s = r.getStruct(1); val o = r.getStruct(3)
         s"${s.getString(0)}:${s.getString(1)}|${o.getString(0)}:${o.getString(1)}"
@@ -95,7 +103,9 @@ class ProjectorSpec extends AnyFunSuite {
     val bulk = run(threshold = 1L)
     val driver = run(threshold = Long.MaxValue)
     assert(bulk == driver, "bulk route diverged from the driver path")
-    assert(bulk.size == 7) // 3 nquads pairs + 1 patched
+    assert(bulk.size == 6) // 3 nquads pairs + 1 patched, less s0's deleted quad
+    assert(!bulk.exists(_.startsWith("iri:http://g/s0|")))
+    assert(bulk.exists(_.startsWith("iri:http://g/s1|")))
     // a batch carrying a SPARQL Update stays on the driver path even
     // past the threshold (sequential WHERE state) — and still applies
     val store2 = new graft.store.QuadStore(TestSpark.spark,

@@ -6,7 +6,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.rdf._
-import graft.store.QuadStore
+import graft.store.{OpLog, QuadStore}
 
 /** Golden-count fixture corpus per FIXTURES.md §2 / BASELINE.md §B:
   * data.ttl → 1, + data.nq → 2, patch1.rdfp → 4, malformed → DLQ-class
@@ -803,7 +803,7 @@ class RdfWritersSpec extends AnyFunSuite {
 
   private def df(quads: Seq[Quad]) = {
     import spark.implicits._
-    quads.map(q => QuadStore.OpRow("A", 0L, q.graph, q.subject, q.predicate, q.obj))
+    quads.map(q => OpLog.OpRow("A", 0L, q.graph, q.subject, q.predicate, q.obj))
       .toDF().select(org.apache.spark.sql.functions.col("graph"),
         org.apache.spark.sql.functions.col("subject"),
         org.apache.spark.sql.functions.col("predicate"),
@@ -890,7 +890,7 @@ class RdfCanonicalSpec extends AnyFunSuite {
 
   private def df(quads: Seq[Quad]) = {
     import spark.implicits._
-    quads.map(q => QuadStore.OpRow("A", 0L, q.graph, q.subject, q.predicate, q.obj))
+    quads.map(q => OpLog.OpRow("A", 0L, q.graph, q.subject, q.predicate, q.obj))
       .toDF().select(org.apache.spark.sql.functions.col("graph"),
         org.apache.spark.sql.functions.col("subject"),
         org.apache.spark.sql.functions.col("predicate"),

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.connect.OffsetStore
 import graft.rdf.{NQuadsParser, Quad, Term}
 import org.apache.spark.sql.functions.col
-import graft.store.{AggView, QuadStore}
+import graft.store.{AggView, OpLog, QuadStore}
 
 /** QuadStore scale/robustness behavior added in round 2, plus the
   * offset-key and blank-node-label fixes.
@@ -30,10 +30,10 @@ class StoreSpec extends AnyFunSuite {
     // tail: delete b, re-add with new value, add d
     import spark.implicits._
     val ops = Seq(
-      QuadStore.OpRow("D", 0L, null, Term.iri("http://x/b"), Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("A", 1L, null, Term.iri("http://x/b"), Term.iri("http://x/p"), Term.lit("2")),
-      QuadStore.OpRow("D", 2L, null, Term.iri("http://x/c"), Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("A", 3L, null, Term.iri("http://x/d"), Term.iri("http://x/p"), Term.lit("1")))
+      OpLog.OpRow("D", 0L, null, Term.iri("http://x/b"), Term.iri("http://x/p"), Term.lit("1")),
+      OpLog.OpRow("A", 1L, null, Term.iri("http://x/b"), Term.iri("http://x/p"), Term.lit("2")),
+      OpLog.OpRow("D", 2L, null, Term.iri("http://x/c"), Term.iri("http://x/p"), Term.lit("1")),
+      OpLog.OpRow("A", 3L, null, Term.iri("http://x/d"), Term.iri("http://x/p"), Term.lit("1")))
     store.commitOps(1, ops.toDF())
     val state = store.quads().collect()
       .map(r => (r.getStruct(1).getString(1), r.getStruct(3).getString(1))).toSet
@@ -45,7 +45,7 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
     import spark.implicits._
     store.commitOps(1, Seq(
-      QuadStore.OpRow("D", 0L, null, Term.iri("http://x/a"),
+      OpLog.OpRow("D", 0L, null, Term.iri("http://x/a"),
         Term.iri("http://x/p"), Term.lit("1"))).toDF())
     val segs = store.committedSegments()
     assert(segs.head.endsWith("-a"), s"adds-only segment unmarked: $segs")
@@ -53,9 +53,9 @@ class StoreSpec extends AnyFunSuite {
     // state is unaffected by the marker; a replay that INTRODUCES a
     // delete re-detects its own status (marker dropped)
     store.commitOps(0, Seq(
-      QuadStore.OpRow("A", 0L, null, Term.iri("http://x/c"),
+      OpLog.OpRow("A", 0L, null, Term.iri("http://x/c"),
         Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("D", 1L, null, Term.iri("http://x/c"),
+      OpLog.OpRow("D", 1L, null, Term.iri("http://x/c"),
         Term.iri("http://x/p"), Term.lit("1"))).toDF())
     val replayed = store.committedSegments().head
     assert(replayed.contains("-g1") && !replayed.endsWith("-a"), replayed)
@@ -93,11 +93,11 @@ class StoreSpec extends AnyFunSuite {
     // delete so the guarded term-id fold path (not the adds-only
     // distinct) is exercised
     store.commitOps(0, Seq(
-      QuadStore.OpRow("A", 0L, null, Term.iri("http://x/a"),
+      OpLog.OpRow("A", 0L, null, Term.iri("http://x/a"),
         Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("A", 1L, null, Term.iri("http://x/b"),
+      OpLog.OpRow("A", 1L, null, Term.iri("http://x/b"),
         Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("D", 2L, null, Term.iri("http://x/b"),
+      OpLog.OpRow("D", 2L, null, Term.iri("http://x/b"),
         Term.iri("http://x/p"), Term.lit("1"))).toDF())
     // degenerate id: every term gets id 7 — the injectivity check must
     // reject it and fall back to the exact struct fold
@@ -106,9 +106,9 @@ class StoreSpec extends AnyFunSuite {
     // and across a base + delete-bearing tail
     store.compact()
     store.commitOps(1, Seq(
-      QuadStore.OpRow("A", 0L, null, Term.iri("http://x/c"),
+      OpLog.OpRow("A", 0L, null, Term.iri("http://x/c"),
         Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("D", 1L, null, Term.iri("http://x/a"),
+      OpLog.OpRow("D", 1L, null, Term.iri("http://x/a"),
         Term.iri("http://x/p"), Term.lit("1"))).toDF())
     assert(store.countWith(_ => org.apache.spark.sql.functions.lit(7L)) == 1L)
     assert(store.count() == 1L)
@@ -119,7 +119,7 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(0, Seq(q("a", "1")))
     store.addQuads(1, Seq(q("b", "1")))
     import spark.implicits._
-    store.commitOps(2, Seq(QuadStore.OpRow("D", 0L, null,
+    store.commitOps(2, Seq(OpLog.OpRow("D", 0L, null,
       Term.iri("http://x/a"), Term.iri("http://x/p"), Term.lit("1"))).toDF())
     def subjects(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getStruct(1).getString(1)).toSet
@@ -160,11 +160,11 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(1, Seq(q("b", "1"), q("c", "1")))
     import spark.implicits._
     store.commitOps(2, Seq(
-      QuadStore.OpRow("D", 0L, null, Term.iri("http://x/a"),
+      OpLog.OpRow("D", 0L, null, Term.iri("http://x/a"),
         Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("D", 1L, null, Term.iri("http://x/c"),
+      OpLog.OpRow("D", 1L, null, Term.iri("http://x/c"),
         Term.iri("http://x/p"), Term.lit("1")),
-      QuadStore.OpRow("A", 2L, null, Term.iri("http://x/c"),
+      OpLog.OpRow("A", 2L, null, Term.iri("http://x/c"),
         Term.iri("http://x/p"), Term.lit("2"))).toDF())
     def feed(from: Long, to: Long) =
       store.changes(from, to).collect()
@@ -197,7 +197,7 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(1, Seq(q("b", "1")))
     // delete a in batch 2, then compact: state = {b}
     import spark.implicits._
-    store.commitOps(2, Seq(QuadStore.OpRow("D", 0L, null,
+    store.commitOps(2, Seq(OpLog.OpRow("D", 0L, null,
       Term.iri("http://x/a"), Term.iri("http://x/p"), Term.lit("1"))).toDF())
     store.compact()
     assert(store.highWaterBatchId == 2)
@@ -300,7 +300,7 @@ class StoreSpec extends AnyFunSuite {
     assert(store.count() == 40)
     // tail touching ONE quad → recompaction owns only that quad's bucket
     import spark.implicits._
-    store.commitOps(1, Seq(QuadStore.OpRow("D", 0L, null,
+    store.commitOps(1, Seq(OpLog.OpRow("D", 0L, null,
       Term.iri("http://x/s0"), Term.iri("http://x/p"), Term.lit("1"))).toDF())
     store.compact()
     val segs = store.committedSegments()
@@ -318,7 +318,7 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(1, Seq(q("extra", "1")))
     store.compact()
     import spark.implicits._
-    store.commitOps(2, Seq(QuadStore.OpRow("D", 0L, null,
+    store.commitOps(2, Seq(OpLog.OpRow("D", 0L, null,
       Term.iri("http://x/s0"), Term.iri("http://x/p"), Term.lit("1"))).toDF())
     store.compact() // partial base supersedes some buckets of the first
     val before = store.count()
@@ -370,7 +370,7 @@ class StoreSpec extends AnyFunSuite {
     // delete EVERYTHING, then recompact: some bucket is now fully empty
     import spark.implicits._
     val dels = Seq("a", "b", "c").zipWithIndex.map { case (s, i) =>
-      QuadStore.OpRow("D", i.toLong, null, Term.iri(s"http://x/$s"),
+      OpLog.OpRow("D", i.toLong, null, Term.iri(s"http://x/$s"),
         Term.iri("http://x/p"), Term.lit("1"))
     }
     store.commitOps(1, dels.toDF())
@@ -406,14 +406,103 @@ class StoreSpec extends AnyFunSuite {
   test("cross-segment ordering survives seq values beyond 2^40 (kafka-scale offsets)") {
     import spark.implicits._
     val store = newStore()
-    // batch 0 adds with a huge intra-batch seq (offset<<20 at billions
-    // of events); batch 1 deletes with seq 0 — the LATER SEGMENT must
+    // batch 0 adds with a huge intra-batch seq (OpLog.seq of an offset
+    // in the billions); batch 1 deletes with seq 0 — the LATER SEGMENT must
     // win; a packed ord<<40+seq key would order these wrongly
-    store.commitOps(0, Seq(QuadStore.OpRow("A", 1L << 45, null,
+    store.commitOps(0, Seq(OpLog.OpRow("A", 1L << 45, null,
       Term.iri("http://x/big"), Term.iri("http://x/p"), Term.lit("1"))).toDF())
-    store.commitOps(1, Seq(QuadStore.OpRow("D", 0L, null,
+    store.commitOps(1, Seq(OpLog.OpRow("D", 0L, null,
       Term.iri("http://x/big"), Term.iri("http://x/p"), Term.lit("1"))).toDF())
     assert(store.count() == 0)
+  }
+
+  test("op-log packing: per-event budget boundary and seq order") {
+    assert(OpLog.overBudget(OpLog.MaxEventOps - 1).isEmpty)
+    assert(OpLog.overBudget(OpLog.MaxEventOps).exists(_.contains("budget")))
+    assert(OpLog.seq(0L, OpLog.MaxEventOps - 1) < OpLog.seq(1L, 0L))
+    assert(OpLog.seq(OpLog.MaxEventOrdinal - 1, OpLog.MaxEventOps - 1) == Long.MaxValue)
+  }
+
+  test("differential fuzz: store reads match a latest-op-wins model") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.lit
+    val p = Term.iri("http://x/p")
+    val universe = for {
+      g <- Seq(null, Term.iri("http://x/g1"))
+      s <- Seq(Term.iri("http://x/s0"), Term.iri("http://x/s1"), Term.blank("t:0:0:b0"))
+      o <- Seq(Term.lit("1"), Term.iri("http://x/o"), Term.blank("t:0:0:b1"))
+    } yield Quad(g, s, p, o)
+    def term(r: Row): Term =
+      if (r == null) null else Term(r.getString(0), r.getString(1), r.getString(2), r.getString(3))
+    def quad(r: Row) = Quad(term(r.getAs[Row]("graph")), term(r.getAs[Row]("subject")),
+      term(r.getAs[Row]("predicate")), term(r.getAs[Row]("obj")))
+    val degenerate = (_: org.apache.spark.sql.Column) => lit(7L)
+    // (base present, tail adds-only) seen under reads and at compaction
+    val readShapes = scala.collection.mutable.Set[(Boolean, Boolean)]()
+    val compactShapes = scala.collection.mutable.Set[(Boolean, Boolean)]()
+    // every third step compacts; batches alternate between adds-only
+    // and delete-bearing per compaction, in opposite phase per run, so
+    // every (base, adds-only) shape is both read and compacted
+    for (run <- 0 to 1) {
+      val rnd = new scala.util.Random(7919L + run)
+      val store = newStore()
+      var model = Set.empty[Quad]
+      val history = scala.collection.mutable.Map(-1L -> Set.empty[Quad])
+      var batch = 0L
+      var compactions = 0
+      def shape(): (Boolean, Boolean) = {
+        val segs = store.committedSegments()
+        (segs.exists(_.contains("-base")), segs.filterNot(_.contains("-base")).forall(_.endsWith("-a")))
+      }
+      for (step <- 0 until 6) {
+        if (step % 3 == 2) {
+          compactShapes += shape()
+          store.compact()
+          compactions += 1
+        } else {
+          def any() = universe(rnd.nextInt(universe.size))
+          val addsOnly = (run + compactions) % 2 == 0
+          val ops = Seq.fill(1 + rnd.nextInt(5))(
+            (if (addsOnly || rnd.nextBoolean()) "A" else "D", any())) ++
+            (if (addsOnly) Nil else Seq(("D", any())))
+          store.commitOps(batch, ops.zipWithIndex.map { case ((op, q), i) =>
+            OpLog.OpRow(op, i.toLong, q.graph, q.subject, q.predicate, q.obj)
+          }.toDF())
+          ops.foreach { case (op, q) => model = if (op == "A") model + q else model - q }
+          history(batch) = model
+          batch += 1
+        }
+        val avail = store.availableBatches()
+        if (avail.nonEmpty) readShapes += shape()
+        // quads() (at = -2) and quadsAt(b) for every available b, one job
+        val reads = (store.quads().withColumn("at", lit(-2L)) +:
+            avail.map(b => store.quadsAt(b).withColumn("at", lit(b))))
+          .reduce(_.unionByName(_)).collect()
+          .groupBy(_.getAs[Long]("at")).map { case (b, rs) => b -> rs.map(quad).toSeq }
+        // set semantics: no quad twice
+        def check(at: Long, want: Set[Quad]): Unit = {
+          val got = reads.getOrElse(at, Seq.empty)
+          assert(got.size == want.size && got.toSet == want, s"reads at $at")
+        }
+        check(-2L, model)
+        avail.foreach(b => check(b, history(b)))
+        assert(store.count() == model.size)
+        assert(store.countWith(degenerate) == model.size)
+        if (avail.nonEmpty) {
+          val to = avail(rnd.nextInt(avail.size))
+          val froms = store.highWaterBatchId +: avail.filter(_ < to)
+          val from = froms(rnd.nextInt(froms.size))
+          val feed = store.changes(from, to).collect().map(r => (r.getString(0), quad(r)))
+          val applied = feed.foldLeft(history(from)) { case (m, (op, q)) =>
+            if (op == "A") m + q else m - q
+          }
+          assert(applied == history(to), s"changes($from, $to)")
+        }
+      }
+    }
+    val all = Set((false, false), (false, true), (true, false), (true, true))
+    assert(readShapes == all && compactShapes == all, (readShapes, compactShapes))
   }
 
   test("PA/PD patch ops maintain the dataset prefix map in order") {
@@ -460,10 +549,10 @@ class StoreSpec extends AnyFunSuite {
     // ABSENT quad (set no-op), one real add, one real delete — only
     // the real ops may move the counts
     store.commitOps(1, Seq(
-      QuadStore.OpRow("A", 0L, null, Term.iri("http://x/a"), p("p1"), Term.lit("1")),
-      QuadStore.OpRow("D", 1L, null, Term.iri("http://x/zz"), p("p2"), Term.lit("1")),
-      QuadStore.OpRow("A", 2L, null, Term.iri("http://x/d"), p("p3"), Term.lit("1")),
-      QuadStore.OpRow("D", 3L, null, Term.iri("http://x/c"), p("p2"), Term.lit("1"))
+      OpLog.OpRow("A", 0L, null, Term.iri("http://x/a"), p("p1"), Term.lit("1")),
+      OpLog.OpRow("D", 1L, null, Term.iri("http://x/zz"), p("p2"), Term.lit("1")),
+      OpLog.OpRow("A", 2L, null, Term.iri("http://x/d"), p("p3"), Term.lit("1")),
+      OpLog.OpRow("D", 3L, null, Term.iri("http://x/c"), p("p2"), Term.lit("1"))
     ).toDF())
     assert(view.refresh() == 1L)
     // p2 dropped to zero → its row disappears
@@ -506,12 +595,12 @@ class StoreSpec extends AnyFunSuite {
     // (one of d's two rows vanishes), add an unrelated predicate
     // (must not touch the view), add a fresh dangling subject
     store.commitOps(1, Seq(
-      QuadStore.OpRow("D", 0L, null, Term.iri("http://x/a"), p("age"), Term.lit("30")),
-      QuadStore.OpRow("A", 1L, null, Term.iri("http://x/b"), p("name"), Term.lit("bob")),
-      QuadStore.OpRow("A", 2L, null, Term.iri("http://x/c"), p("age"), Term.lit("60")),
-      QuadStore.OpRow("D", 3L, null, Term.iri("http://x/d"), p("name"), Term.lit("danny")),
-      QuadStore.OpRow("A", 4L, null, Term.iri("http://x/b"), p("email"), Term.lit("x")),
-      QuadStore.OpRow("A", 5L, null, Term.iri("http://x/e"), p("name"), Term.lit("eve"))
+      OpLog.OpRow("D", 0L, null, Term.iri("http://x/a"), p("age"), Term.lit("30")),
+      OpLog.OpRow("A", 1L, null, Term.iri("http://x/b"), p("name"), Term.lit("bob")),
+      OpLog.OpRow("A", 2L, null, Term.iri("http://x/c"), p("age"), Term.lit("60")),
+      OpLog.OpRow("D", 3L, null, Term.iri("http://x/d"), p("name"), Term.lit("danny")),
+      OpLog.OpRow("A", 4L, null, Term.iri("http://x/b"), p("email"), Term.lit("x")),
+      OpLog.OpRow("A", 5L, null, Term.iri("http://x/e"), p("name"), Term.lit("eve"))
     ).toDF())
     assert(view.refresh() == 1L)
     assert(rows() == Set(
@@ -527,7 +616,7 @@ class StoreSpec extends AnyFunSuite {
     // idempotent no-change refresh
     assert(view.refresh() == 1L)
     // a window touching none of the view's predicates keeps the rows
-    store.commitOps(2, Seq(QuadStore.OpRow("A", 0L, null,
+    store.commitOps(2, Seq(OpLog.OpRow("A", 0L, null,
       Term.iri("http://x/zz"), p("email"), Term.lit("y"))).toDF())
     assert(view.refresh() == 2L)
     assert(rows() == Set(
@@ -561,7 +650,7 @@ class StoreSpec extends AnyFunSuite {
       Files.createTempDirectory("aggview2").toString, Seq("predicate"))
     view.refresh()
     // one changed quad → its bucket only
-    store.commitOps(2, Seq(QuadStore.OpRow("D", 0L, null,
+    store.commitOps(2, Seq(OpLog.OpRow("D", 0L, null,
       Term.iri("http://x/s0"), Term.iri("http://x/p"), Term.lit("0"))).toDF())
     val cdc = store.changes(0L, 2L)
     val buckets = cdc.select(store.bucketOf.as("b")).distinct()
@@ -615,7 +704,7 @@ class StoreSpec extends AnyFunSuite {
       new Thread(() =>
         try (0 until 4).foreach { i =>
           sink.exclusively {
-            store.commitOps(store.nextBatchId, Seq(QuadStore.OpRow(
+            store.commitOps(store.nextBatchId, Seq(OpLog.OpRow(
               "A", 0L, null, Term.iri(s"http://x/w$t-$i"),
               Term.iri("http://x/p"), Term.lit("1"))).toDF())
           }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.QuadStore
+import graft.store.{OpLog, QuadStore}
 import graft.streaming.IngestPipeline
 
 /** Structured Streaming behavior: the ingest foreachBatch pipeline end
@@ -63,6 +63,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(dlq2.count() == 2)
     assert(dlq2.select("_corrupt").as[String].collect()
       .exists(_.contains("ordered projector path")))
+  }
+
+  private def rawFrame(evs: (String, Int, Long, Array[Byte], Array[Byte], String)*) = {
+    import spark.implicits._
+    evs.toDF("topic", "partition", "offset", "key", "value", "contentType")
+  }
+
+  private def subjects(store: QuadStore): Set[String] = {
+    import spark.implicits._
+    store.quads().select("subject.lex").as[String].collect().toSet
+  }
+
+  test("op index 2^20 + 1 of one event does not outrank the next event's delete") {
+    // event 0 grows (Spark-side, on its decoded row) to 2^20 + 2 quads
+    // ending in a:x; event 1 deletes a:x. Under a 20-bit op field the
+    // last add of event 0 packed above event 1's delete and won
+    val decoded = graft.rdf.RdfParse.decodeEvents(rawFrame(
+      rawEvent(0, "<a:s> <a:p> <a:o> .\n<a:x> <a:p> <a:o> ."),
+      rawEvent(1, "D <a:x> <a:p> <a:o> .", "application/rdf-patch")))
+    val grown = decoded.withColumn("quads", when(col("offset") === 0,
+        concat(array_repeat(element_at(col("quads"), 1), (1 << 20) + 1),
+          slice(col("quads"), 2, 1)))
+      .otherwise(col("quads")))
+    val store = new QuadStore(spark, Files.createTempDirectory("opbits").toString)
+    store.commitOps(0, OpLog.lower(grown, col("offset")))
+    assert(subjects(store) == Set("a:s"))
+  }
+
+  test("an event whose offset does not fit the seq packing goes to the DLQ") {
+    import spark.implicits._
+    val store = new QuadStore(spark, Files.createTempDirectory("opoff").toString)
+    val dlqDir = Files.createTempDirectory("opoffdlq").toString
+    val last = (1L << 39) - 1 // the largest ordinal a 24-bit op field leaves
+    val (applied, dlqd) = IngestPipeline.ingest(rawFrame(
+        rawEvent(last, "<a:fits> <a:p> <a:o> ."),
+        rawEvent(last + 1, "<a:wraps> <a:p> <a:o> .")),
+      store, 0L, Some(dlqDir))
+    assert((applied, dlqd) == ((1L, 1L)))
+    assert(subjects(store) == Set("a:fits"))
+    val dlq = spark.read.parquet(dlqDir).select("offset", "_corrupt").as[(Long, String)]
+      .collect().toSeq
+    assert(dlq.map(_._1) == Seq(last + 1))
+    assert(dlq.head._2.contains("does not fit the op-log packing"), dlq)
   }
 
   test("decodeEvents is batch-only: a streaming frame is rejected up front") {
