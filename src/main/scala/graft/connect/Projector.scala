@@ -94,16 +94,18 @@ trait BatchSink {
   *    threshold — the same memory-protection role it plays in the
   *    reference) and each commit materializes as ONE atomic store
   *    batch, which the QuadStore writes as a parquet segment via a
-  *    Spark job. Patch transactions may SPAN events
-  *    (RDFChangesApplyExternalTransaction.java:10-42): a patch ending
-  *    with an open TX suppresses the patch-closed commit trigger until
-  *    a later event's TC commits it (TA aborts it, discarding the
-  *    carried ops, even across events); the other triggers still fire
-  *    and commit a dangling transaction with the batch, exactly as the
-  *    reference's commit() closes whatever transaction is open
-  *    (TestFusekiProjector.java:216-232). Effective op streams are
-  *    resolved batch-wide at apply time
-  *    ([[graft.rdf.RdfPatchParser.dataOpsBatch]]).
+  *    Spark job.
+  *  - Patch transactions may SPAN events
+  *    (RDFChangesApplyExternalTransaction.java:10-42). Each arriving
+  *    patch advances the batch's [[graft.rdf.RdfPatchParser.TxnState]]
+  *    through the one patch-transaction machine
+  *    ([[graft.rdf.RdfPatchParser.dataOpsBatch]]), which fails bad
+  *    nesting; a patch that leaves the dataset outside a transaction
+  *    fires the patch-closed commit. A patch ending with an open TX
+  *    suppresses that trigger until a later TC or TA closes it; the
+  *    other triggers still fire and commit a dangling transaction with
+  *    the batch, as the reference's commit() closes whatever
+  *    transaction is open (TestFusekiProjector.java:216-232).
   *
   * Error contract (FusekiProjector.java:258-277, README.md:256-269):
   *  - decode failure → commit good prefix, route event to DLQ with the
@@ -212,12 +214,10 @@ final class Projector(
     MaterialisedEvent(event, d)
   }
 
-  // incremental patch-marker state over the buffered batch — the same
-  // two state machines dataOpsBatch/closesTxn run, folded per event so
-  // arrival cost stays O(event), not O(batch) (a full re-scan per
-  // event made patch batches O(batch^2) in ops)
-  private var carriedTxnOpen = false // validation: txn open after buffered events
-  private var markerInTxn = true     // commit trigger: closesTxn state
+  // the patch-transaction machine's state after the buffered batch:
+  // each arrival advances it by one event, so arrival cost stays
+  // O(event), not O(batch); it resets with the batch on commit
+  private var txn = RdfPatchParser.TxnState()
 
   /** Apply-time validation a DatasetGraph would do while streaming ops
     * (invalid marker nesting → the reference's mid-apply failure).
@@ -241,23 +241,7 @@ final class Projector(
       val text = new String(m.event.value, java.nio.charset.StandardCharsets.UTF_8)
       graft.sparql.SparqlUpdate.probeArrival(text, sink.loadRoot)
     } else if (m.decoded.kind == "patch") {
-      var open = carriedTxnOpen
-      var openedHere = false
-      m.decoded.ops.foreach { o =>
-        o.op match {
-          case "TX" =>
-            if (openedHere)
-              throw new RdfParseException("TX inside an open patch transaction")
-            open = true; openedHere = true
-          case "TC" => open = false; openedHere = false
-          case "TA" =>
-            if (!open)
-              throw new RdfParseException("TA without open patch transaction")
-            open = false; openedHere = false
-          case _ => ()
-        }
-      }
-      carriedTxnOpen = open
+      txn = RdfPatchParser.dataOpsBatch(Seq(m.decoded.ops), txn, batch.size)._2
     }
 
   /** The commit decision tree (FusekiProjector.java:400-479) — same
@@ -266,15 +250,7 @@ final class Projector(
   private def commitTransactionIfNeeded(m: MaterialisedEvent): Unit = {
     val elapsed = clock() - lastCommitTime
     currentBatchSizeBytes += m.event.sizeInBytes
-    if (m.decoded.kind == "patch")
-      m.decoded.ops.foreach { o =>
-        o.op match {
-          case "TX" => markerInTxn = true
-          case "TC" | "TA" => markerInTxn = false
-          case _ => ()
-        }
-      }
-    if (m.decoded.kind == "patch" && !markerInTxn) {
+    if (m.decoded.kind == "patch" && txn.closed) {
       // the patch just committed the open transaction itself (:408-412)
       // — judged over the whole batch's marker stream, so a TX left
       // open by an EARLIER event suppresses this trigger until a later
@@ -347,11 +323,10 @@ final class Projector(
     batch.clear()
     currentBatchSizeBytes = 0L
     // a dangling open txn commits with the enclosing batch
-    // (dataOpsBatch contract) — marker state resets WITH the clear:
-    // resetting before sink.apply would desync state from the still-
-    // buffered batch if the sink throws and processing resumes
-    carriedTxnOpen = false
-    markerInTxn = true
+    // (dataOpsBatch contract) — the machine's state resets WITH the
+    // clear: resetting before sink.apply would desync it from the
+    // still-buffered batch if the sink throws and processing resumes
+    txn = RdfPatchParser.TxnState()
   }
 
   /** Stall: no new events / connection lost → commit any open batch

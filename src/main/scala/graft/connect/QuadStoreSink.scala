@@ -6,15 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
 
 import graft.plans.Checkpoints
-import graft.rdf.{RdfParse, RdfPatchParser, Term}
+import graft.rdf.{RdfParse, RdfPatchParser}
 import graft.sparql.SparqlUpdate
 import graft.store.{OpLog, QuadStore}
 
 /** BatchSink applying committed batches to a [[QuadStore]] — the
   * engine's FusekiSink (FusekiSink.java:38-77): dataset payloads
-  * stream their quads as adds, patch payloads their effective A/D op
-  * stream, SPARQL Update payloads their resolved quad ops, all as ONE
-  * atomic parquet segment per commit.
+  * stream their quads as adds, patch payloads the effective ops the
+  * patch-transaction machine ([[RdfPatchParser.dataOpsBatch]]) yields
+  * for the whole batch — A/D as quad ops, PA/PD into the prefix map —
+  * SPARQL Update payloads their resolved quad ops, all as ONE atomic
+  * parquet segment per commit.
   *
   * `seq` packs (event index in batch, op index in event) through
   * [[OpLog.seq]], so latest-op-wins inside the store respects event
@@ -73,7 +75,7 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     // patch op streams resolve batch-wide: a transaction opened by one
     // event may be committed (or aborted) by a later one
     // (RDFChangesApplyExternalTransaction.java:10-42)
-    val (effPatchOps, _) = RdfPatchParser.dataOpsBatch(
+    val (patchOps, _) = RdfPatchParser.dataOpsBatch(
       events.map(m => if (m.decoded.kind == "patch") m.decoded.ops else Seq.empty))
 
     val local = scala.collection.mutable.ArrayBuffer[OpRow]()
@@ -132,8 +134,9 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
             local += OpRow("A", OpLog.seq(ei, qi), q.graph, q.subject, q.predicate, q.obj)
           }
         case "patch" =>
-          effPatchOps(ei).zipWithIndex.foreach { case (o, oi) =>
-            local += OpRow(o.op, OpLog.seq(ei, oi), o.graph, o.subject, o.predicate, o.obj)
+          patchOps(ei).zipWithIndex.foreach { case (o, oi) =>
+            if (o.op == "A" || o.op == "D")
+              local += OpRow(o.op, OpLog.seq(ei, oi), o.graph, o.subject, o.predicate, o.obj)
           }
         case "update" =>
           // deterministic re-parse (decode already validated); blank
@@ -155,12 +158,11 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
               "should have routed this event to the DLQ"))
           script.foreach {
             case SparqlUpdate.QuadDataOp(op, quads) =>
-              quads.foreach { q0 =>
-                def sc(t: Term): Term =
-                  if (t != null && t.isBlank) Term.blank(scope + ":" + t.lex) else t
+              quads.foreach { q =>
                 guardOi(1)
-                local += OpRow(op, OpLog.seq(ei, oi),
-                  sc(q0.graph), sc(q0.subject), q0.predicate, sc(q0.obj))
+                local += OpRow(op, OpLog.seq(ei, oi), RdfParse.scopeTerm(q.graph, scope),
+                  RdfParse.scopeTerm(q.subject, scope), q.predicate,
+                  RdfParse.scopeTerm(q.obj, scope))
                 oi += 1
               }
             case mo: SparqlUpdate.ModifyOp =>
@@ -226,17 +228,12 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     }
     val ops = (resolved ++ bulkOps).foldLeft(local.toSeq.toDF())(_.unionByName(_))
     store.commitOps(batchId, ops)
-    // PA/PD prefix ops update the dataset prefix map in event order
-    // (RDFChangesApply semantics; SURVEY §2.1 row 6)
-    val prefixOps = events.flatMap { m =>
-      if (m.decoded.kind == "patch")
-        m.decoded.ops.collect {
-          case o if o.op == "PA" => ("PA", o.subject.lex, o.obj.lex)
-          case o if o.op == "PD" => ("PD", o.subject.lex, null)
-        }
-      else Seq.empty
-    }
-    store.updatePrefixes(prefixOps)
+    // effective PA/PD prefix ops update the dataset prefix map in event
+    // order (RDFChangesApply semantics; SURVEY §2.1 row 6)
+    store.updatePrefixes(patchOps.flatten.collect {
+      case o if o.op == "PA" => ("PA", o.subject.lex, o.obj.lex)
+      case o if o.op == "PD" => ("PD", o.subject.lex, null)
+    })
   }
 }
 

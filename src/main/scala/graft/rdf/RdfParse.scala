@@ -30,7 +30,7 @@ object RdfParse {
   final case class Decoded(
       kind: String,               // "dataset" | "patch" | null on error
       quads: Seq[Quad],           // dataset kind
-      ops: Seq[PatchOp],          // patch kind (full stream incl. markers)
+      ops: Seq[PatchOp],          // patch kind: the parsed stream, markers included
       _corrupt: String)           // non-null ⇒ deserialization failure
 
   /** Normalize a Content-Type header (strip parameters, lowercase). */
@@ -82,7 +82,10 @@ object RdfParse {
     }
   }
 
-  private def scopeTerm(t: Term, scope: String): Term =
+  /** `t` with every blank node in it, quoted triples included, moved
+    * into `scope`.
+    */
+  private[graft] def scopeTerm(t: Term, scope: String): Term =
     if (t == null) t
     else if (t.isBlank) Term.blank(scope + ":" + t.lex)
     else if (t.isTriple) {
@@ -99,7 +102,9 @@ object RdfParse {
       q.predicate, scopeTerm(q.obj, scope)))
 
   /** Row shape of the decoded event stream (documentation; the
-    * DataFrame below is built from InternalRows with this schema).
+    * DataFrame below is built from InternalRows with this schema). A
+    * patch row's `ops` are its effective A/D/PA/PD ops: the event ran
+    * through the patch-transaction machine alone, so no marker is left.
     */
   final case class DecodedEvent(
       topic: String, partition: Int, offset: Long,
@@ -155,6 +160,17 @@ object RdfParse {
     new GenericInternalRow(Array[Any](UTF8String.fromString(o.op),
       termRow(o.graph), termRow(o.subject), termRow(o.predicate), termRow(o.obj)))
 
+  private def standalone(d: Decoded, ct: String): Decoded =
+    if (d.kind != "patch") d
+    else try {
+      val (ops, txn) = RdfPatchParser.dataOpsBatch(Seq(d.ops))
+      if (txn.open) throw new RdfParseException("patch leaves its transaction open; " +
+        "transactions across events require the ordered projector path")
+      d.copy(ops = ops.head)
+    } catch {
+      case e: RdfParseException => Decoded(null, null, null, s"${normalize(ct)}: ${e.getMessage}")
+    }
+
   /** DataFrame-level decode: input must have columns
     * (topic STRING, partition INT, offset LONG, key BINARY,
     *  value BINARY, contentType STRING); output has [[DECODED_SCHEMA]].
@@ -162,6 +178,12 @@ object RdfParse {
     * event identity topic:partition:offset, making the decode
     * deterministic and hence safe under Spark task retry/epoch replay
     * (SURVEY.md §2.3 row 26 exactly-once note).
+    *
+    * Rows carry no order across events, so each patch event runs the
+    * patch-transaction machine ([[RdfPatchParser.dataOpsBatch]]) alone.
+    * An event the machine rejects, or one that leaves its transaction
+    * open, gets a `_corrupt` reason: transactions across events need
+    * the ordered projector path.
     *
     * The parser emits InternalRows directly (via
     * [[org.apache.spark.sql.graft.bridge.toDataFrame]]) instead of
@@ -195,7 +217,7 @@ object RdfParse {
         val value = if (row.isNullAt(4)) null else row.getBinary(4)
         val ct = if (row.isNullAt(5)) null else row.getUTF8String(5).toString
         val scope = s"$topic:$part:$off"
-        val d = decode(value, ct, scope, jsonLdContexts)
+        val d = standalone(decode(value, ct, scope, jsonLdContexts), ct)
         new GenericInternalRow(Array[Any](
           UTF8String.fromString(topic), part, off, key,
           UTF8String.fromString(ct), UTF8String.fromString(d.kind),

@@ -89,116 +89,76 @@ object RdfPatchParser {
     s.advance()
   }
 
-  /** Apply-time transaction-marker validation + effective A/D stream:
-    * the reference's malformed.rdfp (TX then TX) must fail at apply,
-    * after parse, and ops inside a TX..TA region are DISCARDED (Jena's
-    * RDFChangesApply aborts that transaction, rolling them back).
-    * Returns the surviving A/D stream, or throws on invalid nesting.
+  /** What the patch-transaction machine carries from one event to the
+    * next: the batch index of the event that opened the live patch
+    * transaction (-1: none), and whether the last marker closed a
+    * transaction — the event then left the dataset outside any
+    * transaction, which triggers the projector's commit
+    * (`isPatch() && !dataset.isInTransaction()`,
+    * FusekiProjector.java:408-412).
     */
-  def dataOps(ops: Seq[PatchOp]): Seq[PatchOp] = {
-    var inTxn = false
-    val out = ArrayBuffer[PatchOp]()
-    val pending = ArrayBuffer[PatchOp]()
-    ops.foreach { o =>
-      o.op match {
-        case "TX" =>
-          if (inTxn) throw new RdfParseException("TX inside an open patch transaction")
-          inTxn = true
-        case "TC" =>
-          if (!inTxn) throw new RdfParseException("TC without open patch transaction")
-          inTxn = false
-          out ++= pending; pending.clear()
-        case "TA" =>
-          if (!inTxn) throw new RdfParseException("TA without open patch transaction")
-          inTxn = false
-          pending.clear() // aborted: ops since TX roll back
-        case "A" | "D" => if (inTxn) pending += o else out += o
-        case _ => // H / PA / PD: no dataset effect
-      }
-    }
-    // an unclosed TX leaves its ops in the (still open) transaction —
-    // in the engine's batch model they commit with the enclosing batch
-    out ++= pending
-    out.toSeq
+  final case class TxnState(openedBy: Int = -1, closed: Boolean = false) {
+    def open: Boolean = openedBy >= 0
   }
 
-  /** Effective A/D streams for a whole BATCH of patch events in one
-    * stateful pass — a patch transaction may span events
+  /** The patch-transaction machine: one transition over `eventOps` (one
+    * op seq per event, the first at batch index `first`) from the
+    * carried state `from`. A patch transaction may span events
     * (RDFChangesApplyExternalTransaction.java:10-42;
     * TestFusekiProjector.java:200-232):
     *
-    *  - a patch ending with an unclosed `TX` leaves the transaction
-    *    open; its ops stay pending into the NEXT event,
-    *  - a later `TC` commits the carried transaction (pending ops from
-    *    earlier events flush to their events' outputs), a later `TA`
-    *    aborts it (pending ops from earlier events are DISCARDED),
-    *  - a `TX` while a carried transaction is open commits it first
-    *    (the reference's external-transaction commit), then begins its
-    *    own; a second `TX` within the SAME event is the malformed
-    *    nested case and throws,
-    *  - a `TC` with no open patch transaction commits the projector's
-    *    enclosing transaction — valid (the reference's
-    *    PatchThatCommitsTheTransaction case); `TA` there would abort
-    *    work already out of reach of the patch stream and throws,
-    *  - a transaction still open at batch end commits with the batch
-    *    (the reference's PatchThatLeavesTransactionOpen case: the
-    *    projector's commit closes the dangling transaction).
+    *  - `A`/`D`/`PA`/`PD` take effect at once outside a patch
+    *    transaction and are held inside one;
+    *  - `TC` releases the held ops; with no patch transaction open it
+    *    commits the projector's enclosing one, which is valid (the
+    *    reference's PatchThatCommitsTheTransaction case);
+    *  - `TA` drops the held ops, whichever event they came from; with
+    *    no patch transaction open it has nothing to abort and throws;
+    *  - `TX` over a transaction carried from an earlier event releases
+    *    it (the external-transaction commit) and opens its own; a `TX`
+    *    inside a transaction its own event opened is the malformed
+    *    nesting of malformed.rdfp and throws;
+    *  - a transaction still open after the last event releases its ops
+    *    there: whatever commits next closes it (the reference's
+    *    PatchThatLeavesTransactionOpen case). The returned state marks
+    *    it open; the ops it held are already in the output.
     *
-    * `eventOps` holds one (possibly empty) op seq per event, in batch
-    * order; returns the surviving A/D ops per event plus whether a
-    * patch transaction was still open at the end.
+    * Returns each event's effective ops in order (`H` and markers
+    * dropped) and the state after the last event; throws
+    * [[RdfParseException]] on bad nesting.
     */
-  def dataOpsBatch(eventOps: Seq[Seq[PatchOp]]): (Seq[Seq[PatchOp]], Boolean) = {
-    val out = eventOps.map(_ => ArrayBuffer[PatchOp]())
-    val pending = ArrayBuffer[(Int, PatchOp)]()
-    var txnOpenedAt = -1 // event index that opened the live txn; -1 = none
-    def flush(): Unit = {
-      pending.foreach { case (i, p) => out(i) += p }
-      pending.clear()
+  def dataOpsBatch(eventOps: Seq[Seq[PatchOp]], from: TxnState = TxnState(),
+      first: Int = 0): (Seq[Seq[PatchOp]], TxnState) = {
+    val out = Vector.fill(eventOps.size)(ArrayBuffer[PatchOp]())
+    val held = ArrayBuffer[(Int, PatchOp)]()
+    var openedBy = from.openedBy
+    var closed = from.closed
+    def release(): Unit = {
+      held.foreach { case (i, o) => out(i) += o }
+      held.clear()
     }
-    eventOps.zipWithIndex.foreach { case (ops, ei) =>
+    eventOps.iterator.zipWithIndex.foreach { case (ops, i) =>
       ops.foreach { o =>
         o.op match {
           case "TX" =>
-            if (txnOpenedAt == ei)
+            if (openedBy == first + i)
               throw new RdfParseException("TX inside an open patch transaction")
-            if (txnOpenedAt >= 0) flush() // commit the carried (external) txn
-            txnOpenedAt = ei
+            release()
+            openedBy = first + i; closed = false
           case "TC" =>
-            flush() // commits the patch txn, or the projector's outer txn
-            txnOpenedAt = -1
+            release()
+            openedBy = -1; closed = true
           case "TA" =>
-            if (txnOpenedAt < 0)
+            if (openedBy < 0)
               throw new RdfParseException("TA without open patch transaction")
-            pending.clear() // aborted: pending ops (any event's) roll back
-            txnOpenedAt = -1
-          case "A" | "D" =>
-            if (txnOpenedAt >= 0) pending += ((ei, o)) else out(ei) += o
-          case _ => // H / PA / PD: no dataset effect
+            held.clear()
+            openedBy = -1; closed = true
+          case "H" => ()
+          case _ => if (openedBy >= 0) held += ((i, o)) else out(i) += o
         }
       }
     }
-    flush() // dangling open txn commits with the enclosing batch
-    (out.map(_.toSeq), txnOpenedAt >= 0)
-  }
-
-  /** Whether applying this op stream leaves the dataset OUTSIDE a
-    * transaction (reference: `isPatch() && !dataset.isInTransaction()`
-    * after apply triggers the projector's own commit,
-    * FusekiProjector.java:408-412). Entering state is "in the
-    * projector's external transaction"; a TX op commits that external
-    * transaction and opens the patch's own
-    * (RDFChangesApplyExternalTransaction.java:22-29).
-    */
-  def closesTxn(ops: Seq[PatchOp]): Boolean = {
-    var inTxn = true
-    ops.foreach { o =>
-      o.op match {
-        case "TX" => inTxn = true
-        case "TC" | "TA" => inTxn = false
-        case _ => ()
-      }
-    }
-    !inTxn
+    release()
+    (out.map(_.toSeq), TxnState(openedBy, closed))
   }
 }

@@ -242,15 +242,23 @@ object SparqlUpdate {
     }
   }
 
-  /** §19.6: DELETE templates (incl. the DELETE WHERE shorthand) must
-    * not contain blank nodes — a blank can never denote an existing
-    * store term, so the spec makes it a syntax error rather than a
-    * silent no-match.
+  /** §19.6: DELETE DATA and DELETE templates (incl. the DELETE WHERE
+    * shorthand) must not contain blank nodes — a blank can never
+    * denote an existing store term, so the spec makes it a syntax
+    * error rather than a silent no-match.
     */
   private def rejectBlanks(tps: Seq[TriplePattern], what: String): Unit = {
+    // an all-constant quoted triple folds to one Const at parse time,
+    // so a blank may sit inside a Const term as well as a QTriple node
+    def checkTerm(t: Term): Unit =
+      if (t == null) ()
+      else if (t.isBlank) throw new RdfParseException(s"$what forbids blank nodes (_:${t.lex})")
+      else if (t.isTriple) {
+        val (s, p, o) = graft.rdf.NQuadsParser.components(t)
+        Seq(s, p, o).foreach(checkTerm)
+      }
     def check(n: Node): Unit = n match {
-      case Const(t) if t != null && t.isBlank =>
-        throw new RdfParseException(s"$what forbids blank nodes (_:${t.lex})")
+      case Const(t) => checkTerm(t)
       case Sparql.QTriple(s, p, o) => Seq(s, p, o).foreach(check)
       case _ => ()
     }
@@ -260,11 +268,11 @@ object SparqlUpdate {
   }
 
   /** A `{ ... }` of ground quads (GRAPH blocks inline the graph). */
-  private def parseQuadData(p: Parser, allowBlank: Boolean): Seq[Quad] =
-    patternsOf(p.parseGroup()).map { tp =>
+  private def parseQuadData(p: Parser, allowBlank: Boolean): Seq[Quad] = {
+    val tps = patternsOf(p.parseGroup())
+    if (!allowBlank) rejectBlanks(tps, "DELETE DATA")
+    tps.map { tp =>
       def ground(n: Node, slot: String): Term = n match {
-        case Const(t) if t.isBlank && !allowBlank =>
-          throw new RdfParseException(s"DELETE DATA forbids blank nodes ($slot)")
         case Const(t) => t
         case Var(v) =>
           throw new RdfParseException(s"quad data must be ground, found ?$v")
@@ -276,6 +284,7 @@ object SparqlUpdate {
       Quad(tp.graph.map(ground(_, "graph")).orNull,
         ground(tp.s, "subject"), ground(tp.p, "predicate"), ground(tp.o, "obj"))
     }
+  }
 
   /** A `{ ... }` template: triple patterns only, vars allowed. */
   private def parseTemplate(p: Parser): Seq[TriplePattern] =

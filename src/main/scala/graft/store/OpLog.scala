@@ -65,8 +65,8 @@ object OpLog {
 
   /** Why a decoded event (at ordinal `ord`) cannot pack into `seq`, or
     * null — the `_corrupt` reason that routes it to the DLQ instead of
-    * wrapping its ordinals. A patch counts every op, markers included,
-    * since [[lower]] indexes its ops in document order.
+    * wrapping its ordinals. A patch counts its effective ops, prefix
+    * ops included, since [[lower]] indexes them in document order.
     */
   def unpackable(ord: Column): Column = {
     val n = greatest(size(col("quads")), size(col("ops")))
@@ -76,8 +76,8 @@ object OpLog {
         lit(s" does not fit the op-log packing (< $MaxEventOrdinal)")))
   }
 
-  /** Lower decoded events to op rows: dataset quads as adds, patch A/D
-    * ops in document order. `ord` is the event's position in the log's
+  /** Lower decoded events to op rows: dataset quads as adds, a patch's
+    * effective A/D ops in document order (its PA/PD ops skipped). `ord` is the event's position in the log's
     * order (a partition offset, or an index within one batch). Blank
     * nodes keep the decode's `topic:partition:offset` scope.
     *

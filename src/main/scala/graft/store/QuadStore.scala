@@ -221,12 +221,13 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     commitOps(batchId, rows.toDF())
   }
 
-  /** Convenience: commit a patch A/D stream (pre-validated via
-    * RdfPatchParser.dataOps) preserving op order in `seq`.
+  /** Convenience: commit the A/D ops of an effective patch op stream
+    * (the output of the patch-transaction machine,
+    * RdfPatchParser.dataOpsBatch) preserving op order in `seq`.
     */
   def applyPatch(batchId: Long, ops: Seq[PatchOp]): Unit = {
     import spark.implicits._
-    val rows = ops.zipWithIndex.map { case (o, i) =>
+    val rows = ops.filter(o => o.op == "A" || o.op == "D").zipWithIndex.map { case (o, i) =>
       OpRow(o.op, i.toLong, o.graph, o.subject, o.predicate, o.obj)
     }
     commitOps(batchId, rows.toDF())

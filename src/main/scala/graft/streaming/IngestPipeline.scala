@@ -25,6 +25,14 @@ object IngestPipeline {
     * key, value, contentType) to the store; malformed events land in
     * `dlqDir` as parquet (the DLQ side output) with the decode error in
     * `_corrupt`. Returns (applied events, dlq events).
+    *
+    * Each patch event stands alone (see [[RdfParse.decodeEvents]]): its
+    * ops go through the patch-transaction machine, so a `TA` drops the
+    * ops since its `TX`. An event with bad marker nesting, or one that
+    * leaves its transaction open, goes to the DLQ with the reason in
+    * `_corrupt` — a transaction across events needs the ordered
+    * projector path. Prefix ops (PA/PD) do not reach the store's prefix
+    * map on this path.
     */
   def ingest(events: DataFrame, store: QuadStore, batchId: Long,
       dlqDir: Option[String] = None,
@@ -65,8 +73,8 @@ object IngestPipeline {
         case None => 0L
       }
       val good = decoded.filter(col("_corrupt").isNull)
-      // dataset payloads: quads as adds; patch payloads: their A/D
-      // stream. The offset is the event ordinal, which preserves event
+      // dataset payloads: quads as adds; patch payloads: their
+      // effective A/D stream. The offset is the event ordinal, which preserves event
       // order WITHIN a partition; cross-partition order is undefined —
       // the same contract as the reference ("order of events matters …
       // you MUST have only a single partition", README.md:152-153).

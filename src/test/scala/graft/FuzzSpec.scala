@@ -336,7 +336,7 @@ class FuzzSpec extends AnyFunSuite {
       j <- Gen.choose(i, line.length)
       ins <- Gen.stringOf(Gen.frequency(
         3 -> Gen.asciiPrintableChar,
-        1 -> Gen.oneOf('<', '>', '"', '\\', '@', '^', ' ')))
+        1 -> Gen.oneOf('<', '>', '"', '\\', '@', '^', '\u0000')))
     } yield line.substring(0, i) + ins + line.substring(j)
     check(Prop.forAll(mangled) { doc =>
       totalParse(NQuadsParser.parse(doc, allowGraph = true))

@@ -160,6 +160,111 @@ class ProjectorSpec extends AnyFunSuite {
     assert(lexes == Set("kept"), s"aborted op leaked: $lexes")
   }
 
+  test("prefix ops of an aborted patch transaction leave the prefix map unchanged") {
+    val store = new graft.store.QuadStore(TestSpark.spark,
+      Files.createTempDirectory("txnprefix").toString)
+    val src = new MemoryEventSource(Seq(
+      patchEv(0, "TX .\nPA \"p\" <http://g/p#> .\nTA ."),
+      patchEv(1, "TX .\nPA \"q\" <http://g/q#> ."),
+      patchEv(2, "TA ."),
+      patchEv(3, "PA \"k\" <http://g/k#> .")), Some(() => None))
+    new Projector(src, new QuadStoreSink(TestSpark.spark, store),
+      ProjectorConfig(batchSize = 10)).runToCompletion()
+    assert(store.prefixes() == Map("k" -> "http://g/k#"))
+  }
+
+  test("patch semantics: projector + sink agree with a sequential model on random streams") {
+    // an event is a list of (op, operand) lines over 6 quads and 3
+    // prefix names, so ops collide often
+    type Line = (String, Int)
+    def render(l: Line): String = l match {
+      case ("A" | "D", i) => s"""${l._1} <http://g/s${i % 3}> <http://g/p> "${i / 3}" ."""
+      case ("PA", i) => s"""PA "p${i % 3}" <http://g/ns$i#> ."""
+      case ("PD", i) => s"""PD "p${i % 3}" ."""
+      case (marker, _) => s"$marker ."
+    }
+    def quad(i: Int): String = s"http://g/s${i % 3}|${i / 3}"
+
+    // the model: ops append to a buffer in stream order, TX marks where
+    // its transaction began, TA cuts the buffer back to that mark; the
+    // buffer folds into the quads and prefixes at each patch that ends
+    // on TC/TA, at each rejected event (its good prefix) and at the end
+    def model(events: Seq[Seq[Line]]): (Set[String], Map[String, String], Seq[Long]) = {
+      var quads = Set.empty[String]
+      var prefixes = Map.empty[String, String]
+      val rejected = scala.collection.mutable.ArrayBuffer[Long]()
+      var buf = Vector.empty[Line]
+      var mark: Option[(Int, Int)] = None // (opening event, buffer length at TX)
+      def commit(): Unit = {
+        buf.foreach {
+          case ("A", i) => quads += quad(i)
+          case ("D", i) => quads -= quad(i)
+          case ("PA", i) => prefixes += (s"p${i % 3}" -> s"http://g/ns$i#")
+          case ("PD", i) => prefixes -= s"p${i % 3}"
+        }
+        buf = Vector.empty; mark = None
+      }
+      events.zipWithIndex.foreach { case (ev, k) =>
+        var (b, m, ok, closed) = (buf, mark, true, false)
+        ev.foreach { l =>
+          if (ok) l._1 match {
+            case "TX" =>
+              if (m.exists(_._1 == k)) ok = false
+              else { m = Some((k, b.size)); closed = false }
+            case "TC" => m = None; closed = true
+            case "TA" =>
+              m match {
+                case None => ok = false
+                case Some((_, at)) => b = b.take(at); m = None; closed = true
+              }
+            case _ => b :+= l
+          }
+        }
+        if (!ok) { rejected += k.toLong; commit() }
+        else { buf = b; mark = m; if (closed) commit() }
+      }
+      commit()
+      (quads, prefixes, rejected.toSeq)
+    }
+
+    def run(events: Seq[Seq[Line]]): (Set[String], Map[String, String], Seq[Long]) = {
+      val store = new graft.store.QuadStore(TestSpark.spark,
+        Files.createTempDirectory("patchmodel").toString)
+      val dlq = new MemoryDlqSink
+      // unknown lag and a large batch: only the patch-closed trigger,
+      // a rejection and the final stall commit
+      val src = new MemoryEventSource(events.zipWithIndex.map { case (ev, k) =>
+        patchEv(k.toLong, ev.map(render).mkString("\n"))
+      }, Some(() => None))
+      new Projector(src, new QuadStoreSink(TestSpark.spark, store),
+        ProjectorConfig(batchSize = 1000), dlq = Some(dlq)).runToCompletion()
+      val quads = store.quads().collect().map { r =>
+        s"${r.getStruct(1).getString(1)}|${r.getStruct(3).getString(1)}"
+      }.toSet
+      (quads, store.prefixes(), dlq.events.map(_.offset))
+    }
+
+    val fixed: Seq[Seq[Seq[Line]]] = Seq(
+      // TA across events drops the ops of every event since the TX
+      Seq(Seq("TX" -> 0, "A" -> 0), Seq("A" -> 1, "PA" -> 0), Seq("TA" -> 0), Seq("A" -> 2)),
+      // TX over a carried transaction commits it and opens its own
+      Seq(Seq("TX" -> 0, "A" -> 0, "PA" -> 1), Seq("TX" -> 0, "A" -> 1, "D" -> 0), Seq("TA" -> 0)),
+      // a TX still open at the end of the stream commits with it
+      Seq(Seq("A" -> 3), Seq("TX" -> 0, "A" -> 4, "PA" -> 2, "PD" -> 2)),
+      // malformed nesting: a second TX in one event, TA with none open
+      Seq(Seq("A" -> 0), Seq("TX" -> 0, "A" -> 1, "TX" -> 0), Seq("TA" -> 0),
+        Seq("D" -> 0, "TC" -> 0)))
+    val rnd = new scala.util.Random(20261017L)
+    val ops = Seq("A" -> 4, "D" -> 3, "PA" -> 1, "PD" -> 1, "TX" -> 2, "TC" -> 2, "TA" -> 1)
+      .flatMap { case (op, w) => Seq.fill(w)(op) }
+    def line(): Line = (ops(rnd.nextInt(ops.size)), rnd.nextInt(6))
+    val random = Seq.fill(30)(Seq.fill(2 + rnd.nextInt(6))(Seq.fill(rnd.nextInt(4))(line())))
+    (fixed ++ random).foreach { events =>
+      val text = events.map(_.map(render).mkString(" ")).mkString(" | ")
+      assert(run(events) == model(events), s"stream: $text")
+    }
+  }
+
   test("malformed patch without DLQ aborts with exception (ref :234-251)") {
     val src = new MemoryEventSource(Seq.empty, Some(() => None))
     val sink = new CountingSink

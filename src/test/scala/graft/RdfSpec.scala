@@ -478,7 +478,7 @@ class RdfParserSpec extends AnyFunSuite {
   test("patch1.rdfp parses to header + markers + 4 adds in the named graph") {
     val ops = RdfPatchParser.parse(patch1Rdfp)
     assert(ops.map(_.op) == Seq("H", "TX", "A", "A", "A", "A", "TC"))
-    val data = RdfPatchParser.dataOps(ops)
+    val data = RdfPatchParser.dataOpsBatch(Seq(ops))._1.head
     assert(data.size == 4)
     assert(data.forall(_.graph == Term.iri("http://example/patch")))
     assert(data.map(_.obj.lex) == Seq("two", "one", "three", "four"))
@@ -491,7 +491,7 @@ class RdfParserSpec extends AnyFunSuite {
   test("malformed.rdfp parses but fails at apply (nested TX)") {
     val ops = RdfPatchParser.parse(malformedRdfp)
     assert(ops.map(_.op) == Seq("TX", "TX"))
-    intercept[RdfParseException] { RdfPatchParser.dataOps(ops) }
+    intercept[RdfParseException] { RdfPatchParser.dataOpsBatch(Seq(ops)) }
   }
 
   test("dataOpsBatch: patch transactions spanning events") {
@@ -502,18 +502,18 @@ class RdfParserSpec extends AnyFunSuite {
     // later TC commits the carried txn: ops flush to their own events
     val (c1, open1) = RdfPatchParser.dataOpsBatch(Seq(
       Seq(op("TX"), op("A", "x")), Seq(op("A", "y"), op("TC"))))
-    assert(c1.map(lexes) == Seq(Seq("x"), Seq("y")) && !open1)
+    assert(c1.map(lexes) == Seq(Seq("x"), Seq("y")) && !open1.open)
     // later TA aborts it: carried ops from the earlier event discarded
     val (c2, open2) = RdfPatchParser.dataOpsBatch(Seq(
       Seq(op("TX"), op("A", "x")), Seq(op("TA"))))
-    assert(c2.map(lexes) == Seq(Seq(), Seq()) && !open2)
+    assert(c2.map(lexes) == Seq(Seq(), Seq()) && !open2.open)
     // a TX over a carried txn commits it first (external-txn semantics)
     val (c3, open3) = RdfPatchParser.dataOpsBatch(Seq(
       Seq(op("TX"), op("A", "x")), Seq(op("TX"), op("A", "y"))))
-    assert(c3.map(lexes) == Seq(Seq("x"), Seq("y")) && open3)
+    assert(c3.map(lexes) == Seq(Seq("x"), Seq("y")) && open3.open)
     // dangling open txn commits with the batch
     val (c4, open4) = RdfPatchParser.dataOpsBatch(Seq(Seq(op("TX"), op("A", "x"))))
-    assert(c4.map(lexes) == Seq(Seq("x")) && open4)
+    assert(c4.map(lexes) == Seq(Seq("x")) && open4.open)
     // nested TX within one event still fails at apply
     intercept[RdfParseException] {
       RdfPatchParser.dataOpsBatch(Seq(Seq(op("TX")), Seq(op("TX"), op("TX"))))
@@ -521,7 +521,7 @@ class RdfParserSpec extends AnyFunSuite {
     // TC with no open patch txn commits the projector's txn (valid);
     // TA there has nothing to abort and fails
     val (c5, open5) = RdfPatchParser.dataOpsBatch(Seq(Seq(op("TC"), op("A", "x"))))
-    assert(c5.map(lexes) == Seq(Seq("x")) && !open5)
+    assert(c5.map(lexes) == Seq(Seq("x")) && !open5.open)
     intercept[RdfParseException] { RdfPatchParser.dataOpsBatch(Seq(Seq(op("TA")))) }
   }
 
@@ -735,7 +735,7 @@ class QuadStoreSpec extends AnyFunSuite {
 
   test("golden count: patch1.rdfp → 4 quads in graph <http://example/patch>") {
     val store = freshStore()
-    val ops = RdfPatchParser.dataOps(RdfPatchParser.parse(patch1Rdfp))
+    val ops = RdfPatchParser.dataOpsBatch(Seq(RdfPatchParser.parse(patch1Rdfp)))._1.head
     store.applyPatch(0, ops)
     assert(store.count() == 4)
     import org.apache.spark.sql.functions.col
@@ -772,7 +772,7 @@ class QuadStoreSpec extends AnyFunSuite {
     val store = freshStore()
     store.addQuads(0, TurtleParser.parseTurtle(dataTtl))
     store.addQuads(1, NQuadsParser.parse(dataNq, allowGraph = true))
-    store.applyPatch(2, RdfPatchParser.dataOps(RdfPatchParser.parse(patch1Rdfp)))
+    store.applyPatch(2, RdfPatchParser.dataOpsBatch(Seq(RdfPatchParser.parse(patch1Rdfp)))._1.head)
     val before = store.count()
     store.compact()
     assert(store.committedSegments().size == 1)

@@ -108,6 +108,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(dlq.head._2.contains("does not fit the op-log packing"), dlq)
   }
 
+  test("ingest: each patch event stands alone — TA rolls back, bad or open transactions DLQ") {
+    import spark.implicits._
+    val store = new QuadStore(spark, Files.createTempDirectory("patchtxn").toString)
+    val dlqDir = Files.createTempDirectory("patchtxndlq").toString
+    val ct = "application/rdf-patch"
+    val (applied, dlqd) = IngestPipeline.ingest(rawFrame(
+        rawEvent(0, "TX .\nA <a:x> <a:p> <a:o> .\nTA .", ct),
+        rawEvent(1, "TX .\nA <a:y> <a:p> <a:o> .\nTX .", ct),
+        rawEvent(2, "TX .\nA <a:z> <a:p> <a:o> .", ct),
+        rawEvent(3, "TX .\nA <a:w> <a:p> <a:o> .\nTC .", ct)),
+      store, 0L, Some(dlqDir))
+    assert(subjects(store) == Set("a:w"))
+    assert((applied, dlqd) == ((2L, 2L)))
+    val dlq = spark.read.parquet(dlqDir).select("offset", "_corrupt").as[(Long, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(dlq.map(_._1) == Seq(1L, 2L))
+    assert(dlq(0)._2.contains("TX inside an open patch transaction"), dlq)
+    assert(dlq(1)._2.contains("leaves its transaction open"), dlq)
+  }
+
   test("decodeEvents is batch-only: a streaming frame is rejected up front") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

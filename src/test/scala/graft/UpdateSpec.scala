@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.connect._
-import graft.rdf.{RdfParse, RdfParseException}
+import graft.rdf.{RdfParse, RdfParseException, Term}
 import graft.sparql.{Sparql, SparqlUpdate}
 import graft.store.QuadStore
 
@@ -79,6 +79,27 @@ class UpdateSpec extends AnyFunSuite {
     intercept[RdfParseException] {
       SparqlUpdate.parse("""DELETE DATA { _:b <http://x/p> "1" }""")
     }
+  }
+
+  test("INSERT DATA scopes blanks inside quoted triples with their asserted siblings") {
+    val body = """INSERT DATA { _:b <http://x/p> <http://x/o> .
+                 |  << _:b <http://x/p> <http://x/o> >> <http://x/q> <http://x/r> }""".stripMargin
+    // two events of the same script: each event's `_:b` is its own node,
+    // in the asserted triple and in the quoted one alike
+    val st = stateNT(ingest(body -> CT_RU, body -> CT_RU))
+    assert(st.size == 4, st)
+    val asserted = st.filter(_._3 == "http://x/p").map(_._2)
+    val quoted = st.filter(_._3 == "http://x/q").map(_._2)
+    assert(asserted.size == 2 && quoted.size == 2, st)
+    assert(asserted.map(b => Term.quoted(Term.blank(b), Term.iri("http://x/p"),
+      Term.iri("http://x/o")).lex) == quoted, st)
+  }
+
+  test("DELETE DATA rejects blanks nested in quoted triples") {
+    Seq("""DELETE DATA { << _:b <http://x/p> "1" >> <http://x/q> <http://x/r> }""",
+        """DELETE DATA { <http://x/s> <http://x/q> << <http://x/a> <http://x/p> _:b >> }""",
+        """DELETE DATA { << << _:b <http://x/p> "1" >> <http://x/q> "2" >> <http://x/r> "3" }""")
+      .foreach(u => intercept[RdfParseException](SparqlUpdate.parse(u)))
   }
 
   test("DELETE WHERE sees prior events AND earlier ops of the same script") {
