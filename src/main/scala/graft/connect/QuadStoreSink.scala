@@ -41,6 +41,14 @@ import graft.store.{OpLog, QuadStore}
   * batch interleave in event order. Batches carrying a SPARQL Update
   * stay on the driver path: update WHERE resolution needs the
   * sequential in-batch state, which folds driver-buffered ops.
+  *
+  * Read path after a commit: a batch whose ops all sit in the driver
+  * buffer — no bulk events, no WHERE-resolved update ops — commits
+  * through [[QuadStore.commitRows]], so the store folds them into its
+  * driver tail fold and later queries read base + that local fold
+  * without scanning the tail. Any other batch commits a DataFrame
+  * through [[QuadStore.commitOps]], and reads fall back to folding the
+  * tail segments until the next compaction.
   */
 final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     bulkBytesThreshold: Long = QuadStoreSink.DefaultBulkBytes,
@@ -226,8 +234,9 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
       Some(OpLog.lower(RdfParse.decodeEvents(raw),
         ord(col("topic"), col("partition"), col("offset"))))
     }
-    val ops = (resolved ++ bulkOps).foldLeft(local.toSeq.toDF())(_.unionByName(_))
-    store.commitOps(batchId, ops)
+    if (resolved.isEmpty && bulkOps.isEmpty) store.commitRows(batchId, local.toSeq)
+    else store.commitOps(batchId,
+      (resolved ++ bulkOps).foldLeft(local.toSeq.toDF())(_.unionByName(_)))
     // effective PA/PD prefix ops update the dataset prefix map in event
     // order (RDFChangesApply semantics; SURVEY §2.1 row 6)
     store.updatePrefixes(patchOps.flatten.collect {

@@ -165,10 +165,14 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
 
   private def readReq(ex: HttpExchange): Req = {
     val ct = RdfParse.normalize(ex.getRequestHeaders.getFirst("Content-Type"))
+    def tooLarge(): Nothing = bad(413, s"request body exceeds $MaxBodyBytes bytes; " +
+      "bulk loads belong on the event-source path")
+    // a declared length is refused before any byte is buffered; the
+    // read cap still bounds a chunked body, which declares none
+    Option(ex.getRequestHeaders.getFirst("Content-Length"))
+      .flatMap(_.trim.toLongOption).filter(_ > MaxBodyBytes).foreach(_ => tooLarge())
     val bodyBytes = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
-    if (bodyBytes.length > MaxBodyBytes)
-      bad(413, s"request body exceeds $MaxBodyBytes bytes; " +
-        "bulk loads belong on the event-source path")
+    if (bodyBytes.length > MaxBodyBytes) tooLarge()
     def parse(s: String): Seq[(String, String)] =
       if (s == null || s.isEmpty) Seq.empty
       else s.split("&").toSeq.filter(_.nonEmpty).map { kv =>

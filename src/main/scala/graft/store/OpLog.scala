@@ -1,7 +1,13 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.rdf.{Quad, Term}
 
 /** The op-row format every store writer and reader shares: rows of
   * (op A|D, seq, graph, subject, predicate, obj), where `seq` orders
@@ -15,12 +21,13 @@ import org.apache.spark.sql.functions._
   *    → op rows, in one columnar pass;
   *  - fold: a log → its latest op per quad (`last_op`);
   *  - overlay: a folded log applied over a base state.
+  * The fold and the overlay come twice: as Spark plans over committed
+  * segments, and on the driver for ops it already holds ([[Fold]]).
   */
 object OpLog {
   /** An op row as a case class, for driver-side buffers and tests. */
   final case class OpRow(op: String, seq: Long,
-      graph: graft.rdf.Term, subject: graft.rdf.Term,
-      predicate: graft.rdf.Term, obj: graft.rdf.Term)
+      graph: Term, subject: Term, predicate: Term, obj: Term)
 
   val QUAD_COLUMNS: Seq[String] = Seq("graph", "subject", "predicate", "obj")
   val OP_COLUMNS: Seq[String] = Seq("op", "seq") ++ QUAD_COLUMNS
@@ -125,5 +132,65 @@ object OpLog {
     base.alias("b")
       .join(tail.select(QUAD_COLUMNS.map(col): _*).alias("t"), cond, "left_anti")
       .unionByName(live(tail))
+  }
+
+  // --- driver fold ----------------------------------------------------------
+
+  /** A log folded on the driver: each quad it touched → its latest op
+    * (A|D) — [[tailState]]'s answer for ops the driver already holds,
+    * at no Spark job.
+    */
+  type Fold = Map[Quad, String]
+
+  /** `prior` with one more segment folded in — the segment's ops follow
+    * every earlier segment's, and within it a higher `seq` wins — or
+    * None as soon as the fold holds more than `cap` quads.
+    */
+  def fold(prior: Fold, segment: Seq[OpRow], cap: Long): Option[Fold] = {
+    var m = prior
+    val it = segment.sortBy(_.seq).iterator
+    while (m.size <= cap && it.hasNext) {
+      val r = it.next()
+      m = m.updated(Quad(r.graph, r.subject, r.predicate, r.obj), r.op)
+    }
+    Some(m).filter(_.size <= cap)
+  }
+
+  /** The most quads a fold may hold and still serve reads from the
+    * driver: Spark's own size estimate for it as a local relation of op
+    * rows stays under `spark.sql.autoBroadcastJoinThreshold`, the size below which
+    * Spark ships a relation to every task anyway. A threshold ≤ 0 means
+    * never (-1).
+    */
+  def driverFoldCap(spark: SparkSession): Long = {
+    val limit = bridge.broadcastThreshold(spark)
+    if (limit <= 0) -1L else (BigInt(limit) / bridge.localRelationRowBytes(OP_SCHEMA)).toLong
+  }
+
+  /** [[overlay]] of a driver fold over `base`, or its [[live]] quads
+    * alone with no base. The base loses every quad the fold touched
+    * through an in-set filter, not a join: an anti-join against a local
+    * relation still runs one broadcast job per query. The quads the
+    * fold leaves present union in as a local relation. Struct ordering
+    * compares null fields as equal, so the default graph (a null
+    * `graph`) matches like `<=>`.
+    */
+  def overlayFold(spark: SparkSession, base: Option[DataFrame], fold: Fold): DataFrame = {
+    val live = spark.createDataFrame(fold.collect { case (q, "A") => q }.toSeq)
+    base.fold(live) { b =>
+      val touched = InSet(bridge.expression(struct(QUAD_COLUMNS.map(col): _*)),
+        fold.keySet.map[Any](quadRow))
+      b.filter(!bridge.column(touched)).unionByName(live)
+    }
+  }
+
+  /** A quad as the internal row `struct(graph, subject, predicate, obj)`
+    * evaluates to over op-schema columns.
+    */
+  private def quadRow(q: Quad): InternalRow = {
+    def term(t: Term): InternalRow =
+      if (t == null) null
+      else InternalRow(Seq(t.termType, t.lex, t.datatype, t.lang).map(UTF8String.fromString): _*)
+    InternalRow(term(q.graph), term(q.subject), term(q.predicate), term(q.obj))
   }
 }

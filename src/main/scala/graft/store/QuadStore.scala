@@ -39,10 +39,23 @@ import graft.rdf.{PatchOp, Quad}
   *  - [[compact]] folds the log into a deduplicated `base` laid out as
   *    `numBuckets` HASH-BUCKET partitions (`bucket=k` directories,
   *    k = pmod(hash(graph,subject,predicate,obj), numBuckets)). After
-  *    compaction, reads are merge-on-read: the (short) tail is
-  *    aggregated (one small shuffle) and anti-joined against the base —
-  *    the base itself is NEVER re-shuffled, and with an empty tail
-  *    `quads()` is a bare scan of the base.
+  *    compaction, reads are merge-on-read, the base NEVER re-shuffled,
+  *    and with an empty tail `quads()` is a bare scan of the base. The
+  *    tail reaches [[quads]] by one of two paths:
+  *    - driver fold: a commit whose ops the driver holds
+  *      ([[commitRows]]) folds them, once, into the tail's latest op
+  *      per quad ([[OpLog.fold]]), kept beside the version it belongs
+  *      to. Reads filter the base by it and union its live quads as a
+  *      local relation: no tail segment is scanned and no fold runs per
+  *      query. The fold stays on the driver only while Spark's size
+  *      estimate for it is under `spark.sql.autoBroadcastJoinThreshold`
+  *      ([[OpLog.driverFoldCap]]);
+  *    - segment fold: otherwise — after a [[commitOps]] of a DataFrame,
+  *      a replayed epoch, past that bound, or on a store opened over an
+  *      existing tail — the tail segments are read and aggregated (one
+  *      small shuffle) and anti-joined against the base, until
+  *      [[compact]] empties the tail. [[quadsAt]], [[changes]] and
+  *      [[count]] always take this path.
   *  - A RE-compaction rewrites ONLY the buckets the tail touched: the
   *    new base segment's name records which buckets it owns
   *    (`s<ord>-base-k3_7`), later segments supersede earlier ones per
@@ -94,6 +107,11 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       Version(segs, hw)
     }
   }
+
+  /** The published driver fold; a reader whose version does not list
+    * the same segments reads segments instead.
+    */
+  @volatile private var tailFold: Option[TailFold] = None
 
   /** Committed segment names in commit order (tests/introspection). */
   def committedSegments(): Seq[String] = readVersion().segments.map(_.name)
@@ -156,7 +174,19 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * Spark epoch replay is therefore safe in both regimes (replaces the
     * reference's abort/replay machinery, FusekiProjector.java:362-379).
     */
-  def commitOps(batchId: Long, ops: DataFrame): Unit = writeLock.synchronized {
+  def commitOps(batchId: Long, ops: DataFrame): Unit = commit(batchId, ops, None)
+
+  /** [[commitOps]] for op rows the driver already holds: the commit
+    * also folds them into the driver tail fold, at no extra Spark job,
+    * so [[quads]] keeps serving the tail without reading it back.
+    */
+  def commitRows(batchId: Long, rows: Seq[OpRow]): Unit = {
+    import spark.implicits._
+    commit(batchId, rows.toDF(), Some(rows))
+  }
+
+  private def commit(batchId: Long, ops: DataFrame,
+      rows: Option[Seq[OpRow]]): Unit = writeLock.synchronized {
     val v = readVersion()
     if (batchId <= v.highWater) return // already compacted into base
     // COPY-ON-WRITE replay: a replayed epoch writes a FRESH directory
@@ -208,30 +238,34 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       case Some(old) => v.segments.map(s => if (s.name == old.name) finalRef else s)
     }
     writeVersion(v.copy(segments = segs))
+    // the fold stays known across a fresh-epoch row commit onto a known
+    // (or empty) tail; a replay may retract ops the fold already holds
+    val prior =
+      if (v.segments.forall(_.isBase)) Some(Map.empty: OpLog.Fold)
+      else tailFold.collect { case t if t.segments == v.segments.map(_.name) => t.fold }
+    tailFold = for {
+      r <- rows if existing.isEmpty
+      p <- prior
+      f <- OpLog.fold(p, r, OpLog.driverFoldCap(spark))
+    } yield TailFold(segs.map(_.name), f)
     if (autoCompactTail > 0 && segs.count(!_.isBase) >= autoCompactTail)
       compact()
   }
 
   /** Convenience: commit a dataset payload (adds only). */
-  def addQuads(batchId: Long, quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    val rows = quads.zipWithIndex.map { case (q, i) =>
+  def addQuads(batchId: Long, quads: Seq[Quad]): Unit =
+    commitRows(batchId, quads.zipWithIndex.map { case (q, i) =>
       OpRow("A", i.toLong, q.graph, q.subject, q.predicate, q.obj)
-    }
-    commitOps(batchId, rows.toDF())
-  }
+    })
 
   /** Convenience: commit the A/D ops of an effective patch op stream
     * (the output of the patch-transaction machine,
     * RdfPatchParser.dataOpsBatch) preserving op order in `seq`.
     */
-  def applyPatch(batchId: Long, ops: Seq[PatchOp]): Unit = {
-    import spark.implicits._
-    val rows = ops.filter(o => o.op == "A" || o.op == "D").zipWithIndex.map { case (o, i) =>
-      OpRow(o.op, i.toLong, o.graph, o.subject, o.predicate, o.obj)
-    }
-    commitOps(batchId, rows.toDF())
-  }
+  def applyPatch(batchId: Long, ops: Seq[PatchOp]): Unit =
+    commitRows(batchId, ops.filter(o => o.op == "A" || o.op == "D").zipWithIndex.map {
+      case (o, i) => OpRow(o.op, i.toLong, o.graph, o.subject, o.predicate, o.obj)
+    })
 
   // --- reads ----------------------------------------------------------------
 
@@ -336,12 +370,24 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
   /** Current state as a quads DataFrame (graph, subject, predicate,
     * obj) with set semantics.
     *
-    * Physical shape: with no base, one hash-aggregate shuffle over the
-    * whole log; with a base, the base is scanned WITHOUT a shuffle and
-    * only the tail is aggregated + anti-joined (AQE broadcasts the
-    * small tail side).
+    * Physical shape, on the driver-fold path (see the class doc): the
+    * base scan, filtered by the quads the tail touched, plus the tail's
+    * live quads as a local relation — no tail segment scan, no shuffle,
+    * no broadcast job. On the segment-fold path: with no base, one
+    * hash-aggregate shuffle over the whole log; with a base, the base is
+    * scanned WITHOUT a shuffle and only the tail is aggregated +
+    * anti-joined (AQE broadcasts the small tail side).
     */
-  def quads(): DataFrame = merge(readVersion(), None)
+  def quads(): DataFrame = {
+    val v = readVersion()
+    tailFold.filter(_.segments == v.segments.map(_.name)) match {
+      case None => merge(v, None)
+      case Some(t) =>
+        val bases = v.segments.filter(_.isBase)
+        if (t.fold.isEmpty) baseQuads(bases)
+        else OpLog.overlayFold(spark, Some(bases).filter(_.nonEmpty).map(b => baseQuads(b)), t.fold)
+    }
+  }
 
   /** Materialize the current state as a SUBJECT-bucketed, per-bucket
     * subject-sorted external parquet table, returning its DataFrame —
@@ -487,6 +533,8 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     val v = readVersion()
     val (bases, tail) = v.segments.partition(_.isBase)
     if (tail.isEmpty) return
+    // the emptied tail's fold is known (empty) without holding the old one
+    tailFold = None
     val hw = (tail.flatMap(_.batchId) :+ v.highWater).max
     val nextOrd = v.segments.map(_.ord).maxOption.getOrElse(-1L) + 1
     if (bases.isEmpty) {
@@ -709,6 +757,12 @@ object QuadStore {
       case other => throw new IllegalStateException(s"bad segment name '$other'")
     }
   }
+
+  /** The tail folded on the driver for the version whose segment list is
+    * `segments` (see the class doc). Immutable: a plan built from it
+    * keeps its rows however later commits move the pointer.
+    */
+  private final case class TailFold(segments: Seq[String], fold: OpLog.Fold)
 
   /** Base-segment schema: quad columns + the `bucket` partition dir. */
   private[store] val BASE_SCHEMA: org.apache.spark.sql.types.StructType = {

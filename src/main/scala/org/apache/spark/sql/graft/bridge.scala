@@ -4,6 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
@@ -29,4 +31,15 @@ object bridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** Spark's own per-row size estimate for a `LocalRelation` of
+    * `schema` (its `computeStats` multiplies it by the row count), and
+    * the session's `spark.sql.autoBroadcastJoinThreshold` the planner
+    * compares such estimates against (≤ 0 = never broadcast).
+    */
+  def localRelationRowBytes(schema: StructType): BigInt =
+    EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(schema))
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
 }

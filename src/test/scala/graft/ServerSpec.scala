@@ -362,4 +362,85 @@ class ServerSpec extends AnyFunSuite {
         Map("http://x/common" -> 20L, "http://x/rare" -> 21L))
     } finally srv.stop()
   }
+
+  test("point queries after small sink commits run no more jobs than on the compacted store") {
+    import graft.connect.{Event, MaterialisedEvent, QuadStoreSink}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // jobs are counted by listener; a marker job flushes the listener
+    // bus, so every job a request ran is counted once the marker is seen
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var marker: java.util.concurrent.CountDownLatch = null
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.marker") != null)
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    def settled(): Int = {
+      marker = new java.util.concurrent.CountDownLatch(1)
+      val sc = spark.sparkContext
+      sc.setLocalProperty("graft.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.marker", null)
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.getAndSet(0)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try withServer { (_, base, store) =>
+      seed(store)
+      store.compact()
+      def point(subject: String): (Set[String], Int) = {
+        settled()
+        val r = get(s"$base/ds/query?query=" + java.net.URLEncoder.encode(
+          s"SELECT ?o WHERE { <http://x/$subject> <http://x/p> ?o }", "UTF-8"), accept = "text/csv")
+        assert(r.statusCode == 200, r.body)
+        (r.body.trim.linesIterator.drop(1).map(_.trim).toSet, settled())
+      }
+      val (beforeA, compactedA) = point("a")
+      val (beforeB, compactedB) = point("b")
+      assert(beforeA == Set("hello") && beforeB.size == 1)
+      val sink = new QuadStoreSink(spark, store)
+      Seq("application/n-quads" -> "<http://x/d> <http://x/p> \"x\" <http://x/g2> .\n",
+          "application/rdf-patch" -> ("TX .\nD <http://x/a> <http://x/p> \"hello\" .\n" +
+            "A <http://x/a> <http://x/p> \"y\" .\n" +
+            "D <http://x/b> <http://x/p> \"42\"^^<http://www.w3.org/2001/XMLSchema#integer> .\nTC .\n"),
+          "application/n-quads" -> "<http://x/b> <http://x/q> \"z\" .\n")
+        .zipWithIndex.foreach { case ((ct, body), i) =>
+          val value = body.getBytes(StandardCharsets.UTF_8)
+          val ev = Event("t", 0, i.toLong, Array.empty, value, Map("Content-Type" -> ct))
+          sink.apply(store.nextBatchId,
+            Seq(MaterialisedEvent(ev, graft.rdf.RdfParse.decode(value, ct, s"t:0:$i"))))
+        }
+      assert(store.committedSegments().count(!_.contains("-base")) == 3)
+      // a tail delete changes b's answer at no job over the compacted read
+      val (afterB, tailB) = point("b")
+      assert(afterB.isEmpty)
+      assert(tailB <= compactedB, s"$tailB jobs with a 3-segment tail, $compactedB compacted")
+      // a tail add in a's answer arrives as one more result partition,
+      // which the per-partition streaming of the response pays one job for
+      val (afterA, tailA) = point("a")
+      assert(afterA == Set("y"))
+      assert(tailA <= compactedA + 1, s"$tailA jobs with a 3-segment tail, $compactedA compacted")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a declared oversize body is refused with 413 before it is read") {
+    withServer { (_, base, store) =>
+      val port = new URI(base).getPort
+      val sock = new java.net.Socket("127.0.0.1", port)
+      try {
+        sock.setSoTimeout(30000)
+        val out = sock.getOutputStream
+        // declares 10 GiB, sends six bytes: a buffering server would wait
+        out.write(("POST /ds/update HTTP/1.1\r\nHost: localhost\r\n" +
+          "Content-Type: application/sparql-update\r\n" +
+          s"Content-Length: ${10L << 30}\r\n\r\nINSERT").getBytes(StandardCharsets.UTF_8))
+        out.flush()
+        val status = new java.io.BufferedReader(new java.io.InputStreamReader(
+          sock.getInputStream, StandardCharsets.UTF_8)).readLine()
+        assert(status != null && status.startsWith("HTTP/1.1 413"), status)
+      } finally sock.close()
+      assert(store.count() == 0)
+    }
+  }
 }

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.connect.OffsetStore
 import graft.rdf.{NQuadsParser, Quad, Term}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import graft.store.{AggView, OpLog, QuadStore}
 
@@ -22,6 +23,22 @@ class StoreSpec extends AnyFunSuite {
 
   private def newStore() =
     new QuadStore(spark, Files.createTempDirectory("qs").toString)
+
+  private def term(r: Row): Term =
+    if (r == null) null else Term(r.getString(0), r.getString(1), r.getString(2), r.getString(3))
+  private def quad(r: Row) = Quad(term(r.getAs[Row]("graph")), term(r.getAs[Row]("subject")),
+    term(r.getAs[Row]("predicate")), term(r.getAs[Row]("obj")))
+  private def state(df: DataFrame): Set[Quad] = df.collect().map(quad).toSet
+
+  /** Whether `df` scans an epoch segment — false on the driver-fold
+    * path, whose tail is a local relation.
+    */
+  private def scansTail(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    df.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+    }.flatten.exists(!_.contains("-base"))
+  }
 
   test("merge-on-read: delete and re-add across a compaction boundary") {
     val store = newStore()
@@ -388,19 +405,86 @@ class StoreSpec extends AnyFunSuite {
     store.compact()
     val plan = store.quads().queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"plan should not shuffle:\n$plan")
+    // a row commit onto the compacted base keeps the read shuffle-free
+    // and off the tail segment: the tail comes from the driver fold
+    store.addQuads(2, Seq(q("c", "1")))
+    val df = store.quads()
+    val withTail = df.queryExecution.executedPlan.toString
+    assert(!withTail.contains("Exchange"), s"plan should not shuffle:\n$withTail")
+    assert(!scansTail(df), withTail)
+    assert(df.count() == 3)
   }
 
   test("many-epoch read is a single multi-path scan, flat planning") {
     val store = newStore()
     (0 until 30).foreach(i => store.addQuads(i.toLong, Seq(q(s"s$i", "1"))))
     val t0 = System.nanoTime()
-    val df = store.quads()
+    // quadsAt always folds the segments; quads() would take the
+    // driver fold the row commits kept
+    val df = store.quadsAt(29)
     val plan = df.queryExecution.executedPlan.toString
     val planMs = (System.nanoTime() - t0) / 1e6
     // one parquet scan node regardless of epoch count (no per-segment union)
     assert("Scan parquet".r.findAllIn(plan).size == 1, s"expected one scan:\n$plan")
     assert(planMs < 5000, s"planning took ${planMs}ms")
     assert(df.count() == 30)
+    val fromDriver = store.quads()
+    assert(!fromDriver.queryExecution.executedPlan.toString.contains("Scan parquet"))
+    assert(fromDriver.count() == 30)
+  }
+
+  test("a quads() frame planned before a commit reads the pre-commit state") {
+    val store = newStore()
+    store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
+    store.compact()
+    store.addQuads(1, Seq(q("c", "1")))
+    val planned = store.quads()
+    assert(!scansTail(planned))
+    def op(o: String, x: Quad) = graft.rdf.PatchOp(o, x.graph, x.subject, x.predicate, x.obj)
+    store.applyPatch(2, Seq(op("D", q("a", "1")), op("A", q("c", "1")), op("A", q("d", "1"))))
+    store.applyPatch(3, Seq(op("D", q("c", "1"))))
+    assert(state(planned) == Set(q("a", "1"), q("b", "1"), q("c", "1")))
+    val now = store.quads()
+    assert(!scansTail(now))
+    assert(state(now) == Set(q("b", "1"), q("d", "1")))
+  }
+
+  test("a DataFrame commit after driver commits falls back to segments; compact() restores the driver fold") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("qs").toString
+    val store = new QuadStore(spark, dir)
+    store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
+    assert(!scansTail(store.quads()))
+    val a = q("a", "1")
+    store.commitOps(1, Seq(OpLog.OpRow("D", 0L, a.graph, a.subject, a.predicate, a.obj)).toDF())
+    assert(scansTail(store.quads()))
+    assert(state(store.quads()) == Set(q("b", "1")))
+    // rows onto an unknown fold leave it unknown
+    store.addQuads(2, Seq(q("c", "1")))
+    assert(scansTail(store.quads()))
+    assert(state(store.quads()) == Set(q("b", "1"), q("c", "1")))
+    store.compact()
+    store.addQuads(3, Seq(q("d", "1")))
+    assert(!scansTail(store.quads()))
+    assert(state(store.quads()) == Set(q("b", "1"), q("c", "1"), q("d", "1")))
+    // a replayed epoch may retract what the fold holds: segments again
+    store.addQuads(3, Seq(q("e", "1")))
+    assert(scansTail(store.quads()))
+    assert(state(store.quads()) == Set(q("b", "1"), q("c", "1"), q("e", "1")))
+    store.compact()
+    // a store opened over an existing tail does not know its fold
+    store.addQuads(4, Seq(q("f", "1")))
+    val reopened = new QuadStore(spark, dir)
+    assert(scansTail(reopened.quads()) && !scansTail(store.quads()))
+    assert(state(reopened.quads()) == state(store.quads()))
+    // past the broadcast threshold the fold does not stay on the driver
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try store.addQuads(5, Seq(q("g", "1")))
+    finally spark.conf.set(key, old)
+    assert(scansTail(store.quads()))
+    assert(state(store.quads()).size == 5)
   }
 
   test("cross-segment ordering survives seq values beyond 2^40 (kafka-scale offsets)") {
@@ -425,7 +509,6 @@ class StoreSpec extends AnyFunSuite {
 
   test("differential fuzz: store reads match a latest-op-wins model") {
     import spark.implicits._
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.lit
     val p = Term.iri("http://x/p")
     val universe = for {
@@ -433,14 +516,12 @@ class StoreSpec extends AnyFunSuite {
       s <- Seq(Term.iri("http://x/s0"), Term.iri("http://x/s1"), Term.blank("t:0:0:b0"))
       o <- Seq(Term.lit("1"), Term.iri("http://x/o"), Term.blank("t:0:0:b1"))
     } yield Quad(g, s, p, o)
-    def term(r: Row): Term =
-      if (r == null) null else Term(r.getString(0), r.getString(1), r.getString(2), r.getString(3))
-    def quad(r: Row) = Quad(term(r.getAs[Row]("graph")), term(r.getAs[Row]("subject")),
-      term(r.getAs[Row]("predicate")), term(r.getAs[Row]("obj")))
     val degenerate = (_: org.apache.spark.sql.Column) => lit(7L)
     // (base present, tail adds-only) seen under reads and at compaction
     val readShapes = scala.collection.mutable.Set[(Boolean, Boolean)]()
     val compactShapes = scala.collection.mutable.Set[(Boolean, Boolean)]()
+    // (base present, driver fold) of quads() reads over a non-empty tail
+    val readPaths = scala.collection.mutable.Set[(Boolean, Boolean)]()
     // every third step compacts; batches alternate between adds-only
     // and delete-bearing per compaction, in opposite phase per run, so
     // every (base, adds-only) shape is both read and compacted
@@ -463,18 +544,33 @@ class StoreSpec extends AnyFunSuite {
         } else {
           def any() = universe(rnd.nextInt(universe.size))
           val addsOnly = (run + compactions) % 2 == 0
+          // a delete-bearing batch ends with a delete and an add of one
+          // live quad (a base quad once compacted), in random order, so
+          // op order inside one segment decides that quad's state
+          val live = model.toSeq
           val ops = Seq.fill(1 + rnd.nextInt(5))(
             (if (addsOnly || rnd.nextBoolean()) "A" else "D", any())) ++
-            (if (addsOnly) Nil else Seq(("D", any())))
-          store.commitOps(batch, ops.zipWithIndex.map { case ((op, q), i) =>
+            (if (addsOnly) Nil else {
+              val x = if (live.isEmpty) any() else live(rnd.nextInt(live.size))
+              if (rnd.nextBoolean()) Seq(("D", x), ("A", x)) else Seq(("A", x), ("D", x))
+            })
+          val rows = ops.zipWithIndex.map { case ((op, q), i) =>
             OpLog.OpRow(op, i.toLong, q.graph, q.subject, q.predicate, q.obj)
-          }.toDF())
+          }
+          // run 0 commits rows first after each compaction and a
+          // DataFrame second; run 1 the other way round, so rows also
+          // land on a tail whose fold a DataFrame commit made unknown
+          if ((step % 3 == 0) == (run == 0)) store.commitRows(batch, rows)
+          else store.commitOps(batch, rows.toDF())
           ops.foreach { case (op, q) => model = if (op == "A") model + q else model - q }
           history(batch) = model
           batch += 1
         }
         val avail = store.availableBatches()
-        if (avail.nonEmpty) readShapes += shape()
+        if (avail.nonEmpty) {
+          readShapes += shape()
+          readPaths += ((shape()._1, !scansTail(store.quads())))
+        }
         // quads() (at = -2) and quadsAt(b) for every available b, one job
         val reads = (store.quads().withColumn("at", lit(-2L)) +:
             avail.map(b => store.quadsAt(b).withColumn("at", lit(b))))
@@ -503,6 +599,7 @@ class StoreSpec extends AnyFunSuite {
     }
     val all = Set((false, false), (false, true), (true, false), (true, true))
     assert(readShapes == all && compactShapes == all, (readShapes, compactShapes))
+    assert(readPaths == all, readPaths)
   }
 
   test("PA/PD patch ops maintain the dataset prefix map in order") {
