@@ -262,6 +262,19 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     else nodes.select(col("n").as("ps"), col("n").as("po"))
   }
 
+  /** Whether a path's one-step relation is a bare scan shape
+    * (filter+project over the quads — cheap to re-execute) as opposed
+    * to containing joins/fixpoints of its own. Decides whether
+    * [[closure]] materializes the relation before referencing it
+    * several times (count gate, dictionary build, encode).
+    */
+  private def leafStep(p: PathExpr): Boolean = p match {
+    case PLink(_) | PNeg(_, _) => true
+    case PInv(i) => leafStep(i)
+    case PAlt(l, r) => leafStep(l) && leafStep(r)
+    case _ => false // PSeq (a join), nested closures, POpt (a distinct)
+  }
+
   /** Distributed transitive closure by doubling: each round joins the
     * closure with itself, so diameter d needs ⌈log2 d⌉ rounds, every
     * round a fully-parallel join + distinct. The driver only CONTROLS
@@ -279,21 +292,8 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     * the caller's plan still reads it; it is
     * [[Checkpoints.register]]ed for the caller's scope to free once
     * the query's result has been consumed.
-    */
-  /** Whether a path's one-step relation is a bare scan shape
-    * (filter+project over the quads — cheap to re-execute) as opposed
-    * to containing joins/fixpoints of its own. Decides whether
-    * [[closure]] materializes the relation before referencing it
-    * several times (count gate, dictionary build, encode).
-    */
-  private def leafStep(p: PathExpr): Boolean = p match {
-    case PLink(_) | PNeg(_, _) => true
-    case PInv(i) => leafStep(i)
-    case PAlt(l, r) => leafStep(l) && leafStep(r)
-    case _ => false // PSeq (a join), nested closures, POpt (a distinct)
-  }
-
-  /** `zeroNodes`: raw (pg?, n) node occurrences whose identity pairs
+    *
+    * `zeroNodes`: raw (pg?, n) node occurrences whose identity pairs
     * (n, n) must JOIN the closure result — the `*`-path zero-length
     * component. On the encoded path they are deduplicated and unioned
     * as 8-byte ids inside the closure scope (their terms ride the same

@@ -54,8 +54,8 @@ import graft.rdf.{PatchOp, Quad}
   *      a replayed epoch, past that bound, or on a store opened over an
   *      existing tail — the tail segments are read and aggregated (one
   *      small shuffle) and anti-joined against the base, until
-  *      [[compact]] empties the tail. [[quadsAt]], [[changes]] and
-  *      [[count]] always take this path.
+  *      [[compact]] empties the tail. [[quadsAt]] and [[changes]]
+  *      always take this path; [[count]] follows [[quads]].
   *  - A RE-compaction rewrites ONLY the buckets the tail touched: the
   *    new base segment's name records which buckets it owns
   *    (`s<ord>-base-k3_7`), later segments supersede earlier ones per
@@ -423,14 +423,8 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * as-of state cost O(touched buckets): a change feed only ever
     * needs state rows hashing to its own quads' buckets.
     */
-  def quadsAtBuckets(asOfBatch: Long, buckets: Seq[Int]): DataFrame = {
-    val v = readVersion()
-    if (v.highWater >= 0 && asOfBatch < v.highWater)
-      throw new IllegalArgumentException(
-        s"time travel to batch $asOfBatch is unavailable: compaction folded " +
-        s"batches <= ${v.highWater} into the base")
-    merge(v, Some(asOfBatch), Some(buckets))
-  }
+  def quadsAtBuckets(asOfBatch: Long, buckets: Seq[Int]): DataFrame =
+    merge(historyFrom(asOfBatch, "time travel to batch"), Some(asOfBatch), Some(buckets))
 
   /** The bucket a quad row hashes to — the partition key of the
     * compacted base ([[compact]] writes `bucket=k` directories with
@@ -448,14 +442,21 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * store has). Batches between the high-water mark and `asOfBatch`
     * that never committed simply contribute nothing.
     */
-  def quadsAt(asOfBatch: Long): DataFrame = {
+  def quadsAt(asOfBatch: Long): DataFrame =
+    merge(historyFrom(asOfBatch, "time travel to batch"), Some(asOfBatch))
+
+  /** The current version, if the history from `batch` on is still
+    * separable: [[compact]] folds batches at or below the high-water
+    * mark into the base. `read` names the read in the error.
+    */
+  private def historyFrom(batch: Long, read: String): Version = {
     val v = readVersion()
-    if (v.highWater >= 0 && asOfBatch < v.highWater)
+    if (v.highWater >= 0 && batch < v.highWater)
       throw new IllegalArgumentException(
-        s"time travel to batch $asOfBatch is unavailable: compaction folded " +
-        s"batches <= ${v.highWater} into the base (raise the compaction " +
-        "cadence or query >= the high-water mark)")
-    merge(v, Some(asOfBatch))
+        s"$read $batch is unavailable: compaction folded batches <= " +
+        s"${v.highWater} into the base (raise the compaction cadence or " +
+        "read from the high-water mark on)")
+    v
   }
 
   /** Tail batchIds still individually reachable for [[quadsAt]]. */
@@ -476,12 +477,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * be diffed.
     */
   def changes(fromBatch: Long, toBatch: Long): DataFrame = {
-    val v = readVersion()
-    if (v.highWater >= 0 && fromBatch < v.highWater)
-      throw new IllegalArgumentException(
-        s"change feed from batch $fromBatch is unavailable: compaction " +
-        s"folded batches <= ${v.highWater} into the base")
-    val segs = v.segments
+    val segs = historyFrom(fromBatch, "change feed from batch").segments
       .filter(_.batchId.exists(b => b > fromBatch && b <= toBatch))
     if (segs.isEmpty)
       return emptyQuads().withColumn("op", lit("A")).limit(0)
@@ -558,61 +554,11 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     }
   }
 
-  /** Number of quads in the current state — same value as
-    * `quads().count()`, computed with the count-specific shuffle
-    * discipline of optimization guide §2.3: counting needs quad
-    * IDENTITY, not quad CONTENT, so the latest-op fold shuffles four
-    * per-column xxhash64 TERM IDS (32 bytes) instead of the wide term
-    * structs. Unlike round 8's unguarded (xxhash64, murmur3) pair,
-    * this identity is EXACT: the hash is first VERIFIED injective over
-    * the log's term set (one narrow aggregate — the same discipline as
-    * the closure dictionary's observe check), and on the
-    * astronomically unlikely collision the fold simply runs on the
-    * original structs. Nulls map to a null id (Spark hash functions
-    * skip null inputs, which would alias a null graph with a term
-    * hashing to the seed), so the id tuple is null-safe like
-    * [[OpLog.overlay]]'s per-column `<=>`. [[quads]] itself is
-    * untouched — only the count, which discards the quads anyway,
-    * takes this path.
+  /** Number of quads in the current state: [[quads]] counted, so it
+    * reads the tail by whichever path [[quads]] takes (see the class
+    * doc) and folds nothing of its own.
     */
-  def count(): Long = countWith(c => xxhash64(c))
-
-  /** [[count]] with an injectable term-id hash — the id function is a
-    * parameter so a degenerate hash can exercise the collision
-    * fallback in tests (a real xxhash64 collision is not computable).
-    */
-  private[graft] def countWith(idOf: org.apache.spark.sql.Column =>
-      org.apache.spark.sql.Column): Long = {
-    val v = readVersion()
-    val (bases, tail) = v.segments.partition(_.isBase)
-    if (tail.isEmpty) return if (bases.isEmpty) 0L else baseQuads(bases).count()
-    // adds-only with no base: count = DISTINCT quads, exact on the
-    // structs with no fold machinery at all. Measured on the 5M-op
-    // scale corpus the struct distinct (0.85–1.1 s warm) ties the
-    // unguarded hash-pair distinct (0.9–1.0 s) — dropping max_by/gseq
-    // was the real win, so exactness here costs nothing and needs no
-    // guard
-    val addsOnly = tail.forall(_.addsOnly)
-    if (bases.isEmpty && addsOnly) return tailState(tail).count()
-    def termIds(df: DataFrame): DataFrame =
-      df.select(QUAD_COLUMNS.map(c => when(col(c).isNotNull, idOf(col(c))).as(c)) ++
-        df.columns.filterNot(QUAD_COLUMNS.contains).map(col): _*)
-    val base = if (bases.isEmpty) None else Some(baseQuads(bases))
-    val log = if (addsOnly) readSegmentsRaw(tail) else readSegments(tail)
-    // injectivity of the term-id hash over every term the count will
-    // compare (tail ops, plus the base when the overlay crosses the
-    // two): max terms per id, 1 = injective
-    val terms = (log +: base.toSeq)
-      .map(_.select(explode(array(QUAD_COLUMNS.map(col): _*)).as("t")))
-      .reduce(_.unionByName(_))
-      .filter(col("t").isNotNull)
-    val injective = terms.groupBy(idOf(col("t")).as("tid"))
-      .agg(countDistinct(col("t")).as("nd"))
-      .agg(max(col("nd"))).head().getLong(0) == 1L
-    if (!injective) return quads().count()
-    val state = OpLog.tailState(termIds(log), addsOnly)
-    base.fold(OpLog.live(state))(b => OpLog.overlay(termIds(b), state)).count()
-  }
+  def count(): Long = quads().count()
 
   /** Remove files no read can reach: segment directories absent from
     * the version pointer (epochs retired by compaction, aborted

@@ -19,6 +19,40 @@ object TestSpark {
     while (pinned() != expected && System.nanoTime() < deadline) Thread.sleep(50)
     pinned()
   }
+
+  /** `body`'s result and the Spark jobs started while it ran, from any
+    * thread (an HTTP request's jobs run on the server's), counted by
+    * listener. A marker job flushes the listener bus before and after
+    * `body`, so each of its jobs is counted once and no earlier job is.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    @volatile var marker: CountDownLatch = null
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.marker") != null)
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    def settled(): Int = {
+      marker = new CountDownLatch(1)
+      sc.setLocalProperty("graft.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.marker", null)
+      require(marker.await(30, TimeUnit.SECONDS), "listener bus did not flush")
+      jobs.getAndSet(0)
+    }
+    sc.addSparkListener(listener)
+    try {
+      settled()
+      val r = body
+      (r, settled())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -365,36 +365,14 @@ class ServerSpec extends AnyFunSuite {
 
   test("point queries after small sink commits run no more jobs than on the compacted store") {
     import graft.connect.{Event, MaterialisedEvent, QuadStoreSink}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // jobs are counted by listener; a marker job flushes the listener
-    // bus, so every job a request ran is counted once the marker is seen
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    @volatile var marker: java.util.concurrent.CountDownLatch = null
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.marker") != null)
-          marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    def settled(): Int = {
-      marker = new java.util.concurrent.CountDownLatch(1)
-      val sc = spark.sparkContext
-      sc.setLocalProperty("graft.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.marker", null)
-      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.getAndSet(0)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try withServer { (_, base, store) =>
+    withServer { (_, base, store) =>
       seed(store)
       store.compact()
       def point(subject: String): (Set[String], Int) = {
-        settled()
-        val r = get(s"$base/ds/query?query=" + java.net.URLEncoder.encode(
-          s"SELECT ?o WHERE { <http://x/$subject> <http://x/p> ?o }", "UTF-8"), accept = "text/csv")
+        val (r, jobs) = TestSpark.jobsOf(get(s"$base/ds/query?query=" + java.net.URLEncoder.encode(
+          s"SELECT ?o WHERE { <http://x/$subject> <http://x/p> ?o }", "UTF-8"), accept = "text/csv"))
         assert(r.statusCode == 200, r.body)
-        (r.body.trim.linesIterator.drop(1).map(_.trim).toSet, settled())
+        (r.body.trim.linesIterator.drop(1).map(_.trim).toSet, jobs)
       }
       val (beforeA, compactedA) = point("a")
       val (beforeB, compactedB) = point("b")
@@ -421,7 +399,7 @@ class ServerSpec extends AnyFunSuite {
       val (afterA, tailA) = point("a")
       assert(afterA == Set("y"))
       assert(tailA <= compactedA + 1, s"$tailA jobs with a 3-segment tail, $compactedA compacted")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("a declared oversize body is refused with 413 before it is read") {

@@ -103,32 +103,22 @@ class StoreSpec extends AnyFunSuite {
     assert(store.quads().count() == 4L)
   }
 
-  test("count() stays exact when the term-id hash collides (fallback)") {
+  test("count() over a driver-folded delete-bearing tail runs no more jobs than quads().count()") {
     val store = newStore()
-    import spark.implicits._
-    // two DISTINCT terms that any constant hash maps together, plus a
-    // delete so the guarded term-id fold path (not the adds-only
-    // distinct) is exercised
-    store.commitOps(0, Seq(
-      OpLog.OpRow("A", 0L, null, Term.iri("http://x/a"),
-        Term.iri("http://x/p"), Term.lit("1")),
-      OpLog.OpRow("A", 1L, null, Term.iri("http://x/b"),
-        Term.iri("http://x/p"), Term.lit("1")),
-      OpLog.OpRow("D", 2L, null, Term.iri("http://x/b"),
-        Term.iri("http://x/p"), Term.lit("1"))).toDF())
-    // degenerate id: every term gets id 7 — the injectivity check must
-    // reject it and fall back to the exact struct fold
-    assert(store.countWith(_ => org.apache.spark.sql.functions.lit(7L)) == 1L)
-    assert(store.count() == 1L) // the real hash agrees
-    // and across a base + delete-bearing tail
+    store.addQuads(0, Seq(q("a", "1"), q("b", "1"), q("c", "1")))
     store.compact()
-    store.commitOps(1, Seq(
-      OpLog.OpRow("A", 0L, null, Term.iri("http://x/c"),
-        Term.iri("http://x/p"), Term.lit("1")),
-      OpLog.OpRow("D", 1L, null, Term.iri("http://x/a"),
-        Term.iri("http://x/p"), Term.lit("1"))).toDF())
-    assert(store.countWith(_ => org.apache.spark.sql.functions.lit(7L)) == 1L)
-    assert(store.count() == 1L)
+    def row(op: String, i: Long, x: Quad) =
+      OpLog.OpRow(op, i, x.graph, x.subject, x.predicate, x.obj)
+    store.commitRows(1, Seq(row("D", 0L, q("a", "1")), row("A", 1L, q("d", "1")),
+      row("A", 2L, q("b", "2"))))
+    store.commitRows(2, Seq(row("A", 0L, q("a", "1")), row("D", 1L, q("a", "1")),
+      row("D", 2L, q("c", "1"))))
+    val model = Set(q("b", "1"), q("d", "1"), q("b", "2"))
+    assert(!scansTail(store.quads()))
+    val (n, countJobs) = TestSpark.jobsOf(store.count())
+    val (_, quadsJobs) = TestSpark.jobsOf(store.quads().count())
+    assert(n == model.size && state(store.quads()) == model)
+    assert(countJobs <= quadsJobs, s"count() ran $countJobs jobs, quads().count() $quadsJobs")
   }
 
   test("quadsAt time-travels to any un-compacted batch; compaction is the floor") {
@@ -516,7 +506,6 @@ class StoreSpec extends AnyFunSuite {
       s <- Seq(Term.iri("http://x/s0"), Term.iri("http://x/s1"), Term.blank("t:0:0:b0"))
       o <- Seq(Term.lit("1"), Term.iri("http://x/o"), Term.blank("t:0:0:b1"))
     } yield Quad(g, s, p, o)
-    val degenerate = (_: org.apache.spark.sql.Column) => lit(7L)
     // (base present, tail adds-only) seen under reads and at compaction
     val readShapes = scala.collection.mutable.Set[(Boolean, Boolean)]()
     val compactShapes = scala.collection.mutable.Set[(Boolean, Boolean)]()
@@ -584,7 +573,6 @@ class StoreSpec extends AnyFunSuite {
         check(-2L, model)
         avail.foreach(b => check(b, history(b)))
         assert(store.count() == model.size)
-        assert(store.countWith(degenerate) == model.size)
         if (avail.nonEmpty) {
           val to = avail(rnd.nextInt(avail.size))
           val froms = store.highWaterBatchId +: avail.filter(_ < to)
