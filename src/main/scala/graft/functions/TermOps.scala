@@ -145,11 +145,7 @@ object TermOps {
       else if (INTEGER_DATATYPES.contains(dt)) 0 else 1
     val cls = math.max(numClass(dtA), numClass(dtB))
     def mk(lex: String, dt: String): InternalRow =
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(graft.rdf.Term.LIT),
-        org.apache.spark.unsafe.types.UTF8String.fromString(lex),
-        org.apache.spark.unsafe.types.UTF8String.fromString(dt),
-        null))
+      graft.rdf.Term.row(graft.rdf.Term.typed(lex, dt))
     if (cls >= 2) {
       def pd(s: String): java.lang.Double = s match {
         case "INF" => Double.PositiveInfinity
@@ -243,13 +239,8 @@ object TermOps {
 /** See [[TermOps.termValueEquals]]. */
 final case class TermValueEquals(left: Expression, right: Expression)
     extends BinaryExpression {
-  private def isTermStruct(dt: DataType): Boolean = dt match {
-    case StructType(fields) =>
-      fields.map(_.name).toSeq == Seq("termType", "lex", "datatype", "lang")
-    case _ => false
-  }
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isTermStruct(left.dataType) && isTermStruct(right.dataType))
+    if (graft.rdf.Term.isStruct(left.dataType) && graft.rdf.Term.isStruct(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName needs two term structs, got (${left.dataType}, ${right.dataType})")
@@ -269,20 +260,14 @@ final case class TermValueEquals(left: Expression, right: Expression)
   */
 final case class TermArith(left: Expression, right: Expression, op: String)
     extends BinaryExpression {
-  private def isTermStruct(dt: DataType): Boolean = dt match {
-    case StructType(fields) =>
-      fields.map(_.name).toSeq == Seq("termType", "lex", "datatype", "lang")
-    case _ => false
-  }
   override def checkInputDataTypes(): TypeCheckResult =
     if (!Seq("+", "-", "*", "/").contains(op))
       TypeCheckResult.TypeCheckFailure(s"$prettyName: unknown operator '$op'")
-    else if (isTermStruct(left.dataType) && isTermStruct(right.dataType))
+    else if (graft.rdf.Term.isStruct(left.dataType) && graft.rdf.Term.isStruct(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName needs two term structs, got (${left.dataType}, ${right.dataType})")
-  override def dataType: DataType = StructType(
-    Seq("termType", "lex", "datatype", "lang").map(StructField(_, StringType)))
+  override def dataType: DataType = graft.rdf.Term.Schema
   override def nullable: Boolean = true
   override def prettyName: String = "term_arith"
   override protected def nullSafeEval(a: Any, b: Any): Any =
@@ -301,13 +286,8 @@ final case class TermArith(left: Expression, right: Expression, op: String)
 /** See [[TermOps.termValueCompare]]. */
 final case class TermValueCompare(left: Expression, right: Expression)
     extends BinaryExpression {
-  private def isTermStruct(dt: DataType): Boolean = dt match {
-    case StructType(fields) =>
-      fields.map(_.name).toSeq == Seq("termType", "lex", "datatype", "lang")
-    case _ => false
-  }
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isTermStruct(left.dataType) && isTermStruct(right.dataType))
+    if (graft.rdf.Term.isStruct(left.dataType) && graft.rdf.Term.isStruct(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName needs two term structs, got (${left.dataType}, ${right.dataType})")

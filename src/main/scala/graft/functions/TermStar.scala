@@ -43,13 +43,7 @@ object TermStar {
         val (s, p, o) = NQuadsParser.components(Term(Term.TRIPLE, lex, null, null))
         i match { case 0 => s; case 1 => p; case _ => o }
       } catch { case _: Exception => return null }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-      org.apache.spark.unsafe.types.UTF8String.fromString(term.termType),
-      org.apache.spark.unsafe.types.UTF8String.fromString(term.lex),
-      if (term.datatype == null) null
-      else org.apache.spark.unsafe.types.UTF8String.fromString(term.datatype),
-      if (term.lang == null) null
-      else org.apache.spark.unsafe.types.UTF8String.fromString(term.lang)))
+    Term.row(term)
   }
 
   /** SPARQL-star TRIPLE(s, p, o) constructor as pure built-in columns
@@ -62,32 +56,22 @@ object TermStar {
     val ok =
       s.getField("termType").isin(Term.IRI, Term.BLANK, Term.TRIPLE) &&
       p.getField("termType") === Term.IRI && o.getField("termType").isNotNull
-    when(ok, struct(
-      lit(Term.TRIPLE).as("termType"),
-      concat(lit("<<"), nt(s), lit(" "), nt(p), lit(" "), nt(o), lit(">>")).as("lex"),
-      lit(null).cast("string").as("datatype"),
-      lit(null).cast("string").as("lang")))
-      .otherwise(lit(null).cast(
-        "struct<termType:string,lex:string,datatype:string,lang:string>"))
+    when(ok, Term.column(Term.TRIPLE,
+      concat(lit("<<"), nt(s), lit(" "), nt(p), lit(" "), nt(o), lit(">>"))))
+      .otherwise(lit(null).cast(Term.Schema))
   }
 }
 
 /** See [[TermStar.componentOf]]. */
 final case class TermStarComponent(child: Expression, idx: Int)
     extends UnaryExpression {
-  private def isTermStruct(dt: DataType): Boolean = dt match {
-    case StructType(fields) =>
-      fields.map(_.name).toSeq == Seq("termType", "lex", "datatype", "lang")
-    case _ => false
-  }
   override def checkInputDataTypes(): TypeCheckResult =
     if (idx < 0 || idx > 2)
       TypeCheckResult.TypeCheckFailure(s"$prettyName: index $idx out of [0,2]")
-    else if (isTermStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else if (Term.isStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName needs a term struct, got ${child.dataType}")
-  override def dataType: DataType = StructType(
-    Seq("termType", "lex", "datatype", "lang").map(StructField(_, StringType)))
+  override def dataType: DataType = Term.Schema
   override def nullable: Boolean = true
   override def prettyName: String = "term_star_component"
   override protected def nullSafeEval(t: Any): Any =

@@ -79,18 +79,6 @@ object Sampling {
       .drop("hk", "salt", "r_local")
   }
 
-  /** Mixture-weight upsampling: repeat each row `weight(stratum)`
-    * times, with an `epoch` index per copy. Fractional weights round
-    * deterministically per row: a weight of 2.25 gives every row 2
-    * epochs and the 25% of rows whose [[hashKey]] falls under the
-    * fraction a 3rd — so the EXPECTED stratum multiplier is exact and
-    * the realized one is reproducible. Weight 0 drops the stratum.
-    *
-    * Scale shape: a map-side explode — no shuffle; each output row
-    * exists only inside the downstream pipeline (Spark never
-    * materializes the repeats). This is the standard way to express a
-    * DoReMi/Pile-style domain mix as a plan instead of copying bytes.
-    */
   /** Deterministic epoch shuffle: the global permutation a training
     * run needs every epoch, expressed scalably as (shard, position
     * within shard). Each row hashes to one of `shards` by the
@@ -202,6 +190,18 @@ object Sampling {
       .limit(k)
   }
 
+  /** Mixture-weight upsampling: repeat each row `weight(stratum)`
+    * times, with an `epoch` index per copy. Fractional weights round
+    * deterministically per row: a weight of 2.25 gives every row 2
+    * epochs and the 25% of rows whose [[hashKey]] falls under the
+    * fraction a 3rd — so the EXPECTED stratum multiplier is exact and
+    * the realized one is reproducible. Weight 0 drops the stratum.
+    *
+    * Scale shape: a map-side explode — no shuffle; each output row
+    * exists only inside the downstream pipeline (Spark never
+    * materializes the repeats). This is the standard way to express a
+    * DoReMi/Pile-style domain mix as a plan instead of copying bytes.
+    */
   def mixtureExpand(docs: DataFrame, weights: Map[String, Double],
       defaultWeight: Double = 1.0, stratumCol: String = "source",
       idCol: String = "doc_id"): DataFrame = {

@@ -251,13 +251,9 @@ object RdfQueries {
     // oracle checks stay constant across reps.
     "scale_view_refresh" -> { (s, dir) =>
       import s.implicits._
-      def termI(lex: Column) = struct(lit(Term.IRI).as("termType"),
-        lex.as("lex"), lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      def termL(lex: Column) = struct(lit(Term.LIT).as("termType"),
-        lex.cast("string").as("lex"),
-        lit(Term.XSD_INTEGER).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
+      def termI(lex: Column) = Term.column(Term.IRI, lex)
+      def termL(lex: Column) =
+        Term.column(Term.LIT, lex.cast("string"), lit(Term.XSD_INTEGER).cast("string"))
       val (store, view, ctr) = viewFixtures.computeIfAbsent(dir, { _ =>
         val st = new QuadStore(s, Files.createTempDirectory("svr").toString)
         val li = t(s, dir, "lineitem").select(
@@ -267,11 +263,11 @@ object RdfQueries {
         val subj = termI(concat(lit(s"${NS}li/"), col("ok"), lit("_"), col("ln")))
         val quantity = li.select(lit("A").as("op"),
           (col("ok") * 100 + col("ln") * 2).as("seq"),
-          lit(null).cast("struct<termType:string,lex:string,datatype:string,lang:string>").as("graph"), subj.as("subject"),
+          lit(null).cast(Term.Schema).as("graph"), subj.as("subject"),
           termI(lit(s"${NS}quantity")).as("predicate"), termL(col("qty")).as("obj"))
         val inOrder = li.select(lit("A").as("op"),
           (col("ok") * 100 + col("ln") * 2 + 1).as("seq"),
-          lit(null).cast("struct<termType:string,lex:string,datatype:string,lang:string>").as("graph"), subj.as("subject"),
+          lit(null).cast(Term.Schema).as("graph"), subj.as("subject"),
           termI(lit(s"${NS}inOrder")).as("predicate"),
           termI(concat(lit(s"${NS}order/"), col("ok"))).as("obj"))
         val meta = Seq(OpLog.OpRow("A", -1L, null,
@@ -346,17 +342,10 @@ object RdfQueries {
     // blank — the oracle re-runs the same refinement as 3 unrolled
     // SQL rounds, so every md5 at every round must agree
     "rdf_canonical" -> { (s, dir) =>
-      def blankT(lex: Column) = struct(lit(Term.BLANK).as("termType"),
-        lex.as("lex"), lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      def iriT(iri: String) = struct(lit(Term.IRI).as("termType"),
-        lit(iri).as("lex"), lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      def litT(lex: Column) = struct(lit(Term.LIT).as("termType"),
-        lex.as("lex"), lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      val g = lit(null).cast(
-        "struct<termType:string,lex:string,datatype:string,lang:string>")
+      def blankT(lex: Column) = Term.column(Term.BLANK, lex)
+      def iriT(iri: String) = Term.column(Term.IRI, lit(iri))
+      def litT(lex: Column) = Term.column(Term.LIT, lex)
+      val g = lit(null).cast(Term.Schema)
       val nation = t(s, dir, "nation")
       val region = t(s, dir, "region")
       val quads = nation.select(g.as("graph"),
@@ -379,15 +368,9 @@ object RdfQueries {
     // graphs into 5 groups; the oracle mirrors the per-graph
     // refinement and the fingerprint fold exactly
     "rdf_dedup_graphs" -> { (s, dir) =>
-      def blankT(lex: Column) = struct(lit(Term.BLANK).as("termType"),
-        lex.as("lex"), lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      def iriT(lex: Column) = struct(lit(Term.IRI).as("termType"),
-        lex.as("lex"), lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      def litT(lex: Column) = struct(lit(Term.LIT).as("termType"),
-        lex.as("lex"), lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
+      def blankT(lex: Column) = Term.column(Term.BLANK, lex)
+      def iriT(lex: Column) = Term.column(Term.IRI, lex)
+      def litT(lex: Column) = Term.column(Term.LIT, lex)
       val nr = t(s, dir, "nation").join(t(s, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
       val g = iriT(concat(lit(s"${NS}g/n"), col("n_nationkey")))

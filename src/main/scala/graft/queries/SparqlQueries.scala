@@ -757,22 +757,15 @@ object SparqlQueries {
     // star BGP that plans with zero exchanges — the layout's whole
     // point. Exact relational oracle.
     "scale_bucketed_star" -> { (s, dir) =>
-      val termType = "struct<termType:string,lex:string,datatype:string,lang:string>"
-      def iriCol(lex: org.apache.spark.sql.Column) = struct(
-        lit(Term.IRI).as("termType"), lex.as("lex"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      def litCol(lex: org.apache.spark.sql.Column) = struct(
-        lit(Term.LIT).as("termType"), lex.as("lex"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
+      def iriCol(lex: org.apache.spark.sql.Column) = Term.column(Term.IRI, lex)
+      def litCol(lex: org.apache.spark.sql.Column) = Term.column(Term.LIT, lex)
       val table = s"scale_spo_bucketed_${math.abs(dir.hashCode)}"
       bucketedTables.computeIfAbsent((table, dir), { _ =>
         val ev = Tables.events(s, dir)
           .select(col("event_id").cast("long").as("id"),
             col("event_type"), col("user_id").cast("long").as("uid"))
         def quad(p: String, o: org.apache.spark.sql.Column) = ev.select(
-          lit(null).cast(termType).as("graph"),
+          lit(null).cast(Term.Schema).as("graph"),
           iriCol(concat(lit(s"${NS}e/"), col("id").cast("string"))).as("subject"),
           iriCol(lit(s"${NS}$p")).as("predicate"),
           litCol(o).as("obj"))
@@ -799,19 +792,12 @@ object SparqlQueries {
     // back by the SPARQL-star pattern (per-row canonical-lex parse via
     // the TermStarComponent expression); 10k/100k rows, exact oracle
     "scale_star" -> { (s, dir) =>
-      val termType = "struct<termType:string,lex:string,datatype:string,lang:string>"
-      def iriCol(lex: org.apache.spark.sql.Column) = struct(
-        lit(Term.IRI).as("termType"), lex.as("lex"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
-      def litCol(lex: org.apache.spark.sql.Column) = struct(
-        lit(Term.LIT).as("termType"), lex.as("lex"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
+      def iriCol(lex: org.apache.spark.sql.Column) = Term.column(Term.IRI, lex)
+      def litCol(lex: org.apache.spark.sql.Column) = Term.column(Term.LIT, lex)
       val quads = Tables.events(s, dir)
         .select(col("event_id").cast("long").as("id"), col("event_type"))
         .select(
-          lit(null).cast(termType).as("graph"),
+          lit(null).cast(Term.Schema).as("graph"),
           graft.functions.TermStar.quotedOf(
             iriCol(concat(lit(s"${NS}e/"), col("id").cast("string"))),
             iriCol(lit(s"${NS}type")),
@@ -831,22 +817,16 @@ object SparqlQueries {
     // store-agnostic), chains of 20 → ~95k reachable pairs at sf0.01;
     // the oracle replays it with a recursive CTE
     "scale_sparql_path" -> { (s, dir) =>
-      val termType = "struct<termType:string,lex:string,datatype:string,lang:string>"
-      def node(c: org.apache.spark.sql.Column) = struct(
-        lit(Term.IRI).as("termType"),
-        concat(lit(s"${NS}n/"), c.cast("string")).as("lex"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
+      def node(c: org.apache.spark.sql.Column) =
+        Term.column(Term.IRI, concat(lit(s"${NS}n/"), c.cast("string")))
       val nextIri = Term.iri(s"${NS}next")
       val quads = Tables.events(s, dir)
         .select(col("event_id").cast("long").as("id"))
         .filter(col("id") % 20 =!= 19)
         .select(
-          lit(null).cast(termType).as("graph"),
+          lit(null).cast(Term.Schema).as("graph"),
           node(col("id")).as("subject"),
-          struct(lit(Term.IRI).as("termType"), lit(nextIri.lex).as("lex"),
-            lit(null).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang")).as("predicate"),
+          Term.column(nextIri).as("predicate"),
           node(col("id") + 1).as("obj"))
       val res = Sparql.execute(quads, s"SELECT ?s ?o { ?s <${NS}next>+ ?o }")
       res.select(
@@ -861,22 +841,16 @@ object SparqlQueries {
       // full-graph doubling closure it would share with the unseeded
       // entry. The wall-clock gap between the two entries IS the
       // measurement.
-      val termType = "struct<termType:string,lex:string,datatype:string,lang:string>"
-      def node(c: org.apache.spark.sql.Column) = struct(
-        lit(Term.IRI).as("termType"),
-        concat(lit(s"${NS}n/"), c.cast("string")).as("lex"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))
+      def node(c: org.apache.spark.sql.Column) =
+        Term.column(Term.IRI, concat(lit(s"${NS}n/"), c.cast("string")))
       val nextIri = Term.iri(s"${NS}next")
       val quads = Tables.events(s, dir)
         .select(col("event_id").cast("long").as("id"))
         .filter(col("id") % 20 =!= 19)
         .select(
-          lit(null).cast(termType).as("graph"),
+          lit(null).cast(Term.Schema).as("graph"),
           node(col("id")).as("subject"),
-          struct(lit(Term.IRI).as("termType"), lit(nextIri.lex).as("lex"),
-            lit(null).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang")).as("predicate"),
+          Term.column(nextIri).as("predicate"),
           node(col("id") + 1).as("obj"))
       val res = Sparql.execute(quads,
         s"SELECT ?o { <${NS}n/40> <${NS}next>+ ?o }")

@@ -111,20 +111,9 @@ object RdfParse {
       key: Array[Byte], contentType: String,
       kind: String, quads: Seq[Quad], ops: Seq[PatchOp], _corrupt: String)
 
-  private val TERM_SCHEMA = {
-    import org.apache.spark.sql.types._
-    StructType(Seq("termType", "lex", "datatype", "lang")
-      .map(StructField(_, StringType)))
-  }
-  private val QUAD_SCHEMA = {
-    import org.apache.spark.sql.types._
-    StructType(Seq("graph", "subject", "predicate", "obj")
-      .map(StructField(_, TERM_SCHEMA)))
-  }
   private val PATCH_OP_SCHEMA = {
     import org.apache.spark.sql.types._
-    StructType(StructField("op", StringType) +:
-      Seq("graph", "subject", "predicate", "obj").map(StructField(_, TERM_SCHEMA)))
+    StructType(StructField("op", StringType) +: Quad.Schema)
   }
   /** Schema of [[decodeEvents]]'s output — [[DecodedEvent]] as types. */
   val DECODED_SCHEMA: org.apache.spark.sql.types.StructType = {
@@ -136,7 +125,7 @@ object RdfParse {
       StructField("key", BinaryType),
       StructField("contentType", StringType),
       StructField("kind", StringType),
-      StructField("quads", ArrayType(QUAD_SCHEMA)),
+      StructField("quads", ArrayType(Quad.Schema)),
       StructField("ops", ArrayType(PATCH_OP_SCHEMA)),
       StructField("_corrupt", StringType)))
   }
@@ -146,19 +135,9 @@ object RdfParse {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.unsafe.types.UTF8String
 
-  private def termRow(t: Term): InternalRow =
-    if (t == null) null
-    else new GenericInternalRow(Array[Any](
-      UTF8String.fromString(t.termType), UTF8String.fromString(t.lex),
-      UTF8String.fromString(t.datatype), UTF8String.fromString(t.lang)))
-
-  private def quadRow(q: Quad): InternalRow =
-    new GenericInternalRow(Array[Any](termRow(q.graph), termRow(q.subject),
-      termRow(q.predicate), termRow(q.obj)))
-
   private def opRow(o: PatchOp): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(o.op),
-      termRow(o.graph), termRow(o.subject), termRow(o.predicate), termRow(o.obj)))
+      Term.row(o.graph), Term.row(o.subject), Term.row(o.predicate), Term.row(o.obj)))
 
   private def standalone(d: Decoded, ct: String): Decoded =
     if (d.kind != "patch") d
@@ -222,7 +201,7 @@ object RdfParse {
           UTF8String.fromString(topic), part, off, key,
           UTF8String.fromString(ct), UTF8String.fromString(d.kind),
           if (d.quads == null) null
-          else new GenericArrayData(d.quads.map(quadRow).toArray[Any]),
+          else new GenericArrayData(d.quads.map(Quad.row).toArray[Any]),
           if (d.ops == null) null
           else new GenericArrayData(d.ops.map(opRow).toArray[Any]),
           UTF8String.fromString(d._corrupt))): InternalRow

@@ -1,5 +1,11 @@
 package graft.rdf
 
+import org.apache.spark.sql.{Column, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
 /** RDF term — the engine's analogue of a Jena `Node`
   * (reference: jena-fuseki-kafka models terms via Jena `NodeFactory`,
   * e.g. AbstractDockerTests.java:64-70).
@@ -81,6 +87,46 @@ object Term {
   def typed(lex: String, dt: String): Term = Term(LIT, lex, dt, null)
   def langLit(lex: String, lang: String): Term = Term(LIT, lex, null, lang)
 
+  // --- the term's Spark form -----------------------------------------------
+
+  /** The term as a Spark struct column: the case class's four fields,
+    * each a nullable string. Every term column, segment file and
+    * decoded event uses this one type.
+    */
+  val Schema: StructType =
+    StructType(Seq("termType", "lex", "datatype", "lang").map(StructField(_, StringType)))
+
+  /** Whether `dt` is the term struct — the input check of the term
+    * expressions in [[graft.functions]].
+    */
+  def isStruct(dt: DataType): Boolean = dt match {
+    case StructType(fields) => fields.map(_.name).toSeq == Schema.fieldNames.toSeq
+    case _ => false
+  }
+
+  /** A term-struct column of kind `termType` (one of [[IRI]], [[BLANK]],
+    * [[LIT]], [[TRIPLE]]). An omitted `datatype` or `lang` is a null
+    * string.
+    */
+  def column(termType: String, lex: Column, datatype: Column = null,
+      lang: Column = null): Column = {
+    def orNull(c: Column) = if (c == null) F.lit(null).cast("string") else c
+    F.struct(F.lit(termType).as("termType"), lex.as("lex"),
+      orNull(datatype).as("datatype"), orNull(lang).as("lang"))
+  }
+
+  /** `t` as a constant term-struct column. */
+  def column(t: Term): Column =
+    column(t.termType, F.lit(t.lex), F.lit(t.datatype).cast("string"),
+      F.lit(t.lang).cast("string"))
+
+  /** `t` as the internal row its struct column holds; null stays null. */
+  def row(t: Term): InternalRow =
+    if (t == null) null
+    else new GenericInternalRow(Array[Any](UTF8String.fromString(t.termType),
+      UTF8String.fromString(t.lex), UTF8String.fromString(t.datatype),
+      UTF8String.fromString(t.lang)))
+
   def escapeLiteral(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
     var i = 0
@@ -105,6 +151,21 @@ final case class Quad(graph: Term, subject: Term, predicate: Term, obj: Term) {
     val g = if (graph == null) "" else s" ${graph.toNT}"
     s"${subject.toNT} ${predicate.toNT} ${obj.toNT}$g ."
   }
+}
+
+object Quad {
+  /** The quad's columns, in the case class's field order. */
+  val Columns: Seq[String] = Seq("graph", "subject", "predicate", "obj")
+
+  /** A quad as Spark columns: one [[Term.Schema]] struct per position. */
+  val Schema: StructType = StructType(Columns.map(StructField(_, Term.Schema)))
+
+  /** `q` as the internal row `struct(graph, subject, predicate, obj)`
+    * holds over [[Schema]] columns.
+    */
+  def row(q: Quad): InternalRow =
+    new GenericInternalRow(Array[Any](Term.row(q.graph), Term.row(q.subject),
+      Term.row(q.predicate), Term.row(q.obj)))
 }
 
 /** One RDF Patch operation (reference: patch1.rdfp fixture; op stream

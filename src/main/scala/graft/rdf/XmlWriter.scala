@@ -45,11 +45,11 @@ object XmlWriter {
     when(c.rlike("^[A-Za-z_][A-Za-z0-9_.\\-]*$"), c)
       .otherwise(concat(lit("gb"), lower(hex(xxhash64(c)))))
 
-  private def escText(c: Column): Column =
+  private[graft] def escText(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(c,
       "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
 
-  private def escAttr(c: Column): Column =
+  private[graft] def escAttr(c: Column): Column =
     regexp_replace(escText(c), "\"", "&quot;")
 
   /** Longest NCName-shaped suffix of a predicate IRI — the XML local

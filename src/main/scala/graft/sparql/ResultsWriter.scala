@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StringType, StructType}
 
-import graft.rdf.{NtWriter, Term}
+import graft.rdf.{NtWriter, Term, XmlWriter}
 
 /** W3C SPARQL 1.1 Query Results serialization — the response formats
   * the reference's host server speaks over HTTP (a Fuseki `fuseki:query`
@@ -31,29 +31,21 @@ import graft.rdf.{NtWriter, Term}
   */
 object ResultsWriter {
 
-  import graft.sparql.Sparql.TERM_STRUCT
-
   /** A result column as a term struct: term-struct columns pass
     * through; raw SQL aggregate columns become the typed literal a
     * SPARQL engine would have returned for them.
     */
   private def termish(df: DataFrame, name: String): Column = {
     val f = df.schema(name)
-    def typed(dt: String): Column = struct(
-      lit(Term.LIT).as("termType"),
-      col(name).cast("string").as("lex"),
-      lit(dt).cast("string").as("datatype"),
-      lit(null).cast("string").as("lang"))
+    def typed(dt: String): Column =
+      Term.column(Term.LIT, col(name).cast("string"), lit(dt).cast("string"))
     f.dataType match {
       case _: StructType => col(name)
       case StringType =>
-        when(col(name).isNull, lit(null).cast(TERM_STRUCT))
-          .otherwise(struct(lit(Term.LIT).as("termType"),
-            col(name).as("lex"),
-            lit(null).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang")))
+        when(col(name).isNull, lit(null).cast(Term.Schema))
+          .otherwise(Term.column(Term.LIT, col(name)))
       case BooleanType =>
-        when(col(name).isNull, lit(null).cast(TERM_STRUCT))
+        when(col(name).isNull, lit(null).cast(Term.Schema))
           .otherwise(typed(Term.XSD_BOOLEAN))
       case t =>
         val xsd = t.typeName match {
@@ -61,7 +53,7 @@ object ResultsWriter {
           case "double" | "float" => Term.XSD_DOUBLE
           case _ => Term.XSD_DECIMAL // decimal(p,s)
         }
-        when(col(name).isNull, lit(null).cast(TERM_STRUCT))
+        when(col(name).isNull, lit(null).cast(Term.Schema))
           .otherwise(typed(xsd))
     }
   }
@@ -129,17 +121,11 @@ object ResultsWriter {
 
   // --- XML (application/sparql-results+xml) ---------------------------------
 
-  private def xmlEsc(c: Column): Column = {
-    val noAmp = regexp_replace(c, "&", "&amp;")
-    val noLt = regexp_replace(noAmp, "<", "&lt;")
-    regexp_replace(noLt, ">", "&gt;")
-  }
-
   /** One term as its `<binding name="v">…</binding>` element; null
     * (unbound) renders nothing.
     */
   private def termXml(name: String, c: Column): Column = {
-    val lex = xmlEsc(c.getField("lex"))
+    val lex = XmlWriter.escText(c.getField("lex"))
     val dt = c.getField("datatype")
     val lang = c.getField("lang")
     val open = lit(s"""<binding name="${xmlAttrEscape(name)}">""")
@@ -157,10 +143,10 @@ object ResultsWriter {
           xmlAttrEscape(Term.RDF_NS + "triple") + "\">"), lex,
           lit("</literal>"), close))
       .when(lang.isNotNull,
-        concat(open, lit("<literal xml:lang=\""), xmlEsc(lang),
+        concat(open, lit("<literal xml:lang=\""), XmlWriter.escAttr(lang),
           lit("\">"), lex, lit("</literal>"), close))
       .when(dt.isNotNull && dt =!= Term.XSD_STRING,
-        concat(open, lit("<literal datatype=\""), xmlEsc(dt),
+        concat(open, lit("<literal datatype=\""), XmlWriter.escAttr(dt),
           lit("\">"), lex, lit("</literal>"), close))
       .otherwise(concat(open, lit("<literal>"), lex, lit("</literal>"), close))
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.plans.Checkpoints
-import graft.rdf.{RdfParseException, Term}
+import graft.rdf.{Quad, RdfParseException, Term}
 
 /** SPARQL-subset → DataFrame compiler (SURVEY.md §3.3, §7 phase 6):
   * enough of the language to answer every query the reference itself
@@ -271,8 +271,9 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   final case class ConstructReq(tpl: Seq[TriplePattern], pattern: Pattern,
       orderBy: Seq[OrderKey] = Seq.empty, limit: Option[Int] = None,
       offset: Option[Int] = None) extends Request
-  /** DESCRIBE: resources by IRI and/or variables bound by WHERE. */
-  /** `all` = `DESCRIBE *`: every variable the WHERE pattern binds. */
+  /** DESCRIBE: resources by IRI and/or variables bound by WHERE;
+    * `all` = `DESCRIBE *`: every variable the WHERE pattern binds.
+    */
   final case class DescribeReq(nodes: Seq[Node], pattern: Option[Pattern],
       all: Boolean = false)
     extends Request
@@ -359,7 +360,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // constructed graph is a set — value-space keys as in SELECT
         val cset = sols0.columns.toSet
         def resolve(n: String): Column =
-          if (cset.contains(n)) col(n) else lit(null).cast(TERM_STRUCT)
+          if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)
         val ordered =
           if (orderBy.isEmpty) sols0
           else sols0.orderBy(orderBy.flatMap { k =>
@@ -370,8 +371,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         val sols = limit.fold(offsetted)(offsetted.limit)
         SparqlTemplates.instantiate(sols, tpl).reduceOption(_.unionByName(_))
           .map(_.dropDuplicates()) // a constructed graph is a SET of quads
-          .getOrElse(quads.limit(0).select(
-            Seq("graph", "subject", "predicate", "obj").map(col): _*))
+          .getOrElse(quads.limit(0).select(Quad.Columns.map(col): _*))
       case DescribeReq(nodes, pattern, all) =>
         // minimal (non-CBD) description: every quad whose subject is a
         // described resource. Constant IRIs become pushable subject
@@ -402,15 +402,6 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   private def executeSelect(quads: DataFrame, q: Query): DataFrame =
     executeSelectSol(quads, q, asTerms = false).df
 
-  /** Evaluate a SELECT query. On the sub-SELECT path (`asTerms`, spec
-    * §12) aggregate results must be RDF terms so they can join with
-    * outer bindings: MIN/MAX return the ORIGINAL term of the extreme
-    * value (`min_by`/`max_by` over the numeric value — semantically
-    * exact, an aggregate returns one of its inputs), while COUNT/SUM/
-    * AVG build canonical-lexical numeric literals (integer when the
-    * value is whole). The top level keeps raw SQL values — the
-    * driver-facing contract of the existing verify entries.
-    */
   /** FROM / FROM NAMED (spec §13.2): with any dataset clause present,
     * the queried dataset is EXACTLY what the clauses name — the
     * default graph becomes the set-union merge of the FROM graphs
@@ -434,25 +425,30 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       dflt.unionByName(named)
     }
 
+  /** Evaluate a SELECT query. On the sub-SELECT path (`asTerms`, spec
+    * §12) aggregate results must be RDF terms so they can join with
+    * outer bindings: MIN/MAX return the ORIGINAL term of the extreme
+    * value (`min_by`/`max_by` over the numeric value — semantically
+    * exact, an aggregate returns one of its inputs), while COUNT/SUM/
+    * AVG build canonical-lexical numeric literals (integer when the
+    * value is whole). The top level keeps raw SQL values — the
+    * contract the existing verify entries check.
+    */
   private def executeSelectSol(quads0: DataFrame, q: Query, asTerms: Boolean): Sol = {
     val quads = applyDatasetClause(quads0, q.from, q.fromNamed)
     val boundSol = compileSol(quads, q.pattern)
     val bound = q.groupExprs.foldLeft(boundSol.df) { case (d, (e, as)) =>
-      d.withColumn(as, compileVExpr(d, TERM_STRUCT, e))
+      d.withColumn(as, compileVExpr(d, Term.Schema, e))
     }
     def numVal(v: String) = col(v).getField("lex").try_cast("decimal(28,10)")
-    def intTerm(c: Column) = struct(lit(Term.LIT).as("termType"),
-      c.cast("string").as("lex"),
-      lit(Term.XSD_INTEGER).cast("string").as("datatype"),
-      lit(null).cast("string").as("lang"))
+    def intTerm(c: Column) =
+      Term.column(Term.LIT, c.cast("string"), lit(Term.XSD_INTEGER).cast("string"))
     // canonical lex: whole values render as xsd:integer ("24", not
     // "24.0000000000"), so a SUM over integers joins/compares cleanly
-    def numTerm(c: Column) = when(c.isNull, lit(null).cast(TERM_STRUCT))
+    def numTerm(c: Column) = when(c.isNull, lit(null).cast(Term.Schema))
       .when(c % 1 === 0, intTerm(c.cast("long")))
-      .otherwise(struct(lit(Term.LIT).as("termType"),
-        regexp_replace(c.cast("string"), "0+$", "").as("lex"),
-        lit(Term.XSD_DECIMAL).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang")))
+      .otherwise(Term.column(Term.LIT, regexp_replace(c.cast("string"), "0+$", ""),
+        lit(Term.XSD_DECIMAL).cast("string")))
     var maybe: Set[String] = Set.empty
     // ORDER BY keys as evaluated against the projected solution; the
     // aggregate branch rewrites embedded aggregate calls to hidden
@@ -490,14 +486,14 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
               throw new RdfParseException(s"SELECT expression would rebind ?$as")
             val cset = work.columns.toSet
             work = work.withColumn(as, compileExpr(e,
-              n => if (cset.contains(n)) col(n) else lit(null).cast(TERM_STRUCT)))
+              n => if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)))
           case _ => ()
         }
         val cols = items.map {
           case ItemVar(n) =>
             // projecting a variable no pattern binds is legal: unbound
             (if (work.columns.contains(n)) col(n)
-             else lit(null).cast(TERM_STRUCT)).as(n)
+             else lit(null).cast(Term.Schema)).as(n)
           case ItemExpr(_, as) => col(as)
           case i => throw new RdfParseException(s"unexpected item $i")
         }
@@ -518,7 +514,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
             case e if varsOfV(e).subsetOf(wCols) =>
               preOrd += compileExpr(e,
                 n => if (wCols.contains(n)) col(n)
-                     else lit(null).cast(TERM_STRUCT)).as(s"#ord$i")
+                     else lit(null).cast(Term.Schema)).as(s"#ord$i")
               k.copy(expr = VVar(s"#ord$i"))
             case _ => k // unknown variables: post-projection (null keys)
           }
@@ -547,7 +543,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // compiled against the bound solution's columns.
         val boundCols = bound.columns.toSet
         def argCol(e: VExpr): Column = compileExpr(e,
-          n => if (boundCols.contains(n)) col(n) else lit(null).cast(TERM_STRUCT))
+          n => if (boundCols.contains(n)) col(n) else lit(null).cast(Term.Schema))
         def argVal(e: VExpr): Column =
           argCol(e).getField("lex").try_cast("decimal(28,10)")
         def rawAgg(func: String, arg: Option[VExpr], isDistinct: Boolean,
@@ -594,9 +590,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           case "SAMPLE" => min(argCol(arg.get).getField("lex"))
           case other => throw new RdfParseException(s"unsupported aggregate $other")
         }
-        def strTerm(c: Column) = struct(lit(Term.LIT).as("termType"),
-          c.as("lex"), lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang"))
+        def strTerm(c: Column) = Term.column(Term.LIT, c)
         // term-typed aggregate — the sub-SELECT form, and the form
         // expressions read: MIN/MAX return the ORIGINAL extreme term,
         // COUNT/SUM/AVG canonical numeric literals
@@ -621,7 +615,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // pick any non-error element.
         def errStrict(arg: Option[VExpr], agg: Column): Column =
           when(count(when(argCol(arg.get).isNull, 1)) > 0,
-            lit(null).cast(TERM_STRUCT)).otherwise(agg)
+            lit(null).cast(Term.Schema)).otherwise(agg)
         def termAgg(func: String, arg: Option[VExpr], isDistinct: Boolean,
             sep: String): Column = func match {
           case "COUNT" => intTerm(rawAgg(func, arg, isDistinct, sep))
@@ -677,7 +671,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // solution has it unbound, giving one all-null group key
         val groupCols = q.groupBy.map(n =>
           if (bound.columns.contains(n)) col(n)
-          else lit(null).cast(TERM_STRUCT).as(n))
+          else lit(null).cast(Term.Schema).as(n))
         val grouped =
           if (allAggs.isEmpty) // pure-key projection over a grouped query
             bound.select(groupCols: _*).dropDuplicates()
@@ -688,7 +682,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         val kept0 = q.having.foldLeft(grouped) { (d, f) =>
           val cset = d.columns.toSet
           d.filter(compileFilter(substAggsF(f, a => VVar(hiddenName(a))),
-            n => if (cset.contains(n)) col(n) else lit(null).cast(TERM_STRUCT)))
+            n => if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)))
         }
         // §18.2.4.3: the trailing VALUES data joins the grouped,
         // HAVING-filtered solution — before select expressions — via
@@ -698,8 +692,8 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           case Some(ValuesElem(vvars, vrows)) =>
             val data = vrows.map { r =>
               unitDf(quads).select(vvars.zip(r).map {
-                case (v, Some(t)) => termLit(t).as(v)
-                case (v, None) => lit(null).cast(TERM_STRUCT).as(v)
+                case (v, Some(t)) => Term.column(t).as(v)
+                case (v, None) => lit(null).cast(Term.Schema).as(v)
               }: _*)
             }.reduce(_.unionByName(_))
             joinShared(Sol(kept0, groupMaybe),
@@ -708,7 +702,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         }
         val keptCols = kept.columns.toSet
         def keptResolve(n: String): Column =
-          if (keptCols.contains(n)) col(n) else lit(null).cast(TERM_STRUCT)
+          if (keptCols.contains(n)) col(n) else lit(null).cast(Term.Schema)
         // ORDER BY aggregate calls read the hidden columns, which must
         // survive the projection — they are dropped after the sort
         orderKeys = q.orderBy.map(k =>
@@ -743,7 +737,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           val name = s"#ord$i"
           val cset = sortInput.columns.toSet
           sortInput = sortInput.withColumn(name, compileExpr(e,
-            n => if (cset.contains(n)) col(n) else lit(null).cast(TERM_STRUCT)))
+            n => if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)))
           sortKeys(col(name))
       }
       keyCols.map(c => if (k.descending) c.desc else c.asc)
@@ -821,30 +815,6 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   private def compile(quads: DataFrame, pattern: Pattern): DataFrame =
     compileSol(quads, pattern).df
 
-  /** A blank node label in a query pattern is a NON-DISTINGUISHED
-    * variable, not a term constant (§4.1.4: "Blank node labels are
-    * scoped to a ... query, and act as variables that cannot be
-    * selected"): same label = same variable, '#'-prefixed so it stays
-    * invisible to SELECT * / DISTINCT like the [] sugar variables.
-    * Applied at the BGP/path leaves so CONSTRUCT / update templates —
-    * where a blank label DOES denote a (per-solution-fresh) blank node
-    * — keep their Const form for [[instantiate]].
-    */
-  /** Join-order heuristic for BGPs. Inner joins of triple patterns are
-    * commutative, but the compiler folds them in author order and
-    * Catalyst never reorders them (no table stats, CBO off), so at
-    * scale a constant-bound pattern written LAST makes every earlier
-    * join materialize its full intermediate first. Each maximal
-    * consecutive run of plain triple patterns is reordered greedily:
-    * start from the most constant-bound pattern, then repeatedly take
-    * the most constant-bound pattern CONNECTED to the variables bound
-    * so far (keeping disconnected components — cross joins — last),
-    * author order breaking ties so plans stay deterministic. Runs
-    * never cross OPTIONAL/MINUS/BIND/VALUES/sub-select boundaries:
-    * left joins don't commute, and a pattern may legally share a
-    * variable with a later BIND target (§10.1) only on its own side
-    * of the BIND.
-    */
   /** Per-thread predicate-cardinality census consulted by the BGP
     * reorder — the store side maintains it incrementally
     * ([[graft.store.AggView]] grouped by predicate), so the ordering
@@ -876,6 +846,21 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       predicateCounts: Map[String, Long]): DataFrame =
     withBgpStats(predicateCounts)(execute(quads, text))
 
+  /** Join-order heuristic for BGPs. Inner joins of triple patterns are
+    * commutative, but the compiler folds them in author order and
+    * Catalyst never reorders them (no table stats, CBO off), so at
+    * scale a constant-bound pattern written LAST makes every earlier
+    * join materialize its full intermediate first. Each maximal
+    * consecutive run of plain triple patterns is reordered greedily:
+    * start from the most constant-bound pattern, then repeatedly take
+    * the most constant-bound pattern CONNECTED to the variables bound
+    * so far (keeping disconnected components — cross joins — last),
+    * author order breaking ties so plans stay deterministic. Runs
+    * never cross OPTIONAL/MINUS/BIND/VALUES/sub-select boundaries:
+    * left joins don't commute, and a pattern may legally share a
+    * variable with a later BIND target (§10.1) only on its own side
+    * of the BIND.
+    */
   private[sparql] def reorderBgpRuns(elems: Seq[GroupElem]): Seq[GroupElem] = {
     val out = Seq.newBuilder[GroupElem]
     val run = scala.collection.mutable.ArrayBuffer.empty[GroupElem]
@@ -990,6 +975,15 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       picked.result()
     }
 
+  /** A blank node label in a query pattern is a NON-DISTINGUISHED
+    * variable, not a term constant (§4.1.4: "Blank node labels are
+    * scoped to a ... query, and act as variables that cannot be
+    * selected"): same label = same variable, '#'-prefixed so it stays
+    * invisible to SELECT * / DISTINCT like the [] sugar variables.
+    * Applied at the BGP/path leaves so CONSTRUCT / update templates —
+    * where a blank label DOES denote a (per-solution-fresh) blank node
+    * — keep their Const form for [[instantiate]].
+    */
   private def deblank(n: Node): Node = n match {
     case Const(t) if t != null && t.isBlank => Var("#bn:" + t.lex)
     case QTriple(s, p, o) => QTriple(deblank(s), deblank(p), deblank(o))
@@ -1148,7 +1142,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         case ValuesElem(vars, rows) =>
           val df = rows.map { r =>
             unitDf(quads).select(vars.zip(r).map {
-              case (v, Some(t)) => termLit(t).as(v)
+              case (v, Some(t)) => Term.column(t).as(v)
               case (v, None) => lit(null).cast(termType).as(v)
             }: _*)
           }.reduce(_.unionByName(_))
@@ -1169,11 +1163,11 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
             case _ => ()
           }
           s match {
-            case Const(t) => pairs = pairs.filter(col("ps") <=> termLit(t))
+            case Const(t) => pairs = pairs.filter(col("ps") <=> Term.column(t))
             case _ => ()
           }
           o match {
-            case Const(t) => pairs = pairs.filter(col("po") <=> termLit(t))
+            case Const(t) => pairs = pairs.filter(col("po") <=> Term.column(t))
             case _ => ()
           }
           // zero-length-capable path with a CONSTANT endpoint: the
@@ -1189,7 +1183,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
               case _ => None
             }
             cterm.foreach { t =>
-              val tl = termLit(t)
+              val tl = Term.column(t)
               val extra =
                 if (pathGrouped(graph))
                   // under GRAPH ?var the zero-length match holds in
@@ -1431,7 +1425,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         coalesce(col(s"l.$n"), col(s"r.$n"))
       else if (l.df.columns.contains(n)) col(s"l.$n")
       else if (r.df.columns.contains(n)) col(s"r.$n")
-      else lit(null).cast(TERM_STRUCT)
+      else lit(null).cast(Term.Schema)
     val cond = (conds ++ extraFilters.map(compileFilter(_, mergedResolve)))
       .reduceOption(_ && _).getOrElse(lit(true))
     val keep = l.df.columns.map { c =>
@@ -1486,15 +1480,6 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   private[sparql] def solve(quads: DataFrame, pattern: Pattern): DataFrame =
     compile(quads, pattern)
 
-  private[sparql] def termLit(t: Term): Column =
-    struct(lit(t.termType).as("termType"), lit(t.lex).as("lex"),
-      lit(t.datatype).cast("string").as("datatype"), lit(t.lang).cast("string").as("lang"))
-
-  /** One triple pattern → filtered projection with one column per
-    * variable. Constant terms become null-safe comparisons on the term
-    * struct fields (pushable); the default graph is `graph IS NULL`,
-    * `GRAPH ?g` binds only named graphs (SPARQL dataset semantics).
-    */
   /** Constant-term match as LEAF-FIELD comparisons rather than one
     * struct <=>: parquet cannot evaluate a struct equality against
     * row-group statistics, but `subject.lex = '…'` maps to a column
@@ -1505,19 +1490,17 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       col(s"$c.datatype") <=> lit(t.datatype).cast("string") &&
       col(s"$c.lang") <=> lit(t.lang).cast("string")
 
-  /** Returns the bindings DataFrame plus the vars bound at a TOP-LEVEL
+  /** One triple pattern → filtered projection with one column per
+    * variable. Constant terms become null-safe comparisons on the term
+    * struct fields (pushable); the graph scope is [[scopedQuads]]'s.
+    * Returns the bindings DataFrame plus the vars bound at a TOP-LEVEL
     * quad slot — provably non-null (see [[Sol.nonNull]]); vars
     * destructured out of quoted-triple components are excluded (a
     * malformed triple lex extracts to null).
     */
   private def compilePattern(quads: DataFrame,
       tp: TriplePattern): (DataFrame, Set[String]) = {
-    var df = tp.graph match {
-      case None => quads.filter(col("graph").isNull)
-      case Some(Const(t)) => quads.filter(termEqFields("graph", t))
-      case Some(Var(_)) => quads.filter(col("graph").isNotNull)
-      case Some(QTriple(_, _, _)) => quads.limit(0) // graph label is never a triple
-    }
+    var df = scopedQuads(quads, tp.graph)
     val slots: Seq[(String, Node)] = Seq(
       "subject" -> tp.s, "predicate" -> tp.p, "obj" -> tp.o) ++
       tp.graph.collect { case v: Var => "graph" -> (v: Node) }
@@ -1532,7 +1515,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // ONE struct comparison, not four field reads: `c` may be a
         // component-extraction expression, and field-wise compare
         // would re-parse the quoted lex once per field
-        df = df.filter(c <=> termLit(t))
+        df = df.filter(c <=> Term.column(t))
       case Var(n0) => binds += n0 -> c
       case QTriple(s, p, o) =>
         df = df.filter(c.getField("termType") === Term.TRIPLE)

@@ -18,7 +18,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       termType: org.apache.spark.sql.types.DataType, e: VExpr): Column = {
     val cols = base.columns.toSet
     compileExpr(e,
-      n => if (cols.contains(n)) col(n) else lit(null).cast(TERM_STRUCT))
+      n => if (cols.contains(n)) col(n) else lit(null).cast(Term.Schema))
   }
 
   /** XSD integer-family datatypes (arithmetic result stays integer). */
@@ -27,7 +27,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
     Term.XSD + "short", Term.XSD + "byte",
     Term.XSD + "nonNegativeInteger", Term.XSD + "positiveInteger")
 
-  private[sparql] def nullTerm: Column = lit(null).cast(TERM_STRUCT)
+  private[sparql] def nullTerm: Column = lit(null).cast(Term.Schema)
 
   /** Canonical lexical form of a decimal value: strip a trailing
     * fraction of zeros ("10.5000" → "10.5", "10.000" → "10") so the
@@ -42,16 +42,13 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
 
   private[sparql] def plainStrTerm(lex: Column): Column =
     when(lex.isNull, nullTerm).otherwise(
-      struct(lit(Term.LIT).as("termType"), lex.as("lex"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang")))
+      Term.column(Term.LIT, lex))
 
   private[sparql] def numericTerm(v: Column, dt: Column): Column =
     when(v.isNull, nullTerm).otherwise(
-      struct(lit(Term.LIT).as("termType"),
+      Term.column(Term.LIT,
         when(dt === Term.XSD_INTEGER, v.cast("decimal(38,0)").cast("string"))
-          .otherwise(decLex(v)).as("lex"),
-        dt.as("datatype"), lit(null).cast("string").as("lang")))
+          .otherwise(decLex(v)), dt))
 
   /** Numeric VALUE of a term column (null for non-numeric terms —
     * SPARQL expression error). try_cast, not cast: under ANSI mode
@@ -71,7 +68,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
     // projection before compilation ever sees them
     case _: VAgg => throw new RdfParseException(
       "aggregate call is only allowed in the projection/ORDER BY of a grouped query")
-    case VConst(t) => termLit(t)
+    case VConst(t) => Term.column(t)
     case VCoalesce(args) => coalesce(args.map(compileExpr(_, resolve)): _*)
     case VFn(func, arg) =>
       val a = compileExpr(arg, resolve)
@@ -97,9 +94,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
                 .otherwise(Term.RDF_LANGSTRING))
             .otherwise(coalesce(a.getField("datatype"), lit(Term.XSD_STRING)))
           when(a.getField("termType") === Term.LIT,
-            struct(lit(Term.IRI).as("termType"), dt.as("lex"),
-              lit(null).cast("string").as("datatype"),
-              lit(null).cast("string").as("lang")))
+            Term.column(Term.IRI, dt))
             .otherwise(nullTerm)
         case other => throw new RdfParseException(s"unsupported function $other")
       }
@@ -124,10 +119,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       // xsd:boolean literals
       val c = compileFilter(cond, resolve)
       when(c.isNotNull,
-        struct(lit(Term.LIT).as("termType"),
-          when(c, lit("true")).otherwise(lit("false")).as("lex"),
-          lit(Term.XSD_BOOLEAN).as("datatype"),
-          lit(null).cast("string").as("lang")))
+        Term.column(Term.LIT, when(c, lit("true")).otherwise(lit("false")),
+          lit(Term.XSD_BOOLEAN)))
         .otherwise(nullTerm)
     case VCast(dt, arg) =>
       // §17.5 XPath casting: validate the source, emit the canonical
@@ -143,10 +136,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       // a null lexical form (decimal(38,0)/(38,10) overflow of an
       // in-range source, >38-digit strings) is a cast ERROR, not a
       // malformed literal-with-null-lex
-      def typed(lex: Column, dtIri: String) = when(lex.isNotNull, struct(
-        lit(Term.LIT).as("termType"), lex.as("lex"),
-        lit(dtIri).cast("string").as("datatype"),
-        lit(null).cast("string").as("lang"))).otherwise(nullTerm)
+      def typed(lex: Column, dtIri: String) = when(lex.isNotNull,
+        Term.column(Term.LIT, lex, lit(dtIri).cast("string"))).otherwise(nullTerm)
       dt match {
         case Term.XSD_STRING =>
           // the lexical form of any literal, as xsd:string (= plain
@@ -197,13 +188,9 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
         when(a(i).getField("termType") === Term.LIT, c).otherwise(nullTerm)
       // result carries the argument's lang/datatype (UCASE/LCASE/...)
       def likeArg(i: Int)(l: Column) = onLit(i)(
-        struct(lit(Term.LIT).as("termType"), l.as("lex"),
-          a(i).getField("datatype").as("datatype"),
-          a(i).getField("lang").as("lang")))
+        Term.column(Term.LIT, l, a(i).getField("datatype"), a(i).getField("lang")))
       def intTerm(v: Column) = when(v.isNull, nullTerm).otherwise(
-        struct(lit(Term.LIT).as("termType"), v.cast("string").as("lex"),
-          lit(Term.XSD_INTEGER).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang")))
+        Term.column(Term.LIT, v.cast("string"), lit(Term.XSD_INTEGER).cast("string")))
       // STRBEFORE/STRAFTER take their separator as a parse-time string
       def sepArg: String = args(1) match {
         case VConst(t) if t.isLit => t.lex
@@ -235,10 +222,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
             val langs = args.indices.map(i => a(i).getField("lang"))
             val shared = langs.tail.foldLeft(langs.head.isNotNull)(
               (acc, c) => acc && (c <=> langs.head))
-            when(ok, struct(lit(Term.LIT).as("termType"),
-              concat(args.indices.map(lex): _*).as("lex"),
-              lit(null).cast("string").as("datatype"),
-              when(shared, langs.head).otherwise(lit(null).cast("string")).as("lang")))
+            when(ok, Term.column(Term.LIT, concat(args.indices.map(lex): _*),
+              lang = when(shared, langs.head).otherwise(lit(null).cast("string"))))
               .otherwise(nullTerm)
           }
         case "SUBSTR" =>
@@ -266,9 +251,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
           // a MATCH (incl. the empty separator) yields a literal of
           // arg1's kind — lang tag / datatype survive (§17.4.3.7); no
           // match yields an empty SIMPLE literal
-          def like0(l: Column) = struct(lit(Term.LIT).as("termType"),
-            l.as("lex"), a(0).getField("datatype").as("datatype"),
-            a(0).getField("lang").as("lang"))
+          def like0(l: Column) =
+            Term.column(Term.LIT, l, a(0).getField("datatype"), a(0).getField("lang"))
           val sep = sepArg
           onLit(0)(
             if (sep.isEmpty) like0(lit(""))
@@ -276,9 +260,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               like0(substring_index(lex(0), sep, 1)))
               .otherwise(plainStrTerm(lit(""))))
         case "STRAFTER" =>
-          def like0(l: Column) = struct(lit(Term.LIT).as("termType"),
-            l.as("lex"), a(0).getField("datatype").as("datatype"),
-            a(0).getField("lang").as("lang"))
+          def like0(l: Column) =
+            Term.column(Term.LIT, l, a(0).getField("datatype"), a(0).getField("lang"))
           val sep = sepArg
           onLit(0)(
             if (sep.isEmpty) like0(lex(0))
@@ -310,9 +293,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               a(0).getField("lang").isNull &&
               (a(0).getField("datatype").isNull ||
                 a(0).getField("datatype") === Term.XSD_STRING))
-          when(a(0).isNotNull && iriOk, struct(lit(Term.IRI).as("termType"),
-            lex(0).as("lex"), lit(null).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang"))).otherwise(nullTerm)
+          when(a(0).isNotNull && iriOk, Term.column(Term.IRI, lex(0))).otherwise(nullTerm)
         // §17.4.4 hash functions: hex digest of the UTF-8 bytes of a
         // simple / xsd:string literal's lexical form, as a simple
         // literal (Spark's md5/sha1/sha2 emit lowercase hex already)
@@ -347,9 +328,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
           val dir = a(2).getField("lex")
           when(okLex && isPlainString(a(1)) && isPlainString(a(2)) &&
               lang =!= "" && dir.isin("ltr", "rtl"),
-            struct(lit(Term.LIT).as("termType"), lex(0).as("lex"),
-              lit(null).cast("string").as("datatype"),
-              concat(lang, lit("--"), dir).as("lang")))
+            Term.column(Term.LIT, lex(0), lang = concat(lang, lit("--"), dir)))
             .otherwise(nullTerm)
         case "SUBJECT" => graft.functions.TermStar.componentOf(a(0), 0)
         case "PREDICATE" => graft.functions.TermStar.componentOf(a(0), 1)
@@ -390,9 +369,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
                     when(hh > 0, concat(hh.cast("string"), lit("H"))).otherwise(lit("")),
                     when(mm > 0, concat(mm.cast("string"), lit("M"))).otherwise(lit(""))))
               when(ok && zone =!= "",
-                struct(lit(Term.LIT).as("termType"), durLex.as("lex"),
-                  lit(Term.XSD + "dayTimeDuration").as("datatype"),
-                  lit(null).cast("string").as("lang")))
+                Term.column(Term.LIT, durLex, lit(Term.XSD + "dayTimeDuration")))
                 .otherwise(nullTerm)
             case "SECONDS" =>
               val sec = part("T\\d{2}:\\d{2}:(\\d{2}(?:\\.\\d+)?)")
@@ -420,8 +397,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               (a(0).getField("datatype").isNull ||
                 a(0).getField("datatype") === Term.XSD_STRING) &&
               a(1).getField("termType") === Term.IRI,
-            struct(lit(Term.LIT).as("termType"), lex(0).as("lex"),
-              lex(1).as("datatype"), lit(null).cast("string").as("lang")))
+            Term.column(Term.LIT, lex(0), lex(1)))
             .otherwise(nullTerm)
         case "STRLANG" =>
           when(a(0).getField("termType") === Term.LIT &&
@@ -429,8 +405,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               (a(0).getField("datatype").isNull ||
                 a(0).getField("datatype") === Term.XSD_STRING) &&
               a(1).getField("termType") === Term.LIT && length(lex(1)) > 0,
-            struct(lit(Term.LIT).as("termType"), lex(0).as("lex"),
-              lit(null).cast("string").as("datatype"), lex(1).as("lang")))
+            Term.column(Term.LIT, lex(0), lang = lex(1)))
             .otherwise(nullTerm)
 
         // --- nondeterministic builtins (§17.4.2 / §17.4.5): values
@@ -441,27 +416,17 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
           // a literal from the context clock
           val lexNow = java.time.format.DateTimeFormatter.ISO_INSTANT
             .format(currentCtx.now)
-          struct(lit(Term.LIT).as("termType"), lit(lexNow).as("lex"),
-            lit(Term.XSD_DATETIME).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang"))
+          Term.column(Term.LIT, lit(lexNow), lit(Term.XSD_DATETIME).cast("string"))
         case "RAND" =>
           // xsd:double in [0,1), a distinct seeded stream per call site
-          struct(lit(Term.LIT).as("termType"),
-            rand(currentCtx.nextSiteSeed()).cast("string").as("lex"),
-            lit(Term.XSD_DOUBLE).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang"))
+          Term.column(Term.LIT, rand(currentCtx.nextSiteSeed()).cast("string"),
+            lit(Term.XSD_DOUBLE).cast("string"))
         case "UUID" =>
-          struct(lit(Term.IRI).as("termType"),
-            concat(lit("urn:uuid:"), uuidLex(currentCtx)).as("lex"),
-            lit(null).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang"))
+          Term.column(Term.IRI, concat(lit("urn:uuid:"), uuidLex(currentCtx)))
         case "STRUUID" => plainStrTerm(uuidLex(currentCtx))
         case "BNODE" if args.isEmpty =>
-          struct(lit(Term.BLANK).as("termType"),
-            concat(lit("gen"),
-              lower(hex(xxhash64(rand(currentCtx.nextSiteSeed()))))).as("lex"),
-            lit(null).cast("string").as("datatype"),
-            lit(null).cast("string").as("lang"))
+          Term.column(Term.BLANK,
+            concat(lit("gen"), lower(hex(xxhash64(rand(currentCtx.nextSiteSeed()))))))
         case "BNODE" =>
           // BNODE(str): one label per distinct literal (stable across
           // solutions — a CONSTRUCT-templating-friendly reading of
@@ -471,11 +436,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               a(0).getField("lang").isNull &&
               (a(0).getField("datatype").isNull ||
                 a(0).getField("datatype") === Term.XSD_STRING),
-            struct(lit(Term.BLANK).as("termType"),
-              concat(lit("b"), lower(hex(xxhash64(lex(0),
-                lit(currentCtx.seed))))).as("lex"),
-              lit(null).cast("string").as("datatype"),
-              lit(null).cast("string").as("lang")))
+            Term.column(Term.BLANK,
+              concat(lit("b"), lower(hex(xxhash64(lex(0), lit(currentCtx.seed)))))))
             .otherwise(nullTerm)
         case other => throw new RdfParseException(s"unsupported function $other")
       }
@@ -494,11 +456,6 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       substring(h1, 13, 3), lit("-a"), substring(h2, 1, 3), lit("-"),
       substring(h2, 4, 12)))
   }
-  /** Term struct type (for typed nulls off the quads schema). */
-  private[sparql] val TERM_STRUCT = org.apache.spark.sql.types.StructType(
-    Seq("termType", "lex", "datatype", "lang").map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.StringType)))
 
   /** A filter operand via the contextual variable resolver — an
     * UNBOUND variable resolves to a typed null, and SPARQL
@@ -507,7 +464,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
     */
   private[sparql] def operandCol(n: Node, resolve: String => Column): Column = n match {
     case Var(v) => resolve(v)
-    case Const(t) => termLit(t)
+    case Const(t) => Term.column(t)
     case QTriple(_, _, _) =>
       throw new RdfParseException("quoted-triple patterns are not filter operands; use TRIPLE()")
   }
@@ -620,12 +577,6 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       .otherwise(graft.functions.TermOps.termValueEquals(lc, rc))
   }
 
-  /** SPARQL ordering comparability (spec §17.3, operator mapping):
-    * numeric-vs-numeric and string-vs-string compare; anything else is
-    * a type error, i.e. FILTER false. With a constant side this
-    * resolves statically to a plain datatype/lang predicate on the
-    * other operand (pushable); var-vs-var takes the column form.
-    */
   /** Datatypes with a defined `<` beyond numerics and simple strings
     * (op:dateTime/date/time/boolean-less-than, §17.3) — orderable only
     * against the SAME datatype.
@@ -639,6 +590,12 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       coalesce(a.getField("datatype").isin(ORDERABLE_DATATYPES: _*), lit(false)) &&
       a.getField("datatype") === b.getField("datatype")
 
+  /** SPARQL ordering comparability (spec §17.3, operator mapping):
+    * numeric-vs-numeric and string-vs-string compare; anything else is
+    * a type error, i.e. FILTER false. With a constant side this
+    * resolves statically to a plain datatype/lang predicate on the
+    * other operand (pushable); var-vs-var takes the column form.
+    */
   private[sparql] def comparable(l: VExpr, r: VExpr, resolve: String => Column): Column = (l, r) match {
     case (VConst(t), e) => comparableWith(compileExpr(e, resolve), t)
     case (e, VConst(t)) => comparableWith(compileExpr(e, resolve), t)

@@ -18,7 +18,7 @@ private[sparql] trait SparqlFilterAlgebra { this: Sparql.type =>
     val (marked, nf, flags) = rewriteExists(quads, sol, f, seed)
     val cols = marked.df.columns.toSet
     val filtered = marked.df.filter(compileFilter(nf,
-      n => if (cols.contains(n)) col(n) else lit(null).cast(TERM_STRUCT)))
+      n => if (cols.contains(n)) col(n) else lit(null).cast(Term.Schema)))
     Sol(flags.foldLeft(filtered)(_.drop(_)), sol.maybe, sol.nonNull)
   }
 

@@ -216,17 +216,12 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     // every part is materialized; nothing reads the step relation again
     Checkpoints.unpersist(step)
     handles.foreach(Checkpoints.register)
-    val tl = termLit(seed)
+    val tl = Term.column(seed)
     val all = parts.reduce(_.unionByName(_))
     if (forward) all.select(pg() ++ Seq(tl.as("ps"), col("po")): _*)
     else all.select(pg() ++ Seq(col("po").as("ps"), tl.as("po")): _*)
   }
 
-  /** Zero-length path: every node of the (scoped) graph to itself
-    * (spec: all terms; restricted here to terms occurring as subject
-    * or object, the practically queryable set). Under `GRAPH ?var`
-    * the node set is per graph.
-    */
   /** Whether a path can match with LENGTH ZERO — `*`/`?` and
     * compositions that preserve the empty path. A zero-length path
     * matches a constant endpoint with ITSELF even when the term never
@@ -255,6 +250,11 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
         .unionByName(scoped.select(col("obj").as("n")))
   }
 
+  /** Zero-length path: every node of the (scoped) graph to itself
+    * (spec: all terms; restricted here to terms occurring as subject
+    * or object, the practically queryable set). Under `GRAPH ?var`
+    * the node set is per graph.
+    */
   private[sparql] def identityPairs(quads: DataFrame, graph: Option[Node]): DataFrame = {
     val nodes = identityNodes(quads, graph).distinct()
     if (pathGrouped(graph))

@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import Sparql.{Sol, ServiceElem, Const, Var, QTriple, unitDf, currentCtx, TERM_STRUCT}
+import Sparql.{Sol, ServiceElem, Const, Var, QTriple, unitDf, currentCtx}
 
 import scala.jdk.CollectionConverters._
 
@@ -207,8 +207,8 @@ object SparqlService {
         val vars = (headVars ++ rows.flatMap(_.keys)).distinct
           .filterNot(v => tag.exists(_._1 == v))
         val schema = StructType(
-          vars.map(StructField(_, TERM_STRUCT, nullable = true)) ++
-            tag.map { case (v, _) => StructField(v, TERM_STRUCT, nullable = true) })
+          vars.map(StructField(_, Term.Schema, nullable = true)) ++
+            tag.map { case (v, _) => StructField(v, Term.Schema, nullable = true) })
         val data = new java.util.ArrayList[Row](rows.size)
         rows.foreach { m =>
           data.add(Row.fromSeq(

@@ -44,10 +44,6 @@ private[sparql] object SparqlTemplates {
     if (tpl.exists(tp => (tp.graph.toSeq :+ tp.s :+ tp.p :+ tp.o)
         .exists(nodeBlank)))
       return Seq(instantiateWithBlanks(sols, tpl, blankScope))
-    val termType = org.apache.spark.sql.types.StructType(
-      Seq("termType", "lex", "datatype", "lang")
-        .map(org.apache.spark.sql.types.StructField(_,
-          org.apache.spark.sql.types.StringType)))
     tpl.flatMap { tp =>
       val slots = Seq(
         tp.graph.getOrElse(Const(null)) -> "graph",
@@ -64,8 +60,8 @@ private[sparql] object SparqlTemplates {
       else {
         def nodeCol(n: Node): Column = n match {
           case Var(v) => col(v)
-          case Const(null) => lit(null).cast(termType)
-          case Const(t) => termLit(t)
+          case Const(null) => lit(null).cast(Term.Schema)
+          case Const(t) => Term.column(t)
           // CONSTRUCT-star: re-quote per row from the bound components
           case QTriple(s, p, o) =>
             graft.functions.TermStar.quotedOf(nodeCol(s), nodeCol(p), nodeCol(o))
@@ -109,16 +105,13 @@ private[sparql] object SparqlTemplates {
     }
     def nodeCol(n: Node): Column = n match {
       case Var(v) => col(v)
-      case Const(null) => lit(null).cast(TERM_STRUCT)
+      case Const(null) => lit(null).cast(Term.Schema)
       case Const(t) if t.isBlank =>
         // fresh per solution: label derives from (template label, row
         // id); '!' cannot appear in a parsed blank label, so minted
         // labels collide with neither data labels nor each other
-        struct(lit("blank").as("termType"),
-          concat(lit(pre + t.lex + "!"), col("#bsol").cast("string")).as("lex"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang"))
-      case Const(t) => termLit(t)
+        Term.column(Term.BLANK, concat(lit(pre + t.lex + "!"), col("#bsol").cast("string")))
+      case Const(t) => Term.column(t)
       case QTriple(s, p, o) =>
         graft.functions.TermStar.quotedOf(nodeCol(s), nodeCol(p), nodeCol(o))
     }
@@ -138,10 +131,10 @@ private[sparql] object SparqlTemplates {
       }
     }
     val empty = sols.sparkSession.emptyDataFrame
-      .withColumn("graph", lit(null).cast(TERM_STRUCT))
-      .withColumn("subject", lit(null).cast(TERM_STRUCT))
-      .withColumn("predicate", lit(null).cast(TERM_STRUCT))
-      .withColumn("obj", lit(null).cast(TERM_STRUCT))
+      .withColumn("graph", lit(null).cast(Term.Schema))
+      .withColumn("subject", lit(null).cast(Term.Schema))
+      .withColumn("predicate", lit(null).cast(Term.Schema))
+      .withColumn("obj", lit(null).cast(Term.Schema))
       .limit(0)
     if (elems.isEmpty) empty
     else withId.select(explode(array(elems: _*)).as("#q"))

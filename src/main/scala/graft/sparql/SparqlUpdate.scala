@@ -419,8 +419,7 @@ object SparqlUpdate {
     val sols = Sparql.solve(
       Sparql.applyDatasetClause(state, m.using, m.usingNamed), m.where)
     def tag(df: DataFrame, op: String, s: Long): DataFrame =
-      df.select(Seq(lit(op).as("op"), lit(s).as("seq")) ++
-        Seq("graph", "subject", "predicate", "obj").map(col): _*)
+      df.select(Seq(lit(op).as("op"), lit(s).as("seq")) ++ Quad.Columns.map(col): _*)
     val parts =
       SparqlTemplates.instantiate(sols, m.deleteTpl).map(tag(_, "D", seq)) ++
       SparqlTemplates.instantiate(sols, m.insertTpl, blankScope)
@@ -442,11 +441,10 @@ object SparqlUpdate {
     }
     val gType = state.schema("graph").dataType
     def tag(df: DataFrame, op: String, s: Long): DataFrame =
-      df.select(Seq(lit(op).as("op"), lit(s).as("seq")) ++
-        Seq("graph", "subject", "predicate", "obj").map(col): _*)
+      df.select(Seq(lit(op).as("op"), lit(s).as("seq")) ++ Quad.Columns.map(col): _*)
     val inserts = tag(scoped(g.src).withColumn("graph", g.dst match {
       case None => lit(null).cast(gType)
-      case Some(t) => Sparql.termLit(t)
+      case Some(t) => Term.column(t)
     }), "A", seq + 1)
     val deletes = (g.kind match {
       case "ADD" => Seq.empty[DataFrame]
@@ -469,7 +467,6 @@ object SparqlUpdate {
       // Sparql.termEqFields)
       case "GRAPH" => state.filter(Sparql.termEqFields("graph", c.graph.get))
     }
-    filtered.select(Seq(lit("D").as("op"), lit(seq).as("seq")) ++
-      Seq("graph", "subject", "predicate", "obj").map(col): _*)
+    filtered.select(Seq(lit("D").as("op"), lit(seq).as("seq")) ++ Quad.Columns.map(col): _*)
   }
 }

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.rdf.Quad
+
 /** Incrementally-maintained COUNT aggregate view over a [[QuadStore]]
   * — grouped quad statistics (per-predicate, per-graph, per-subject…,
   * the VoID-style dataset statistics a SPARQL service publishes) that
@@ -46,7 +48,7 @@ import org.apache.spark.sql.functions._
 final class AggView(spark: SparkSession, store: QuadStore, path: String,
     groupCols: Seq[String] = Seq("predicate")) {
   require(groupCols.nonEmpty &&
-    groupCols.forall(OpLog.QUAD_COLUMNS.contains),
+    groupCols.forall(Quad.Columns.contains),
     s"groupCols must be quad columns, got $groupCols")
 
   private val dir = Paths.get(path)
@@ -116,10 +118,10 @@ final class AggView(spark: SparkSession, store: QuadStore, path: String,
           // left-outer join against the pruned as-of state (a set —
           // at most one match per quad)
           val asOf = store.quadsAtBuckets(f, buckets)
-            .select(OpLog.QUAD_COLUMNS.map(col) :+
+            .select(Quad.Columns.map(col) :+
               lit(true).as("present0"): _*).alias("s")
           val c = cdc.alias("c")
-          val cond = OpLog.QUAD_COLUMNS
+          val cond = Quad.Columns
             .map(q => col(s"c.$q") <=> col(s"s.$q")).reduce(_ && _)
           val signed = c.join(asOf, cond, "left_outer")
             .select(groupCols.map(g => col(s"c.$g").as(g)) :+

@@ -1,11 +1,10 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.rdf.{Quad, Term}
 
@@ -29,23 +28,14 @@ object OpLog {
   final case class OpRow(op: String, seq: Long,
       graph: Term, subject: Term, predicate: Term, obj: Term)
 
-  val QUAD_COLUMNS: Seq[String] = Seq("graph", "subject", "predicate", "obj")
-  val OP_COLUMNS: Seq[String] = Seq("op", "seq") ++ QUAD_COLUMNS
+  val OP_COLUMNS: Seq[String] = Seq("op", "seq") ++ Quad.Columns
 
   /** The fixed schema [[QuadStore.commitOps]] writes — passed
     * explicitly on every segment read so no read pays per-call
     * footer-based inference.
     */
-  private[store] val TERM_SCHEMA: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("termType", StringType), StructField("lex", StringType),
-      StructField("datatype", StringType), StructField("lang", StringType)))
-  }
-  private[store] val OP_SCHEMA: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("op", StringType), StructField("seq", LongType)) ++
-      QUAD_COLUMNS.map(c => StructField(c, TERM_SCHEMA)))
-  }
+  private[store] val OP_SCHEMA: StructType =
+    StructType(Seq(StructField("op", StringType), StructField("seq", LongType)) ++ Quad.Schema)
 
   // --- packing --------------------------------------------------------------
 
@@ -102,7 +92,7 @@ object OpLog {
       .filter(col("q").isNotNull || col("p.op").isin("A", "D"))
       .select(coalesce(col("p.op"), lit("A")).as("op") +:
         shiftleft(col("ord"), OpBits).bitwiseOR(coalesce(col("qi"), col("pi"))).as("seq") +:
-        QUAD_COLUMNS.map(c => coalesce(col(s"q.$c"), col(s"p.$c")).as(c)): _*)
+        Quad.Columns.map(c => coalesce(col(s"q.$c"), col(s"p.$c")).as(c)): _*)
 
   // --- fold and overlay -----------------------------------------------------
 
@@ -114,23 +104,23 @@ object OpLog {
     */
   def tailState(log: DataFrame, addsOnly: Boolean, order: String = "gseq"): DataFrame =
     if (addsOnly)
-      log.select(QUAD_COLUMNS.map(col): _*).dropDuplicates(QUAD_COLUMNS)
+      log.select(Quad.Columns.map(col): _*).dropDuplicates(Quad.Columns)
         .withColumn("last_op", lit("A"))
-    else log.groupBy(QUAD_COLUMNS.map(col): _*)
+    else log.groupBy(Quad.Columns.map(col): _*)
       .agg(max_by(col("op"), col(order)).as("last_op"))
 
   /** Quads a folded log leaves present. */
   def live(state: DataFrame): DataFrame =
-    state.filter(col("last_op") === "A").select(QUAD_COLUMNS.map(col): _*)
+    state.filter(col("last_op") === "A").select(Quad.Columns.map(col): _*)
 
   /** `base` minus every quad `tail` touched, plus the quads `tail`
     * leaves present. Keys compare null-safe: the default graph is a
     * null `graph`, and a plain equality never matches null to null.
     */
   def overlay(base: DataFrame, tail: DataFrame): DataFrame = {
-    val cond = QUAD_COLUMNS.map(c => col(s"b.$c") <=> col(s"t.$c")).reduce(_ && _)
+    val cond = Quad.Columns.map(c => col(s"b.$c") <=> col(s"t.$c")).reduce(_ && _)
     base.alias("b")
-      .join(tail.select(QUAD_COLUMNS.map(col): _*).alias("t"), cond, "left_anti")
+      .join(tail.select(Quad.Columns.map(col): _*).alias("t"), cond, "left_anti")
       .unionByName(live(tail))
   }
 
@@ -178,19 +168,9 @@ object OpLog {
   def overlayFold(spark: SparkSession, base: Option[DataFrame], fold: Fold): DataFrame = {
     val live = spark.createDataFrame(fold.collect { case (q, "A") => q }.toSeq)
     base.fold(live) { b =>
-      val touched = InSet(bridge.expression(struct(QUAD_COLUMNS.map(col): _*)),
-        fold.keySet.map[Any](quadRow))
+      val touched = InSet(bridge.expression(struct(Quad.Columns.map(col): _*)),
+        fold.keySet.map[Any](Quad.row))
       b.filter(!bridge.column(touched)).unionByName(live)
     }
-  }
-
-  /** A quad as the internal row `struct(graph, subject, predicate, obj)`
-    * evaluates to over op-schema columns.
-    */
-  private def quadRow(q: Quad): InternalRow = {
-    def term(t: Term): InternalRow =
-      if (t == null) null
-      else InternalRow(Seq(t.termType, t.lex, t.datatype, t.lang).map(UTF8String.fromString): _*)
-    InternalRow(term(q.graph), term(q.subject), term(q.predicate), term(q.obj))
   }
 }

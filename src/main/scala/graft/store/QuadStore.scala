@@ -85,7 +85,7 @@ import graft.rdf.{PatchOp, Quad}
 final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     autoCompactTail: Int = 0) {
   import QuadStore._
-  import OpLog.{OpRow, OP_COLUMNS, OP_SCHEMA, QUAD_COLUMNS}
+  import OpLog.{OpRow, OP_COLUMNS, OP_SCHEMA}
 
   private val dir = Paths.get(path)
   Files.createDirectories(dir)
@@ -316,12 +316,12 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 
   private def emptyQuads(): DataFrame = {
     import spark.implicits._
-    Seq.empty[OpRow].toDF().select(QUAD_COLUMNS.map(col): _*)
+    Seq.empty[OpRow].toDF().select(Quad.Columns.map(col): _*)
   }
 
   /** Bucket partition key of a quad row. */
   private def bucketCol =
-    pmod(hash(QUAD_COLUMNS.map(col): _*), lit(numBuckets))
+    pmod(hash(Quad.Columns.map(col): _*), lit(numBuckets))
 
   /** bucket → owning base segment ord; a later compaction's segment
     * supersedes earlier ones for the buckets it recorded in its name.
@@ -362,7 +362,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       else Some(spark.read.schema(BASE_SCHEMA)
         .parquet(dir.resolve(s.name).toString)
         .filter(col("bucket").isin(mine: _*))
-        .select(QUAD_COLUMNS.map(col): _*))
+        .select(Quad.Columns.map(col): _*))
     }
     dfs.reduceOption(_.unionByName(_)).getOrElse(emptyQuads())
   }
@@ -481,8 +481,8 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       .filter(_.batchId.exists(b => b > fromBatch && b <= toBatch))
     if (segs.isEmpty)
       return emptyQuads().withColumn("op", lit("A")).limit(0)
-        .select(col("op") +: QUAD_COLUMNS.map(col): _*)
-    tailState(segs).select(col("last_op").as("op") +: QUAD_COLUMNS.map(col): _*)
+        .select(col("op") +: Quad.Columns.map(col): _*)
+    tailState(segs).select(col("last_op").as("op") +: Quad.Columns.map(col): _*)
   }
 
   private def merge(v: Version, asOf: Option[Long],
@@ -678,8 +678,6 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 }
 
 object QuadStore {
-  import OpLog.QUAD_COLUMNS
-
   /** A committed segment: `s<ord>-b<batchId>` (epoch segment;
     * `-g<n>` suffix = nth copy-on-write replay of that epoch; trailing
     * `-a` = the segment committed adds-only, letting reads skip the
@@ -713,7 +711,6 @@ object QuadStore {
   /** Base-segment schema: quad columns + the `bucket` partition dir. */
   private[store] val BASE_SCHEMA: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    StructType(QUAD_COLUMNS.map(c => StructField(c, OpLog.TERM_SCHEMA)) :+
-      StructField("bucket", IntegerType))
+    StructType(Quad.Schema :+ StructField("bucket", IntegerType))
   }
 }

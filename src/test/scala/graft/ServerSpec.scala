@@ -267,6 +267,23 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("XML results escape attribute values: a quote in a datatype IRI stays well-formed") {
+    withServer { (_, base, store) =>
+      seed(store)
+      val q = java.net.URLEncoder.encode(
+        """SELECT ?v { BIND(STRDT("x<&y", IRI("http://e/a\"b&c")) AS ?v) }""", "UTF-8")
+      val resp = get(s"$base/ds/query?query=$q", "application/sparql-results+xml")
+      assert(resp.statusCode == 200)
+      val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
+        .parse(new java.io.ByteArrayInputStream(resp.body.getBytes(StandardCharsets.UTF_8)))
+      val lits = doc.getElementsByTagName("literal")
+      assert(lits.getLength == 1)
+      val lit = lits.item(0).asInstanceOf[org.w3c.dom.Element]
+      assert(lit.getAttribute("datatype") == "http://e/a\"b&c")
+      assert(lit.getTextContent == "x<&y")
+    }
+  }
+
   // --- ResultsWriter unit behavior (no HTTP) --------------------------------
 
   test("results JSON escapes and omits unbound; lang literals tagged") {

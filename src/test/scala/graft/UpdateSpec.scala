@@ -394,4 +394,22 @@ class UpdateSpec extends AnyFunSuite {
         |SELECT ?n { ?s x:name ?n }""".stripMargin).collect()
     assert(rows.length == 1 && rows.head.getStruct(0).getString(1) == "alice")
   }
+
+  test("string escapes in SPARQL literals decode to their characters") {
+    // the SPARQL texts below hold backslash escapes, not the characters
+    val store = ingest(
+      """INSERT DATA { <http://x/a> <http://x/p> "a\nb" .
+        |  <http://x/t> <http://x/p> 'q\"\'\\\t\r\b\f' }""".stripMargin -> CT_RU,
+      """<http://x/n> <http://x/p> "a\nb" .""" + "\n" -> CT_NQ)
+    assert(stateNT(store) == Set(
+      (null, "http://x/a", "http://x/p", "a\nb"),
+      (null, "http://x/t", "http://x/p", "q\"'\\\t\r\b\f"),
+      (null, "http://x/n", "http://x/p", "a\nb")))
+    val hits = Sparql.execute(store.quads(),
+      """SELECT ?s { ?s <http://x/p> ?o FILTER(?o = "a\nb") }""").collect()
+      .map(_.getStruct(0).getString(1)).toSet
+    assert(hits == Set("http://x/a", "http://x/n"))
+    intercept[RdfParseException](Sparql.execute(store.quads(),
+      """SELECT ?s { ?s ?p "a\qb" }"""))
+  }
 }
