@@ -93,8 +93,10 @@ trait BatchSink {
   *  - The APPLY is deferred: events buffer (bounded by the bytes
   *    threshold — the same memory-protection role it plays in the
   *    reference) and each commit materializes as ONE atomic store
-  *    batch, which the QuadStore writes as a parquet segment via a
-  *    Spark job.
+  *    batch, which the QuadStore writes as a parquet segment: from
+  *    the committing thread when the driver holds its ops (no Spark
+  *    job, as an HTTP POST applies in-process in the reference), by a
+  *    Spark job for bulk and WHERE-resolved batches.
   *  - Patch transactions may SPAN events
   *    (RDFChangesApplyExternalTransaction.java:10-42). Each arriving
   *    patch advances the batch's [[graft.rdf.RdfPatchParser.TxnState]]

@@ -42,13 +42,14 @@ import graft.store.{OpLog, QuadStore}
   * stay on the driver path: update WHERE resolution needs the
   * sequential in-batch state, which folds driver-buffered ops.
   *
-  * Read path after a commit: a batch whose ops all sit in the driver
-  * buffer — no bulk events, no WHERE-resolved update ops — commits
-  * through [[QuadStore.commitRows]], so the store folds them into its
-  * driver tail fold and later queries read base + that local fold
-  * without scanning the tail. Any other batch commits a DataFrame
-  * through [[QuadStore.commitOps]], and reads fall back to folding the
-  * tail segments until the next compaction.
+  * Write and read path after a commit: a batch whose ops all sit in
+  * the driver buffer — no bulk events, no WHERE-resolved update ops —
+  * commits through [[QuadStore.commitRows]], which writes its segment
+  * from this thread with no Spark job and folds the ops into the
+  * store's driver tail fold, so later queries read base + that local
+  * fold without scanning the tail. Any other batch commits a DataFrame
+  * through [[QuadStore.commitOps]], a Spark write job, and reads fall
+  * back to folding the tail segments until the next compaction.
   */
 final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     bulkBytesThreshold: Long = QuadStoreSink.DefaultBulkBytes,
@@ -216,13 +217,14 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     // executor-side decode of the bulk events: the driver ships ONE
     // row per event (raw bytes it already holds from the poll), the
     // per-quad explosion happens on executors — same blank-node scope
-    // as the driver path, so labels are identical either way
+    // as the driver path, so labels are identical either way. The local
+    // scan already splits the rows into min(rows, defaultParallelism)
+    // slices, so the decode needs no shuffle of the raw bytes
     val bulkOps: Option[DataFrame] = if (bulkEvents.isEmpty) None else {
       val raw = bulkEvents.toSeq.map { case (m, _) =>
         (m.event.topic, m.event.partition, m.event.offset, m.event.key,
           m.event.value, m.event.contentType)
       }.toDF("topic", "partition", "offset", "key", "value", "contentType")
-        .repartition(math.min(bulkEvents.size, spark.sparkContext.defaultParallelism))
       // the event's batch index, looked up per event row by its
       // identity: a broadcast join back to an (identity, index) frame
       // copied every wide decoded row (~10 % of a 39 MB bulk commit,

@@ -113,7 +113,7 @@ object NQuadsParser {
           advance()
           val sb = new StringBuilder
           while (!atEnd && peek != '>') {
-            if (peek == '\\') { advance(); sb.append(unescape()) }
+            if (peek == '\\') pos = Term.unescape(doc, pos, to, sb, fail)
             else { sb.append(peek); advance() }
           }
           if (atEnd) fail("unterminated IRI")
@@ -146,7 +146,7 @@ object NQuadsParser {
           advance()
           val sb = new StringBuilder
           while (!atEnd && peek != '"') {
-            if (peek == '\\') { advance(); sb.append(unescape()) }
+            if (peek == '\\') pos = Term.unescape(doc, pos, to, sb, fail)
             else { sb.append(peek); advance() }
           }
           if (atEnd) fail("unterminated literal")
@@ -172,42 +172,6 @@ object NQuadsParser {
       c == ' ' || c == '\t' || c == '\r' || c == '.' ||
       c == '<' || c == '"' || c == '#' ||
       c == '>' // a quoted triple's '>>' may directly follow a blank label
-
-    private def unescape(): String = {
-      if (atEnd) fail("dangling escape")
-      val c = peek
-      advance()
-      c match {
-        case 't' => "\t"
-        case 'b' => "\b"
-        case 'n' => "\n"
-        case 'r' => "\r"
-        case 'f' => "\f"
-        case '"' => "\""
-        case '\'' => "'"
-        case '\\' => "\\"
-        case 'u' =>
-          if (pos + 4 > to) fail("bad \\u escape")
-          val hex = doc.substring(pos, pos + 4); pos += 4
-          parseHex(hex, 4).toChar.toString
-        case 'U' =>
-          if (pos + 8 > to) fail("bad \\U escape")
-          val hex = doc.substring(pos, pos + 8); pos += 8
-          val cp = parseHex(hex, 8)
-          if (!Character.isValidCodePoint(cp))
-            fail(s"\\U escape out of unicode range: $hex")
-          new String(Character.toChars(cp))
-        case other => fail(s"bad escape '\\$other'")
-      }
-    }
-
-    /** Hex digits of a \\u/\\U escape — a malformed escape is a parse
-      * error (→ DLQ), never a NumberFormatException.
-      */
-    def parseHex(hex: String, n: Int): Int =
-      try Integer.parseInt(hex, 16)
-      catch { case _: NumberFormatException =>
-        fail(s"bad hex in \\${if (n == 4) "u" else "U"} escape: '$hex'") }
 
     def fail(msg: String): Nothing =
       throw new RdfParseException(s"[line $lineNo] $msg")

@@ -143,6 +143,40 @@ object Term {
     }
     sb.toString
   }
+
+  /** Decode the string escape whose backslash is at `at` in `s` (an
+    * ECHAR or a `\uXXXX`/`\UXXXXXXXX` UCHAR, ending before `end`) onto
+    * `sb` and return the index past it — the one escape table of N-Quads,
+    * Turtle and SPARQL strings (SPARQL 1.1 §19.2, §19.8). `fail` raises a
+    * malformed escape as the caller's parse error.
+    */
+  def unescape(s: String, at: Int, end: Int, sb: StringBuilder,
+      fail: String => Nothing): Int = {
+    if (at + 1 >= end) fail("dangling escape")
+    def hex(esc: Char, n: Int): Long = {
+      if (at + 2 + n > end) fail(s"bad \\$esc escape")
+      val digits = s.substring(at + 2, at + 2 + n)
+      if (!digits.forall(c => "0123456789abcdefABCDEF".indexOf(c) >= 0))
+        fail(s"bad hex in \\$esc escape: '$digits'")
+      java.lang.Long.parseLong(digits, 16)
+    }
+    s.charAt(at + 1) match {
+      case 'u' =>
+        sb.append(hex('u', 4).toChar)
+        at + 6
+      case 'U' =>
+        val cp = hex('U', 8)
+        if (cp > Character.MAX_CODE_POINT)
+          fail(s"\\U escape out of unicode range: ${s.substring(at + 2, at + 10)}")
+        sb.appendAll(Character.toChars(cp.toInt))
+        at + 10
+      case c => // ECHAR: the letter's index picks the character
+        val i = "tbnrf\"'\\".indexOf(c)
+        if (i < 0) fail(s"bad escape '\\$c'")
+        sb.append("\t\b\n\r\f\"'\\".charAt(i))
+        at + 2
+    }
+  }
 }
 
 /** A quad: graph is null for the default graph (FIXTURES.md §6). */

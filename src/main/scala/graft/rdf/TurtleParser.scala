@@ -268,7 +268,7 @@ final class TurtleParser(input: String, trig: Boolean) {
     val sb = new StringBuilder
     while (pos < len && input.charAt(pos) != '>') {
       val c = input.charAt(pos)
-      if (c == '\\') { pos += 1; sb.append(unescapeChar()) }
+      if (c == '\\') pos = Term.unescape(input, pos, len, sb, fail)
       else { sb.append(c); pos += 1 }
     }
     expect('>')
@@ -355,7 +355,7 @@ final class TurtleParser(input: String, trig: Boolean) {
     val sb = new StringBuilder
     while (pos < len && input.charAt(pos) != quote) {
       val c = input.charAt(pos)
-      if (c == '\\') { pos += 1; sb.append(unescapeChar()) }
+      if (c == '\\') pos = Term.unescape(input, pos, len, sb, fail)
       else if (c == '\n' || c == '\r') fail("newline in single-quoted string")
       else { sb.append(c); pos += 1 }
     }
@@ -374,37 +374,10 @@ final class TurtleParser(input: String, trig: Boolean) {
         return sb.toString
       }
       val c = input.charAt(pos)
-      if (c == '\\') { pos += 1; sb.append(unescapeChar()) }
+      if (c == '\\') pos = Term.unescape(input, pos, len, sb, fail)
       else { sb.append(c); pos += 1 }
     }
     fail("unterminated long string")
-  }
-
-  private def unescapeChar(): String = {
-    val c = input.charAt(pos)
-    pos += 1
-    c match {
-      case 't' => "\t"
-      case 'b' => "\b"
-      case 'n' => "\n"
-      case 'r' => "\r"
-      case 'f' => "\f"
-      case '"' => "\""
-      case '\'' => "'"
-      case '\\' => "\\"
-      case 'u' =>
-        if (pos + 4 > len) fail("bad \\u escape")
-        val hex = input.substring(pos, pos + 4); pos += 4
-        parseHex(hex, "u").toChar.toString
-      case 'U' =>
-        if (pos + 8 > len) fail("bad \\U escape")
-        val hex = input.substring(pos, pos + 8); pos += 8
-        val cp = parseHex(hex, "U")
-        if (!Character.isValidCodePoint(cp))
-          fail(s"\\U escape out of unicode range: $hex")
-        new String(Character.toChars(cp))
-      case other => fail(s"bad escape '\\$other'")
-    }
   }
 
   private def parseNumber(): Term = {
@@ -469,14 +442,6 @@ final class TurtleParser(input: String, trig: Boolean) {
     val e = math.min(len, at + 20)
     input.substring(s, e).replace("\n", "\\n")
   }
-
-  /** Hex digits of a \\u/\\U escape — a malformed escape is a parse
-    * error (→ DLQ), never a NumberFormatException.
-    */
-  private def parseHex(hex: String, esc: String): Int =
-    try Integer.parseInt(hex, 16)
-    catch { case _: NumberFormatException =>
-      fail(s"bad hex in \\$esc escape: '$hex'") }
 
   private def fail(msg: String): Nothing = {
     val line = input.substring(0, math.min(pos, len)).count(_ == '\n') + 1

@@ -993,19 +993,8 @@ import Sparql._
           pos += 1
           val sb = new StringBuilder
           while (pos < text.length && text.charAt(pos) != q) {
-            if (text.charAt(pos) == '\\' && pos + 1 < text.length) {
-              pos += 1
-              sb.append(text.charAt(pos) match { // ECHAR (§19.8)
-                case 't' => '\t'
-                case 'b' => '\b'
-                case 'n' => '\n'
-                case 'r' => '\r'
-                case 'f' => '\f'
-                case c @ ('"' | '\'' | '\\') => c
-                case c => fail(s"bad string escape '\\$c'")
-              })
-            } else sb.append(text.charAt(pos))
-            pos += 1
+            if (text.charAt(pos) == '\\') pos = Term.unescape(text, pos, text.length, sb, fail)
+            else { sb.append(text.charAt(pos)); pos += 1 }
           }
           if (pos >= text.length) fail("unterminated literal")
           pos += 1

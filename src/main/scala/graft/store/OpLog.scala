@@ -1,10 +1,12 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, InSet}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.rdf.{Quad, Term}
 
@@ -30,12 +32,17 @@ object OpLog {
 
   val OP_COLUMNS: Seq[String] = Seq("op", "seq") ++ Quad.Columns
 
-  /** The fixed schema [[QuadStore.commitOps]] writes — passed
-    * explicitly on every segment read so no read pays per-call
+  /** The fixed schema of every epoch segment, whichever commit wrote it
+    * — passed explicitly on every segment read so no read pays per-call
     * footer-based inference.
     */
-  private[store] val OP_SCHEMA: StructType =
+  val OP_SCHEMA: StructType =
     StructType(Seq(StructField("op", StringType), StructField("seq", LongType)) ++ Quad.Schema)
+
+  /** `r` as the internal row an [[OP_SCHEMA]] segment file holds. */
+  def row(r: OpRow): InternalRow =
+    new GenericInternalRow(Array[Any](UTF8String.fromString(r.op), r.seq,
+      Term.row(r.graph), Term.row(r.subject), Term.row(r.predicate), Term.row(r.obj)))
 
   // --- packing --------------------------------------------------------------
 

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 import graft.rdf.{PatchOp, Quad}
 
@@ -19,9 +20,12 @@ import graft.rdf.{PatchOp, Quad}
   * Layout: an LSM-ish op log. Each committed micro-batch writes one
   * immutable parquet segment of (op A|D, seq, graph, subject,
   * predicate, obj) rows, then atomically swings the `_version` pointer
-  * file. Readers list only committed segments, so a crash mid-write is
-  * invisible (the reference gets the same from DatasetGraph
-  * transactions, FusekiProjector.java:484-490/514-573).
+  * file. A batch whose ops the driver holds ([[commitRows]]) writes its
+  * segment as one file from the calling thread, with no Spark job; a
+  * DataFrame batch ([[commitOps]]) writes it with a Spark job. Readers
+  * list only committed segments, so a crash mid-write is invisible (the
+  * reference gets the same from DatasetGraph transactions,
+  * FusekiProjector.java:484-490/514-573).
   *
   * State = latest-op-per-quad-wins over the committed log:
   *   add then delete  → absent;  delete then re-add → present.
@@ -174,19 +178,17 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * Spark epoch replay is therefore safe in both regimes (replaces the
     * reference's abort/replay machinery, FusekiProjector.java:362-379).
     */
-  def commitOps(batchId: Long, ops: DataFrame): Unit = commit(batchId, ops, None)
+  def commitOps(batchId: Long, ops: DataFrame): Unit = commit(batchId, Left(ops))
 
-  /** [[commitOps]] for op rows the driver already holds: the commit
-    * also folds them into the driver tail fold, at no extra Spark job,
-    * so [[quads]] keeps serving the tail without reading it back.
+  /** [[commitOps]] for op rows the driver already holds. The segment is
+    * written from the calling thread as one parquet file, with no Spark
+    * job, and the commit folds the rows into the driver tail fold, so
+    * [[quads]] keeps serving the tail without reading it back.
     */
-  def commitRows(batchId: Long, rows: Seq[OpRow]): Unit = {
-    import spark.implicits._
-    commit(batchId, rows.toDF(), Some(rows))
-  }
+  def commitRows(batchId: Long, rows: Seq[OpRow]): Unit = commit(batchId, Right(rows))
 
-  private def commit(batchId: Long, ops: DataFrame,
-      rows: Option[Seq[OpRow]]): Unit = writeLock.synchronized {
+  private def commit(batchId: Long,
+      ops: Either[DataFrame, Seq[OpRow]]): Unit = writeLock.synchronized {
     val v = readVersion()
     if (batchId <= v.highWater) return // already compacted into base
     // COPY-ON-WRITE replay: a replayed epoch writes a FRESH directory
@@ -210,28 +212,33 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
         SegRef(s"${plain.replaceAll("-g\\d+$", "")}-g$gen",
           old.ord, Some(batchId))
     }
-    // adds-only detection RIDES the segment write via observe (zero
-    // extra passes): a delete-free segment is marked `-a` in its name,
-    // and reads over an adds-only tail skip the latest-op fold for a
-    // plain distinct (guide §6 — read less, fold less). The rename
-    // happens before the pointer swing, so readers never see the
-    // unmarked name.
-    val obs = org.apache.spark.sql.Observation()
-    ops.select(OP_COLUMNS.map(col): _*)
-      .observe(obs, org.apache.spark.sql.functions
-        .count(when(col("op") =!= "A", 1)).as("nonAdds"))
-      .write.mode("overwrite").parquet(dir.resolve(ref.name).toString)
-    val finalRef =
-      if (obs.get("nonAdds").asInstanceOf[Long] == 0L) {
-        val marked = ref.name + "-a"
-        // a crash between an earlier attempt's rename and its version
-        // write leaves this name behind; no version references it, and
-        // the move below cannot replace a non-empty directory
-        val target = dir.resolve(marked)
-        if (Files.exists(target)) deleteRecursively(target)
-        Files.move(dir.resolve(ref.name), target, StandardCopyOption.ATOMIC_MOVE)
-        ref.copy(name = marked, addsOnly = true)
-      } else ref
+    // a delete-free segment is marked `-a` in its name, and reads over
+    // an adds-only tail skip the latest-op fold for a plain distinct
+    // (guide §6 — read less, fold less)
+    def marked(r: SegRef) = r.copy(name = r.name + "-a", addsOnly = true)
+    // a crash before the version write leaves a directory at the target
+    // name behind, unreferenced by any version
+    def fresh(r: SegRef) = { val p = dir.resolve(r.name); if (Files.exists(p)) deleteRecursively(p); p }
+    val finalRef = ops match {
+      case Right(rows) =>
+        val r = if (rows.forall(_.op == "A")) marked(ref) else ref
+        bridge.writeParquetFile(spark, fresh(r).toString, OP_SCHEMA, rows.iterator.map(OpLog.row))
+        r
+      case Left(df) =>
+        // adds-only detection RIDES the segment write via observe (zero
+        // extra passes); the rename happens before the pointer swing, so
+        // readers never see the unmarked name
+        val obs = org.apache.spark.sql.Observation()
+        df.select(OP_COLUMNS.map(col): _*)
+          .observe(obs, org.apache.spark.sql.functions
+            .count(when(col("op") =!= "A", 1)).as("nonAdds"))
+          .write.mode("overwrite").parquet(dir.resolve(ref.name).toString)
+        if (obs.get("nonAdds").asInstanceOf[Long] != 0L) ref
+        else {
+          Files.move(dir.resolve(ref.name), fresh(marked(ref)), StandardCopyOption.ATOMIC_MOVE)
+          marked(ref)
+        }
+    }
     val segs = existing match {
       case None => v.segments :+ finalRef
       // the replayed epoch keeps its ORIGINAL log position (same ord)
@@ -244,7 +251,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       if (v.segments.forall(_.isBase)) Some(Map.empty: OpLog.Fold)
       else tailFold.collect { case t if t.segments == v.segments.map(_.name) => t.fold }
     tailFold = for {
-      r <- rows if existing.isEmpty
+      r <- ops.toOption if existing.isEmpty
       p <- prior
       f <- OpLog.fold(p, r, OpLog.driverFoldCap(spark))
     } yield TailFold(segs.map(_.name), f)
@@ -270,8 +277,8 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
   // --- reads ----------------------------------------------------------------
 
   /** Epoch-segment scan WITHOUT the ordinal recovery — for reads that
-    * never order ops (adds-only folds). The op schema is fixed by
-    * [[commitOps]]'s writer, so it is passed explicitly: schema
+    * never order ops (adds-only folds). The op schema is fixed by the
+    * segment writers, so it is passed explicitly: schema
     * inference re-read a parquet footer per `quads()` call, a per-call
     * driver tax every store-reading entry paid (guide §6).
     */
@@ -303,7 +310,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 
   /** Latest op per quad over the segments `segs` ([[OpLog.tailState]]).
     * When every segment committed adds-only (recorded in its name by
-    * [[commitOps]]) the fold degenerates to DISTINCT and skips the
+    * the commit) the fold degenerates to DISTINCT and skips the
     * ordinal recovery from file paths. `only` restricts to a bucket
     * subset: the tail filters on the hash expression the base read
     * partition-prunes on.

@@ -107,8 +107,6 @@ class StoreSpec extends AnyFunSuite {
     val store = newStore()
     store.addQuads(0, Seq(q("a", "1"), q("b", "1"), q("c", "1")))
     store.compact()
-    def row(op: String, i: Long, x: Quad) =
-      OpLog.OpRow(op, i, x.graph, x.subject, x.predicate, x.obj)
     store.commitRows(1, Seq(row("D", 0L, q("a", "1")), row("A", 1L, q("d", "1")),
       row("A", 2L, q("b", "2"))))
     store.commitRows(2, Seq(row("A", 0L, q("a", "1")), row("D", 1L, q("a", "1")),
@@ -119,6 +117,67 @@ class StoreSpec extends AnyFunSuite {
     val (_, quadsJobs) = TestSpark.jobsOf(store.quads().count())
     assert(n == model.size && state(store.quads()) == model)
     assert(countJobs <= quadsJobs, s"count() ran $countJobs jobs, quads().count() $quadsJobs")
+  }
+
+  private def row(op: String, i: Long, x: Quad) =
+    OpLog.OpRow(op, i, x.graph, x.subject, x.predicate, x.obj)
+
+  test("a row commit writes its segment on the driver: no Spark job") {
+    val store = newStore()
+    store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
+    val (_, patchJobs) = TestSpark.jobsOf(
+      store.commitRows(1, Seq(row("D", 0L, q("a", "1")), row("A", 1L, q("c", "1")))))
+    val (_, addJobs) = TestSpark.jobsOf(store.addQuads(2, Seq(q("d", "1"))))
+    assert((patchJobs, addJobs) == ((0, 0)))
+    assert(store.committedSegments().map(_.endsWith("-a")) == Seq(true, false, true))
+    assert(state(store.quads()) == Set(q("b", "1"), q("c", "1"), q("d", "1")))
+  }
+
+  test("a driver-written segment reads back as a commitOps segment of the same rows") {
+    import spark.implicits._
+    val g = Term.iri("http://x/g")
+    val rows = Seq(row("A", 0L, q("a", "1")), row("D", 1L, q("a", "1")),
+      row("A", 2L, Quad(g, Term.blank("b1"), Term.iri("http://x/p"), Term.langLit("x", "en"))),
+      row("A", OpLog.seq(1L << 30, 5L), Quad(null, Term.iri("http://x/s"),
+        Term.iri("http://x/p"), Term.typed("2", Term.XSD_INTEGER))))
+    def segment(commit: QuadStore => Unit): String = {
+      val dir = Files.createTempDirectory("qs")
+      commit(new QuadStore(spark, dir.toString))
+      val seg = new QuadStore(spark, dir.toString).committedSegments()
+      assert(seg.size == 1)
+      dir.resolve(seg.head).toString
+    }
+    val driver = segment(_.commitRows(0, rows))
+    val job = segment(_.commitOps(0, rows.toDF()))
+    val explicit = Seq(driver, job).map(spark.read.schema(OpLog.OP_SCHEMA).parquet(_))
+    val inferred = Seq(driver, job).map(spark.read.parquet(_))
+    assert(inferred.map(_.schema).distinct == Seq(OpLog.OP_SCHEMA))
+    Seq(explicit, inferred).foreach { case Seq(d, j) =>
+      assert(d.collect().toSet == j.collect().toSet && d.count() == rows.size)
+    }
+    assert(explicit.head.as[OpLog.OpRow].collect().toSet == rows.toSet)
+  }
+
+  test("a row commit replaces a leftover directory at its target name") {
+    // a crash after a segment write and before its version write leaves
+    // the directory behind, unreferenced; the next commit to that name
+    // must not read the stale file beside its own
+    val dir = Files.createTempDirectory("qs")
+    val store = new QuadStore(spark, dir.toString)
+    store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
+    val names = Seq("s00000001-b1", "s00000002-b2-a")
+    names.foreach { n =>
+      Files.createDirectories(dir.resolve(n))
+      Files.write(dir.resolve(n).resolve("part-00000-stale.parquet"), Array[Byte](1, 2, 3))
+    }
+    store.commitRows(1, Seq(row("D", 0L, q("a", "1"))))
+    store.addQuads(2, Seq(q("c", "1")))
+    assert(store.committedSegments().drop(1) == names)
+    names.foreach(n => assert(!Files.exists(dir.resolve(n).resolve("part-00000-stale.parquet"))))
+    // a fresh store over the directory reads the segments themselves
+    val want = Set(q("b", "1"), q("c", "1"))
+    assert(state(store.quads()) == want)
+    assert(state(new QuadStore(spark, dir.toString).quads()) == want)
   }
 
   test("quadsAt time-travels to any un-compacted batch; compaction is the floor") {

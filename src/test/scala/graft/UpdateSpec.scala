@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.connect._
-import graft.rdf.{RdfParse, RdfParseException, Term}
+import graft.rdf.{NQuadsParser, RdfParse, RdfParseException, Term, TurtleParser}
 import graft.sparql.{Sparql, SparqlUpdate}
 import graft.store.QuadStore
 
@@ -411,5 +411,27 @@ class UpdateSpec extends AnyFunSuite {
     assert(hits == Set("http://x/a", "http://x/n"))
     intercept[RdfParseException](Sparql.execute(store.quads(),
       """SELECT ?s { ?s ?p "a\qb" }"""))
+  }
+
+  test("\\u and \\U escapes decode alike in SPARQL, N-Quads and Turtle") {
+    // the documents and queries below hold backslash escapes; only the
+    // expected values hold the characters
+    val store = ingest(
+      "<http://x/c> <http://x/p> \"caf\\u00e9\" .\n" -> CT_NQ,
+      "INSERT DATA { <http://x/e> <http://x/p> \"\\U0001F600\" }" -> CT_RU)
+    def hits(lit: String) = Sparql.execute(store.quads(), s"SELECT ?s { ?s ?p $lit }")
+      .collect().map(_.getStruct(0).getString(1)).toSet
+    assert(hits("\"caf\\u00E9\"") == Set("http://x/c"))
+    assert(hits("'\\U0001f600'") == Set("http://x/e"))
+    assert(TurtleParser.parseTurtle("<http://x/c> <http://x/p> \"caf\\u00e9\" .").head.obj.lex ==
+      "caf\u00e9")
+    // past the last code point (U+10FFFF), and a signed hex field
+    for (esc <- Seq("\\U00110000", "\\u+0e9")) {
+      intercept[RdfParseException](NQuadsParser.parse(
+        s"<http://x/c> <http://x/p> \"$esc\" .", allowGraph = true))
+      intercept[RdfParseException](TurtleParser.parseTurtle(
+        s"<http://x/c> <http://x/p> \"$esc\" ."))
+      intercept[RdfParseException](Sparql.parse(s"SELECT ?s { ?s ?p \"$esc\" }"))
+    }
   }
 }
