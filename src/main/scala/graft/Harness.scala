@@ -6,9 +6,29 @@ import graft.plans.Checkpoints
 
 /** The shared harness for the command-line mains (Bench, Verify and
   * the test-scope PlanDump/Scratch) and the test session: one session
-  * builder and one per-entry lifetime wrapper.
+  * builder, one per-entry lifetime wrapper and one owner of scratch
+  * directories.
   */
 object Harness {
+
+  /** The JVM's one scratch root under `java.io.tmpdir`, removed at
+    * exit. The hook runs after Spark's own shutdown hooks (a lower
+    * Hadoop hook priority), so nothing writes into a directory while
+    * it is removed.
+    */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-scratch")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(root.toFile), 0)
+    root
+  }
+
+  /** A fresh directory named `prefix…` under the scratch root: stores,
+    * views, stream and checkpoint directories of the entries and the
+    * tests. Nothing made here outlives the JVM.
+    */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
 
   /** Local session with `cpus` cores and as many shuffle partitions.
     * `nanosAsLong` lets the fixtures' TIMESTAMP(NANOS) columns load

@@ -3,18 +3,26 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.{coalesce, lit, struct}
 import org.apache.spark.sql.graft.{bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
+import graft.rdf.Term
+
 /** SPARQL VALUE semantics over the engine's term struct — the cases
-  * Catalyst's structural equality gets silently wrong (SURVEY.md §4.2):
-  * `"01"^^xsd:integer` equals `"1"^^xsd:integer` in SPARQL value space
-  * but not byte-wise, `"1.0"^^xsd:decimal` equals `"1"^^xsd:integer`,
-  * and a plain `"a"` never equals `"a"@en`. Implemented as a native
-  * Catalyst expression (codegen'd via a static helper) rather than a
-  * rewrite rule, exactly because a rule could not see the value space.
+  * Catalyst's structural equality and ordering get silently wrong
+  * (SURVEY.md §4.2): `"01"^^xsd:integer` equals `"1"^^xsd:integer` in
+  * SPARQL value space but not byte-wise, `"9"^^xsd:integer` sorts
+  * before `"10"^^xsd:integer` though its lexical form does not, and a
+  * plain `"a"` never equals `"a"@en`. Owns value equality, arithmetic,
+  * the numeric value ([[numValue]]) and the ONE value order: the
+  * [[valueKey]] the `<` family compares and the [[orderKey]] that
+  * ORDER BY sorts by and MIN/MAX pick by (§18.5.1 defines them by the
+  * ORDER BY order). Native Catalyst expressions (codegen'd via static
+  * helpers) rather than rewrite rules, exactly because a rule could
+  * not see the value space.
   */
 object TermOps {
 
@@ -58,10 +66,12 @@ object TermOps {
     lexA == lexB && lgA == lgB && dtA == dtB
   }
 
-  /** Datatypes whose values live on the timeline. */
-  val TEMPORAL_DATATYPES: Set[String] = Set(
-    graft.rdf.Term.XSD_DATETIME, graft.rdf.Term.XSD_DATE,
-    graft.rdf.Term.XSD + "time")
+  /** Datatypes whose values live on the timeline, in [[valueKeyBytes]]
+    * order (any fixed order: different temporal datatypes are not
+    * comparable by `<`).
+    */
+  val TEMPORAL_DATATYPES: Seq[String] =
+    Seq(Term.XSD_DATETIME, Term.XSD_DATE, Term.XSD + "time")
 
   /** Timeline key (epoch / day millis) for a temporal lexical form,
     * normalizing an explicit timezone; zone-less values are taken as
@@ -95,13 +105,6 @@ object TermOps {
         t
     }
   } catch { case _: Exception => null }
-
-  /** SPARQL value-space comparison (`<`/`>`/ORDER) between two
-    * term-struct columns: -1/0/1.
-    */
-  def termValueCompare(a: Column, b: Column): Column =
-    ExpressionUtils.column(TermValueCompare(ExpressionUtils.expression(a),
-      ExpressionUtils.expression(b)))
 
   /** XSD integer-family datatypes: integer `+ - *` stays xsd:integer. */
   val INTEGER_DATATYPES: Set[String] = Set(
@@ -195,55 +198,139 @@ object TermOps {
     mk(lex, if (isInt) graft.rdf.Term.XSD_INTEGER else graft.rdf.Term.XSD_DECIMAL)
   }
 
-  /** Value-space total order over term InternalRows. SPARQL ORDER BY
-    * (spec §15.1) ranks blank < IRI < literal; numeric literals compare
-    * by value (BigDecimal — `"9"^^xsd:integer < "10"^^xsd:integer`,
-    * where the lexical order is inverted), everything else by lexical
-    * form then language then datatype so the order stays total.
+  /** Whether a term column is a literal of a numeric datatype. */
+  def isNumeric(c: Column): Column =
+    c.getField("termType") === Term.LIT &&
+      // datatype is null for plain literals — that's false, not unknown
+      coalesce(c.getField("datatype").isin(NUMERIC_DATATYPES.toSeq: _*), lit(false))
+
+  /** Numeric VALUE of a term column as decimal(38,10): null for a
+    * term that is not a numeric-datatype literal (a plain "12" is a
+    * string, not a number) and for a lexical form outside the carrier —
+    * a SPARQL expression error either way, never a runtime error (a
+    * data-controlled "1e30"^^xsd:double included). One codegen'd
+    * expression: the equivalent when/isin/try_cast column tree, once
+    * per SUM/AVG use, made `sparql_agg_expr` about 30 % slower.
     */
-  def valueCompare(a: InternalRow, b: InternalRow): Int = {
-    def f(r: InternalRow, i: Int): String =
-      if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-    def nc(x: String, y: String): Int =
-      if (x == null && y == null) 0 else if (x == null) -1
-      else if (y == null) 1 else x.compareTo(y)
-    def rank(t: String): Int = t match {
-      case graft.rdf.Term.BLANK => 0
-      case graft.rdf.Term.IRI => 1
-      case graft.rdf.Term.TRIPLE => 3 // quoted triples after literals (mirrors Sparql.sortKeys)
-      case _ => 2
+  def numValue(c: Column): Column =
+    ExpressionUtils.column(TermNumValue(ExpressionUtils.expression(c)))
+
+  /** [[numValue]] of one term InternalRow: the lexical form cast as
+    * `try_cast(lex AS decimal(38,10))` casts it (half-up rounding to
+    * scale 10, null on overflow), for numeric datatypes only.
+    */
+  def numValueOf(r: InternalRow): Decimal =
+    if (r.isNullAt(1) || r.isNullAt(2) ||
+        !NUMERIC_DATATYPES.contains(r.getUTF8String(2).toString)) null
+    else {
+      val d = Decimal.fromString(r.getUTF8String(1))
+      if (d != null && d.changePrecision(38, 10)) d else null
     }
-    val (tA, lexA, dtA, lgA) = (f(a, 0), f(a, 1), f(a, 2), f(a, 3))
-    val (tB, lexB, dtB, lgB) = (f(b, 0), f(b, 1), f(b, 2), f(b, 3))
-    val r = Integer.compare(rank(tA), rank(tB))
-    if (r != 0) return r
-    if (tA != graft.rdf.Term.LIT) return nc(lexA, lexB)
-    if (dtA != null && dtB != null &&
-        NUMERIC_DATATYPES.contains(dtA) && NUMERIC_DATATYPES.contains(dtB)) {
-      try return new java.math.BigDecimal(lexA).compareTo(new java.math.BigDecimal(lexB))
-      catch { case _: NumberFormatException => () } // ill-formed → lexical
+
+  /** The term's position in SPARQL value space as a binary key Spark
+    * orders byte-wise; null for an unbound term. Value-equal terms
+    * (`"2"^^xsd:int`, `"2.0"^^xsd:decimal`; one instant in two zones)
+    * get equal keys, so the `<` family compares these directly behind
+    * its comparability check. See [[valueKeyBytes]] for the layout.
+    */
+  def valueKey(c: Column): Column =
+    ExpressionUtils.column(TermValueKey(ExpressionUtils.expression(c)))
+
+  /** The total order over terms (§15.1): [[valueKey]], then lexical
+    * form, language and datatype, so value-equal terms still sort
+    * deterministically. ORDER BY sorts by it (ascending puts unbound
+    * first, descending last) and MIN/MAX are `min_by`/`max_by` over it.
+    */
+  def orderKey(c: Column): Column =
+    struct(valueKey(c).as("v"), c.getField("lex").as("lex"),
+      c.getField("lang").as("lang"), c.getField("datatype").as("dt"))
+
+  /** [[valueKey]] of one term InternalRow. Layout, compared as
+    * unsigned bytes:
+    *  - rank: blank 1 < IRI 2 < literal 3 < quoted triple 4, then the
+    *    UTF-8 lexical form for non-literals;
+    *  - literals: class 0 (strings and every other non-numeric, non-
+    *    temporal literal, incl. ill-formed ones) + UTF-8 lexical form;
+    *    class 1 (a well-formed temporal) + datatype index + the
+    *    [[temporalKey]]; class 2 (a well-formed numeric) + [[numericKey]].
+    */
+  def valueKeyBytes(r: InternalRow): Array[Byte] = {
+    def f(i: Int): String = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    def withLex(head: Byte*): Array[Byte] =
+      head.toArray ++ (if (r.isNullAt(1)) Array.emptyByteArray else r.getUTF8String(1).getBytes)
+    f(0) match {
+      case Term.BLANK => withLex(1)
+      case Term.IRI => withLex(2)
+      case Term.TRIPLE => withLex(4)
+      case _ =>
+        val (lex, dt) = (f(1), f(2))
+        val num = if (lex != null && NUMERIC_DATATYPES.contains(dt)) numericKey(lex, dt) else null
+        val tIdx = TEMPORAL_DATATYPES.indexOf(dt)
+        val time = if (num == null && lex != null && tIdx >= 0) temporalKey(lex, dt) else null
+        if (num != null) Array[Byte](3, 2) ++ num
+        else if (time != null) Array[Byte](3, 1, tIdx.toByte) ++ longBytes(time)
+        else withLex(3, 0)
     }
-    // same-datatype temporal literals order on the timeline (zone-
-    // normalized); ill-formed lexicals fall through to lexical order
-    if (dtA != null && dtA == dtB && TEMPORAL_DATATYPES.contains(dtA)) {
-      val (ka, kb) = (temporalKey(lexA, dtA), temporalKey(lexB, dtB))
-      if (ka != null && kb != null && ka.longValue != kb.longValue)
-        return java.lang.Long.compare(ka.longValue, kb.longValue)
-      if (ka != null && kb != null) return 0
-    }
-    val c = nc(lexA, lexB)
-    if (c != 0) c else { val c2 = nc(lgA, lgB); if (c2 != 0) c2 else nc(dtA, dtB) }
   }
+
+  /** A long as 8 big-endian bytes with the sign bit flipped, so the
+    * unsigned byte order is the signed numeric order.
+    */
+  private def longBytes(v: Long): Array[Byte] =
+    java.nio.ByteBuffer.allocate(8).putLong(v ^ Long.MinValue).array()
+
+  /** Order-preserving bytes of a numeric lexical form: exact for every
+    * finite value `BigDecimal` parses (past 2^53 and past
+    * decimal(38,10)), with xsd:double/float INF, -INF and NaN around
+    * them. Null for an ill-formed lexical form.
+    *
+    * A sign class (-INF 0 < negative 1 < zero 2 < positive 3 < INF 4 <
+    * NaN 5), then for a non-zero value 0.d1d2…dn × 10^e (no trailing
+    * zero digit) the exponent e as 8 bytes and one byte per digit
+    * (d + 1). A negative value inverts both (the exponent's bits, the
+    * digits as 10 - d) and ends with byte 11, so that a shorter digit
+    * string — the smaller magnitude — sorts after its extensions.
+    */
+  private def numericKey(lex: String, dt: String): Array[Byte] = {
+    val ieee = dt == Term.XSD_DOUBLE || dt == Term.XSD_FLOAT
+    lex match {
+      case "-INF" if ieee => Array[Byte](0)
+      case "INF" | "+INF" if ieee => Array[Byte](4)
+      case "NaN" if ieee => Array[Byte](5)
+      case _ =>
+        val v = try new java.math.BigDecimal(lex)
+          catch { case _: NumberFormatException => return null }
+        if (v.signum == 0) return Array[Byte](2)
+        val neg = v.signum < 0
+        val s = v.stripTrailingZeros
+        val digits = s.unscaledValue.abs.toString
+        val exp = digits.length.toLong - s.scale
+        val out = new Array[Byte](9 + digits.length + (if (neg) 1 else 0))
+        out(0) = if (neg) 1 else 3
+        System.arraycopy(longBytes(if (neg) ~exp else exp), 0, out, 1, 8)
+        var i = 0
+        while (i < digits.length) {
+          val d = digits.charAt(i) - '0'
+          out(9 + i) = (if (neg) 10 - d else d + 1).toByte
+          i += 1
+        }
+        if (neg) out(out.length - 1) = 11
+        out
+    }
+  }
+}
+
+/** An expression over term structs only: its input type check. */
+trait TermInputs extends Expression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.forall(c => Term.isStruct(c.dataType))) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs term structs, got ${children.map(_.dataType).mkString(", ")}")
 }
 
 /** See [[TermOps.termValueEquals]]. */
 final case class TermValueEquals(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (graft.rdf.Term.isStruct(left.dataType) && graft.rdf.Term.isStruct(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs two term structs, got (${left.dataType}, ${right.dataType})")
+    extends BinaryExpression with TermInputs {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "term_value_equals"
   override protected def nullSafeEval(a: Any, b: Any): Any =
@@ -259,14 +346,11 @@ final case class TermValueEquals(left: Expression, right: Expression)
   * explicitly instead of using defineCodeGen.
   */
 final case class TermArith(left: Expression, right: Expression, op: String)
-    extends BinaryExpression {
+    extends BinaryExpression with TermInputs {
   override def checkInputDataTypes(): TypeCheckResult =
     if (!Seq("+", "-", "*", "/").contains(op))
       TypeCheckResult.TypeCheckFailure(s"$prettyName: unknown operator '$op'")
-    else if (graft.rdf.Term.isStruct(left.dataType) && graft.rdf.Term.isStruct(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs two term structs, got (${left.dataType}, ${right.dataType})")
+    else super.checkInputDataTypes()
   override def dataType: DataType = graft.rdf.Term.Schema
   override def nullable: Boolean = true
   override def prettyName: String = "term_arith"
@@ -283,20 +367,32 @@ final case class TermArith(left: Expression, right: Expression, op: String)
     copy(left = l, right = r)
 }
 
-/** See [[TermOps.termValueCompare]]. */
-final case class TermValueCompare(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (graft.rdf.Term.isStruct(left.dataType) && graft.rdf.Term.isStruct(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs two term structs, got (${left.dataType}, ${right.dataType})")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "term_value_compare"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    TermOps.valueCompare(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+/** See [[TermOps.valueKey]]. */
+final case class TermValueKey(child: Expression) extends UnaryExpression with TermInputs {
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = "term_value_key"
+  override protected def nullSafeEval(t: Any): Any =
+    TermOps.valueKeyBytes(t.asInstanceOf[InternalRow])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TermOps.valueCompare($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TermValueCompare =
-    copy(left = l, right = r)
+    defineCodeGen(ctx, ev, t => s"graft.functions.TermOps.valueKeyBytes($t)")
+  override protected def withNewChildInternal(c: Expression): TermValueKey =
+    copy(child = c)
+}
+
+/** See [[TermOps.numValue]]. */
+final case class TermNumValue(child: Expression) extends UnaryExpression with TermInputs {
+  override def dataType: DataType = DecimalType(38, 10)
+  override def nullable: Boolean = true
+  override def prettyName: String = "term_num_value"
+  override protected def nullSafeEval(t: Any): Any =
+    TermOps.numValueOf(t.asInstanceOf[InternalRow])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t => {
+      s"""
+         |${ev.value} = graft.functions.TermOps.numValueOf($t);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin
+    })
+  override protected def withNewChildInternal(c: Expression): TermNumValue =
+    copy(child = c)
 }

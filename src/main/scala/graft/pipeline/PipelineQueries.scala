@@ -84,7 +84,7 @@ object PipelineQueries {
     // puts the RESULT of that path through the oracle gate
     "pl_bucketed_join" -> { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bt").toString
+      val tmp = graft.Harness.scratchDir("graft-bt").toString
       CorpusLayout.dropTable(s, "bt_corpus")
       CorpusLayout.dropTable(s, "bt_stats")
       CorpusLayout.writeBucketed(docs.select(col("doc_id"), col("source")),
@@ -103,7 +103,7 @@ object PipelineQueries {
     // rectangle); CorpusOpsSpec proves the row-group pruning side.
     "pl_zorder_rect" -> { (s, dir) =>
       val ev = t(s, dir, "events").select("event_id", "user_id", "ts")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-zo").toString
+      val tmp = graft.Harness.scratchDir("graft-zo").toString
       CorpusLayout.writeZOrdered(ev, tmp, Seq("user_id", "ts"), bits = 16)
       s.read.parquet(tmp)
         .filter(col("user_id").between(40, 80) &&

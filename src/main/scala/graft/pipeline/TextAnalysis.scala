@@ -26,20 +26,6 @@ object TextAnalysis {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** Mean token length in characters (whitespace removed). */
-  def meanTokenLen(text: Column): Column =
-    length(regexp_replace(text, " ", "")).cast("double") / size(tokens(text))
-
-  /** Fraction of tokens that are (English) stopwords. */
-  def stopwordRatio(text: Column, stopwords: Seq[String] = Seq("the", "a", "of", "and", "to")): Column = {
-    val sw = array(stopwords.map(lit): _*)
-    size(filter(tokens(text), w => array_contains(sw, w))).cast("double") / size(tokens(text))
-  }
-
-  /** Fraction of distinct tokens (vocabulary richness). */
-  def distinctRatio(text: Column): Column =
-    size(array_distinct(tokens(text))).cast("double") / size(tokens(text))
-
   /** One-pass token statistics (native expression):
     * [n_tokens, n_distinct, marker-hits per language of LANG_MARKERS].
     * Keep this in its OWN projection and derive metrics from the column
@@ -49,14 +35,9 @@ object TextAnalysis {
   def tokenStats(text: Column): Column =
     graft.functions.Sketches.tokenSetCounts(tokens(text), LANG_MARKERS.map(_._2))
 
-  /** Composite quality bucket — the usual length/stopword/richness
-    * heuristics, deterministic thresholds.
-    */
-  def qualityBucket(text: Column): Column = qualityBucketFromStats(tokenStats(text))
-
-  /** Quality bucket from a materialized [[tokenStats]] column.
-    * Semantics identical to the per-text HOF formulation: en-marker
-    * hits are the stopword count.
+  /** Composite quality bucket from a materialized [[tokenStats]]
+    * column — the usual length/stopword/richness heuristics,
+    * deterministic thresholds; en-marker hits are the stopword count.
     */
   def qualityBucketFromStats(stats: Column): Column = {
     val n = element_at(stats, 1)
@@ -78,12 +59,10 @@ object TextAnalysis {
     "fr" -> Seq("le", "les", "et", "des", "une"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  /** Predicted language: argmax marker-hit count, first-listed wins
-    * ties, "und" (undetermined) when no marker hits at all.
+  /** Predicted language from a materialized [[tokenStats]] column:
+    * argmax marker-hit count, first-listed wins ties, "und"
+    * (undetermined) when no marker hits at all.
     */
-  def langId(text: Column): Column = langIdFromStats(tokenStats(text))
-
-  /** Language ID from a materialized [[tokenStats]] column. */
   def langIdFromStats(stats: Column): Column = {
     val scores = LANG_MARKERS.zipWithIndex.map { case ((lang, _), i) =>
       lang -> element_at(stats, 3 + i)

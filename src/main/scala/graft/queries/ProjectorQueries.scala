@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.connect._
@@ -52,7 +50,7 @@ object ProjectorQueries {
   }
 
   private def mkStoreSink(s: SparkSession): QuadStoreSink =
-    new QuadStoreSink(s, new QuadStore(s, Files.createTempDirectory("projstore").toString))
+    new QuadStoreSink(s, new QuadStore(s, graft.Harness.scratchDir("projstore").toString))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // batch of 3 under a batch size of 10 → single commit at zero lag
@@ -229,7 +227,7 @@ object ProjectorQueries {
     "scale_ingest_10k" -> { (s, _) =>
       import s.implicits._
       import org.apache.spark.sql.functions.{col, expr}
-      val store = new QuadStore(s, Files.createTempDirectory("scalestore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("scalestore").toString)
       val events = graft.streaming.IngestPipeline.syntheticEvents(s, 10000L, 1000)
       (0 until 4).foreach { b =>
         graft.streaming.IngestPipeline.ingest(

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -145,7 +143,7 @@ object RdfQueries {
           Quad(null, Term.iri(s"${NS}region/$k"), Term.iri(s"${NS}key"),
             Term.typed(k.toString, Term.XSD_INTEGER)))
       }
-      val store = new QuadStore(s, Files.createTempDirectory("rdfstore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("rdfstore").toString)
       store.addQuads(0, quads)
       store.addQuads(1, quads) // idempotent re-ingest
       store.quads()
@@ -160,9 +158,9 @@ object RdfQueries {
     // oracle checks, not just the happy path.
     "rdf_store_agg_view" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("avstore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("avstore").toString)
       val view = new graft.store.AggView(s, store,
-        Files.createTempDirectory("avview").toString, Seq("predicate"))
+        graft.Harness.scratchDir("avview").toString, Seq("predicate"))
       val nations = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"), col("n_regionkey").cast("long"))
         .as[(Long, String, Long)].collect() // 25 rows; driver-side by design
@@ -200,11 +198,11 @@ object RdfQueries {
     // oracle re-derives the final rows relationally.
     "rdf_store_join_view" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("jvstore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("jvstore").toString)
       val preds = Seq(Term.iri(s"${NS}name"), Term.iri(s"${NS}nationkey"),
         Term.iri(s"${NS}acctbal"))
       val view = new graft.store.JoinView(s, store,
-        Files.createTempDirectory("jvview").toString, preds)
+        graft.Harness.scratchDir("jvview").toString, preds)
       val supps = t(s, dir, "supplier")
         .select(col("s_suppkey").cast("long"), col("s_name"),
           col("s_nationkey").cast("long"), col("s_acctbal"))
@@ -255,7 +253,7 @@ object RdfQueries {
       def termL(lex: Column) =
         Term.column(Term.LIT, lex.cast("string"), lit(Term.XSD_INTEGER).cast("string"))
       val (store, view, ctr) = viewFixtures.computeIfAbsent(dir, { _ =>
-        val st = new QuadStore(s, Files.createTempDirectory("svr").toString)
+        val st = new QuadStore(s, graft.Harness.scratchDir("svr").toString)
         val li = t(s, dir, "lineitem").select(
           col("l_orderkey").cast("long").as("ok"),
           col("l_linenumber").cast("long").as("ln"),
@@ -276,7 +274,7 @@ object RdfQueries {
         st.commitOps(0, quantity.unionByName(inOrder).unionByName(meta))
         st.compact() // bucketed base → pruned presence reads
         val v = new graft.store.AggView(s, st,
-          Files.createTempDirectory("svrview").toString, Seq("predicate"))
+          graft.Harness.scratchDir("svrview").toString, Seq("predicate"))
         v.refresh() // full init, outside the timed delta path
         (st, v, new java.util.concurrent.atomic.AtomicLong(0))
       })
@@ -298,7 +296,7 @@ object RdfQueries {
     // oracle re-derives every count from the source tables.
     "rdf_store_time_travel" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("ttstore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("ttstore").toString)
       val nations = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"), col("n_regionkey").cast("long"))
         .as[(Long, String, Long)].collect() // 25 rows; driver-side by design
@@ -325,7 +323,7 @@ object RdfQueries {
     // pins the escaping rules cross-engine
     "rdf_store_export" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("expstore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("expstore").toString)
       val regions = t(s, dir, "region")
         .select(col("r_regionkey").cast("long"), col("r_name"))
         .as[(Long, String)].collect()
@@ -453,7 +451,7 @@ object RdfQueries {
     // Add per region and one Delete per region-0 nation
     "rdf_store_change_feed" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("cdcstore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("cdcstore").toString)
       val nations = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"), col("n_regionkey").cast("long"))
         .as[(Long, String, Long)].collect()

@@ -3,7 +3,6 @@ package graft.queries
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest}
 import java.net.http.HttpResponse.BodyHandlers
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,7 +40,7 @@ object ServerQueries {
     // serialization, and the streamed chunked response.
     "server_http_select" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("srvq").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("srvq").toString)
       val nations = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_regionkey").cast("long"))
         .as[(Long, Long)].collect()
@@ -79,7 +78,7 @@ object ServerQueries {
     // the triples serialization of a named graph.
     "server_gsp_roundtrip" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("srvg").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("srvg").toString)
       val regions = t(s, dir, "region")
         .select(col("r_regionkey").cast("long"), col("r_name"))
         .as[(Long, String)].collect()
@@ -105,7 +104,7 @@ object ServerQueries {
     // literal object shapes and field order
     "sparql_results_json" -> { (s, dir) =>
       import s.implicits._
-      val store = new QuadStore(s, Files.createTempDirectory("srvj").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("srvj").toString)
       val regions = t(s, dir, "region")
         .select(col("r_regionkey").cast("long"), col("r_name"))
         .as[(Long, String)].collect()

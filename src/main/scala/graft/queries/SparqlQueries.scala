@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +35,7 @@ object SparqlQueries {
   private def fixture(name: String, dir: String, s: SparkSession)(
       build: QuadStore => Unit): QuadStore =
     fixtures.computeIfAbsent((name, dir), { _ =>
-      val store = new QuadStore(s, Files.createTempDirectory(name).toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir(name).toString)
       build(store)
       store
     })
@@ -47,7 +45,7 @@ object SparqlQueries {
     // nquads + patch events through the projector, counted with the
     // reference's exact verification query (DockerTestConfigFK.java:394)
     "sparql_count" -> { (s, _) =>
-      val store = new QuadStore(s, Files.createTempDirectory("sqstore").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("sqstore").toString)
       val events = Seq(
         ("@prefix ex: <http://example/> .\nex:s ex:p ex:o .\n", "text/turtle"),
         ("<http://example/s1> <http://example/p1> <http://example/o1> .\n",
@@ -110,7 +108,7 @@ object SparqlQueries {
               Term.iri(s"${NS}acctbal"), Term.typed(bal.toString, Term.XSD_DOUBLE)))
         }
         st.addQuads(0, quads)
-        st.writeSubjectBucketed(table, Files.createTempDirectory("spob").toString)
+        st.writeSubjectBucketed(table, graft.Harness.scratchDir("spob").toString)
       }
       val res = Sparql.execute(s.table(table),
         s"SELECT ?s ?name ?nk ?bal { ?s <${NS}name> ?name . " +
@@ -144,7 +142,7 @@ object SparqlQueries {
         })
       }
       val view = new graft.store.AggView(s, store,
-        Files.createTempDirectory("sqstatsview").toString, Seq("predicate"))
+        graft.Harness.scratchDir("sqstatsview").toString, Seq("predicate"))
       view.refresh()
       val res = Sparql.executeWithStats(store.quads(),
         s"SELECT ?s ?name ?nk { ?s <${NS}name> ?name . " +
@@ -222,7 +220,7 @@ object SparqlQueries {
     // USING-scoped INSERT WHERE — the final store state is the
     // checked result
     "sparql_update" -> { (s, _) =>
-      val store = new QuadStore(s, Files.createTempDirectory("squpd").toString)
+      val store = new QuadStore(s, graft.Harness.scratchDir("squpd").toString)
       val events = Seq(
         ("<http://x/a> <http://x/p> \"keep\" .\n" +
          "<http://x/a> <http://x/old> \"1\" .\n" +
@@ -653,8 +651,10 @@ object SparqlQueries {
     "sparql_nondet" -> { (s, dir) =>
       import s.implicits._
       val store = fixture("sqnd", dir, s) { st =>
+        // o_orderdate is a TIMESTAMP: its date part, so the dateTime
+        // lexical form is well-formed and compares on the timeline
         val rows = Tables.t(s, dir, "orders")
-          .select(col("o_orderkey").cast("long"), col("o_orderdate").cast("string"))
+          .select(col("o_orderkey").cast("long"), date_format(col("o_orderdate"), "yyyy-MM-dd"))
           .orderBy(col("o_orderkey")).limit(50)
           .as[(Long, String)].collect()
         st.addQuads(0, rows.toSeq.flatMap { case (k, d) =>
@@ -772,7 +772,7 @@ object SparqlQueries {
         quad("type", col("event_type"))
           .unionByName(quad("user", col("uid").cast("string")))
           .write.mode("overwrite")
-          .option("path", Files.createTempDirectory("scalespob").toString)
+          .option("path", graft.Harness.scratchDir("scalespob").toString)
           .bucketBy(32, "subject").sortBy("subject")
           .format("parquet").saveAsTable(table)
         table

@@ -98,20 +98,4 @@ object JsonLdWriter {
       if (first) { first = false; l } else "," + l
     } ++ Iterator("]")
   }
-
-  /** Write sharded JSON-LD; every part file is a standalone expanded
-    * document (its rows as one JSON array).
-    */
-  def exportJsonLd(quads: DataFrame, path: String): Unit = {
-    requireRepresentable(quads)
-    import quads.sparkSession.implicits._
-    jsonLdLines(quads).select(col("line")).as[String]
-      .mapPartitions { it =>
-        var first = true
-        Iterator("[") ++ it.map { l =>
-          if (first) { first = false; l } else "," + l
-        } ++ Iterator("]")
-      }
-      .write.mode("overwrite").text(path)
-  }
 }

@@ -73,8 +73,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     Sparql.EvalContext(service =
       if (allowService) SparqlService.Http else SparqlService.Disabled)
 
-  private final case class Ds(store: QuadStore, lock: Object,
-      stats: Option[AggView]) {
+  private final case class Ds(store: QuadStore, stats: Option[AggView]) {
     /** (view generation, census) — re-collected only when the view
       * pointer moves, so steady-state queries pay one pointer read.
       */
@@ -98,7 +97,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     */
   def registerDataset(name: String, store: QuadStore,
       stats: Option[AggView] = None): Unit =
-    datasets.put(name.stripPrefix("/"), Ds(store, new Object, stats))
+    datasets.put(name.stripPrefix("/"), Ds(store, stats))
 
   private[server] def censusFor(ds: Ds): Map[String, Long] = ds.stats match {
     case None => Map.empty
@@ -386,7 +385,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     * route re-decodes raw bytes and would lose the graph override).
     */
   private def applyEvents(ds: Ds, events: Seq[MaterialisedEvent],
-      noBulk: Boolean = false): Unit = ds.lock.synchronized {
+      noBulk: Boolean = false): Unit = {
     val sink =
       if (noBulk) new QuadStoreSink(spark, ds.store, Long.MaxValue)
       else new QuadStoreSink(spark, ds.store)

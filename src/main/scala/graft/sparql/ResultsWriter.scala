@@ -251,13 +251,4 @@ object ResultsWriter {
     val sep = format match { case "json" => "" case _ => "\n" }
     documentLines(df, format).mkString("", sep, "")
   }
-
-  /** Distributed export: SELECT results as sharded text files (CSV /
-    * TSV — the line-oriented formats; each task writes its partition).
-    */
-  def exportCsv(df: DataFrame, path: String): Unit =
-    csvLines(df).write.mode("overwrite").text(path)
-
-  def exportTsv(df: DataFrame, path: String): Unit =
-    tsvLines(df).write.mode("overwrite").text(path)
 }

@@ -3,6 +3,7 @@ package graft.sparql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TermOps
 import graft.plans.Checkpoints
 import graft.rdf.{Quad, RdfParseException, Term}
 
@@ -357,15 +358,15 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         val sols0 = compile(quads, pattern)
         // solution modifiers apply BEFORE instantiation (§16.2):
         // ORDER BY only observably matters with LIMIT/OFFSET since the
-        // constructed graph is a set — value-space keys as in SELECT
+        // constructed graph is a set — the value order as in SELECT
         val cset = sols0.columns.toSet
         def resolve(n: String): Column =
           if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)
         val ordered =
           if (orderBy.isEmpty) sols0
-          else sols0.orderBy(orderBy.flatMap { k =>
-            sortKeys(compileExpr(k.expr, resolve))
-              .map(c => if (k.descending) c.desc else c.asc)
+          else sols0.orderBy(orderBy.map { k =>
+            val c = TermOps.orderKey(compileExpr(k.expr, resolve))
+            if (k.descending) c.desc else c.asc
           }: _*)
         val offsetted = offset.fold(ordered)(ordered.offset)
         val sols = limit.fold(offsetted)(offsetted.limit)
@@ -440,7 +441,6 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     val bound = q.groupExprs.foldLeft(boundSol.df) { case (d, (e, as)) =>
       d.withColumn(as, compileVExpr(d, Term.Schema, e))
     }
-    def numVal(v: String) = col(v).getField("lex").try_cast("decimal(28,10)")
     def intTerm(c: Column) =
       Term.column(Term.LIT, c.cast("string"), lit(Term.XSD_INTEGER).cast("string"))
     // canonical lex: whole values render as xsd:integer ("24", not
@@ -544,8 +544,10 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         val boundCols = bound.columns.toSet
         def argCol(e: VExpr): Column = compileExpr(e,
           n => if (boundCols.contains(n)) col(n) else lit(null).cast(Term.Schema))
+        // the numeric value, narrowed to the decimal(28,10) that leaves
+        // SUM/AVG ten digits of headroom in their decimal(38,…) result
         def argVal(e: VExpr): Column =
-          argCol(e).getField("lex").try_cast("decimal(28,10)")
+          TermOps.numValue(argCol(e)).try_cast("decimal(28,10)")
         def rawAgg(func: String, arg: Option[VExpr], isDistinct: Boolean,
             separator: String): Column = func match {
           case "COUNT" =>
@@ -576,8 +578,6 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
               .otherwise(
                 if (isDistinct) sum_distinct(v) / count_distinct(v)
                 else avg(v))
-          case "MIN" => min(argVal(arg.get))
-          case "MAX" => max(argVal(arg.get))
           case "GROUP_CONCAT" =>
             // error-strict like SUM (§18.5.1.7): any argument that
             // failed to evaluate poisons the group; the EMPTY group
@@ -592,21 +592,11 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         }
         def strTerm(c: Column) = Term.column(Term.LIT, c)
         // term-typed aggregate — the sub-SELECT form, and the form
-        // expressions read: MIN/MAX return the ORIGINAL extreme term,
-        // COUNT/SUM/AVG canonical numeric literals
-        // MIN/MAX order key over ALL terms (§15.1 restricted to one
-        // aggregate's bag): numerics by value first, then non-numerics
-        // by lexical form — so MIN over strings is defined, not null
-        def ordKey(e: VExpr): Column = {
-          val c = argCol(e); val v = argVal(e)
-          // datatype/lang tie-breaks make the returned term
-          // DETERMINISTIC among value-equal candidates ("2"^^xsd:int
-          // vs "2"^^xsd:integer) — the spec leaves the pick open, a
-          // distributed engine must not leave it to partition order
-          struct(when(v.isNotNull, 0).otherwise(1).as("kind"),
-            v.as("num"), c.getField("lex").as("lex"),
-            c.getField("datatype").as("dt"), c.getField("lang").as("lg"))
-        }
+        // expressions read: MIN/MAX return the ORIGINAL extreme term
+        // by the ORDER BY order (§18.5.1: MIN over strings is defined,
+        // not null; the order's tie-breaks pick DETERMINISTICALLY among
+        // value-equal candidates, never by partition order), COUNT/SUM/
+        // AVG canonical numeric literals
         // §18.5.1: an error ANYWHERE in the aggregate's multiset makes
         // the whole aggregate an error — for MIN/MAX/GROUP_CONCAT the
         // only per-row error is an argument that failed to evaluate
@@ -620,8 +610,8 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
             sep: String): Column = func match {
           case "COUNT" => intTerm(rawAgg(func, arg, isDistinct, sep))
           case "SUM" | "AVG" => numTerm(rawAgg(func, arg, isDistinct, sep))
-          case "MIN" => errStrict(arg, min_by(argCol(arg.get), ordKey(arg.get)))
-          case "MAX" => errStrict(arg, max_by(argCol(arg.get), ordKey(arg.get)))
+          case "MIN" => errStrict(arg, min_by(argCol(arg.get), TermOps.orderKey(argCol(arg.get))))
+          case "MAX" => errStrict(arg, max_by(argCol(arg.get), TermOps.orderKey(argCol(arg.get))))
           case "GROUP_CONCAT" =>
             errStrict(arg, strTerm(rawAgg(func, arg, isDistinct, sep)))
           case "SAMPLE" => min_by(argCol(arg.get), argCol(arg.get).getField("lex"))
@@ -724,13 +714,11 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       else if (visible.length == projected.columns.length) projected.dropDuplicates()
       else projected.dropDuplicates(visible)
     var sortInput = distinct
-    val sortCols: Seq[Column] = orderKeys.zipWithIndex.flatMap { case (k, i) =>
-      val keyCols: Seq[Column] = k.expr match {
+    val sortCols: Seq[Column] = orderKeys.zipWithIndex.map { case (k, i) =>
+      val key = k.expr match {
         case VVar(n) if sortInput.columns.contains(n) =>
-          sortInput.schema(n).dataType match {
-            case _: org.apache.spark.sql.types.StructType => sortKeys(col(n))
-            case _ => Seq(col(n)) // raw SQL aggregate alias (top level)
-          }
+          if (Term.isStruct(sortInput.schema(n).dataType)) TermOps.orderKey(col(n))
+          else col(n) // raw SQL aggregate alias (top level)
         case e =>
           // expression key: materialize as a hidden column so the sort
           // stays a plain Exchange+Sort over precomputed keys
@@ -738,42 +726,15 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           val cset = sortInput.columns.toSet
           sortInput = sortInput.withColumn(name, compileExpr(e,
             n => if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)))
-          sortKeys(col(name))
+          TermOps.orderKey(col(name))
       }
-      keyCols.map(c => if (k.descending) c.desc else c.asc)
+      if (k.descending) key.desc else key.asc
     }
     val ordered = if (sortCols.isEmpty) sortInput else sortInput.orderBy(sortCols: _*)
     val offsetted = q.offset.fold(ordered)(ordered.offset)
     val limited = q.limit.fold(offsetted)(offsetted.limit)
     val hiddenLeft = limited.columns.filter(_.startsWith("#")).toIndexedSeq
     Sol(if (hiddenLeft.isEmpty) limited else limited.drop(hiddenLeft: _*), maybe)
-  }
-
-  /** ORDER BY keys in VALUE space (spec §15.1): unbound < blank < IRI
-    * < literal, numeric literals by numeric value (lexical order would
-    * put "10" before "9"), other literals by lexical form — the same
-    * type-grouped total order the FILTER comparators use. Plain
-    * columns, so the sort stays a regular Exchange+Sort (TopK with
-    * LIMIT), no custom ordering physical op.
-    */
-  private def sortKeys(c: Column): Seq[Column] = {
-    val rank = when(c.isNull, 0)
-      .when(c.getField("termType") === Term.BLANK, 1)
-      .when(c.getField("termType") === Term.IRI, 2)
-      .when(c.getField("termType") === Term.TRIPLE, 4) // after literals (spec leaves triples unordered; lex keeps it total)
-      .otherwise(3)
-    // numeric order via TWO keys: a double primary (monotonic cast,
-    // covers the full range — "1e30" is real data the exact key can't
-    // hold) and an exact DECIMAL secondary that breaks the ties the
-    // double's 53-bit mantissa collapses (integers beyond 2^53 — the
-    // same value space the FILTER comparators use). Values outside
-    // decimal(38,10) tie-break by lexical form only.
-    val lexv = c.getField("lex")
-    val numd = when(isNumericLit(c), lexv.try_cast("double"))
-      .otherwise(lit(null).cast("double"))
-    val numv = when(isNumericLit(c), lexv.try_cast("decimal(38,10)"))
-      .otherwise(lit(null).cast("decimal(38,10)"))
-    Seq(rank, numd, numv, lexv)
   }
 
   // --- compiler -------------------------------------------------------------

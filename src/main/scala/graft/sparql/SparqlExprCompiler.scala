@@ -3,6 +3,7 @@ package graft.sparql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TermOps
 import graft.plans.Checkpoints
 import graft.rdf.{RdfParseException, Term}
 
@@ -20,12 +21,6 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
     compileExpr(e,
       n => if (cols.contains(n)) col(n) else lit(null).cast(Term.Schema))
   }
-
-  /** XSD integer-family datatypes (arithmetic result stays integer). */
-  private[sparql] val INTEGER_DATATYPES: Seq[String] = Seq(
-    Term.XSD_INTEGER, Term.XSD + "int", Term.XSD + "long",
-    Term.XSD + "short", Term.XSD + "byte",
-    Term.XSD + "nonNegativeInteger", Term.XSD + "positiveInteger")
 
   private[sparql] def nullTerm: Column = lit(null).cast(Term.Schema)
 
@@ -49,17 +44,6 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       Term.column(Term.LIT,
         when(dt === Term.XSD_INTEGER, v.cast("decimal(38,0)").cast("string"))
           .otherwise(decLex(v)), dt))
-
-  /** Numeric VALUE of a term column (null for non-numeric terms —
-    * SPARQL expression error). try_cast, not cast: under ANSI mode
-    * (Spark 4 default) a data-controlled lexical outside the decimal
-    * carrier ("1e30"^^xsd:double) would otherwise throw at runtime
-    * instead of being an expression error — same for every other
-    * lexical→numeric cast in this file.
-    */
-  private[sparql] def numValueOf(c: Column): Column =
-    when(isNumericLit(c), c.getField("lex").try_cast("decimal(38,10)"))
-      .otherwise(lit(null).cast("decimal(38,10)"))
 
   private[sparql] def compileExpr(e: VExpr, resolve: String => Column): Column = e match {
     // an unbound variable is a typed-null term, so COALESCE skips it
@@ -105,7 +89,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       // incl. div-by-zero → error): the equivalent when/cast/regexp
       // column tree was ~40 nodes PER OPERATOR, which made
       // expression-heavy queries analysis/codegen-bound
-      graft.functions.TermOps.termArith(op,
+      TermOps.termArith(op,
         compileExpr(l, resolve), compileExpr(r, resolve))
     case VIf(cond, t, f) =>
       val c = compileFilter(cond, resolve)
@@ -128,7 +112,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       val a = compileExpr(arg, resolve)
       val lexC = a.getField("lex")
       val isLit = a.getField("termType") === Term.LIT
-      val srcNum = isNumericLit(a)
+      val srcNum = TermOps.isNumeric(a)
       val srcBool = isLit && a.getField("datatype") === Term.XSD_BOOLEAN
       val srcStr = isPlainString(a)
       val truthy = lexC.isin("true", "1")
@@ -146,13 +130,13 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
         case Term.XSD_BOOLEAN =>
           when((srcBool || srcStr) && truthy, typed(lit("true"), Term.XSD_BOOLEAN))
             .when((srcBool || srcStr) && falsy, typed(lit("false"), Term.XSD_BOOLEAN))
-            .when(srcNum, typed(when(numValueOf(a) =!= 0, "true")
+            .when(srcNum, typed(when(TermOps.numValue(a) =!= 0, "true")
               .otherwise("false"), Term.XSD_BOOLEAN))
             .otherwise(nullTerm)
         case Term.XSD_INTEGER =>
           // numeric sources truncate toward zero (XPath casting);
           // string sources must be integer lexicals (canonicalized)
-          val v = numValueOf(a)
+          val v = TermOps.numValue(a)
           val trunc = when(v >= 0, floor(v)).otherwise(ceil(v)).cast("decimal(38,0)")
           when(srcNum, typed(trunc.cast("string"), Term.XSD_INTEGER))
             .when(srcBool, typed(when(truthy, "1").otherwise("0"), Term.XSD_INTEGER))
@@ -160,7 +144,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               typed(lexC.try_cast("decimal(38,0)").cast("string"), Term.XSD_INTEGER))
             .otherwise(nullTerm)
         case Term.XSD_DECIMAL =>
-          when(srcNum, typed(decLex(numValueOf(a)), Term.XSD_DECIMAL))
+          when(srcNum, typed(decLex(TermOps.numValue(a)), Term.XSD_DECIMAL))
             .when(srcBool, typed(when(truthy, "1").otherwise("0"), Term.XSD_DECIMAL))
             .when(srcStr && lexC.rlike("^[+-]?(\\d+(\\.\\d*)?|\\.\\d+)$"),
               typed(decLex(lexC.try_cast("decimal(38,10)")), Term.XSD_DECIMAL))
@@ -233,8 +217,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
           // string end the way Spark's negative-start substr does
           def clampPos(c: Column) = greatest(least(floor(c + 0.5),
             lit(Int.MaxValue.toDouble)), lit(Int.MinValue.toDouble)).cast("long")
-          val s0 = clampPos(numValueOf(a(1)))
-          val l0 = if (args.size > 2) clampPos(numValueOf(a(2)))
+          val s0 = clampPos(TermOps.numValue(a(1)))
+          val l0 = if (args.size > 2) clampPos(TermOps.numValue(a(2)))
             else lit(Int.MaxValue.toLong)
           val from = greatest(s0, lit(1L))
           val len = greatest(s0 + l0 - from, lit(0L))
@@ -270,20 +254,20 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               when(p > 0, like0(lex(0).substr(p + sep.length, lit(Int.MaxValue))))
                 .otherwise(plainStrTerm(lit("")))
             })
-        case "ABS" => numericTerm(abs(numValueOf(a(0))),
-          when(a(0).getField("datatype").isin(INTEGER_DATATYPES: _*),
+        case "ABS" => numericTerm(abs(TermOps.numValue(a(0))),
+          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
             lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
         // XPath fn:round: half rounds toward positive infinity
         // (round(-2.5) = -2), which is floor(x + 0.5)
         case "ROUND" => numericTerm(
-          floor(numValueOf(a(0)) + lit(0.5)).cast("decimal(38,10)"),
-          when(a(0).getField("datatype").isin(INTEGER_DATATYPES: _*),
+          floor(TermOps.numValue(a(0)) + lit(0.5)).cast("decimal(38,10)"),
+          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
             lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
-        case "CEIL" => numericTerm(ceil(numValueOf(a(0))).cast("decimal(38,10)"),
-          when(a(0).getField("datatype").isin(INTEGER_DATATYPES: _*),
+        case "CEIL" => numericTerm(ceil(TermOps.numValue(a(0))).cast("decimal(38,10)"),
+          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
             lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
-        case "FLOOR" => numericTerm(floor(numValueOf(a(0))).cast("decimal(38,10)"),
-          when(a(0).getField("datatype").isin(INTEGER_DATATYPES: _*),
+        case "FLOOR" => numericTerm(floor(TermOps.numValue(a(0))).cast("decimal(38,10)"),
+          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
             lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
         case "IRI" | "URI" =>
           // §17.4.2.8: the argument must be an IRI, a simple literal,
@@ -502,7 +486,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
         case "ISBLANK" => c.getField("termType") === Term.BLANK
         case "ISLITERAL" => c.getField("termType") === Term.LIT
         // a numeric TERM whose lexical form actually parses
-        case "ISNUMERIC" => isNumericLit(c) && numValueOf(c).isNotNull
+        case "ISNUMERIC" => TermOps.isNumeric(c) && TermOps.numValue(c).isNotNull
         case "ISTRIPLE" => c.getField("termType") === Term.TRIPLE
         // SPARQL 1.2: does the literal carry a language / a direction
         case "HASLANG" =>
@@ -540,27 +524,28 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       when(c.getField("termType") === Term.LIT &&
           c.getField("datatype") === Term.XSD_BOOLEAN,
           c.getField("lex") === "true" || c.getField("lex") === "1")
-        .when(isNumericLit(c), numValueOf(c) =!= lit(0))
+        .when(TermOps.isNumeric(c), TermOps.numValue(c) =!= lit(0))
         .when(isPlainString(c), length(c.getField("lex")) > 0)
         .otherwise(lit(null).cast("boolean")) // type error → row dropped
     case FCmp(l, op, r) =>
       val lc = compileExpr(l, resolve)
       val rc = compileExpr(r, resolve)
-      import graft.functions.TermOps
+      // ordering is VALUE-space too: "9"^^xsd:integer <
+      // "10"^^xsd:integer, on the value keys ORDER BY sorts by (the
+      // lexical order is inverted there). Incomparable operand kinds
+      // are a TYPE ERROR (null), not false — so FILTER drops the row,
+      // !(…) stays an error, and IF propagates the error (§17.2)
+      def ordered(cmp: (Column, Column) => Column): Column =
+        when(comparable(l, r, resolve), cmp(TermOps.valueKey(lc), TermOps.valueKey(rc)))
       op match {
         // SPARQL VALUE equality, not structural: "01"^^xsd:integer
         // equals "1"^^xsd:integer (graft.functions.TermValueEquals)
         case "=" => valueEq(lc, rc)
         case "!=" => !valueEq(lc, rc)
-        // ordering is VALUE-space too: "9"^^xsd:integer <
-        // "10"^^xsd:integer (numeric by BigDecimal; the lexical order
-        // is inverted there). Incomparable operand kinds are a TYPE
-        // ERROR (null), not false — so FILTER drops the row, !(…)
-        // stays an error, and IF propagates the error (§17.2)
-        case "<" => when(comparable(l, r, resolve), TermOps.termValueCompare(lc, rc) < 0)
-        case ">" => when(comparable(l, r, resolve), TermOps.termValueCompare(lc, rc) > 0)
-        case "<=" => when(comparable(l, r, resolve), TermOps.termValueCompare(lc, rc) <= 0)
-        case ">=" => when(comparable(l, r, resolve), TermOps.termValueCompare(lc, rc) >= 0)
+        case "<" => ordered(_ < _)
+        case ">" => ordered(_ > _)
+        case "<=" => ordered(_ <= _)
+        case ">=" => ordered(_ >= _)
         case other => throw new RdfParseException(s"unsupported FILTER op '$other'")
       }
   }
@@ -572,9 +557,9 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
   private[sparql] def valueEq(lc: Column, rc: Column): Column = {
     val bothLit = lc.getField("termType") === Term.LIT &&
       rc.getField("termType") === Term.LIT
-    when(bothLit && (isNumericLit(lc) =!= isNumericLit(rc)),
+    when(bothLit && (TermOps.isNumeric(lc) =!= TermOps.isNumeric(rc)),
       lit(null).cast("boolean"))
-      .otherwise(graft.functions.TermOps.termValueEquals(lc, rc))
+      .otherwise(TermOps.termValueEquals(lc, rc))
   }
 
   /** Datatypes with a defined `<` beyond numerics and simple strings
@@ -602,7 +587,8 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
     case _ =>
       val a = compileExpr(l, resolve)
       val b = compileExpr(r, resolve)
-      when(isNumericLit(a) || isNumericLit(b), isNumericLit(a) && isNumericLit(b))
+      val (na, nb) = (TermOps.isNumeric(a), TermOps.isNumeric(b))
+      when(na || nb, na && nb)
         .when(isPlainString(a) || isPlainString(b), isPlainString(a) && isPlainString(b))
         // IRI / blank / lang-tagged / mismatched datatypes: TYPE ERROR
         // (spec §17.3 leaves them without an order; the total-order
@@ -610,18 +596,12 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
         .otherwise(sameOrderableDt(a, b))
   }
 
-  private[sparql] def isNumericLit(c: Column): Column =
-    c.getField("termType") === Term.LIT &&
-      // datatype is null for plain literals — that's false, not unknown
-      coalesce(c.getField("datatype")
-        .isin(graft.functions.TermOps.NUMERIC_DATATYPES.toSeq: _*), lit(false))
-
   private[sparql] def isPlainString(c: Column): Column =
     c.getField("termType") === Term.LIT && c.getField("lang").isNull &&
       (c.getField("datatype").isNull || c.getField("datatype") === Term.XSD_STRING)
 
   private[sparql] def comparableWith(c: Column, t: Term): Column = {
-    import graft.functions.TermOps.NUMERIC_DATATYPES
+    import TermOps.NUMERIC_DATATYPES
     val isLit = c.getField("termType") === Term.LIT
     if (t.termType == Term.LIT && t.datatype != null &&
         NUMERIC_DATATYPES.contains(t.datatype))

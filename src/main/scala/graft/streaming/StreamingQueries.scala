@@ -33,7 +33,7 @@ object StreamingQueries {
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     // the file-stream source requires a DIRECTORY; expose the single
     // events.parquet file through a temp dir via symlink
-    val streamDir = Files.createTempDirectory("events_stream")
+    val streamDir = graft.Harness.scratchDir("events_stream")
     Files.createSymbolicLink(streamDir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     val tsType = graft.queries.Tables
@@ -54,7 +54,7 @@ object StreamingQueries {
     */
   private def eventsStreamWithSentinels(s: SparkSession, dir: String,
       sentinels: Seq[(Long, String)]): DataFrame = {
-    val streamDir = Files.createTempDirectory("events_stream_sent")
+    val streamDir = graft.Harness.scratchDir("events_stream_sent")
     Files.createSymbolicLink(streamDir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     val raw = s.read.schema(graft.queries.Tables
@@ -70,7 +70,7 @@ object StreamingQueries {
         .withColumn("user_id", lit(id))
         .withColumn("event_type", lit(kind))
     }
-    val sentTmp = Files.createTempDirectory("sentinel")
+    val sentTmp = graft.Harness.scratchDir("sentinel")
     sentinels.map { case (id, kind) => sentinel(id, kind) }
       .reduce(_ unionByName _)
       .coalesce(1).write.mode("overwrite").parquet(sentTmp.toString)
@@ -161,7 +161,7 @@ object StreamingQueries {
     overrides.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+        .option("checkpointLocation", graft.Harness.scratchDir("ckpt").toString)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()

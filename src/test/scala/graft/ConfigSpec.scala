@@ -142,7 +142,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("fk:configFile as literal and file: URI; missing file is an error (ref :151-217,253-292)") {
-    val f = Files.createTempFile("kafka", ".properties")
+    val f = Files.createTempFile(Harness.scratchDir("kafka"), "kafka", ".properties")
     Files.writeString(f, "security.protocol=SSL\nextra.prop=1\n")
     val ok = assemble(MINIMAL.replace(".\n", s"""; fk:configFile "$f" .\n"""))
     assert(ok.kafkaProps("security.protocol") == "SSL")
@@ -155,7 +155,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("fk:configFile via env: indirection; empty resolution ignored (ref :219-312)") {
-    val f = Files.createTempFile("kafka", ".properties")
+    val f = Files.createTempFile(Harness.scratchDir("kafka"), "kafka", ".properties")
     Files.writeString(f, "from.env=yes\n")
     sys.props("GRAFT_TEST_PROPS") = f.toString
     try {
@@ -208,7 +208,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("cluster: config file on the cluster is inherited (ref :479-498)") {
-    val f = Files.createTempFile("cluster", ".properties")
+    val f = Files.createTempFile(Harness.scratchDir("cluster"), "cluster", ".properties")
     Files.writeString(f, "cluster.file.key=yes\n")
     val c = assemble(CLUSTER.replace("fk:groupId \"ClusterGroup\" .",
       s"""fk:groupId "ClusterGroup" ; fk:configFile "$f" ."""))
@@ -259,7 +259,7 @@ class ConfigSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     val g = graft.rdf.TurtleParser.parseTurtle(PREFIXES + MINIMAL)
     val store = new graft.store.QuadStore(spark,
-      java.nio.file.Files.createTempDirectory("cfgprobe").toString)
+      Harness.scratchDir("cfgprobe").toString)
     store.addQuads(0, g.map(q => q.copy(graph = null)))
     val node = ConnectorAssembler.connectorNodes(g).head
     val probe = graft.sparql.Sparql.execute(store.quads(),

@@ -147,7 +147,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("writeZOrdered: empty and null-valued inputs write cleanly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zedge").toString
+    val dir = Harness.scratchDir("zedge").toString
     graft.pipeline.CorpusLayout.writeZOrdered(
       Seq.empty[(Long, Long)].toDF("a", "b"), dir, Seq("a", "b"), bits = 8)
     assert(spark.read.parquet(dir).count() == 0)
@@ -173,8 +173,8 @@ class CorpusOpsSpec extends AnyFunSuite {
         (i.toLong, rnd.nextInt(1 << 16).toLong, rnd.nextInt(1 << 16).toLong)
       }
       val df = rows.toDF("id", "uid", "t")
-      val zDir = java.nio.file.Files.createTempDirectory("zord").toString
-      val linDir = java.nio.file.Files.createTempDirectory("lin").toString
+      val zDir = Harness.scratchDir("zord").toString
+      val linDir = Harness.scratchDir("lin").toString
       graft.pipeline.CorpusLayout.writeZOrdered(df, zDir,
         Seq("uid", "t"), bits = 16, nFiles = 4)
       df.repartitionByRange(4, col("t")).sortWithinPartitions(col("t"))

@@ -1172,15 +1172,15 @@ class DifferentialFuzzSpec extends AnyFunSuite {
 
   // --- ORDER BY / LIMIT / OFFSET differential --------------------------------
 
-  /** The engine's total order key per ORDER BY expression
-    * (Sparql.sortKeys): class rank (unbound 0 < blank 1 < IRI 2 <
-    * literal 3 < quoted triple 4), then numeric double, then exact
-    * decimal, then lexical form. Components 2-4 are null for
-    * non-applicable terms; ascending sorts nulls FIRST, and DESC flips
-    * per component via Column.desc, which sorts nulls LAST — both
-    * mirrored in [[cmpKeys]]. Note the key deliberately excludes
-    * datatype/lang, so "2"^^xsd:integer vs "2.0"^^xsd:decimal break
-    * on lex and "a" vs "a"@en genuinely TIE (one equivalence class).
+  /** A coarse model of the engine's ORDER BY order (TermOps.orderKey)
+    * over this generator's terms: class rank (unbound 0 < blank 1 <
+    * IRI 2 < literal 3 < quoted triple 4), then numeric double, then
+    * exact decimal, then lexical form. Components 2-4 are null for
+    * non-applicable terms; ascending sorts nulls FIRST, and DESC sorts
+    * them LAST — both mirrored in [[cmpKeys]]. The model leaves out
+    * the engine's language/datatype tie-breaks, so "2"^^xsd:integer vs
+    * "2.0"^^xsd:decimal break on lex and "a" vs "a"@en TIE here (one
+    * equivalence class, any engine order inside it passes).
     */
   private type KV = (Int, Option[Double], Option[java.math.BigDecimal], Option[String])
   private type KeyV = Seq[KV]
@@ -1357,5 +1357,101 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       }
     }
     info(s"${N / 2} generated, $skipped skipped")
+  }
+
+  // --- one value order over mixed terms --------------------------------------
+
+  /** A random bag of mixed terms: IRIs, blanks, plain and language-
+    * tagged strings, numerics of several datatypes (some past
+    * decimal(38,10), some IEEE infinities) and dateTimes in several
+    * zones (and none: taken as UTC, the engine's fixed choice).
+    */
+  private def genMixedBag(rnd: scala.util.Random): Seq[Term] = {
+    val big = "1" + "0" * 35
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    def gen(): Term = rnd.nextInt(7) match {
+      case 0 => Term.iri(s"http://f/i${rnd.nextInt(3)}")
+      case 1 => Term.blank(s"b${rnd.nextInt(3)}")
+      case 2 => Term.lit(pick(Seq("a", "b", "apple", "Zebra", "12")))
+      case 3 => Term.langLit(pick(Seq("a", "apple")), pick(Seq("en", "fr")))
+      case 4 | 5 => pick(Seq(
+        Term.typed(s"${rnd.nextInt(21) - 10}", Term.XSD_INTEGER),
+        Term.typed(pick(Seq("", "-")) + big + rnd.nextInt(3), Term.XSD_INTEGER),
+        Term.typed(pick(Seq("0.5", "-2.50", "3.0", "1")), Term.XSD_DECIMAL),
+        Term.typed(pick(Seq("1e30", "-1.5E2", "2.5", "INF", "-INF")), XSD_DOUBLE),
+        Term.typed(pick(Seq("2.5", "7")), Term.XSD + "float"),
+        Term.typed(pick(Seq("3", "-7")), Term.XSD + "int")))
+      case _ =>
+        val zone = pick(Seq("Z", "+02:00", "-05:30", ""))
+        Term.typed(f"2020-01-01T${rnd.nextInt(24)}%02d:${pick(Seq(0, 30))}%02d:00$zone",
+          Term.XSD_DATETIME)
+    }
+    Seq.fill(4 + rnd.nextInt(9))(gen())
+  }
+
+  /** SPARQL `<` over two terms (§17.3 operator mapping), independent of
+    * the engine: Some(sign) when the pair is comparable — numerics by
+    * value (IEEE infinities outside every finite value), simple
+    * strings by code point, dateTimes on the timeline — else None.
+    */
+  private def sparqlCompare(a: Term, b: Term): Option[Int] = {
+    def num(t: Term): Option[(Int, java.math.BigDecimal)] =
+      if (!t.isLit || !graft.functions.TermOps.NUMERIC_DATATYPES.contains(t.datatype)) None
+      else t.lex match {
+        case "-INF" => Some((0, java.math.BigDecimal.ZERO))
+        case "INF" => Some((2, java.math.BigDecimal.ZERO))
+        case l => Some((1, new java.math.BigDecimal(l)))
+      }
+    def plain(t: Term) = t.isLit && t.lang == null &&
+      (t.datatype == null || t.datatype == Term.XSD_STRING)
+    def instant(t: Term): Option[java.time.Instant] =
+      if (!t.isLit || t.datatype != Term.XSD_DATETIME) None
+      else Some(scala.util.Try(java.time.OffsetDateTime.parse(t.lex).toInstant)
+        .getOrElse(java.time.LocalDateTime.parse(t.lex).toInstant(java.time.ZoneOffset.UTC)))
+    (num(a), num(b), instant(a), instant(b)) match {
+      case (Some((ca, va)), Some((cb, vb)), _, _) =>
+        Some(if (ca != cb) Integer.compare(ca, cb) else va.compareTo(vb).sign)
+      case (_, _, Some(ia), Some(ib)) => Some(ia.compareTo(ib).sign)
+      case _ if plain(a) && plain(b) => Some(a.lex.compareTo(b.lex).sign)
+      case _ => None
+    }
+  }
+
+  test("value order: ORDER BY, MIN/MAX and FILTER < agree on random mixed bags") {
+    import spark.implicits._
+    val trials = math.max(8, N / 6)
+    (0 until trials).foreach { i =>
+      val rnd = new scala.util.Random(SEED * 7340033L + i)
+      val bag = genMixedBag(rnd)
+      val subj = bag.indices.map(k => Term.iri(s"http://f/s$k"))
+      val p = Term.iri("http://f/v")
+      val df = bag.indices.map(k => ConformanceQuad(null, subj(k), p, bag(k))).toDF()
+      val diag = s"[$i] bag=${bag.map(_.toNT).mkString(" ")}"
+      def terms(q: String): Seq[Term] = collectSols(Sparql.execute(df, q))
+        .map(_.getOrElse("v", null))
+      val asc = terms("SELECT ?v { ?s <http://f/v> ?v } ORDER BY ?v")
+      val desc = terms("SELECT ?v { ?s <http://f/v> ?v } ORDER BY DESC(?v)")
+      assert(asc.sortBy(_.toNT) == bag.sortBy(_.toNT), diag)
+      assert(desc == asc.reverse, s"$diag\nasc=${asc.map(_.toNT)}\ndesc=${desc.map(_.toNT)}")
+      for (j <- asc.indices; k <- j + 1 until asc.size) {
+        assert(!sparqlCompare(asc(k), asc(j)).contains(-1),
+          s"$diag\nASC row $k ${asc(k).toNT} < earlier row $j ${asc(j).toNT}")
+        assert(!sparqlCompare(desc(k), desc(j)).contains(1),
+          s"$diag\nDESC row $k ${desc(k).toNT} > earlier row $j ${desc(j).toNT}")
+      }
+      val mm = collectSols(Sparql.execute(df,
+        "SELECT (MIN(?v) AS ?lo) (MAX(?v) AS ?hi) { ?s <http://f/v> ?v }")).head
+      assert(mm.get("lo").contains(asc.head) && mm.get("hi").contains(asc.last),
+        s"$diag\nmin/max=$mm asc=${asc.map(_.toNT)}")
+      // the engine's `<` is the same comparison, type errors included
+      val lt = Sparql.execute(df, "SELECT ?a ?b { ?a <http://f/v> ?x . " +
+          "?b <http://f/v> ?y FILTER(?x < ?y) }")
+        .collect().map(r => (r.getStruct(0).getString(1), r.getStruct(1).getString(1))).toSet
+      val expected = (for (j <- bag.indices; k <- bag.indices
+          if sparqlCompare(bag(j), bag(k)).contains(-1))
+        yield (subj(j).lex, subj(k).lex)).toSet
+      assert(lt == expected, s"$diag\nmissing=${expected -- lt}\nextra=${lt -- expected}")
+    }
+    info(s"$trials bags")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.connect._
@@ -18,7 +16,7 @@ class EndToEndSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("config TTL to SPARQL count, end to end") {
-    val stateDir = Files.createTempDirectory("e2e")
+    val stateDir = Harness.scratchDir("e2e")
     val ttl =
       s"""@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .
          |@prefix fk: <http://jena.apache.org/fuseki/kafka#> .
@@ -52,7 +50,7 @@ class EndToEndSpec extends AnyFunSuite {
         Map("Content-Type" -> ct))
     }
 
-    val store = new QuadStore(spark, Files.createTempDirectory("e2estore").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("e2estore").toString)
     val factory = new EventSourceFactory {
       override def create(cfg: ConnectorConfig, policy: ReadPolicy,
           start: Map[(String, Int), Long]): EventSource =

@@ -21,7 +21,7 @@ class EngineSpec extends AnyFunSuite {
   private def cfg(topic: String = "T1", group: String = "G1",
       ds: String = "/ds", sync: Boolean = true, replay: Boolean = false,
       check: Boolean = false): ConnectorConfig = {
-    val dir = Files.createTempDirectory("engine")
+    val dir = Harness.scratchDir("engine")
     ConnectorConfig(Seq(topic), "b:9092", ds, dir.resolve(s"$group.state").toString,
       syncTopic = sync, replayTopic = replay, checkTopicAtStartup = check, None,
       Map("group.id" -> group))
@@ -149,7 +149,7 @@ class EngineSpec extends AnyFunSuite {
     val c = cfg(group = "GRes")
     val rc = engine.start(Seq(c)).head
     // restore requires a pause first
-    val external = Files.createTempDirectory("restore").resolve("ext.state")
+    val external = Harness.scratchDir("restore").resolve("ext.state")
     Files.writeString(external,
       """{"dataset": "/ds", "offsets": {"T1-0-otherGroup": 40, "T1-0-G9": 35}}""")
     intercept[IllegalArgumentException] { engine.restoreOffsets("/ds", external) }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
@@ -220,7 +218,7 @@ class FuzzSpec extends AnyFunSuite {
 
   private lazy val fuzzStore: QuadStore = {
     val st = new QuadStore(TestSpark.spark,
-      Files.createTempDirectory("fuzzstore").toString)
+      Harness.scratchDir("fuzzstore").toString)
     st.addQuads(0, Seq(
       Quad(null, Term.iri("http://x/s"), Term.iri("http://x/p"), Term.lit("o")),
       // a quoted-triple subject so generated star patterns can match

@@ -119,7 +119,7 @@ class KafkaSpec extends AnyFunSuite {
     StubBroker.reset(); StubBroker.createTopic("e2e")
     (0 until 10).foreach(i => StubBroker.send("e2e", 0, nq(i), CT))
     val s = src("e2e", ReadPolicy.Replay, group = "ge2e")
-    val store = new QuadStore(spark, Files.createTempDirectory("kafkae2e").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("kafkae2e").toString)
     val p = new Projector(s, new QuadStoreSink(spark, store),
       ProjectorConfig(batchSize = 4))
     p.runToCompletion()
@@ -151,7 +151,7 @@ class KafkaSpec extends AnyFunSuite {
   test("GraftServer.kafka: full production wiring over the stub broker") {
     StubBroker.reset(); StubBroker.createTopic("RDFK")
     (0 until 2).foreach(i => StubBroker.send("RDFK", 0, nq(i), CT))
-    val stateDir = Files.createTempDirectory("gk")
+    val stateDir = Harness.scratchDir("gk")
     val ttl =
       s"""@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .
          |@prefix fk: <http://jena.apache.org/fuseki/kafka#> .
@@ -165,7 +165,7 @@ class KafkaSpec extends AnyFunSuite {
          |  fk:stateFile "$stateDir/RDFK.state" .
          |""".stripMargin
     val srv = graft.server.GraftServer.kafka(spark,
-      Files.createTempDirectory("gkstores"))
+      Harness.scratchDir("gkstores"))
     val port = srv.start(ttl) // topic gate answered by the stub listing
     try {
       val client = java.net.http.HttpClient.newHttpClient()
@@ -219,7 +219,7 @@ class KafkaSpec extends AnyFunSuite {
     // Properties unmodified
     val jaas = "org.apache.kafka.common.security.plain.PlainLoginModule " +
       "required username=\"client\" password=\"client-secret\";"
-    val propsFile = Files.createTempFile("sec", ".properties")
+    val propsFile = Files.createTempFile(Harness.scratchDir("sec"), "sec", ".properties")
     Files.writeString(propsFile,
       "ssl.truststore.location=/etc/pki/trust.p12\n" +
       "ssl.truststore.password=trust-secret\n")

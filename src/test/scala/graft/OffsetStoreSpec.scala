@@ -11,7 +11,7 @@ import graft.connect.{ConfigException, EnvVariables, OffsetStore}
   */
 class OffsetStoreSpec extends AnyFunSuite {
 
-  private def tmp(): Path = Files.createTempDirectory("osspec")
+  private def tmp(): Path = Harness.scratchDir("osspec")
   private def mk(dir: Path, ds: String = "/ds", group: String = "G1") =
     new OffsetStore(ds, dir.resolve("state.json"), group)
 

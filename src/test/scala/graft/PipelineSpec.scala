@@ -456,7 +456,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("bucketed corpus layout: co-located join plans with NO exchange") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed")
+    val dir = Harness.scratchDir("graft-bucketed")
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // forbid broadcast: the pin proves co-location, not small-size luck
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -80,7 +80,7 @@ class ProjectorSpec extends AnyFunSuite {
     // bulk event 4 re-adds one of them — each must win in event order
     def run(threshold: Long): Set[String] = {
       val store = new graft.store.QuadStore(TestSpark.spark,
-        java.nio.file.Files.createTempDirectory("bulkroute").toString)
+        Harness.scratchDir("bulkroute").toString)
       val sink = new QuadStoreSink(TestSpark.spark, store, bulkBytesThreshold = threshold)
       def nq(i: Long, body: String) = Event("t", 0, i, Array.empty,
         body.getBytes("UTF-8"), Map("Content-Type" -> "application/n-quads"))
@@ -109,7 +109,7 @@ class ProjectorSpec extends AnyFunSuite {
     // a batch carrying a SPARQL Update stays on the driver path even
     // past the threshold (sequential WHERE state) — and still applies
     val store2 = new graft.store.QuadStore(TestSpark.spark,
-      java.nio.file.Files.createTempDirectory("bulkupd").toString)
+      Harness.scratchDir("bulkupd").toString)
     val sink2 = new QuadStoreSink(TestSpark.spark, store2, bulkBytesThreshold = 1L)
     val evs2 = Seq(
       ev(0),
@@ -128,7 +128,7 @@ class ProjectorSpec extends AnyFunSuite {
     // the sink owns one checkpoint scope per commit: the fixpoint the
     // WHERE's `+` path materializes is dead once the segment is written
     val store = new graft.store.QuadStore(TestSpark.spark,
-      Files.createTempDirectory("sinkpath").toString)
+      Harness.scratchDir("sinkpath").toString)
     val chain = (0 until 6).map(i =>
       s"<http://g/n$i> <http://g/next> <http://g/n${i + 1}> .").mkString("\n")
     val update = "INSERT { ?s <http://g/reach> ?o } WHERE { ?s <http://g/next>+ ?o }"
@@ -147,7 +147,7 @@ class ProjectorSpec extends AnyFunSuite {
 
   test("cross-event TA aborts ops carried from the opening event") {
     val store = new graft.store.QuadStore(TestSpark.spark,
-      java.nio.file.Files.createTempDirectory("txnabort").toString)
+      Harness.scratchDir("txnabort").toString)
     val sink = new QuadStoreSink(TestSpark.spark, store)
     val src = new MemoryEventSource(Seq(
       patchEv(0, "TX .\nA <http://g/a> <http://g/p> \"gone\" ."),
@@ -162,7 +162,7 @@ class ProjectorSpec extends AnyFunSuite {
 
   test("prefix ops of an aborted patch transaction leave the prefix map unchanged") {
     val store = new graft.store.QuadStore(TestSpark.spark,
-      Files.createTempDirectory("txnprefix").toString)
+      Harness.scratchDir("txnprefix").toString)
     val src = new MemoryEventSource(Seq(
       patchEv(0, "TX .\nPA \"p\" <http://g/p#> .\nTA ."),
       patchEv(1, "TX .\nPA \"q\" <http://g/q#> ."),
@@ -229,7 +229,7 @@ class ProjectorSpec extends AnyFunSuite {
 
     def run(events: Seq[Seq[Line]]): (Set[String], Map[String, String], Seq[Long]) = {
       val store = new graft.store.QuadStore(TestSpark.spark,
-        Files.createTempDirectory("patchmodel").toString)
+        Harness.scratchDir("patchmodel").toString)
       val dlq = new MemoryDlqSink
       // unknown lag and a large batch: only the patch-closed trigger,
       // a rejection and the final stall commit
@@ -364,7 +364,7 @@ class ProjectorSpec extends AnyFunSuite {
   }
 
   test("offsets saved as next-to-read and flushed on commit") {
-    val dir = Files.createTempDirectory("offstore")
+    val dir = Harness.scratchDir("offstore")
     val os = new OffsetStore("/ds", dir.resolve("state.json"), "g1")
     val src = new MemoryEventSource(Seq(ev(0), ev(1), ev(2)))
     val sink = new CountingSink
@@ -399,7 +399,7 @@ class ProjectorSpec extends AnyFunSuite {
   }
 
   test("FileEventSource: one event per file, content type by extension, in order") {
-    val dir = Files.createTempDirectory("fes")
+    val dir = Harness.scratchDir("fes")
     Files.writeString(dir.resolve("a.ttl"), "@prefix ex: <http://example/> .\nex:s ex:p ex:o .\n")
     Files.writeString(dir.resolve("b.nq"), "<http://x/s> <http://x/p> \"v\" .\n")
     Files.writeString(dir.resolve("c.rdfp"), "TX .\nA <http://x/a> <http://x/p> \"w\" .\nTC .\n")

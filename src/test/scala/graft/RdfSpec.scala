@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -723,7 +722,7 @@ class QuadStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshStore(): QuadStore =
-    new QuadStore(spark, Files.createTempDirectory("quadstore").toString)
+    new QuadStore(spark, Harness.scratchDir("quadstore").toString)
 
   test("golden counts: data.ttl → 1, + data.nq → 2 (DockerTestConfigFK single connector)") {
     val store = freshStore()

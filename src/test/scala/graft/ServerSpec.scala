@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,7 +46,7 @@ class ServerSpec extends AnyFunSuite {
   }
 
   private def withServer(f: (SparqlHttp, String, QuadStore) => Unit): Unit = {
-    val store = new QuadStore(spark, Files.createTempDirectory("httpds").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("httpds").toString)
     val srv = new SparqlHttp(spark)
     srv.registerDataset("ds", store)
     srv.start()
@@ -208,6 +207,27 @@ class ServerSpec extends AnyFunSuite {
     }
   }
 
+  test("concurrent patch requests serialize: 16 commits in 16 distinct batches") {
+    // every HTTP mutation commits under the store's writer lock, the
+    // lock the connector's sink shares: 4 client threads x 4 patches
+    // of one quad each must land all 16 quads in 16 distinct batches
+    withServer { (_, base, store) =>
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = (0 until 4).map { t =>
+        new Thread(() =>
+          try (0 until 4).foreach { i =>
+            val r = post(s"$base/ds/patch", "application/rdf-patch",
+              s"A <http://x/w$t-$i> <http://x/p> \"1\" .\n")
+            assert(r.statusCode == 204, r.body)
+          } catch { case e: Throwable => errs.add(e) })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(errs.isEmpty, s"client thread failed: ${errs.peek()}")
+      assert(store.count() == 16L)
+      assert(store.availableBatches() == (0L until 16L))
+    }
+  }
+
   test("protocol dataset params scope the query like FROM / FROM NAMED") {
     withServer { (_, base, store) =>
       seed(store)
@@ -223,7 +243,7 @@ class ServerSpec extends AnyFunSuite {
 
   test("GraftServer: config TTL boots engine + HTTP; ingest visible over /query") {
     import graft.connect._
-    val stateDir = Files.createTempDirectory("gsrv")
+    val stateDir = Harness.scratchDir("gsrv")
     val ttl =
       s"""@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .
          |@prefix fk: <http://jena.apache.org/fuseki/kafka#> .
@@ -248,7 +268,7 @@ class ServerSpec extends AnyFunSuite {
         new MemoryEventSource(events.filter(_.offset >= start.getOrElse(("RDF", 0), 0L)))
     }
     val srv = new graft.server.GraftServer(spark, factory,
-      Files.createTempDirectory("gsrvstores"))
+      Harness.scratchDir("gsrvstores"))
     val port = srv.start(ttl)
     try {
       val base = s"http://127.0.0.1:$port"
@@ -287,7 +307,7 @@ class ServerSpec extends AnyFunSuite {
   // --- ResultsWriter unit behavior (no HTTP) --------------------------------
 
   test("results JSON escapes and omits unbound; lang literals tagged") {
-    val store = new QuadStore(spark, Files.createTempDirectory("rw").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("rw").toString)
     store.addQuads(0, Seq(
       Quad(null, Term.iri("http://x/a"), Term.iri("http://x/p"),
         Term.lit("with \"quote\"\nand newline")),
@@ -308,7 +328,7 @@ class ServerSpec extends AnyFunSuite {
   }
 
   test("tsv round-trips terms through the n-quads parser") {
-    val store = new QuadStore(spark, Files.createTempDirectory("rw2").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("rw2").toString)
     store.addQuads(0, Seq(
       Quad(null, Term.iri("http://x/a"), Term.iri("http://x/p"),
         Term.typed("3.14", Term.XSD_DECIMAL))))
@@ -350,7 +370,7 @@ class ServerSpec extends AnyFunSuite {
   }
 
   test("statistics view steers queries: census cached per generation, results exact") {
-    val store = new QuadStore(spark, Files.createTempDirectory("httpds").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("httpds").toString)
     store.addQuads(0, (1 to 20).flatMap { i =>
       Seq(
         Quad(null, Term.iri(s"http://x/s$i"), Term.iri("http://x/common"),
@@ -360,7 +380,7 @@ class ServerSpec extends AnyFunSuite {
     } :+ Quad(null, Term.iri("http://x/s1"), Term.iri("http://x/rare"),
       Term.lit("extra")))
     val view = new graft.store.AggView(spark, store,
-      Files.createTempDirectory("httpstats").toString, Seq("predicate"))
+      Harness.scratchDir("httpstats").toString, Seq("predicate"))
     view.refresh()
     val srv = new SparqlHttp(spark)
     srv.registerDataset("ds", store, Some(view))

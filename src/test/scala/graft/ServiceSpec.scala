@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,7 +34,7 @@ class ServiceSpec extends AnyFunSuite {
       BodyHandlers.ofString)
 
   private def tempStore(name: String): QuadStore =
-    new QuadStore(spark, Files.createTempDirectory(name).toString)
+    new QuadStore(spark, Harness.scratchDir(name).toString)
 
   /** A loopback server hosting `remote` (ages) and a second dataset
     * `other` (one extra person) for the variable-endpoint fan-out.

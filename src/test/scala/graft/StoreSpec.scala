@@ -22,7 +22,7 @@ class StoreSpec extends AnyFunSuite {
     Quad(null, Term.iri(s"http://x/$s"), Term.iri("http://x/p"), Term.lit(o))
 
   private def newStore() =
-    new QuadStore(spark, Files.createTempDirectory("qs").toString)
+    new QuadStore(spark, Harness.scratchDir("qs").toString)
 
   private def term(r: Row): Term =
     if (r == null) null else Term(r.getString(0), r.getString(1), r.getString(2), r.getString(3))
@@ -141,7 +141,7 @@ class StoreSpec extends AnyFunSuite {
       row("A", OpLog.seq(1L << 30, 5L), Quad(null, Term.iri("http://x/s"),
         Term.iri("http://x/p"), Term.typed("2", Term.XSD_INTEGER))))
     def segment(commit: QuadStore => Unit): String = {
-      val dir = Files.createTempDirectory("qs")
+      val dir = Harness.scratchDir("qs")
       commit(new QuadStore(spark, dir.toString))
       val seg = new QuadStore(spark, dir.toString).committedSegments()
       assert(seg.size == 1)
@@ -162,7 +162,7 @@ class StoreSpec extends AnyFunSuite {
     // a crash after a segment write and before its version write leaves
     // the directory behind, unreferenced; the next commit to that name
     // must not read the stale file beside its own
-    val dir = Files.createTempDirectory("qs")
+    val dir = Harness.scratchDir("qs")
     val store = new QuadStore(spark, dir.toString)
     store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
     val names = Seq("s00000001-b1", "s00000002-b2-a")
@@ -207,7 +207,7 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(0, Seq(q("a", "plain"), q("b", "esc\"\n\t\\"),
       Quad(Term.iri("http://x/g"), Term.iri("http://x/s"),
         Term.iri("http://x/p"), Term.typed("5", Term.XSD_INTEGER))))
-    val out = Files.createTempDirectory("ntexport").toString
+    val out = Harness.scratchDir("ntexport").toString
     graft.rdf.NtWriter.exportNQuads(store.quads(), out)
     val doc = spark.read.textFile(out).collect().mkString("\n")
     val re = newStore()
@@ -292,7 +292,7 @@ class StoreSpec extends AnyFunSuite {
     val clean = newStore()
     clean.addQuads(0, Seq(q("a", "1")))
     clean.addQuads(1, Seq(q("b", "1")))
-    val crashedDir = Files.createTempDirectory("qs")
+    val crashedDir = Harness.scratchDir("qs")
     val crashed = new QuadStore(spark, crashedDir.toString)
     crashed.addQuads(0, Seq(q("a", "1")))
     val stale = crashedDir.resolve(clean.committedSegments().last)
@@ -306,7 +306,7 @@ class StoreSpec extends AnyFunSuite {
 
   test("autoCompactTail folds the tail continuously; replay stays idempotent") {
     val store = new QuadStore(spark,
-      Files.createTempDirectory("qsauto").toString, autoCompactTail = 3)
+      Harness.scratchDir("qsauto").toString, autoCompactTail = 3)
     store.addQuads(0, Seq(q("a", "1")))
     store.addQuads(1, Seq(q("b", "1")))
     assert(store.committedSegments().forall(!_.contains("base")))
@@ -351,7 +351,7 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("compaction writes hash-bucket partitions; recompaction rewrites only touched buckets") {
-    val dir = Files.createTempDirectory("qsbuckets")
+    val dir = Harness.scratchDir("qsbuckets")
     val store = new QuadStore(spark, dir.toString, numBuckets = 4)
     store.addQuads(0, (0 until 40).map(i => q(s"s$i", "1")))
     store.compact()
@@ -378,7 +378,7 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("gc removes retired epoch segments and superseded bucket files; state unchanged") {
-    val dir = Files.createTempDirectory("qsgc")
+    val dir = Harness.scratchDir("qsgc")
     val store = new QuadStore(spark, dir.toString, numBuckets = 4)
     store.addQuads(0, (0 until 40).map(i => q(s"s$i", "1")))
     store.addQuads(1, Seq(q("extra", "1")))
@@ -429,7 +429,7 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("a bucket emptied by deletes does not resurrect from the older base") {
-    val store = new QuadStore(spark, Files.createTempDirectory("qsempty").toString,
+    val store = new QuadStore(spark, Harness.scratchDir("qsempty").toString,
       numBuckets = 2)
     store.addQuads(0, Seq(q("a", "1"), q("b", "1"), q("c", "1")))
     store.compact()
@@ -500,7 +500,7 @@ class StoreSpec extends AnyFunSuite {
 
   test("a DataFrame commit after driver commits falls back to segments; compact() restores the driver fold") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("qs").toString
+    val dir = Harness.scratchDir("qs").toString
     val store = new QuadStore(spark, dir)
     store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
     assert(!scansTail(store.quads()))
@@ -679,7 +679,7 @@ class StoreSpec extends AnyFunSuite {
     import spark.implicits._
     val store = newStore()
     val view = new AggView(spark, store,
-      Files.createTempDirectory("aggview").toString, Seq("predicate"))
+      Harness.scratchDir("aggview").toString, Seq("predicate"))
     def p(n: String) = Term.iri(s"http://x/$n")
     def quad(s: String, pred: String, o: String) =
       Quad(null, Term.iri(s"http://x/$s"), p(pred), Term.lit(o))
@@ -720,7 +720,7 @@ class StoreSpec extends AnyFunSuite {
       Quad(null, Term.iri(s"http://x/$s"), p(pred), Term.lit(o))
     val preds = Seq(p("name"), p("age"))
     val view = new graft.store.JoinView(spark, store,
-      Files.createTempDirectory("joinview").toString, preds)
+      Harness.scratchDir("joinview").toString, preds)
     store.addQuads(0, Seq(
       quad("a", "name", "alice"), quad("a", "age", "30"),
       quad("b", "name", "bob"), quad("b", "age", "40"),
@@ -752,7 +752,7 @@ class StoreSpec extends AnyFunSuite {
       ("http://x/d", "dan", "50")))
     // equals a from-scratch full star init on the same state
     val fresh = new graft.store.JoinView(spark, store,
-      Files.createTempDirectory("joinview_full").toString, preds)
+      Harness.scratchDir("joinview_full").toString, preds)
     fresh.refresh()
     assert(fresh.result().collect().map(r =>
       (r.getStruct(0).getString(1), r.getStruct(1).getString(1),
@@ -775,7 +775,7 @@ class StoreSpec extends AnyFunSuite {
     def quad(s: String, pred: String, o: String) =
       Quad(null, Term.iri(s"http://x/$s"), p(pred), Term.lit(o))
     val view = new graft.store.JoinView(spark, store,
-      Files.createTempDirectory("joinview_c").toString, Seq(p("name"), p("age")))
+      Harness.scratchDir("joinview_c").toString, Seq(p("name"), p("age")))
     store.addQuads(0, Seq(quad("a", "name", "alice"), quad("a", "age", "30")))
     view.refresh()
     store.addQuads(1, Seq(quad("b", "name", "bob"), quad("b", "age", "40")))
@@ -791,7 +791,7 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(0, quads)
     store.compact() // bucketed base
     val view = new AggView(spark, store,
-      Files.createTempDirectory("aggview2").toString, Seq("predicate"))
+      Harness.scratchDir("aggview2").toString, Seq("predicate"))
     view.refresh()
     // one changed quad → its bucket only
     store.commitOps(2, Seq(OpLog.OpRow("D", 0L, null,
@@ -866,7 +866,7 @@ class StoreSpec extends AnyFunSuite {
     // (predicate.lex, graph.lex, subject.lex), so a predicate-bound
     // BGP leaf — the dominant scan shape — skips row groups via
     // parquet min/max stats instead of reading every bucket in full
-    val storeDir = Files.createTempDirectory("qslayout")
+    val storeDir = Harness.scratchDir("qslayout")
     val store = new QuadStore(spark, storeDir.toString, numBuckets = 2)
     val quads = for {
       p <- 0 until 20; s <- 0 until 2000
@@ -928,7 +928,7 @@ class StoreSpec extends AnyFunSuite {
     store.addQuads(0, Seq(q("a", "1"),
       Quad(Term.iri("http://x/g"), Term.iri("http://x/s"),
         Term.iri("http://x/p"), Term.lit("2"))))
-    val out = Files.createTempDirectory("ttl").toString
+    val out = Harness.scratchDir("ttl").toString
     val e = intercept[IllegalArgumentException](
       graft.rdf.TurtleWriter.exportTurtle(store.quads(), Map.empty, out))
     assert(e.getMessage.contains("exportTriG"))

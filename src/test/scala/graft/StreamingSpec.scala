@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
@@ -26,9 +24,9 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(String, Int, Long, Array[Byte], Array[Byte], String)]
     val events = stream.toDF()
       .toDF("topic", "partition", "offset", "key", "value", "contentType")
-    val store = new QuadStore(spark, Files.createTempDirectory("sstore").toString)
-    val dlqDir = Files.createTempDirectory("sdlq").toString
-    val ckpt = Files.createTempDirectory("sckpt").toString
+    val store = new QuadStore(spark, Harness.scratchDir("sstore").toString)
+    val dlqDir = Harness.scratchDir("sdlq").toString
+    val ckpt = Harness.scratchDir("sckpt").toString
 
     stream.addData(
       rawEvent(0, "<http://g/a> <http://g/p> \"1\" ."),
@@ -86,15 +84,15 @@ class StreamingSpec extends AnyFunSuite {
         concat(array_repeat(element_at(col("quads"), 1), (1 << 20) + 1),
           slice(col("quads"), 2, 1)))
       .otherwise(col("quads")))
-    val store = new QuadStore(spark, Files.createTempDirectory("opbits").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("opbits").toString)
     store.commitOps(0, OpLog.lower(grown, col("offset")))
     assert(subjects(store) == Set("a:s"))
   }
 
   test("an event whose offset does not fit the seq packing goes to the DLQ") {
     import spark.implicits._
-    val store = new QuadStore(spark, Files.createTempDirectory("opoff").toString)
-    val dlqDir = Files.createTempDirectory("opoffdlq").toString
+    val store = new QuadStore(spark, Harness.scratchDir("opoff").toString)
+    val dlqDir = Harness.scratchDir("opoffdlq").toString
     val last = (1L << 39) - 1 // the largest ordinal a 24-bit op field leaves
     val (applied, dlqd) = IngestPipeline.ingest(rawFrame(
         rawEvent(last, "<a:fits> <a:p> <a:o> ."),
@@ -110,8 +108,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("ingest: each patch event stands alone — TA rolls back, bad or open transactions DLQ") {
     import spark.implicits._
-    val store = new QuadStore(spark, Files.createTempDirectory("patchtxn").toString)
-    val dlqDir = Files.createTempDirectory("patchtxndlq").toString
+    val store = new QuadStore(spark, Harness.scratchDir("patchtxn").toString)
+    val dlqDir = Harness.scratchDir("patchtxndlq").toString
     val ct = "application/rdf-patch"
     val (applied, dlqd) = IngestPipeline.ingest(rawFrame(
         rawEvent(0, "TX .\nA <a:x> <a:p> <a:o> .\nTA .", ct),
@@ -152,7 +150,7 @@ class StreamingSpec extends AnyFunSuite {
     val name = "mgws_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = counts.writeStream.format("memory").queryName(name)
       .outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("mckpt").toString)
+      .option("checkpointLocation", Harness.scratchDir("mckpt").toString)
       .start()
     try {
       stream.addData(("a", 1L), ("a", 2L), ("b", 3L))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.connect._
@@ -34,7 +32,7 @@ class UpdateConformanceSpec extends AnyFunSuite {
     */
   private def apply(requests: String*): QuadStore = {
     val store = new QuadStore(spark,
-      Files.createTempDirectory("updconf").toString)
+      Harness.scratchDir("updconf").toString)
     val evs = requests.zipWithIndex.map { case (body, i) =>
       Event("t", 0, i.toLong, Array.empty, (P + body).getBytes("UTF-8"),
         Map("Content-Type" -> CT_RU))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.connect._
@@ -250,7 +248,7 @@ class UpdateFuzzSpec extends AnyFunSuite {
 
   private def applyEngine(requests: Seq[String]): Set[NQuad] = {
     val store = new QuadStore(spark,
-      Files.createTempDirectory("updfuzz").toString)
+      Harness.scratchDir("updfuzz").toString)
     val evs = requests.zipWithIndex.map { case (body, i) =>
       Event("t", 0, i.toLong, Array.empty, (P + body).getBytes("UTF-8"),
         Map("Content-Type" -> CT_RU))

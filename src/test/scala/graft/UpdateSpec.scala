@@ -26,7 +26,7 @@ class UpdateSpec extends AnyFunSuite {
 
   private def ingestWithRoot(loadRoot: Option[java.nio.file.Path],
       events: (String, String)*): QuadStore = {
-    val store = new QuadStore(spark, Files.createTempDirectory("updstore").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("updstore").toString)
     val evs = events.zipWithIndex.map { case ((body, ct), i) =>
       Event("t", 0, i.toLong, Array.empty, body.getBytes("UTF-8"),
         Map("Content-Type" -> ct))
@@ -111,7 +111,7 @@ class UpdateSpec extends AnyFunSuite {
   }
 
   test("a crash-recovery replay of an update event leaves the state unchanged") {
-    val store = new QuadStore(spark, Files.createTempDirectory("updreplay").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("updreplay").toString)
     val body =
       """INSERT DATA { <http://x/a> <http://x/old> "1" . <http://x/b> <http://x/old> "2" } ;
         |DELETE { ?s <http://x/old> ?o } INSERT { ?s <http://x/new> ?o }
@@ -180,7 +180,7 @@ class UpdateSpec extends AnyFunSuite {
     val d = RdfParse.decode("INSERT JUNK { }".getBytes("UTF-8"), CT_RU, "s")
     assert(d.kind == null && d._corrupt != null)
     // and the projector keeps going: bad update → DLQ, good event applies
-    val store = new QuadStore(spark, Files.createTempDirectory("upddlq").toString)
+    val store = new QuadStore(spark, Harness.scratchDir("upddlq").toString)
     val dlq = new MemoryDlqSink
     val evs = Seq(
       Event("t", 0, 0, Array.empty, "INSERT JUNK { }".getBytes("UTF-8"),
@@ -247,7 +247,7 @@ class UpdateSpec extends AnyFunSuite {
   }
 
   test("LOAD file: loads a local document; INTO GRAPH re-graphs it") {
-    val root = Files.createTempDirectory("loadroot")
+    val root = Harness.scratchDir("loadroot")
     val doc = Files.createTempFile(root, "load", ".nt")
     Files.write(doc,
       ("<http://x/l1> <http://x/p> \"a\" .\n" +
@@ -265,13 +265,13 @@ class UpdateSpec extends AnyFunSuite {
   test("LOAD is DISABLED without a load root; confined to it when set") {
     // no root configured (every default, incl. the HTTP endpoint):
     // even an existing readable file must not load
-    val root = Files.createTempDirectory("loadroot2")
+    val root = Harness.scratchDir("loadroot2")
     val doc = Files.createTempFile(root, "ok", ".nt")
     Files.write(doc, "<http://x/l> <http://x/p> \"v\" .\n".getBytes("UTF-8"))
-    val outside = Files.createTempFile("secret", ".nt")
+    val outside = Files.createTempFile(Harness.scratchDir("secret"), "secret", ".nt")
     Files.write(outside, "<http://x/sec> <http://x/p> \"s\" .\n".getBytes("UTF-8"))
     def dlqCountOf(loadRoot: Option[java.nio.file.Path], script: String): (Long, Int) = {
-      val store = new QuadStore(spark, Files.createTempDirectory("ldc").toString)
+      val store = new QuadStore(spark, Harness.scratchDir("ldc").toString)
       val dlq = new MemoryDlqSink
       val p = new Projector(
         new MemoryEventSource(Seq(Event("t", 0, 0L, Array.empty,
@@ -290,14 +290,14 @@ class UpdateSpec extends AnyFunSuite {
   }
 
   test("LOAD SILENT on a missing document is a no-op; non-SILENT routes to DLQ") {
-    val root = Files.createTempDirectory("loadroot3")
+    val root = Harness.scratchDir("loadroot3")
     val store = ingestWithRoot(Some(root),
       "INSERT DATA { <http://x/s> <http://x/p> \"keep\" }" -> CT_RU,
       s"LOAD SILENT <${root.toUri}nonexistent.nt>" -> CT_RU)
     assert(stateNT(store) == Set((null, "http://x/s", "http://x/p", "keep")))
     // non-SILENT: the arrival probe fails, the event routes to the
     // DLQ, the good prefix still commits
-    val store2 = new QuadStore(spark, Files.createTempDirectory("ldq").toString)
+    val store2 = new QuadStore(spark, Harness.scratchDir("ldq").toString)
     val evs = Seq(
       "INSERT DATA { <http://x/s> <http://x/p> \"keep\" }",
       s"LOAD <${root.toUri}nonexistent.nt>").zipWithIndex.map { case (b, i) =>
