@@ -359,9 +359,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // solution modifiers apply BEFORE instantiation (§16.2):
         // ORDER BY only observably matters with LIMIT/OFFSET since the
         // constructed graph is a set — the value order as in SELECT
-        val cset = sols0.columns.toSet
-        def resolve(n: String): Column =
-          if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)
+        val resolve = resolverOf(sols0)
         val ordered =
           if (orderBy.isEmpty) sols0
           else sols0.orderBy(orderBy.map { k =>
@@ -439,7 +437,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     val quads = applyDatasetClause(quads0, q.from, q.fromNamed)
     val boundSol = compileSol(quads, q.pattern)
     val bound = q.groupExprs.foldLeft(boundSol.df) { case (d, (e, as)) =>
-      d.withColumn(as, compileVExpr(d, Term.Schema, e))
+      d.withColumn(as, compileExpr(e, resolverOf(d)))
     }
     def intTerm(c: Column) =
       Term.column(Term.LIT, c.cast("string"), lit(Term.XSD_INTEGER).cast("string"))
@@ -484,9 +482,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           case ItemExpr(e, as) =>
             if (work.columns.contains(as))
               throw new RdfParseException(s"SELECT expression would rebind ?$as")
-            val cset = work.columns.toSet
-            work = work.withColumn(as, compileExpr(e,
-              n => if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)))
+            work = work.withColumn(as, compileExpr(e, resolverOf(work)))
           case _ => ()
         }
         val cols = items.map {
@@ -541,9 +537,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // raw (SQL-typed) aggregate — also the HAVING form. Arguments
         // are full value expressions (SUM(?a * ?b), MAX(STRLEN(?s)))
         // compiled against the bound solution's columns.
-        val boundCols = bound.columns.toSet
-        def argCol(e: VExpr): Column = compileExpr(e,
-          n => if (boundCols.contains(n)) col(n) else lit(null).cast(Term.Schema))
+        def argCol(e: VExpr): Column = compileExpr(e, resolverOf(bound))
         // the numeric value, narrowed to the decimal(28,10) that leaves
         // SUM/AVG ten digits of headroom in their decimal(38,…) result
         def argVal(e: VExpr): Column =
@@ -558,26 +552,20 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
               else count_distinct(struct(bound.columns.toIndexedSeq.map(col): _*))
             }
             else arg.fold(count(lit(1)))(e => count(argCol(e)))
-          case "SUM" =>
+          case "SUM" | "AVG" =>
             // §18.5.1.2: Sum over the EMPTY multiset is 0; a non-
             // numeric (or unbound) value anywhere in the group is a
             // type error → the aggregate is unbound. A null numeric
             // value is exactly "this row's argument failed to
-            // evaluate numerically", so errors = count of null values
-            val v = argVal(arg.get)
-            when(count(when(v.isNull, 1)) > 0, lit(null).cast("decimal(38,10)"))
-              .when(count(lit(1)) === 0, lit(0).cast("decimal(38,10)"))
-              .otherwise(if (isDistinct) sum_distinct(v) else sum(v))
-          case "AVG" =>
+            // evaluate numerically", so errors = count of null values.
             // AVG(DISTINCT) = SUM(DISTINCT)/COUNT(DISTINCT) over the
-            // numeric values (§18.5.1.5 Avg is Sum/Count over Dx);
-            // Avg({}) = 0, any erroring value → error (as SUM)
+            // numeric values (§18.5.1.5 Avg is Sum/Count over Dx)
             val v = argVal(arg.get)
-            when(count(when(v.isNull, 1)) > 0, lit(null).cast("decimal(38,14)"))
-              .when(count(lit(1)) === 0, lit(0).cast("decimal(38,14)"))
-              .otherwise(
-                if (isDistinct) sum_distinct(v) / count_distinct(v)
-                else avg(v))
+            val t = if (func == "SUM") "decimal(38,10)" else "decimal(38,14)"
+            when(count(when(v.isNull, 1)) > 0, lit(null).cast(t))
+              .when(count(lit(1)) === 0, lit(0).cast(t))
+              .otherwise(if (func == "SUM") (if (isDistinct) sum_distinct(v) else sum(v))
+                else if (isDistinct) sum_distinct(v) / count_distinct(v) else avg(v))
           case "GROUP_CONCAT" =>
             // error-strict like SUM (§18.5.1.7): any argument that
             // failed to evaluate poisons the group; the EMPTY group
@@ -670,9 +658,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // HAVING: FILTER semantics over the grouped solution — group
         // keys resolve directly, aggregate calls via the hidden columns
         val kept0 = q.having.foldLeft(grouped) { (d, f) =>
-          val cset = d.columns.toSet
-          d.filter(compileFilter(substAggsF(f, a => VVar(hiddenName(a))),
-            n => if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)))
+          d.filter(compileFilter(substAggsF(f, a => VVar(hiddenName(a))), resolverOf(d)))
         }
         // §18.2.4.3: the trailing VALUES data joins the grouped,
         // HAVING-filtered solution — before select expressions — via
@@ -690,9 +676,6 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
               Sol(data, tvUndef), "inner").df
           case None => kept0
         }
-        val keptCols = kept.columns.toSet
-        def keptResolve(n: String): Column =
-          if (keptCols.contains(n)) col(n) else lit(null).cast(Term.Schema)
         // ORDER BY aggregate calls read the hidden columns, which must
         // survive the projection — they are dropped after the sort
         orderKeys = q.orderBy.map(k =>
@@ -703,7 +686,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           case ItemVar(n) => col(n)
           case ItemAgg(_, _, as, _, _) => col(as)
           case ItemExpr(e, as) =>
-            compileExpr(substAggs(e, a => VVar(hiddenName(a))), keptResolve).as(as)
+            compileExpr(substAggs(e, a => VVar(hiddenName(a))), resolverOf(kept)).as(as)
         } ++ orderHidden): _*)
     }
     // hidden '#'-prefixed sort columns are invisible to DISTINCT and
@@ -723,9 +706,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           // expression key: materialize as a hidden column so the sort
           // stays a plain Exchange+Sort over precomputed keys
           val name = s"#ord$i"
-          val cset = sortInput.columns.toSet
-          sortInput = sortInput.withColumn(name, compileExpr(e,
-            n => if (cset.contains(n)) col(n) else lit(null).cast(Term.Schema)))
+          sortInput = sortInput.withColumn(name, compileExpr(e, resolverOf(sortInput)))
           TermOps.orderKey(col(name))
       }
       if (k.descending) key.desc else key.asc
@@ -1067,7 +1048,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
             case VVar(n) if base.nonNull.contains(n) => base.nonNull + as
             case _ => base.nonNull
           }
-          acc = Some(Sol(base.df.withColumn(as, compileVExpr(base.df, termType, expr)),
+          acc = Some(Sol(base.df.withColumn(as, compileExpr(expr, resolverOf(base.df))),
             if (sure) base.maybe else base.maybe + as, bindNonNull))
         case MinusElem(inner) =>
           // under a seeded GRAPH ?var block the seed's variable joins

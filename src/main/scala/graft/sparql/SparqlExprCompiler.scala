@@ -15,11 +15,12 @@ import graft.rdf.{RdfParseException, Term}
   */
 private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
   import Sparql._
-  private[sparql] def compileVExpr(base: DataFrame,
-      termType: org.apache.spark.sql.types.DataType, e: VExpr): Column = {
-    val cols = base.columns.toSet
-    compileExpr(e,
-      n => if (cols.contains(n)) col(n) else lit(null).cast(Term.Schema))
+  /** Resolves a variable to its column of `df`, or to an unbound
+    * (typed-null) term where `df` does not bind it.
+    */
+  private[sparql] def resolverOf(df: DataFrame): String => Column = {
+    val cols = df.columns.toSet
+    n => if (cols.contains(n)) col(n) else nullTerm
   }
 
   private[sparql] def nullTerm: Column = lit(null).cast(Term.Schema)
@@ -254,20 +255,16 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
               when(p > 0, like0(lex(0).substr(p + sep.length, lit(Int.MaxValue))))
                 .otherwise(plainStrTerm(lit("")))
             })
-        case "ABS" => numericTerm(abs(TermOps.numValue(a(0))),
-          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
-            lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
-        // XPath fn:round: half rounds toward positive infinity
-        // (round(-2.5) = -2), which is floor(x + 0.5)
-        case "ROUND" => numericTerm(
-          floor(TermOps.numValue(a(0)) + lit(0.5)).cast("decimal(38,10)"),
-          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
-            lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
-        case "CEIL" => numericTerm(ceil(TermOps.numValue(a(0))).cast("decimal(38,10)"),
-          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
-            lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
-        case "FLOOR" => numericTerm(floor(TermOps.numValue(a(0))).cast("decimal(38,10)"),
-          when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
+        case "ABS" | "ROUND" | "CEIL" | "FLOOR" =>
+          val v = TermOps.numValue(a(0))
+          numericTerm(func match {
+            case "ABS" => abs(v)
+            // XPath fn:round: half rounds toward positive infinity
+            // (round(-2.5) = -2), which is floor(x + 0.5)
+            case "ROUND" => floor(v + lit(0.5)).cast("decimal(38,10)")
+            case "CEIL" => ceil(v).cast("decimal(38,10)")
+            case _ => floor(v).cast("decimal(38,10)")
+          }, when(a(0).getField("datatype").isin(TermOps.INTEGER_DATATYPES.toSeq: _*),
             lit(Term.XSD_INTEGER)).otherwise(lit(Term.XSD_DECIMAL)))
         case "IRI" | "URI" =>
           // §17.4.2.8: the argument must be an IRI, a simple literal,
@@ -530,22 +527,19 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
     case FCmp(l, op, r) =>
       val lc = compileExpr(l, resolve)
       val rc = compileExpr(r, resolve)
-      // ordering is VALUE-space too: "9"^^xsd:integer <
-      // "10"^^xsd:integer, on the value keys ORDER BY sorts by (the
-      // lexical order is inverted there). Incomparable operand kinds
-      // are a TYPE ERROR (null), not false — so FILTER drops the row,
-      // !(…) stays an error, and IF propagates the error (§17.2)
-      def ordered(cmp: (Column, Column) => Column): Column =
-        when(comparable(l, r, resolve), cmp(TermOps.valueKey(lc), TermOps.valueKey(rc)))
       op match {
         // SPARQL VALUE equality, not structural: "01"^^xsd:integer
-        // equals "1"^^xsd:integer (graft.functions.TermValueEquals)
+        // equals "1"^^xsd:integer (graft.functions.TermOps.valueEquals)
         case "=" => valueEq(lc, rc)
         case "!=" => !valueEq(lc, rc)
-        case "<" => ordered(_ < _)
-        case ">" => ordered(_ > _)
-        case "<=" => ordered(_ <= _)
-        case ">=" => ordered(_ >= _)
+        // ordering is VALUE-space too: "9"^^xsd:integer <
+        // "10"^^xsd:integer, on the value keys ORDER BY sorts by (the
+        // lexical order is inverted there). Incomparable operand kinds
+        // and ill-formed numeric/temporal operands are a TYPE ERROR
+        // (null), not false — so FILTER drops the row, !(…) stays an
+        // error, and IF propagates the error (§17.2)
+        case "<" | ">" | "<=" | ">=" =>
+          when(comparable(l, r, resolve), TermOps.compare(lc, rc, op))
         case other => throw new RdfParseException(s"unsupported FILTER op '$other'")
       }
   }
@@ -559,15 +553,14 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
       rc.getField("termType") === Term.LIT
     when(bothLit && (TermOps.isNumeric(lc) =!= TermOps.isNumeric(rc)),
       lit(null).cast("boolean"))
-      .otherwise(TermOps.termValueEquals(lc, rc))
+      .otherwise(TermOps.compare(lc, rc, "="))
   }
 
   /** Datatypes with a defined `<` beyond numerics and simple strings
     * (op:dateTime/date/time/boolean-less-than, §17.3) — orderable only
     * against the SAME datatype.
     */
-  private val ORDERABLE_DATATYPES: Seq[String] = Seq(
-    Term.XSD_DATETIME, Term.XSD_DATE, Term.XSD_BOOLEAN, Term.XSD + "time")
+  private val ORDERABLE_DATATYPES: Seq[String] = TermOps.TEMPORAL_DATATYPES :+ Term.XSD_BOOLEAN
 
   private def sameOrderableDt(a: Column, b: Column): Column =
     a.getField("termType") === Term.LIT && b.getField("termType") === Term.LIT &&

@@ -16,9 +16,7 @@ private[sparql] trait SparqlFilterAlgebra { this: Sparql.type =>
   private[sparql] def applyFilter(quads: DataFrame, sol: Sol, f: FExpr,
       seed: Option[Sol] = None): Sol = {
     val (marked, nf, flags) = rewriteExists(quads, sol, f, seed)
-    val cols = marked.df.columns.toSet
-    val filtered = marked.df.filter(compileFilter(nf,
-      n => if (cols.contains(n)) col(n) else lit(null).cast(Term.Schema)))
+    val filtered = marked.df.filter(compileFilter(nf, resolverOf(marked.df)))
     Sol(flags.foldLeft(filtered)(_.drop(_)), sol.maybe, sol.nonNull)
   }
 

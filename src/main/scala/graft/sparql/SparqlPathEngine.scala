@@ -266,7 +266,7 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     * (filter+project over the quads — cheap to re-execute) as opposed
     * to containing joins/fixpoints of its own. Decides whether
     * [[closure]] materializes the relation before referencing it
-    * several times (dictionary build, encode).
+    * several times (count gate, dictionary build, encode).
     */
   private def leafStep(p: PathExpr): Boolean = p match {
     case PLink(_) | PNeg(_, _) => true
@@ -305,7 +305,7 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
       cheapStep: Boolean = false,
       zeroNodes: Option[DataFrame] = None): DataFrame = {
     // a composite one-step relation (joins, nested closures) is
-    // referenced several times below (dictionary, encode)
+    // referenced several times below (count gate, dictionary, encode)
     // — materialize it once; a leaf step is a bare scan and re-reads
     // cheaper than it checkpoints
     val stepCk = if (cheapStep) None else Some(edges0.localCheckpoint())
@@ -314,8 +314,9 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     // simply joins along, so one fixpoint loop covers every graph in
     // parallel rather than looping per graph
     val grouped = edges.columns.contains("pg")
-    // struct-path zero-length union (the hash-collision fallback):
-    // union + distinct over term structs
+    // struct-path zero-length union (small relations and the hash-
+    // collision fallback): the original union + distinct over term
+    // structs
     def withZeroStruct(res: DataFrame): DataFrame = zeroNodes match {
       case None => res
       case Some(nodes) =>
@@ -325,93 +326,103 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
           else nodes.distinct().select(col("n").as("ps"), col("n").as("po"))
         res.unionByName(zp).distinct()
     }
-    // The fixpoint runs on 8-byte ids, not term structs (optimization
-    // guide §2.3 — shuffle keys, not payloads): every doubling round
-    // joins and distincts a closure-sized relation, and with four-field
-    // term structs (IRI lex strings) each round shuffles ~10x the bytes
-    // the reachability question needs. Terms hash to xxhash64 ids, the
-    // fixpoint runs on longs, and ONE decode join at the end restores
-    // the structs — the struct edge set is never materialized at all on
-    // this path. The hash is verified INJECTIVE over this relation's
-    // term set first (the check rides the dictionary build via
-    // observe); on the astronomically unlikely collision the loop runs
-    // on the original structs instead, so the result is exact either
-    // way, never probabilistic.
+    // Pre-distinct edge count, COLUMN-PRUNED (count(1) lets Catalyst
+    // drop the term-struct projections, so this is a near-free scan):
+    // it only picks the plan shape below, a size-of-the-data test, not
+    // a core-count tunable.
+    val rawCount = edges.count()
+    // Small relations run the fixpoint directly on the term structs —
+    // the dictionary machinery below would cost more than it saves.
+    // Large ones dictionary-encode to 8-byte ids before the fixpoint
+    // (optimization guide §2.3 — shuffle keys, not payloads): every
+    // doubling round joins and distincts a closure-sized relation, and
+    // with four-field term structs (IRI lex strings) each round
+    // shuffles ~10x the bytes the reachability question needs. Terms
+    // hash to xxhash64 ids, the fixpoint runs on longs, and ONE decode
+    // join at the end restores the structs — the struct edge set is
+    // never materialized at all on this path. The hash is verified
+    // INJECTIVE over this relation's term set first (the check rides
+    // the dictionary build via observe); on the astronomically
+    // unlikely collision the loop simply runs on the original structs,
+    // so the result is exact either way, never probabilistic.
     def structLoop(): DataFrame = {
       val obs = org.apache.spark.sql.Observation()
       val first = edges.distinct()
         .observe(obs, count(lit(1)).as("n")).localCheckpoint()
       closureLoop(first, grouped, obs.get("n").asInstanceOf[Long])
     }
-    val termCols = (if (grouped) Seq("pg") else Seq.empty) ++ Seq("ps", "po")
-    // zero-length nodes dedup ONCE (single-term structs — half the
-    // bytes of the old pair-level identity distinct) and the
-    // checkpointed result feeds BOTH the dictionary and the encoded
-    // union below, so the scoped-quads scan and the distinct are
-    // paid once, not per consumer
-    val zeroDistinct = zeroNodes.map(nodes => Checkpoints.register(nodes
-      .dropDuplicates((if (grouped) Seq("pg") else Seq.empty) :+ "n")
-      .localCheckpoint()))
-    // one exchange, one job: group raw term occurrences by their
-    // hash id; the injectivity check (max distinct terms per id,
-    // 1 = injective) rides the dictionary's checkpoint via observe.
-    // Zero-length node terms (and, under GRAPH ?var, their graph
-    // terms) join the dictionary sources so the check covers every
-    // term the encoded union below compares.
-    val zeroSources = zeroDistinct.toSeq.flatMap { nodes =>
-      (if (grouped) Seq(nodes.select(col("pg").as("t"))) else Seq.empty) :+
-        nodes.select(col("n").as("t"))
-    }
-    val dictObs = org.apache.spark.sql.Observation()
-    val dict = (termCols.map(c => edges.select(col(c).as("t"))) ++ zeroSources)
-      .reduce(_.unionByName(_))
-      .groupBy(xxhash64(col("t")).as("tid"))
-      .agg(org.apache.spark.sql.functions.first(col("t")).as("t"),
-        countDistinct(col("t")).as("nd"))
-      .observe(dictObs, max(col("nd")).as("maxNd"))
-      .select(col("tid"), col("t"))
-      .localCheckpoint()
-    val result = if (dictObs.get("maxNd").asInstanceOf[Long] != 1L) {
-      Checkpoints.unpersist(dict)
-      withZeroStruct(structLoop())
-    } else {
-      Checkpoints.register(dict)
-      // encode + dedup + pre-partition in ONE exchange: the
-      // (pg?, ps) repartition both satisfies dropDuplicates'
-      // clustering and leaves round 1's build side exchange-free
-      // (checkpoint preserves the partitioning)
-      val encKeys = ((if (grouped) Seq("pg") else Seq.empty) :+ "ps").map(col)
-      val encObs = org.apache.spark.sql.Observation()
-      val encoded = edges.select(termCols.map(c => xxhash64(col(c)).as(c)): _*)
-        .repartition(encKeys: _*)
-        .dropDuplicates(termCols)
-        .observe(encObs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val looped = closureLoop(encoded, grouped,
-        encObs.get("n").asInstanceOf[Long])
-      // zero-length union ON ENCODED IDS: the loop result is a set
-      // and the encoded identity pairs are deduplicated, so the only
-      // possible overlap is the loop's own self-pairs (cycles) — an
-      // anti-join against just those replaces a full re-shuffle +
-      // distinct of the closure (and the decode below is id→term
-      // 1:1, so set-ness survives decoding)
-      val merged = zeroDistinct match {
-        case None => looped
-        case Some(nodes) =>
-          // already distinct structs + injective hash ⇒ distinct ids
-          val zEnc = nodes.select(
-            ((if (grouped) Seq(xxhash64(col("pg")).as("pg")) else Seq.empty) ++
-              Seq(xxhash64(col("n")).as("ps"), xxhash64(col("n")).as("po"))): _*)
-          val selfPairs = looped.filter(col("ps") === col("po"))
-          val anti =
-            if (grouped) col("z.pg") === col("c.pg") && col("z.ps") === col("c.ps")
-            else col("z.ps") === col("c.ps")
-          looped.unionByName(
-            zEnc.alias("z").join(selfPairs.alias("c"), anti, "left_anti"))
+    val result = if (rawCount < 65536) withZeroStruct(structLoop())
+    else {
+      val termCols = (if (grouped) Seq("pg") else Seq.empty) ++ Seq("ps", "po")
+      // zero-length nodes dedup ONCE (single-term structs — half the
+      // bytes of the old pair-level identity distinct) and the
+      // checkpointed result feeds BOTH the dictionary and the encoded
+      // union below, so the scoped-quads scan and the distinct are
+      // paid once, not per consumer
+      val zeroDistinct = zeroNodes.map(nodes => Checkpoints.register(nodes
+        .dropDuplicates((if (grouped) Seq("pg") else Seq.empty) :+ "n")
+        .localCheckpoint()))
+      // one exchange, one job: group raw term occurrences by their
+      // hash id; the injectivity check (max distinct terms per id,
+      // 1 = injective) rides the dictionary's checkpoint via observe.
+      // Zero-length node terms (and, under GRAPH ?var, their graph
+      // terms) join the dictionary sources so the check covers every
+      // term the encoded union below compares.
+      val zeroSources = zeroDistinct.toSeq.flatMap { nodes =>
+        (if (grouped) Seq(nodes.select(col("pg").as("t"))) else Seq.empty) :+
+          nodes.select(col("n").as("t"))
       }
-      termCols.foldLeft(merged) { (df, c) =>
-        df.join(dict.select(col("tid").as(c), col("t").as(s"${c}_t")), Seq(c))
-      }.select(termCols.map(c => col(s"${c}_t").as(c)): _*)
+      val dictObs = org.apache.spark.sql.Observation()
+      val dict = (termCols.map(c => edges.select(col(c).as("t"))) ++ zeroSources)
+        .reduce(_.unionByName(_))
+        .groupBy(xxhash64(col("t")).as("tid"))
+        .agg(org.apache.spark.sql.functions.first(col("t")).as("t"),
+          countDistinct(col("t")).as("nd"))
+        .observe(dictObs, max(col("nd")).as("maxNd"))
+        .select(col("tid"), col("t"))
+        .localCheckpoint()
+      if (dictObs.get("maxNd").asInstanceOf[Long] != 1L) {
+        Checkpoints.unpersist(dict)
+        withZeroStruct(structLoop())
+      } else {
+        Checkpoints.register(dict)
+        // encode + dedup + pre-partition in ONE exchange: the
+        // (pg?, ps) repartition both satisfies dropDuplicates'
+        // clustering and leaves round 1's build side exchange-free
+        // (checkpoint preserves the partitioning)
+        val encKeys = ((if (grouped) Seq("pg") else Seq.empty) :+ "ps").map(col)
+        val encObs = org.apache.spark.sql.Observation()
+        val encoded = edges.select(termCols.map(c => xxhash64(col(c)).as(c)): _*)
+          .repartition(encKeys: _*)
+          .dropDuplicates(termCols)
+          .observe(encObs, count(lit(1)).as("n"))
+          .localCheckpoint()
+        val looped = closureLoop(encoded, grouped,
+          encObs.get("n").asInstanceOf[Long])
+        // zero-length union ON ENCODED IDS: the loop result is a set
+        // and the encoded identity pairs are deduplicated, so the only
+        // possible overlap is the loop's own self-pairs (cycles) — an
+        // anti-join against just those replaces a full re-shuffle +
+        // distinct of the closure (and the decode below is id→term
+        // 1:1, so set-ness survives decoding)
+        val merged = zeroDistinct match {
+          case None => looped
+          case Some(nodes) =>
+            // already distinct structs + injective hash ⇒ distinct ids
+            val zEnc = nodes.select(
+              ((if (grouped) Seq(xxhash64(col("pg")).as("pg")) else Seq.empty) ++
+                Seq(xxhash64(col("n")).as("ps"), xxhash64(col("n")).as("po"))): _*)
+            val selfPairs = looped.filter(col("ps") === col("po"))
+            val anti =
+              if (grouped) col("z.pg") === col("c.pg") && col("z.ps") === col("c.ps")
+              else col("z.ps") === col("c.ps")
+            looped.unionByName(
+              zEnc.alias("z").join(selfPairs.alias("c"), anti, "left_anti"))
+        }
+        termCols.foldLeft(merged) { (df, c) =>
+          df.join(dict.select(col("tid").as(c), col("t").as(s"${c}_t")), Seq(c))
+        }.select(termCols.map(c => col(s"${c}_t").as(c)): _*)
+      }
     }
     // every consumer of the one-step relation has materialized
     stepCk.foreach(Checkpoints.unpersist(_))

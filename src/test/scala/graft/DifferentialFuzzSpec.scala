@@ -1363,8 +1363,9 @@ class DifferentialFuzzSpec extends AnyFunSuite {
 
   /** A random bag of mixed terms: IRIs, blanks, plain and language-
     * tagged strings, numerics of several datatypes (some past
-    * decimal(38,10), some IEEE infinities) and dateTimes in several
-    * zones (and none: taken as UTC, the engine's fixed choice).
+    * decimal(38,10), some IEEE infinities and NaN, some ill-formed) and
+    * dateTimes in several zones (and none: taken as UTC, the engine's
+    * fixed choice), one of them ill-formed.
     */
   private def genMixedBag(rnd: scala.util.Random): Seq[Term] = {
     val big = "1" + "0" * 35
@@ -1378,43 +1379,47 @@ class DifferentialFuzzSpec extends AnyFunSuite {
         Term.typed(s"${rnd.nextInt(21) - 10}", Term.XSD_INTEGER),
         Term.typed(pick(Seq("", "-")) + big + rnd.nextInt(3), Term.XSD_INTEGER),
         Term.typed(pick(Seq("0.5", "-2.50", "3.0", "1")), Term.XSD_DECIMAL),
-        Term.typed(pick(Seq("1e30", "-1.5E2", "2.5", "INF", "-INF")), XSD_DOUBLE),
+        Term.typed(pick(Seq("1e30", "-1.5E2", "2.5", "INF", "-INF", "NaN")), XSD_DOUBLE),
+        Term.typed(pick(Seq("abc", "1.5x")), pick(Seq(Term.XSD_INTEGER, Term.XSD_DECIMAL))),
         Term.typed(pick(Seq("2.5", "7")), Term.XSD + "float"),
         Term.typed(pick(Seq("3", "-7")), Term.XSD + "int")))
       case _ =>
-        val zone = pick(Seq("Z", "+02:00", "-05:30", ""))
+        val zone = pick(Seq("Z", "+02:00", "-05:30", "", " 00:00:00Z"))
         Term.typed(f"2020-01-01T${rnd.nextInt(24)}%02d:${pick(Seq(0, 30))}%02d:00$zone",
           Term.XSD_DATETIME)
     }
     Seq.fill(4 + rnd.nextInt(9))(gen())
   }
 
-  /** SPARQL `<` over two terms (§17.3 operator mapping), independent of
-    * the engine: Some(sign) when the pair is comparable — numerics by
-    * value (IEEE infinities outside every finite value), simple
-    * strings by code point, dateTimes on the timeline — else None.
+  /** SPARQL `a < b` (§17.3 operator mapping), independent of the
+    * engine: numerics by value (IEEE infinities outside every finite
+    * value, false against NaN), simple strings by code point, dateTimes
+    * on the timeline; None — a type error — for incomparable kinds and
+    * for an ill-formed numeric or dateTime lexical form.
     */
-  private def sparqlCompare(a: Term, b: Term): Option[Int] = {
-    def num(t: Term): Option[(Int, java.math.BigDecimal)] =
-      if (!t.isLit || !graft.functions.TermOps.NUMERIC_DATATYPES.contains(t.datatype)) None
-      else t.lex match {
-        case "-INF" => Some((0, java.math.BigDecimal.ZERO))
-        case "INF" => Some((2, java.math.BigDecimal.ZERO))
-        case l => Some((1, new java.math.BigDecimal(l)))
-      }
+  private def sparqlLess(a: Term, b: Term): Option[Boolean] = {
+    import scala.util.Try
+    // (sign class -INF 0 < finite 1 < INF 2, NaN 3; value); None when ill-formed
+    def num(t: Term): Option[(Int, java.math.BigDecimal)] = t.lex match {
+      case "-INF" => Some((0, java.math.BigDecimal.ZERO))
+      case "INF" => Some((2, java.math.BigDecimal.ZERO))
+      case "NaN" => Some((3, java.math.BigDecimal.ZERO))
+      case l => Try(new java.math.BigDecimal(l)).toOption.map((1, _))
+    }
+    def instant(t: Term): Option[java.time.Instant] =
+      Try(java.time.OffsetDateTime.parse(t.lex).toInstant).orElse(Try(
+        java.time.LocalDateTime.parse(t.lex).toInstant(java.time.ZoneOffset.UTC))).toOption
+    def numeric(t: Term) = t.isLit && graft.functions.TermOps.NUMERIC_DATATYPES.contains(t.datatype)
+    def dateTime(t: Term) = t.isLit && t.datatype == Term.XSD_DATETIME
     def plain(t: Term) = t.isLit && t.lang == null &&
       (t.datatype == null || t.datatype == Term.XSD_STRING)
-    def instant(t: Term): Option[java.time.Instant] =
-      if (!t.isLit || t.datatype != Term.XSD_DATETIME) None
-      else Some(scala.util.Try(java.time.OffsetDateTime.parse(t.lex).toInstant)
-        .getOrElse(java.time.LocalDateTime.parse(t.lex).toInstant(java.time.ZoneOffset.UTC)))
-    (num(a), num(b), instant(a), instant(b)) match {
-      case (Some((ca, va)), Some((cb, vb)), _, _) =>
-        Some(if (ca != cb) Integer.compare(ca, cb) else va.compareTo(vb).sign)
-      case (_, _, Some(ia), Some(ib)) => Some(ia.compareTo(ib).sign)
-      case _ if plain(a) && plain(b) => Some(a.lex.compareTo(b.lex).sign)
-      case _ => None
-    }
+    if (numeric(a) && numeric(b))
+      for ((ca, va) <- num(a); (cb, vb) <- num(b))
+        yield ca != 3 && cb != 3 && (if (ca != cb) ca < cb else va.compareTo(vb) < 0)
+    else if (dateTime(a) && dateTime(b))
+      for (ia <- instant(a); ib <- instant(b)) yield ia.isBefore(ib)
+    else if (plain(a) && plain(b)) Some(a.lex.compareTo(b.lex) < 0)
+    else None
   }
 
   test("value order: ORDER BY, MIN/MAX and FILTER < agree on random mixed bags") {
@@ -1434,23 +1439,27 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       assert(asc.sortBy(_.toNT) == bag.sortBy(_.toNT), diag)
       assert(desc == asc.reverse, s"$diag\nasc=${asc.map(_.toNT)}\ndesc=${desc.map(_.toNT)}")
       for (j <- asc.indices; k <- j + 1 until asc.size) {
-        assert(!sparqlCompare(asc(k), asc(j)).contains(-1),
+        assert(!sparqlLess(asc(k), asc(j)).contains(true),
           s"$diag\nASC row $k ${asc(k).toNT} < earlier row $j ${asc(j).toNT}")
-        assert(!sparqlCompare(desc(k), desc(j)).contains(1),
+        assert(!sparqlLess(desc(j), desc(k)).contains(true),
           s"$diag\nDESC row $k ${desc(k).toNT} > earlier row $j ${desc(j).toNT}")
       }
       val mm = collectSols(Sparql.execute(df,
         "SELECT (MIN(?v) AS ?lo) (MAX(?v) AS ?hi) { ?s <http://f/v> ?v }")).head
       assert(mm.get("lo").contains(asc.head) && mm.get("hi").contains(asc.last),
         s"$diag\nmin/max=$mm asc=${asc.map(_.toNT)}")
-      // the engine's `<` is the same comparison, type errors included
-      val lt = Sparql.execute(df, "SELECT ?a ?b { ?a <http://f/v> ?x . " +
-          "?b <http://f/v> ?y FILTER(?x < ?y) }")
-        .collect().map(r => (r.getStruct(0).getString(1), r.getStruct(1).getString(1))).toSet
-      val expected = (for (j <- bag.indices; k <- bag.indices
-          if sparqlCompare(bag(j), bag(k)).contains(-1))
-        yield (subj(j).lex, subj(k).lex)).toSet
-      assert(lt == expected, s"$diag\nmissing=${expected -- lt}\nextra=${lt -- expected}")
+      // the engine's `<` is the same comparison, type errors included:
+      // an error drops the pair from both `<` and `!(<)`
+      for ((filter, holds) <- Seq("?x < ?y" -> true, "!(?x < ?y)" -> false)) {
+        val got = Sparql.execute(df, "SELECT ?a ?b { ?a <http://f/v> ?x . " +
+            s"?b <http://f/v> ?y FILTER($filter) }")
+          .collect().map(r => (r.getStruct(0).getString(1), r.getStruct(1).getString(1))).toSet
+        val expected = (for (j <- bag.indices; k <- bag.indices
+            if sparqlLess(bag(j), bag(k)).contains(holds))
+          yield (subj(j).lex, subj(k).lex)).toSet
+        assert(got == expected,
+          s"$diag\n$filter missing=${expected -- got}\nextra=${got -- expected}")
+      }
     }
     info(s"$trials bags")
   }

@@ -11,7 +11,7 @@ import graft.sparql.Sparql
   * (constant-endpoint) closure on a chain long enough to run many BFS
   * rounds — the shape the scale entry uses — checked against the
   * unseeded doubling closure, and the dictionary-encoded doubling
-  * closure at a few thousand edges.
+  * closure that one-step relations of 65 536+ edges take.
   */
 class SeededPathSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -91,11 +91,12 @@ class SeededPathSpec extends AnyFunSuite {
     }
   }
 
-  test("encoded closure: exact +/* counts, grouped and not, nothing pinned") {
-    // 2 000 disjoint 3-edge chains c/0 → c/1 → c/2 → c/3: 6 000 edges.
+  test("encoded closure: exact +/* counts over 66k edges, grouped and not, nothing pinned") {
+    // 22 000 disjoint 3-edge chains c/0 → c/1 → c/2 → c/3: 66 000 edges
+    // clear the 65 536-edge threshold of the dictionary-encoded path.
     // Per chain, `+` reaches 3 + 2 + 1 = 6 pairs and `*` adds the 4
     // zero-length pairs. The grouped copy splits chains over 2 graphs.
-    val chains = 2000L
+    val chains = 22000L
     def iri(c: org.apache.spark.sql.Column) = struct(
       lit(Term.IRI).as("termType"), c.as("lex"),
       lit(null).cast("string").as("datatype"),
@@ -121,7 +122,7 @@ class SeededPathSpec extends AnyFunSuite {
       for ((op, expected) <- Seq("+" -> plus, "*" -> star)) {
         val res = Sparql.execute(plain, s"SELECT ?s ?o { ?s <${NS}next>$op ?o }")
         assert(res.count() == chains * expected.size, op)
-        assert(pairsOf(res, 1234) == expected, op)
+        assert(pairsOf(res, 12345) == expected, op)
         val grouped = Sparql.execute(named,
           s"SELECT ?g ?s ?o { GRAPH ?g { ?s <${NS}next>$op ?o } }")
         assert(grouped.count() == chains * expected.size, op)
