@@ -35,7 +35,7 @@ final class MemoryDlqSink extends DlqSink {
 final class ProjectorException(msg: String, cause: Throwable = null)
   extends RuntimeException(msg, cause)
 
-/** Raised by [[Projector.materialise]] for undecodable payloads — the
+/** Raised by [[Projector.admit]] for undecodable payloads — the
   * reference's RdfPayloadException failure class (deserialization
   * failure, FusekiProjector.java:267-277): the event never touched the
   * store, so the good prefix commits and processing continues.
@@ -98,16 +98,12 @@ trait BatchSink {
   *    job, as an HTTP POST applies in-process in the reference), by a
   *    Spark job for bulk and WHERE-resolved batches.
   *  - Patch transactions may SPAN events
-  *    (RDFChangesApplyExternalTransaction.java:10-42). Each arriving
-  *    patch advances the batch's [[graft.rdf.RdfPatchParser.TxnState]]
-  *    through the one patch-transaction machine
-  *    ([[graft.rdf.RdfPatchParser.dataOpsBatch]]), which fails bad
-  *    nesting; a patch that leaves the dataset outside a transaction
-  *    fires the patch-closed commit. A patch ending with an open TX
-  *    suppresses that trigger until a later TC or TA closes it; the
-  *    other triggers still fire and commit a dangling transaction with
-  *    the batch, as the reference's commit() closes whatever
-  *    transaction is open (TestFusekiProjector.java:216-232).
+  *    (RDFChangesApplyExternalTransaction.java:10-42): each arrival
+  *    advances the batch's transaction state ([[Projector.admit]]). A
+  *    patch that leaves the dataset outside a transaction fires the
+  *    patch-closed commit; the other triggers commit a dangling
+  *    transaction with the batch, as the reference's commit() closes
+  *    it (TestFusekiProjector.java:216-232).
   *
   * Error contract (FusekiProjector.java:258-277, README.md:256-269):
   *  - decode failure → commit good prefix, route event to DLQ with the
@@ -183,8 +179,8 @@ final class Projector(
     awaitResumeIfPaused()
     if (lastCommitTime == -1L) lastCommitTime = clock()
     try {
-      val m = materialise(event)
-      validateApply(m)
+      val (m, next) = Projector.admit(event, txn, batch.size, sink.loadRoot)
+      txn = next
       batch += m
       commitTransactionIfNeeded(m)
     } catch {
@@ -203,48 +199,10 @@ final class Projector(
     }
   }
 
-  /** Force lazy payload decode (materialiseValue, :502-508). */
-  private def materialise(event: Event): MaterialisedEvent = {
-    val scope = s"${event.topic}:${event.partition}:${event.offset}"
-    val d = RdfParse.decode(event.value, event.contentType, scope)
-    if (d._corrupt != null) throw new PayloadException(d._corrupt)
-    // an event whose ops overflow the op-log packing would reorder the
-    // next event's ops in the store: route it to the DLQ on arrival
-    val ops = math.max(Option(d.quads).fold(0)(_.size), Option(d.ops).fold(0)(_.size))
-    graft.store.OpLog.overBudget(ops).foreach(why =>
-      throw new PayloadException(s"event decodes to $why"))
-    MaterialisedEvent(event, d)
-  }
-
   // the patch-transaction machine's state after the buffered batch:
   // each arrival advances it by one event, so arrival cost stays
   // O(event), not O(batch); it resets with the batch on commit
   private var txn = RdfPatchParser.TxnState()
-
-  /** Apply-time validation a DatasetGraph would do while streaming ops
-    * (invalid marker nesting → the reference's mid-apply failure).
-    * Judged against the carried batch state so a transaction left open
-    * by an earlier event makes a leading TC/TA valid. On success the
-    * carried state advances (the caller buffers the event).
-    */
-  private def validateApply(m: MaterialisedEvent): Unit =
-    if (m.decoded.kind == "update") {
-      // LOAD documents probe at ARRIVAL (read + parse, result
-      // discarded) + cumulative ordinal-budget check — shared with the
-      // HTTP update endpoint ([[graft.sparql.SparqlUpdate.probeArrival]]):
-      // the deferred-apply model requires that the commit apply cannot
-      // fail, so a disabled/confined/missing/unparseable document (or
-      // a script whose resolved ops overflow the 2^24 per-event
-      // ordinal budget) must surface here, where the event routes to
-      // the DLQ and the good prefix commits — the same station patch-
-      // marker validation holds. (If the file changes in the window
-      // between this probe and the commit, the sink treats that load
-      // as SILENT — the rest of the batch is innocent.)
-      val text = new String(m.event.value, java.nio.charset.StandardCharsets.UTF_8)
-      graft.sparql.SparqlUpdate.probeArrival(text, sink.loadRoot)
-    } else if (m.decoded.kind == "patch") {
-      txn = RdfPatchParser.dataOpsBatch(Seq(m.decoded.ops), txn, batch.size)._2
-    }
 
   /** The commit decision tree (FusekiProjector.java:400-479) — same
     * branches, same order.
@@ -324,10 +282,8 @@ final class Projector(
     }
     batch.clear()
     currentBatchSizeBytes = 0L
-    // a dangling open txn commits with the enclosing batch
-    // (dataOpsBatch contract) — the machine's state resets WITH the
-    // clear: resetting before sink.apply would desync it from the
-    // still-buffered batch if the sink throws and processing resumes
+    // a dangling open txn committed with the batch; the machine resets
+    // WITH the clear, so a sink that throws leaves the two in step
     txn = RdfPatchParser.TxnState()
   }
 
@@ -401,5 +357,39 @@ final class Projector(
       try while (paused) pauseMonitor.wait()
       finally _atPausePoint = false
     }
+  }
+}
+
+object Projector {
+
+  /** Admit an arriving event to a batch — the checks a DatasetGraph
+    * would make while applying it, run at arrival since the deferred
+    * apply must not fail. `txn` is the patch-transaction machine's state
+    * after the `at` events already admitted. Returns the decoded event
+    * and the machine's next state; throws the reference's two failure
+    * classes (FusekiProjector.java:258-277): [[PayloadException]] when
+    * the payload does not decode or overflows one event's op budget
+    * ([[graft.store.OpLog.overBudget]]), [[RdfParseException]] when a
+    * patch nests its markers badly against `txn` or an update fails
+    * [[graft.sparql.SparqlUpdate.probeArrival]] (a LOAD document that
+    * cannot be read, or resolved ops past the budget).
+    */
+  def admit(event: Event, txn: RdfPatchParser.TxnState, at: Int,
+      loadRoot: Option[java.nio.file.Path]): (MaterialisedEvent, RdfPatchParser.TxnState) = {
+    val d = RdfParse.decode(event.value, event.contentType,
+      s"${event.topic}:${event.partition}:${event.offset}")
+    if (d._corrupt != null) throw new PayloadException(d._corrupt)
+    val ops = math.max(Option(d.quads).fold(0)(_.size), Option(d.ops).fold(0)(_.size))
+    graft.store.OpLog.overBudget(ops).foreach(why =>
+      throw new PayloadException(s"event decodes to $why"))
+    val next = d.kind match {
+      case "update" =>
+        graft.sparql.SparqlUpdate.probeArrival(
+          new String(event.value, java.nio.charset.StandardCharsets.UTF_8), loadRoot)
+        txn
+      case "patch" => RdfPatchParser.dataOpsBatch(Seq(d.ops), txn, at)._2
+      case _ => txn
+    }
+    (MaterialisedEvent(event, d), next)
   }
 }

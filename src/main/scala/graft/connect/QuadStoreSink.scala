@@ -2,26 +2,31 @@ package graft.connect
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, udf}
 
 import graft.plans.Checkpoints
-import graft.rdf.{RdfParse, RdfPatchParser}
+import graft.rdf.{RdfParse, RdfParseException, RdfPatchParser}
 import graft.sparql.SparqlUpdate
 import graft.store.{OpLog, QuadStore}
 
 /** BatchSink applying committed batches to a [[QuadStore]] — the
-  * engine's FusekiSink (FusekiSink.java:38-77): dataset payloads
-  * stream their quads as adds, patch payloads the effective ops the
-  * patch-transaction machine ([[RdfPatchParser.dataOpsBatch]]) yields
-  * for the whole batch — A/D as quad ops, PA/PD into the prefix map —
-  * SPARQL Update payloads their resolved quad ops, all as ONE atomic
-  * parquet segment per commit.
+  * engine's FusekiSink (FusekiSink.java:38-77), and the only commit
+  * front-end: the projector's batches ([[apply]]) and Structured
+  * Streaming's micro-batches ([[applyFrame]]) run the same commit.
+  * Dataset payloads stream their quads as adds, patch payloads the
+  * effective ops the patch-transaction machine
+  * ([[RdfPatchParser.dataOpsBatch]]) yields for the whole batch — A/D
+  * as quad ops, PA/PD into the prefix map — SPARQL Update payloads
+  * their resolved quad ops, all as ONE atomic parquet segment per
+  * commit.
   *
-  * `seq` packs (event index in batch, op index in event) through
+  * `seq` packs (event ordinal, op index in event) through
   * [[OpLog.seq]], so latest-op-wins inside the store respects event
-  * order — the ordered delete contract (README.md:152-153) without the
-  * reference's single-partition restriction.
+  * order. A projector batch's ordinal is the event's index in the
+  * batch, which orders its events without the reference's
+  * single-partition restriction (README.md:152-153); a micro-batch's
+  * is the event's offset, which orders it within its partition.
   *
   * SPARQL Update WHERE-clauses see the SEQUENTIAL state: the store as
   * of the last commit plus every batch op before them. That state is a
@@ -30,17 +35,13 @@ import graft.store.{OpLog, QuadStore}
   * `DELETE WHERE` never collects matched quads to the driver.
   *
   * Bulk auto-routing: when a batch's dataset payloads together exceed
-  * `bulkBytesThreshold`, their quads do NOT pass through the
-  * driver-side op buffer (whose `toDF` embeds every row in the plan
-  * as a LocalRelation — fine at the reference's 50 MiB batch
-  * envelope, a driver bottleneck beyond it). Instead the RAW payload
-  * bytes ship to executors — one row per event — and decode there
-  * through [[RdfParse.decodeEvents]] and [[OpLog.lower]], the same
-  * lowering [[graft.streaming.IngestPipeline]] runs, keyed by each
-  * event's index in the batch so bulk and driver-path events of one
-  * batch interleave in event order. Batches carrying a SPARQL Update
-  * stay on the driver path: update WHERE resolution needs the
-  * sequential in-batch state, which folds driver-buffered ops.
+  * `bulkBytesThreshold`, their quads skip the driver-side op buffer
+  * (whose `toDF` embeds every row in the plan as a LocalRelation, a
+  * driver bottleneck past the reference's 50 MiB batch envelope): the
+  * RAW payload bytes ship to executors, one row per event, and lower
+  * there as a micro-batch's dataset events do, keyed by each event's
+  * ordinal. Batches carrying a SPARQL Update stay on the driver path:
+  * WHERE resolution folds driver-buffered ops.
   *
   * Write and read path after a commit: a batch whose ops all sit in
   * the driver buffer — no bulk events, no WHERE-resolved update ops —
@@ -77,15 +78,101 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     * must not accumulate pinned blocks across batches.
     */
   override def apply(batchId: Long, events: Seq[MaterialisedEvent]): Unit =
-    Checkpoints.withScope(commit(batchId, events))
+    Checkpoints.withScope(commit(batchId,
+      Seq(events.zipWithIndex.map { case (m, i) => (m, i.toLong) }), None))
 
-  private def commit(batchId: Long, events: Seq[MaterialisedEvent]): Unit = {
+  /** Commit one micro-batch of raw events ([[QuadStoreSink.FrameColumns]])
+    * as ONE segment, each event meaning what it means to the projector.
+    * Dataset events decode and lower on executors. Patch and update
+    * events are collected in (topic, partition, offset) order and
+    * admitted by the projector's arrival checks; a micro-batch holding
+    * an update takes that driver route for every event, since WHERE
+    * resolution folds driver-held ops. The offset is each event's
+    * ordinal, so order holds within a partition (README.md:152-153).
+    * The patch-transaction machine restarts at each partition and after
+    * each event turned away, as the projector's good-prefix commit
+    * restarts it; a transaction open at the end commits with the
+    * micro-batch. Dataset failures are counted by an Observation on the
+    * segment write, so a clean micro-batch decodes once, and they cannot
+    * restart the machine. An epoch already compacted reports nothing.
+    */
+  def applyFrame(batchId: Long, events: DataFrame): QuadStoreSink.FrameCommit =
+    exclusively(Checkpoints.withScope {
+      import spark.implicits._
+      val raw = events.select(QuadStoreSink.FrameColumns.map(col): _*)
+      def collected(df: DataFrame) = df.collect().toSeq.map(r => Event(r.getString(0),
+        r.getInt(1), r.getLong(2), r.getAs[Array[Byte]](3), r.getAs[Array[Byte]](4),
+        Option(r.getString(5)).map("Content-Type" -> _).toMap))
+      val held = collected(raw.filter(!RdfParse.isDatasetType(col("contentType"))))
+      val allOnDriver =
+        held.exists(e => RdfParse.normalize(e.contentType) == RdfParse.CT_SPARQL_UPDATE)
+      val (runs, rejects) = admitRuns((if (allOnDriver) collected(raw) else held)
+        .sortBy(e => (e.topic, e.partition, e.offset)))
+      def decoded = RdfParse.decodeEvents(raw.filter(RdfParse.isDatasetType(col("contentType"))))
+        .withColumn("_corrupt", coalesce(col("_corrupt"), OpLog.unpackable(col("offset"))))
+      val counts = Observation()
+      val lowered = if (allOnDriver) None else Some(OpLog.lower(decoded
+        .observe(counts, count(lit(1)).as("n"), count(col("_corrupt")).as("bad"))
+        .filter(col("_corrupt").isNull), col("offset")))
+      val written = commit(batchId, runs, lowered)
+      val (n, bad) = if (lowered.isEmpty || !written) (0L, 0L) else
+        (counts.get("n").asInstanceOf[Long], counts.get("bad").asInstanceOf[Long])
+      val turnedAway = rejects.map { case (e, why) =>
+        (e.topic, e.partition, e.offset, e.contentType, why, e.key, e.value)
+      }.toDF("topic", "partition", "offset", "contentType", "_corrupt", "key", "value")
+      // the dataset failures' reasons: decoded again, only when some failed
+      val rejected = if (bad == 0) turnedAway else turnedAway.unionByName(decoded
+        .filter(col("_corrupt").isNotNull).select("topic", "partition", "offset", "_corrupt")
+        .join(raw, Seq("topic", "partition", "offset")))
+      if (written) QuadStoreSink.FrameCommit(runs.map(_.size).sum + n - bad, rejects.size + bad, rejected)
+      else QuadStoreSink.FrameCommit(0L, 0L, turnedAway.limit(0))
+    })
+
+  /** `events` admitted in order ([[Projector.admit]], and an offset past
+    * the op-log packing turned away), with their offsets as ordinals,
+    * in runs of the patch-transaction machine: it restarts at each
+    * partition and after each event turned away. Returns the runs and
+    * the events turned away with their reasons.
+    */
+  private def admitRuns(events: Seq[Event])
+      : (Seq[Seq[(MaterialisedEvent, Long)]], Seq[(Event, String)]) = {
+    val runs = scala.collection.mutable.ArrayBuffer[Seq[(MaterialisedEvent, Long)]]()
+    val rejects = scala.collection.mutable.ArrayBuffer[(Event, String)]()
+    var run = Vector.empty[(MaterialisedEvent, Long)]
+    var txn = RdfPatchParser.TxnState()
+    def cut(): Unit = { if (run.nonEmpty) runs += run; run = Vector.empty; txn = RdfPatchParser.TxnState() }
+    events.indices.foreach { i =>
+      val e = events(i)
+      if (i > 0 && (events(i - 1).topic, events(i - 1).partition) != ((e.topic, e.partition))) cut()
+      try {
+        OpLog.unfit(e.offset).foreach(why => throw new PayloadException(why))
+        val (m, next) = Projector.admit(e, txn, run.size, loadRoot)
+        run :+= ((m, e.offset))
+        txn = next
+      } catch {
+        case x @ (_: PayloadException | _: RdfParseException) => rejects += ((e, x.getMessage)); cut()
+      }
+    }
+    cut()
+    (runs.toSeq, rejects.toSeq)
+  }
+
+  /** The one commit both entries share: `runs` of driver-held events,
+    * each with its ordinal in the log, and op rows `lowered` on
+    * executors, as ONE atomic segment. The patch-transaction machine
+    * runs once over each run. Returns false when the store dropped the
+    * epoch as already compacted.
+    */
+  private def commit(batchId: Long, runs: Seq[Seq[(MaterialisedEvent, Long)]],
+      lowered: Option[DataFrame]): Boolean = {
     import spark.implicits._
-    // patch op streams resolve batch-wide: a transaction opened by one
+    // patch op streams resolve run-wide: a transaction opened by one
     // event may be committed (or aborted) by a later one
     // (RDFChangesApplyExternalTransaction.java:10-42)
-    val (patchOps, _) = RdfPatchParser.dataOpsBatch(
-      events.map(m => if (m.decoded.kind == "patch") m.decoded.ops else Seq.empty))
+    val events = runs.flatten
+    val patchOps = runs.flatMap(run => RdfPatchParser.dataOpsBatch(run.map { case (m, _) =>
+      if (m.decoded.kind == "patch") m.decoded.ops else Seq.empty
+    })._1)
 
     val local = scala.collection.mutable.ArrayBuffer[OpRow]()
     val resolved = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -129,23 +216,23 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     // bulk route: dataset payloads re-decode executor-side when their
     // combined size exceeds the threshold AND no update event needs
     // the sequential driver-folded state
-    val datasetBytes = events.iterator
+    val datasetBytes = events.iterator.map(_._1)
       .filter(_.decoded.kind == "dataset").map(_.event.value.length.toLong).sum
     val bulkRoute = datasetBytes > bulkBytesThreshold &&
-      !events.exists(_.decoded.kind == "update")
-    val bulkEvents = scala.collection.mutable.ArrayBuffer[(MaterialisedEvent, Int)]()
+      !events.exists(_._1.decoded.kind == "update")
+    val bulkEvents = scala.collection.mutable.ArrayBuffer[(MaterialisedEvent, Long)]()
 
-    events.zipWithIndex.foreach { case (m, ei) =>
+    events.zip(patchOps).foreach { case ((m, ord), eventPatchOps) =>
       m.decoded.kind match {
-        case "dataset" if bulkRoute => bulkEvents += ((m, ei))
+        case "dataset" if bulkRoute => bulkEvents += ((m, ord))
         case "dataset" =>
           m.decoded.quads.zipWithIndex.foreach { case (q, qi) =>
-            local += OpRow("A", OpLog.seq(ei, qi), q.graph, q.subject, q.predicate, q.obj)
+            local += OpRow("A", OpLog.seq(ord, qi), q.graph, q.subject, q.predicate, q.obj)
           }
         case "patch" =>
-          patchOps(ei).zipWithIndex.foreach { case (o, oi) =>
+          eventPatchOps.zipWithIndex.foreach { case (o, oi) =>
             if (o.op == "A" || o.op == "D")
-              local += OpRow(o.op, OpLog.seq(ei, oi), o.graph, o.subject, o.predicate, o.obj)
+              local += OpRow(o.op, OpLog.seq(ord, oi), o.graph, o.subject, o.predicate, o.obj)
           }
         case "update" =>
           // deterministic re-parse (decode already validated); blank
@@ -156,11 +243,8 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
           val scope = s"${m.event.topic}:${m.event.partition}:${m.event.offset}"
           var oi = 0L
           // past the OpLog budget the op index would bleed into the
-          // event bits and silently corrupt latest-op-wins ordering.
-          // The arrival probe (SparqlUpdate.probeArrival) rejects
-          // overflowing scripts to the DLQ before they buffer; this
-          // guard is the loud backstop so corruption is impossible even
-          // if a document grew between probe and apply.
+          // event bits; the arrival probe DLQs such scripts, and this
+          // loud backstop covers a document grown since the probe
           def guardOi(slots: Long): Unit =
             OpLog.overBudget(oi + slots).foreach(why => throw new ProjectorException(
               s"event ordinal budget exhausted ($why) — the arrival probe " +
@@ -169,44 +253,38 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
             case SparqlUpdate.QuadDataOp(op, quads) =>
               quads.foreach { q =>
                 guardOi(1)
-                local += OpRow(op, OpLog.seq(ei, oi), RdfParse.scopeTerm(q.graph, scope),
+                local += OpRow(op, OpLog.seq(ord, oi), RdfParse.scopeTerm(q.graph, scope),
                   RdfParse.scopeTerm(q.subject, scope), q.predicate,
                   RdfParse.scopeTerm(q.obj, scope))
                 oi += 1
               }
             case mo: SparqlUpdate.ModifyOp =>
               guardOi(2) // deletes at oi, inserts at oi + 1
-              SparqlUpdate.resolveModify(currentState(), mo, OpLog.seq(ei, oi), scope)
+              SparqlUpdate.resolveModify(currentState(), mo, OpLog.seq(ord, oi), scope)
                 .foreach(foldResolved)
               oi += 2
             case cl: SparqlUpdate.ClearOp =>
               guardOi(1)
-              foldResolved(SparqlUpdate.resolveClear(currentState(), cl, OpLog.seq(ei, oi)))
+              foldResolved(SparqlUpdate.resolveClear(currentState(), cl, OpLog.seq(ord, oi)))
               oi += 1
             case gm: SparqlUpdate.GraphManageOp =>
               guardOi(2) // deletes at oi, re-labelled inserts at oi + 1
-              SparqlUpdate.resolveGraphManage(currentState(), gm, OpLog.seq(ei, oi))
+              SparqlUpdate.resolveGraphManage(currentState(), gm, OpLog.seq(ord, oi))
                 .foreach(foldResolved)
               oi += 2
             case ld: SparqlUpdate.LoadOp =>
-              // blank nodes scope to this load site, like per-event
-              // decode; loaded quads join the driver-local adds (LOAD
-              // shares the event path's batch envelope — bulk corpora
-              // belong on the event source, not update scripts; the
-              // resolver caps quads to the 24-bit ordinal budget).
-              // The projector probed non-SILENT loads at ARRIVAL; a
-              // failure HERE means the file changed in the tiny window
-              // since — treated as SILENT (zero quads) rather than
-              // poisoning the whole committed batch, whose other
-              // events are innocent (deferred-apply contract: the
-              // commit apply must not fail)
+              // blank nodes scope to this load site; loaded quads join
+              // the driver-local adds (the resolver caps them to the
+              // ordinal budget). Non-SILENT loads were probed at
+              // arrival, so a failure here means the file changed since:
+              // it loads as SILENT, as the commit must not fail
               val loadScope = s"$scope:load$oi"
               val loaded =
                 try SparqlUpdate.resolveLoad(ld, loadScope, loadRoot)
                 catch { case scala.util.control.NonFatal(_) => Seq.empty[graft.rdf.Quad] }
               loaded.foreach { q =>
                 guardOi(1)
-                local += OpRow("A", OpLog.seq(ei, oi), q.graph, q.subject, q.predicate, q.obj)
+                local += OpRow("A", OpLog.seq(ord, oi), q.graph, q.subject, q.predicate, q.obj)
                 oi += 1
               }
           }
@@ -214,37 +292,37 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
           throw new ProjectorException(s"unapplied payload kind '$other'")
       }
     }
-    // executor-side decode of the bulk events: the driver ships ONE
-    // row per event (raw bytes it already holds from the poll), the
-    // per-quad explosion happens on executors — same blank-node scope
-    // as the driver path, so labels are identical either way. The local
-    // scan already splits the rows into min(rows, defaultParallelism)
-    // slices, so the decode needs no shuffle of the raw bytes
+    // executor-side decode of the bulk events: ONE row per event, with
+    // the driver path's blank-node scope; the local scan splits the rows
+    // into min(rows, defaultParallelism) slices, so no shuffle
     val bulkOps: Option[DataFrame] = if (bulkEvents.isEmpty) None else {
       val raw = bulkEvents.toSeq.map { case (m, _) =>
         (m.event.topic, m.event.partition, m.event.offset, m.event.key,
           m.event.value, m.event.contentType)
-      }.toDF("topic", "partition", "offset", "key", "value", "contentType")
-      // the event's batch index, looked up per event row by its
+      }.toDF(QuadStoreSink.FrameColumns: _*)
+      // the event's ordinal, looked up per event row by its
       // identity: a broadcast join back to an (identity, index) frame
       // copied every wide decoded row (~10 % of a 39 MB bulk commit,
       // 4 cores)
-      val ordOf = bulkEvents.map { case (m, ei) =>
-        (m.event.topic, m.event.partition, m.event.offset) -> ei.toLong
+      val ordOf = bulkEvents.map { case (m, ord) =>
+        (m.event.topic, m.event.partition, m.event.offset) -> ord
       }.toMap
-      val ord = udf((t: String, p: Int, o: Long) => ordOf((t, p, o)))
+      val ordinal = udf((t: String, p: Int, o: Long) => ordOf((t, p, o)))
       Some(OpLog.lower(RdfParse.decodeEvents(raw),
-        ord(col("topic"), col("partition"), col("offset"))))
+        ordinal(col("topic"), col("partition"), col("offset"))))
     }
-    if (resolved.isEmpty && bulkOps.isEmpty) store.commitRows(batchId, local.toSeq)
-    else store.commitOps(batchId,
-      (resolved ++ bulkOps).foldLeft(local.toSeq.toDF())(_.unionByName(_)))
+    val written =
+      if (resolved.isEmpty && bulkOps.isEmpty && lowered.isEmpty) store.commitRows(batchId, local.toSeq)
+      else store.commitOps(batchId,
+        (resolved ++ bulkOps ++ lowered).foldLeft(local.toSeq.toDF())(_.unionByName(_)))
     // effective PA/PD prefix ops update the dataset prefix map in event
-    // order (RDFChangesApply semantics; SURVEY §2.1 row 6)
-    store.updatePrefixes(patchOps.flatten.collect {
+    // order (RDFChangesApply semantics; SURVEY §2.1 row 6), unless the
+    // store dropped the epoch: it applied them when it first committed
+    if (written) store.updatePrefixes(patchOps.flatten.collect {
       case o if o.op == "PA" => ("PA", o.subject.lex, o.obj.lex)
       case o if o.op == "PD" => ("PD", o.subject.lex, null)
     })
+    written
   }
 }
 
@@ -255,6 +333,15 @@ object QuadStoreSink {
     * its envelope stay on the driver path.
     */
   val DefaultBulkBytes: Long = 32L << 20
+
+  /** The columns of a raw-event frame. */
+  val FrameColumns: Seq[String] =
+    Seq("topic", "partition", "offset", "key", "value", "contentType")
+
+  /** Events applied and turned away by [[QuadStoreSink.applyFrame]];
+    * `rejects` holds each whole event, replayable, and its `_corrupt`.
+    */
+  final case class FrameCommit(applied: Long, rejected: Long, rejects: DataFrame)
 }
 
 /** Counting sink for decision-tree tests — the reference's mock

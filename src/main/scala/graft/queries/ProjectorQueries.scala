@@ -231,8 +231,7 @@ object ProjectorQueries {
       val events = graft.streaming.IngestPipeline.syntheticEvents(s, 10000L, 1000)
       (0 until 4).foreach { b =>
         graft.streaming.IngestPipeline.ingest(
-          events.filter(expr("offset div 2500") === b), store, b.toLong,
-          countApplied = false)
+          events.filter(expr("offset div 2500") === b), store, b.toLong)
       }
       Seq((10000L, store.count())).toDF("n_events", "n_quads")
     },

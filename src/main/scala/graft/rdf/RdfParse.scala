@@ -2,7 +2,7 @@ package graft.rdf
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Payload materialization + content-type dispatch (SURVEY.md §2.2
@@ -27,8 +27,11 @@ object RdfParse {
   val CT_RDFXML = "application/rdf+xml"
   val CT_JSONLD = "application/ld+json"
 
+  /** Content types that decode to an RDF Patch op stream. */
+  val PatchTypes: Seq[String] = Seq(CT_PATCH, "text/rdf-patch")
+
   final case class Decoded(
-      kind: String,               // "dataset" | "patch" | null on error
+      kind: String,               // "dataset" | "patch" | "update" | null on error
       quads: Seq[Quad],           // dataset kind
       ops: Seq[PatchOp],          // patch kind: the parsed stream, markers included
       _corrupt: String)           // non-null ⇒ deserialization failure
@@ -65,7 +68,7 @@ object RdfParse {
         case CT_JSONLD | "application/json+ld" =>
           Decoded("dataset",
             scopeBlanks(JsonLdParser.parse(doc, jsonLdContexts), scope), null, null)
-        case CT_PATCH | "text/rdf-patch" =>
+        case t if PatchTypes.contains(t) =>
           Decoded("patch", null, RdfPatchParser.parse(doc), null)
         case CT_SPARQL_UPDATE =>
           // validate now (parse errors must DLQ before any store
@@ -101,32 +104,14 @@ object RdfParse {
     else quads.map(q => Quad(scopeTerm(q.graph, scope), scopeTerm(q.subject, scope),
       q.predicate, scopeTerm(q.obj, scope)))
 
-  /** Row shape of the decoded event stream (documentation; the
-    * DataFrame below is built from InternalRows with this schema). A
-    * patch row's `ops` are its effective A/D/PA/PD ops: the event ran
-    * through the patch-transaction machine alone, so no marker is left.
-    */
-  final case class DecodedEvent(
-      topic: String, partition: Int, offset: Long,
-      key: Array[Byte], contentType: String,
-      kind: String, quads: Seq[Quad], ops: Seq[PatchOp], _corrupt: String)
-
-  private val PATCH_OP_SCHEMA = {
-    import org.apache.spark.sql.types._
-    StructType(StructField("op", StringType) +: Quad.Schema)
-  }
-  /** Schema of [[decodeEvents]]'s output — [[DecodedEvent]] as types. */
+  /** Schema of [[decodeEvents]]'s output. */
   val DECODED_SCHEMA: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("topic", StringType),
       StructField("partition", IntegerType, nullable = false),
       StructField("offset", LongType, nullable = false),
-      StructField("key", BinaryType),
-      StructField("contentType", StringType),
-      StructField("kind", StringType),
       StructField("quads", ArrayType(Quad.Schema)),
-      StructField("ops", ArrayType(PATCH_OP_SCHEMA)),
       StructField("_corrupt", StringType)))
   }
 
@@ -135,42 +120,33 @@ object RdfParse {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.unsafe.types.UTF8String
 
-  private def opRow(o: PatchOp): InternalRow =
-    new GenericInternalRow(Array[Any](UTF8String.fromString(o.op),
-      Term.row(o.graph), Term.row(o.subject), Term.row(o.predicate), Term.row(o.obj)))
+  /** Whether an event of content type `ct` decodes to a quad set (or
+    * fails to decode) rather than to a patch or an update: [[normalize]]
+    * and [[decode]]'s dispatch as a column, so a frame of raw events
+    * splits by kind without decoding.
+    */
+  def isDatasetType(ct: Column): Column = {
+    val javaTrim = (0 to ' ').map(_.toChar).mkString // String.trim's set
+    val t = lower(trim(substring_index(ct, ";", 1), javaTrim))
+    !coalesce(t.isin(CT_SPARQL_UPDATE +: PatchTypes: _*), lit(false))
+  }
 
-  private def standalone(d: Decoded, ct: String): Decoded =
-    if (d.kind != "patch") d
-    else try {
-      val (ops, txn) = RdfPatchParser.dataOpsBatch(Seq(d.ops))
-      if (txn.open) throw new RdfParseException("patch leaves its transaction open; " +
-        "transactions across events require the ordered projector path")
-      d.copy(ops = ops.head)
-    } catch {
-      case e: RdfParseException => Decoded(null, null, null, s"${normalize(ct)}: ${e.getMessage}")
-    }
-
-  /** DataFrame-level decode: input must have columns
-    * (topic STRING, partition INT, offset LONG, key BINARY,
-    *  value BINARY, contentType STRING); output has [[DECODED_SCHEMA]].
+  /** DataFrame-level decode of dataset events: input must have columns
+    * (topic STRING, partition INT, offset LONG, value BINARY,
+    *  contentType STRING); output has [[DECODED_SCHEMA]].
     * Runs as one mapPartitions pass, no shuffle; blank scope is the
     * event identity topic:partition:offset, making the decode
     * deterministic and hence safe under Spark task retry/epoch replay
     * (SURVEY.md §2.3 row 26 exactly-once note).
     *
-    * Rows carry no order across events, so each patch event runs the
-    * patch-transaction machine ([[RdfPatchParser.dataOpsBatch]]) alone.
-    * An event the machine rejects, or one that leaves its transaction
-    * open, gets a `_corrupt` reason: transactions across events need
-    * the ordered projector path.
+    * Rows carry no order across events, so only dataset events decode
+    * here ([[isDatasetType]]): patch and update events apply in order,
+    * on the driver ([[graft.connect.QuadStoreSink.applyFrame]]). A row
+    * of another kind gets a `_corrupt` reason.
     *
     * The parser emits InternalRows directly (via
-    * [[org.apache.spark.sql.graft.bridge.toDataFrame]]) instead of
-    * round-tripping Seq[Quad] through the case-class
-    * ExpressionEncoder: the serializer re-walked every nested Term
-    * object per row (MapObjects loops), a per-quad cost the parser —
-    * which already knows the exact output shape — need not pay. Same
-    * rows, same schema; only the construction layer changes.
+    * [[org.apache.spark.sql.graft.bridge.toDataFrame]]): a case-class
+    * ExpressionEncoder re-walked every nested Term object per row.
     *
     * Batch-only: the rows are built from `queryExecution.toRdd`, which
     * a streaming frame does not have — streaming ingest decodes per
@@ -184,7 +160,7 @@ object RdfParse {
     // the registry is a plain immutable map captured by the decode
     // closure — it ships once per task like any broadcast-small state
     val input = df.select(col("topic"), col("partition"), col("offset"),
-      col("key"), col("value"), col("contentType"))
+      col("value"), col("contentType"))
     val rdd = input.queryExecution.toRdd.mapPartitions { it =>
       it.map { row =>
         // copy what the closure retains: toRdd yields reused UnsafeRows
@@ -192,19 +168,17 @@ object RdfParse {
         val topic = if (row.isNullAt(0)) null else row.getUTF8String(0).toString
         val part = row.getInt(1)
         val off = row.getLong(2)
-        val key = if (row.isNullAt(3)) null else row.getBinary(3)
-        val value = if (row.isNullAt(4)) null else row.getBinary(4)
-        val ct = if (row.isNullAt(5)) null else row.getUTF8String(5).toString
+        val value = if (row.isNullAt(3)) null else row.getBinary(3)
+        val ct = if (row.isNullAt(4)) null else row.getUTF8String(4).toString
         val scope = s"$topic:$part:$off"
-        val d = standalone(decode(value, ct, scope, jsonLdContexts), ct)
+        val d = decode(value, ct, scope, jsonLdContexts)
+        val corrupt = if (d.kind == null || d.kind == "dataset") d._corrupt
+          else s"${normalize(ct)}: a ${d.kind} event does not decode to quads"
         new GenericInternalRow(Array[Any](
-          UTF8String.fromString(topic), part, off, key,
-          UTF8String.fromString(ct), UTF8String.fromString(d.kind),
-          if (d.quads == null) null
+          UTF8String.fromString(topic), part, off,
+          if (d.quads == null || corrupt != null) null
           else new GenericArrayData(d.quads.map(Quad.row).toArray[Any]),
-          if (d.ops == null) null
-          else new GenericArrayData(d.ops.map(opRow).toArray[Any]),
-          UTF8String.fromString(d._corrupt))): InternalRow
+          UTF8String.fromString(corrupt))): InternalRow
       }
     }
     org.apache.spark.sql.graft.bridge.toDataFrame(spark, rdd, DECODED_SCHEMA)

@@ -11,9 +11,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.connect.{Event, MaterialisedEvent, QuadStoreSink}
+import graft.connect.{Event, MaterialisedEvent, PayloadException, Projector, QuadStoreSink}
 import graft.plans.Checkpoints
-import graft.rdf.{NtWriter, RdfParse, RdfParseException, Term, TurtleWriter}
+import graft.rdf.{NtWriter, RdfParse, RdfParseException, RdfPatchParser, Term, TurtleWriter}
 import graft.sparql.{ResultsWriter, Sparql, SparqlService}
 import graft.store.{AggView, QuadStore}
 
@@ -398,12 +398,14 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     sink.exclusively { sink.apply(sink.resumeBatchId, events) }
   }
 
+  /** The projector's arrival checks ([[Projector.admit]]): a payload
+    * that fails them is a 400, as an [[RdfParseException]] is.
+    */
   private def materialise(value: Array[Byte], ct: String): MaterialisedEvent = {
-    val off = requestSeq.incrementAndGet()
-    val ev = Event("http", 0, off, Array.empty, value, Map("Content-Type" -> ct))
-    val d = RdfParse.decode(value, ct, s"http:0:$off")
-    if (d._corrupt != null) bad(400, d._corrupt)
-    MaterialisedEvent(ev, d)
+    val ev = Event("http", 0, requestSeq.incrementAndGet(), Array.empty, value,
+      Map("Content-Type" -> ct))
+    try Projector.admit(ev, RdfPatchParser.TxnState(), 0, None)._1
+    catch { case e: PayloadException => bad(400, e.getMessage) }
   }
 
   private def handleUpdate(ex: HttpExchange, req: Req, ds: Ds): Unit = {
@@ -411,15 +413,11 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     val text =
       if (req.ct == "application/sparql-update") req.bodyText
       else req.param("update").getOrElse(bad(400, "missing update"))
-    // same arrival probe the projector runs before buffering: a
-    // non-SILENT LOAD that cannot resolve — including the standing
-    // "LOAD is disabled" state here (the HTTP sink never configures a
-    // loadRoot) — must FAIL the request per SPARQL Update §3.1.4, not
-    // vanish into a 204 (QuadStoreSink.apply treats apply-time load
-    // failures as SILENT by design, so without this probe the error
-    // would be swallowed)
-    try graft.sparql.SparqlUpdate.probeArrival(text, None)
-    catch { case e: graft.rdf.RdfParseException => bad(400, e.getMessage) }
+    // materialise probes LOAD at arrival: a non-SILENT LOAD that cannot
+    // resolve — including the standing "LOAD is disabled" state here
+    // (the HTTP sink never configures a loadRoot) — FAILS the request
+    // per SPARQL Update §3.1.4 rather than vanish into a 204 (the sink
+    // treats apply-time load failures as SILENT by design)
     applyEvents(ds, Seq(materialise(text.getBytes(StandardCharsets.UTF_8),
       RdfParse.CT_SPARQL_UPDATE)))
     respond(ex, 204, "text/plain", "")
@@ -427,7 +425,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
 
   private def handlePatch(ex: HttpExchange, req: Req, ds: Ds): Unit = {
     if (req.method != "POST") bad(405, "patch requires POST")
-    if (req.ct != RdfParse.CT_PATCH && req.ct != "text/rdf-patch")
+    if (!RdfParse.PatchTypes.contains(req.ct))
       bad(415, s"patch endpoint expects ${RdfParse.CT_PATCH}")
     applyEvents(ds, Seq(materialise(req.body, RdfParse.CT_PATCH)))
     respond(ex, 204, "text/plain", "")

@@ -18,8 +18,7 @@ import graft.rdf.{Quad, Term}
   * state"). This object owns the four decisions of that format:
   *  - packing: `seq` = (event ordinal << [[OpBits]]) | op index, with
   *    one per-event op budget;
-  *  - lowering: decoded events ([[graft.rdf.RdfParse.decodeEvents]])
-  *    → op rows, in one columnar pass;
+  *  - lowering: decoded dataset events → op rows, in one columnar pass;
   *  - fold: a log → its latest op per quad (`last_op`);
   *  - overlay: a folded log applied over a base state.
   * The fold and the overlay come twice: as Spark plans over committed
@@ -67,39 +66,36 @@ object OpLog {
 
   // --- lowering -------------------------------------------------------------
 
-  /** Why a decoded event (at ordinal `ord`) cannot pack into `seq`, or
-    * null — the `_corrupt` reason that routes it to the DLQ instead of
-    * wrapping its ordinals. A patch counts its effective ops, prefix
-    * ops included, since [[lower]] indexes them in document order.
+  /** Why an event at ordinal `ord` cannot pack into `seq`, or None. */
+  def unfit(ord: Long): Option[String] =
+    if (ord < MaxEventOrdinal) None
+    else Some(s"event ordinal $ord does not fit the op-log packing (< $MaxEventOrdinal)")
+
+  /** [[overBudget]] and [[unfit]] of a decoded dataset event as a
+    * column, null when it packs: the `_corrupt` reason that routes it
+    * to the DLQ instead of wrapping its ordinals.
     */
   def unpackable(ord: Column): Column = {
-    val n = greatest(size(col("quads")), size(col("ops")))
+    val n = size(col("quads"))
     when(n >= MaxEventOps, concat(lit("event holds "), n.cast("string"),
         lit(s" ops, past the per-event ordinal budget ($MaxEventOps)")))
       .when(ord >= MaxEventOrdinal, concat(lit("event ordinal "), ord.cast("string"),
         lit(s" does not fit the op-log packing (< $MaxEventOrdinal)")))
   }
 
-  /** Lower decoded events to op rows: dataset quads as adds, a patch's
-    * effective A/D ops in document order (its PA/PD ops skipped). `ord` is the event's position in the log's
-    * order (a partition offset, or an index within one batch). Blank
-    * nodes keep the decode's `topic:partition:offset` scope.
-    *
-    * A decoded row carries `quads` (dataset) or `ops` (patch), never
-    * both, so two outer explodes in a row yield each event's ops once;
-    * this keeps every step in generated code, where a `transform` of
-    * the quads into op structs ran interpreted per element.
+  /** Lower decoded dataset events ([[graft.rdf.RdfParse.decodeEvents]])
+    * to op rows: each event's quads as adds, in document order, at
+    * ordinal `ord` (a partition offset, or an index within one batch).
+    * Patch and update events lower on the driver ([[graft.connect.QuadStoreSink]]).
     */
   def lower(decoded: DataFrame, ord: Column): DataFrame =
     // `ord` evaluates once per event: beside a generator it would run
     // once per op
-    decoded.select(ord.as("ord"), col("quads"), col("ops"))
-      .select(col("ord"), col("ops"), posexplode_outer(col("quads")).as(Seq("qi", "q")))
-      .select(col("ord"), col("qi"), col("q"), posexplode_outer(col("ops")).as(Seq("pi", "p")))
-      .filter(col("q").isNotNull || col("p.op").isin("A", "D"))
-      .select(coalesce(col("p.op"), lit("A")).as("op") +:
-        shiftleft(col("ord"), OpBits).bitwiseOR(coalesce(col("qi"), col("pi"))).as("seq") +:
-        Quad.Columns.map(c => coalesce(col(s"q.$c"), col(s"p.$c")).as(c)): _*)
+    decoded.select(ord.as("ord"), col("quads"))
+      .select(col("ord"), posexplode(col("quads")).as(Seq("qi", "q")))
+      .select(lit("A").as("op") +:
+        shiftleft(col("ord"), OpBits).bitwiseOR(col("qi")).as("seq") +:
+        Quad.Columns.map(c => col(s"q.$c").as(c)): _*)
 
   // --- fold and overlay -----------------------------------------------------
 

@@ -177,20 +177,21 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * high-water) is dropped outright —
     * Spark epoch replay is therefore safe in both regimes (replaces the
     * reference's abort/replay machinery, FusekiProjector.java:362-379).
+    * Returns false for that epoch: `ops` never ran, nor did its Observations.
     */
-  def commitOps(batchId: Long, ops: DataFrame): Unit = commit(batchId, Left(ops))
+  def commitOps(batchId: Long, ops: DataFrame): Boolean = commit(batchId, Left(ops))
 
   /** [[commitOps]] for op rows the driver already holds. The segment is
     * written from the calling thread as one parquet file, with no Spark
     * job, and the commit folds the rows into the driver tail fold, so
     * [[quads]] keeps serving the tail without reading it back.
     */
-  def commitRows(batchId: Long, rows: Seq[OpRow]): Unit = commit(batchId, Right(rows))
+  def commitRows(batchId: Long, rows: Seq[OpRow]): Boolean = commit(batchId, Right(rows))
 
   private def commit(batchId: Long,
-      ops: Either[DataFrame, Seq[OpRow]]): Unit = writeLock.synchronized {
+      ops: Either[DataFrame, Seq[OpRow]]): Boolean = writeLock.synchronized {
     val v = readVersion()
-    if (batchId <= v.highWater) return // already compacted into base
+    if (batchId <= v.highWater) return false // already compacted into base
     // COPY-ON-WRITE replay: a replayed epoch writes a FRESH directory
     // (same ord, bumped -g generation) and the pointer swap retires the
     // old one. Never overwriting in place means a lazy plan that still
@@ -257,6 +258,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     } yield TailFold(segs.map(_.name), f)
     if (autoCompactTail > 0 && segs.count(!_.isBase) >= autoCompactTail)
       compact()
+    true
   }
 
   /** Convenience: commit a dataset payload (adds only). */

@@ -4,93 +4,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.connect.OffsetStore
-import graft.rdf.RdfParse
-import graft.store.{OpLog, QuadStore}
+import graft.connect.{OffsetStore, ProjectorException, QuadStoreSink}
+import graft.store.QuadStore
 
 /** The distributed ingest path — the Spark shape of the reference's
-  * whole pipeline (SURVEY.md §3.1: readStream(kafka) → decode →
-  * foreachBatch{split, apply, DLQ, offsets}). The [[graft.connect.Projector]]
-  * carries the reference's per-event commit decision tree for
-  * driver-style sources; THIS path is what runs at 100 TB: payload
-  * decode happens in executors (RdfParse.decodeEvents mapPartitions —
-  * one pass, no shuffle), the corrupt split is a column filter, and
-  * each micro-batch commits one atomic store segment, so epoch replay
-  * is idempotent end-to-end (QuadStore.commitOps replays an epoch
-  * copy-on-write into its original log position).
+  * whole pipeline (SURVEY.md §3.1: readStream(kafka) → foreachBatch{
+  * commit, DLQ, offsets}). Each micro-batch commits as one store segment
+  * through the sink the projector feeds ([[QuadStoreSink.applyFrame]]),
+  * so an event means the same on both paths, and epoch replay is
+  * idempotent (QuadStore.commitOps replays an epoch copy-on-write).
   */
 object IngestPipeline {
 
-  /** Apply one batch of raw events (columns: topic, partition, offset,
-    * key, value, contentType) to the store; malformed events land in
-    * `dlqDir` as parquet (the DLQ side output) with the decode error in
-    * `_corrupt`. Returns (applied events, dlq events).
-    *
-    * Each patch event stands alone (see [[RdfParse.decodeEvents]]): its
-    * ops go through the patch-transaction machine, so a `TA` drops the
-    * ops since its `TX`. An event with bad marker nesting, or one that
-    * leaves its transaction open, goes to the DLQ with the reason in
-    * `_corrupt` — a transaction across events needs the ordered
-    * projector path. Prefix ops (PA/PD) do not reach the store's prefix
-    * map on this path.
+  /** Commit one batch of raw events ([[QuadStoreSink.FrameColumns]]).
+    * Events the commit turns away land in `dlqDir` as parquet with the
+    * reason in `_corrupt`; with no `dlqDir` the good events commit and
+    * the call then throws [[ProjectorException]], as the projector does.
+    * `offsets` records one past each partition's last event,
+    * dead-lettered ones included. Returns (applied, dead-lettered).
     */
   def ingest(events: DataFrame, store: QuadStore, batchId: Long,
       dlqDir: Option[String] = None,
-      offsets: Option[OffsetStore] = None,
-      countApplied: Boolean = true): (Long, Long) = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // NOT cached: materializing millions of nested-struct rows costs
-    // far more than re-running the (cheap, deterministic) decode per
-    // action — measured 18.7 s cached vs ~9 s re-decoded for the 5M
-    // quad scale corpus
-    val decoded0 = RdfParse.decodeEvents(events)
-    // SPARQL Update events are sequential by nature (WHERE clauses see
-    // the state left by earlier events); the bulk path is unordered
-    // across partitions, so they route to the DLQ rather than silently
-    // dropping — the Projector path applies them (QuadStoreSink).
-    // Events whose ops or offset do not fit the `seq` packing route
-    // there too, rather than wrapping into another event's ordinals
-    val decoded = decoded0.withColumn("_corrupt", coalesce(col("_corrupt"),
-      when(col("kind") === "update",
-        lit("sparql-update requires the ordered projector path"))
-        .otherwise(OpLog.unpackable(col("offset")))))
-    locally {
-      val bad = decoded.filter(col("_corrupt").isNotNull)
-      val dlqCount = dlqDir match {
-        case Some(dir) =>
-          val n = bad.count()
-          // full event carried (key + value + content type) so DLQ'd
-          // events can be replayed, like the reference's re-serialized
-          // RdfPayload (FKS.java:300-311)
-          if (n > 0) bad
-            .select(col("topic"), col("partition"), col("offset"),
-              col("contentType"), col("_corrupt"))
-            .join(events.select(col("topic"), col("partition"), col("offset"),
-              col("key"), col("value")), Seq("topic", "partition", "offset"))
-            .write.mode("append").parquet(dir)
-          n
-        case None => 0L
-      }
-      val good = decoded.filter(col("_corrupt").isNull)
-      // dataset payloads: quads as adds; patch payloads: their
-      // effective A/D stream. The offset is the event ordinal, which preserves event
-      // order WITHIN a partition; cross-partition order is undefined —
-      // the same contract as the reference ("order of events matters …
-      // you MUST have only a single partition", README.md:152-153).
-      // Additive (delete-free) ingestion is order-insensitive by set
-      // semantics.
-      store.commitOps(batchId, OpLog.lower(good, col("offset")))
-      val applied = if (countApplied) good.count() else -1L
-      offsets.foreach { os =>
-        good.groupBy(col("topic"), col("partition"))
-          .agg(max(col("offset")).as("maxOff"))
-          .collect()
-          .foreach(r => os.saveOffset(r.getString(0), r.getInt(1), r.getLong(2) + 1))
-        os.flush()
-      }
-      (applied, dlqCount)
+      offsets: Option[OffsetStore] = None): (Long, Long) = {
+    val c = new QuadStoreSink(events.sparkSession, store).applyFrame(batchId, events)
+    if (c.rejected > 0) dlqDir match {
+      // the reference's re-serialized RdfPayload (FKS.java:300-311)
+      case Some(dir) => c.rejects.write.mode("append").parquet(dir)
+      case None => throw new ProjectorException(
+        s"${c.rejected} event(s) of micro-batch $batchId failed and no DLQ is configured")
     }
+    offsets.foreach { os =>
+      events.groupBy(col("topic"), col("partition"))
+        .agg(max(col("offset")).as("maxOff"))
+        .collect()
+        .foreach(r => os.saveOffset(r.getString(0), r.getInt(1), r.getLong(2) + 1))
+      os.flush()
+    }
+    (c.applied, c.rejected)
   }
 
   /** Structured Streaming entry: one micro-batch = one store segment =

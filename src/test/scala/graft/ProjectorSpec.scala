@@ -188,8 +188,10 @@ class ProjectorSpec extends AnyFunSuite {
     // the model: ops append to a buffer in stream order, TX marks where
     // its transaction began, TA cuts the buffer back to that mark; the
     // buffer folds into the quads and prefixes at each patch that ends
-    // on TC/TA, at each rejected event (its good prefix) and at the end
-    def model(events: Seq[Seq[Line]]): (Set[String], Map[String, String], Seq[Long]) = {
+    // on TC/TA, at each rejected event (its good prefix), before each
+    // event in `cuts` (a micro-batch boundary) and at the end
+    type Result = (Set[String], Map[String, String], Seq[Long])
+    def model(events: Seq[Seq[Line]], cuts: Set[Int] = Set.empty): Result = {
       var quads = Set.empty[String]
       var prefixes = Map.empty[String, String]
       val rejected = scala.collection.mutable.ArrayBuffer[Long]()
@@ -205,6 +207,7 @@ class ProjectorSpec extends AnyFunSuite {
         buf = Vector.empty; mark = None
       }
       events.zipWithIndex.foreach { case (ev, k) =>
+        if (cuts(k)) commit()
         var (b, m, ok, closed) = (buf, mark, true, false)
         ev.foreach { l =>
           if (ok) l._1 match {
@@ -227,7 +230,12 @@ class ProjectorSpec extends AnyFunSuite {
       (quads, prefixes, rejected.toSeq)
     }
 
-    def run(events: Seq[Seq[Line]]): (Set[String], Map[String, String], Seq[Long]) = {
+    def contents(store: graft.store.QuadStore): Set[String] =
+      store.quads().collect().map { r =>
+        s"${r.getStruct(1).getString(1)}|${r.getStruct(3).getString(1)}"
+      }.toSet
+
+    def run(events: Seq[Seq[Line]]): Result = {
       val store = new graft.store.QuadStore(TestSpark.spark,
         Harness.scratchDir("patchmodel").toString)
       val dlq = new MemoryDlqSink
@@ -238,10 +246,29 @@ class ProjectorSpec extends AnyFunSuite {
       }, Some(() => None))
       new Projector(src, new QuadStoreSink(TestSpark.spark, store),
         ProjectorConfig(batchSize = 1000), dlq = Some(dlq)).runToCompletion()
-      val quads = store.quads().collect().map { r =>
-        s"${r.getStruct(1).getString(1)}|${r.getStruct(3).getString(1)}"
-      }.toSet
-      (quads, store.prefixes(), dlq.events.map(_.offset))
+      (contents(store), store.prefixes(), dlq.events.map(_.offset))
+    }
+
+    // the same stream through the Structured Streaming commit, one
+    // micro-batch starting at each of `cuts` (and at 0)
+    def ingest(events: Seq[Seq[Line]], cuts: Set[Int]): Result = {
+      val spark = TestSpark.spark
+      import spark.implicits._
+      val store = new graft.store.QuadStore(spark, Harness.scratchDir("patchingest").toString)
+      val dlqDir = Harness.scratchDir("patchingestdlq").resolve("dlq").toString
+      val raw = events.zipWithIndex.map { case (ev, k) =>
+        ("t", 0, k.toLong, Array.emptyByteArray, ev.map(render).mkString("\n").getBytes("UTF-8"),
+          "application/rdf-patch")
+      }
+      val bounds = (0 +: cuts.toSeq.sorted :+ raw.size).distinct
+      bounds.sliding(2).zipWithIndex.foreach { case (Seq(from, to), b) =>
+        graft.streaming.IngestPipeline.ingest(
+          raw.slice(from, to).toDF(graft.connect.QuadStoreSink.FrameColumns: _*),
+          store, b.toLong, Some(dlqDir))
+      }
+      val dlqd = if (!Files.exists(java.nio.file.Paths.get(dlqDir))) Seq.empty[Long]
+        else spark.read.parquet(dlqDir).select("offset").as[Long].collect().sorted.toSeq
+      (contents(store), store.prefixes(), dlqd)
     }
 
     val fixed: Seq[Seq[Seq[Line]]] = Seq(
@@ -253,7 +280,10 @@ class ProjectorSpec extends AnyFunSuite {
       Seq(Seq("A" -> 3), Seq("TX" -> 0, "A" -> 4, "PA" -> 2, "PD" -> 2)),
       // malformed nesting: a second TX in one event, TA with none open
       Seq(Seq("A" -> 0), Seq("TX" -> 0, "A" -> 1, "TX" -> 0), Seq("TA" -> 0),
-        Seq("D" -> 0, "TC" -> 0)))
+        Seq("D" -> 0, "TC" -> 0)),
+      // a rejected event commits the transaction open before it, so a
+      // later TA finds none open
+      Seq(Seq("TX" -> 0, "A" -> 0), Seq("TX" -> 0, "A" -> 1, "TX" -> 0), Seq("TA" -> 0)))
     val rnd = new scala.util.Random(20261017L)
     val ops = Seq("A" -> 4, "D" -> 3, "PA" -> 1, "PD" -> 1, "TX" -> 2, "TC" -> 2, "TA" -> 1)
       .flatMap { case (op, w) => Seq.fill(w)(op) }
@@ -261,7 +291,12 @@ class ProjectorSpec extends AnyFunSuite {
     val random = Seq.fill(30)(Seq.fill(2 + rnd.nextInt(6))(Seq.fill(rnd.nextInt(4))(line())))
     (fixed ++ random).foreach { events =>
       val text = events.map(_.map(render).mkString(" ")).mkString(" | ")
-      assert(run(events) == model(events), s"stream: $text")
+      val projected = run(events)
+      assert(projected == model(events), s"stream: $text")
+      assert(ingest(events, Set.empty) == projected, s"one micro-batch: $text")
+      val cuts = (1 until events.size).filter(_ => rnd.nextInt(3) == 0).toSet
+      assert(ingest(events, cuts) == model(events, cuts),
+        s"micro-batches from ${cuts.toSeq.sorted.mkString(",")}: $text")
     }
   }
 

@@ -48,19 +48,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(dlq.select("_corrupt").as[String].head().nonEmpty)
     assert(store.committedSegments().size == 2) // one segment per micro-batch
 
-    // a WELL-FORMED sparql-update event is sequential-by-nature: the
-    // unordered bulk path must DLQ it (reason, not parse error), not
-    // silently drop or apply it
+    // a sparql-update event applies as it does on the projector path
     stream.addData(rawEvent(4, "INSERT DATA { <http://g/d> <http://g/p> \"4\" }",
       "application/sparql-update"))
     val q3 = IngestPipeline.startStream(events, store, Some(dlqDir), None, ckpt,
       Trigger.AvailableNow())
     q3.awaitTermination()
-    assert(store.count() == 3, "update applied through the unordered path")
-    val dlq2 = spark.read.parquet(dlqDir)
-    assert(dlq2.count() == 2)
-    assert(dlq2.select("_corrupt").as[String].collect()
-      .exists(_.contains("ordered projector path")))
+    assert(store.count() == 4)
+    assert(spark.read.parquet(dlqDir).count() == 1)
+    assert(store.committedSegments().size == 3)
   }
 
   private def rawFrame(evs: (String, Int, Long, Array[Byte], Array[Byte], String)*) = {
@@ -77,15 +73,16 @@ class StreamingSpec extends AnyFunSuite {
     // event 0 grows (Spark-side, on its decoded row) to 2^20 + 2 quads
     // ending in a:x; event 1 deletes a:x. Under a 20-bit op field the
     // last add of event 0 packed above event 1's delete and won
+    import spark.implicits._
     val decoded = graft.rdf.RdfParse.decodeEvents(rawFrame(
-      rawEvent(0, "<a:s> <a:p> <a:o> .\n<a:x> <a:p> <a:o> ."),
-      rawEvent(1, "D <a:x> <a:p> <a:o> .", "application/rdf-patch")))
-    val grown = decoded.withColumn("quads", when(col("offset") === 0,
-        concat(array_repeat(element_at(col("quads"), 1), (1 << 20) + 1),
-          slice(col("quads"), 2, 1)))
-      .otherwise(col("quads")))
+      rawEvent(0, "<a:s> <a:p> <a:o> .\n<a:x> <a:p> <a:o> .")))
+    val grown = decoded.withColumn("quads", concat(
+      array_repeat(element_at(col("quads"), 1), (1 << 20) + 1), slice(col("quads"), 2, 1)))
+    val x = graft.rdf.Term.iri("a:x")
+    val delete = Seq(OpLog.OpRow("D", OpLog.seq(1, 0), null, x,
+      graft.rdf.Term.iri("a:p"), graft.rdf.Term.iri("a:o"))).toDF()
     val store = new QuadStore(spark, Harness.scratchDir("opbits").toString)
-    store.commitOps(0, OpLog.lower(grown, col("offset")))
+    store.commitOps(0, OpLog.lower(grown, col("offset")).unionByName(delete))
     assert(subjects(store) == Set("a:s"))
   }
 
@@ -106,24 +103,104 @@ class StreamingSpec extends AnyFunSuite {
     assert(dlq.head._2.contains("does not fit the op-log packing"), dlq)
   }
 
-  test("ingest: each patch event stands alone — TA rolls back, bad or open transactions DLQ") {
+  private val PatchCt = "application/rdf-patch"
+  private val UpdateCt = "application/sparql-update"
+
+  test("ingest: patch transactions span events; a rejected event restarts the machine") {
     import spark.implicits._
     val store = new QuadStore(spark, Harness.scratchDir("patchtxn").toString)
     val dlqDir = Harness.scratchDir("patchtxndlq").toString
-    val ct = "application/rdf-patch"
     val (applied, dlqd) = IngestPipeline.ingest(rawFrame(
-        rawEvent(0, "TX .\nA <a:x> <a:p> <a:o> .\nTA .", ct),
-        rawEvent(1, "TX .\nA <a:y> <a:p> <a:o> .\nTX .", ct),
-        rawEvent(2, "TX .\nA <a:z> <a:p> <a:o> .", ct),
-        rawEvent(3, "TX .\nA <a:w> <a:p> <a:o> .\nTC .", ct)),
+        rawEvent(0, "TX .\nA <a:x> <a:p> <a:o> .\nTA .", PatchCt),
+        rawEvent(1, "TX .\nA <a:y> <a:p> <a:o> .\nTX .", PatchCt),
+        rawEvent(2, "TX .\nA <a:z> <a:p> <a:o> .", PatchCt),
+        rawEvent(3, "TX .\nA <a:w> <a:p> <a:o> .\nTC .", PatchCt),
+        rawEvent(4, "A <a:v> <a:p> <a:o> .\nTA .", PatchCt),
+        rawEvent(5, "TX .\nA <a:u> <a:p> <a:o> .", PatchCt)),
       store, 0L, Some(dlqDir))
-    assert(subjects(store) == Set("a:w"))
-    assert((applied, dlqd) == ((2L, 2L)))
+    // 2's transaction commits at 3's TX; 5's is still open at the end
+    // of the micro-batch and commits with it
+    assert(subjects(store) == Set("a:z", "a:w", "a:u"))
+    assert((applied, dlqd) == ((4L, 2L)))
     val dlq = spark.read.parquet(dlqDir).select("offset", "_corrupt").as[(Long, String)]
       .collect().sortBy(_._1).toSeq
-    assert(dlq.map(_._1) == Seq(1L, 2L))
+    assert(dlq.map(_._1) == Seq(1L, 4L))
     assert(dlq(0)._2.contains("TX inside an open patch transaction"), dlq)
-    assert(dlq(1)._2.contains("leaves its transaction open"), dlq)
+    assert(dlq(1)._2.contains("TA without open patch transaction"), dlq)
+  }
+
+  test("ingest: INSERT DATA then DELETE WHERE in one micro-batch apply in offset order") {
+    val store = new QuadStore(spark, Harness.scratchDir("updorder").toString)
+    val (applied, dlqd) = IngestPipeline.ingest(rawFrame(
+        rawEvent(1, "DELETE WHERE { ?s <a:p> ?o }", UpdateCt),
+        rawEvent(0, "INSERT DATA { <a:s> <a:p> <a:o> . <a:t> <a:q> <a:o> }", UpdateCt),
+        rawEvent(2, "INSERT DATA { <a:r> <a:p> <a:o> }", UpdateCt)),
+      store, 0L)
+    assert((applied, dlqd) == ((3L, 0L)))
+    assert(subjects(store) == Set("a:t", "a:r"))
+  }
+
+  test("ingest: an update's WHERE sees a dataset event earlier in the micro-batch") {
+    val store = new QuadStore(spark, Harness.scratchDir("updwhere").toString)
+    IngestPipeline.ingest(rawFrame(
+        rawEvent(0, "<a:s> <a:p> <a:o> ."),
+        rawEvent(1, "INSERT { ?s <a:seen> <a:yes> } WHERE { ?s <a:p> <a:o> }", UpdateCt),
+        rawEvent(2, "<a:late> <a:p> <a:o> .")),
+      store, 0L)
+    import spark.implicits._
+    val seen = store.quads().filter(col("predicate.lex") === "a:seen")
+      .select("subject.lex").as[String].collect().toSeq
+    assert(seen == Seq("a:s"))
+    assert(store.count() == 3)
+  }
+
+  test("ingest: PA/PD ops reach the store's prefix map") {
+    val store = new QuadStore(spark, Harness.scratchDir("prefixes").toString)
+    IngestPipeline.ingest(rawFrame(
+        rawEvent(0, "PA \"a\" <http://a/> .\nPA \"b\" <http://b/> .", PatchCt),
+        rawEvent(1, "<a:s> <a:p> <a:o> ."),
+        rawEvent(2, "PD \"a\" .\nTX .\nPA \"c\" <http://c/> .\nTA .", PatchCt)),
+      store, 0L)
+    assert(store.prefixes() == Map("b" -> "http://b/"))
+    assert(subjects(store) == Set("a:s"))
+    // a replay of an epoch already compacted re-applies none of them
+    IngestPipeline.ingest(rawFrame(rawEvent(3, "PD \"b\" .", PatchCt)), store, 1L)
+    store.compact()
+    IngestPipeline.ingest(rawFrame(rawEvent(0, "PA \"b\" <http://b/> .", PatchCt)), store, 0L)
+    assert(store.prefixes().isEmpty)
+  }
+
+  test("ingest: each partition of a frame keeps its own transaction state") {
+    val store = new QuadStore(spark, Harness.scratchDir("parts").toString)
+    val dlqDir = Harness.scratchDir("partsdlq").toString
+    def ev(p: Int, off: Long, body: String) =
+      ("t", p, off, Array.emptyByteArray, body.getBytes("UTF-8"), PatchCt)
+    val (applied, dlqd) = IngestPipeline.ingest(rawFrame(
+        ev(1, 1, "TX .\nA <a:y> <a:p> <a:o> ."),
+        ev(0, 0, "TX .\nA <a:x> <a:p> <a:o> ."),
+        // partition 1's TA finds no transaction open: partition 0's
+        // commits at the end of its partition, with the micro-batch
+        ev(1, 0, "TA ."),
+        ev(0, 1, "A <a:z> <a:p> <a:o> ."),
+        ev(1, 2, "TX .\nA <a:w> <a:p> <a:o> .\nTA .")),
+      store, 0L, Some(dlqDir))
+    assert(subjects(store) == Set("a:x", "a:z", "a:y"))
+    assert((applied, dlqd) == ((4L, 1L)))
+    import spark.implicits._
+    assert(spark.read.parquet(dlqDir).select("partition", "offset").as[(Int, Long)]
+      .collect().toSeq == Seq((1, 0L)))
+  }
+
+  test("ingest without a DLQ: the good events commit, then the micro-batch fails") {
+    val store = new QuadStore(spark, Harness.scratchDir("nodlq").toString)
+    val e = intercept[graft.connect.ProjectorException](IngestPipeline.ingest(rawFrame(
+        rawEvent(0, "<a:s> <a:p> <a:o> ."),
+        rawEvent(1, "not rdf at all"),
+        rawEvent(2, "TX .\nTX .", PatchCt),
+        rawEvent(3, "<a:t> <a:p> <a:o> .")),
+      store, 0L))
+    assert(e.getMessage.contains("2 event(s)"), e.getMessage)
+    assert(subjects(store) == Set("a:s", "a:t"))
   }
 
   test("decodeEvents is batch-only: a streaming frame is rejected up front") {
