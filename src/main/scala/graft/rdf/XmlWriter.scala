@@ -60,7 +60,7 @@ object XmlWriter {
   /** A triples DataFrame (graph, subject, predicate, obj — graph must
     * be all-null) as one `line` STRING column, one self-contained
     * `rdf:Description` element per row. Validity of the input is the
-    * caller's job (see [[exportRdfXml]] / the server path).
+    * caller's job (see [[requireRepresentable]]).
     */
   def rdfXmlLines(triples: DataFrame): DataFrame = {
     val p = col("predicate").getField("lex")
@@ -92,10 +92,10 @@ object XmlWriter {
       lit("</rdf:Description>")).as("line"))
   }
 
-  /** Fail-loud validation shared by export and server paths: named
-    * graphs, quoted-triple terms, and un-splittable predicate IRIs are
-    * contract violations, not rows to drop. Three short-circuiting
-    * take(1) probes over pruned columns.
+  /** Fail-loud validation the server runs before an RDF/XML response:
+    * named graphs, quoted-triple terms, and un-splittable predicate
+    * IRIs are contract violations, not rows to drop. Three
+    * short-circuiting take(1) probes over pruned columns.
     */
   def requireRepresentable(quads: DataFrame): Unit = {
     if (!quads.filter(col("graph").isNotNull).isEmpty)
@@ -113,16 +113,5 @@ object XmlWriter {
         "rdf/xml export: a predicate IRI has no XML local-name suffix " +
         "(ends in '/', '#' or a digit-led segment) and cannot form a " +
         "property element — use Turtle / N-Quads")
-  }
-
-  /** Write sharded RDF/XML; every part file is a standalone document
-    * (header + its rows + footer).
-    */
-  def exportRdfXml(quads: DataFrame, path: String): Unit = {
-    requireRepresentable(quads)
-    import quads.sparkSession.implicits._
-    rdfXmlLines(quads).select(col("line")).as[String]
-      .mapPartitions(it => HEADER.iterator ++ it ++ FOOTER.iterator)
-      .write.mode("overwrite").text(path)
   }
 }

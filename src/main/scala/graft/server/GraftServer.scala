@@ -32,22 +32,15 @@ final class GraftServer(
     storeRoot: Path,
     httpPort: Int = 0,
     topicExistsFor: (ConnectorConfig, String) => Boolean = (_, _) => true,
-    allowService: Boolean = false,
-    statsViews: Boolean = false) {
+    allowService: Boolean = false) {
 
   private val stores = scala.collection.mutable.Map[String, QuadStore]()
-  private val views = scala.collection.mutable.Map[String, graft.store.AggView]()
   private val http = new SparqlHttp(spark, httpPort, allowService)
   private var engine: Engine = null
 
   /** The store backing a dataset name (creating it on first use —
-    * dataset directories live under `storeRoot/<name>`). With
-    * `statsViews` on, each dataset also gets a predicate-grouped
-    * [[graft.store.AggView]] (under `<name>/_stats`) registered on
-    * the endpoint: its maintained counts steer BGP join order for
-    * every HTTP query. Statistics refresh on demand
-    * ([[refreshStats]] — the ANALYZE-style operator hook), at CDC
-    * cost; staleness can only affect ordering, never results.
+    * dataset directories live under `storeRoot/<name>`), registered
+    * on the endpoint under that name.
     */
   def store(datasetName: String): QuadStore = synchronized {
     val name = ConnectorAssembler.canonical(datasetName).stripPrefix("/")
@@ -55,23 +48,9 @@ final class GraftServer(
       val dir = storeRoot.resolve(name)
       Files.createDirectories(dir)
       val s = new QuadStore(spark, dir.toString)
-      if (statsViews) {
-        val v = new graft.store.AggView(spark, s,
-          dir.resolve("_stats").toString, Seq("predicate"))
-        views.put(name, v)
-        http.registerDataset(name, s, Some(v))
-      } else http.registerDataset(name, s)
+      http.registerDataset(name, s)
       s
     })
-  }
-
-  /** Fold the CDC window since the last refresh into a dataset's
-    * statistics view (no-op when `statsViews` is off or the name is
-    * unknown). Returns the batch the view now reflects.
-    */
-  def refreshStats(datasetName: String): Long = synchronized {
-    val name = ConnectorAssembler.canonical(datasetName).stripPrefix("/")
-    views.get(name).map(_.refresh()).getOrElse(-1L)
   }
 
   /** Parse the connector config TTL and start everything: one

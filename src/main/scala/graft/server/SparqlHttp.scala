@@ -15,7 +15,7 @@ import graft.connect.{Event, MaterialisedEvent, PayloadException, Projector, Qua
 import graft.plans.Checkpoints
 import graft.rdf.{NtWriter, RdfParse, RdfParseException, RdfPatchParser, Term, TurtleWriter}
 import graft.sparql.{ResultsWriter, Sparql, SparqlService}
-import graft.store.{AggView, QuadStore}
+import graft.store.QuadStore
 
 /** SPARQL 1.1 Protocol + Graph Store Protocol endpoint over
   * [[QuadStore]] datasets — the host-server surface of the reference
@@ -73,13 +73,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     Sparql.EvalContext(service =
       if (allowService) SparqlService.Http else SparqlService.Disabled)
 
-  private final case class Ds(store: QuadStore, stats: Option[AggView]) {
-    /** (view generation, census) — re-collected only when the view
-      * pointer moves, so steady-state queries pay one pointer read.
-      */
-    @volatile var census: (Long, Map[String, Long]) = (-1L, Map.empty)
-  }
-  private val datasets = new java.util.concurrent.ConcurrentHashMap[String, Ds]()
+  private val datasets = new java.util.concurrent.ConcurrentHashMap[String, QuadStore]()
 
   private val server =
     HttpServer.create(new InetSocketAddress(InetAddress.getLoopbackAddress, port), 0)
@@ -87,33 +81,9 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
   server.setExecutor(pool)
   server.createContext("/", new Router)
 
-  /** Register a dataset, optionally with a predicate-grouped
-    * [[AggView]] whose maintained counts steer BGP join order for
-    * every query on this endpoint ([[Sparql.withBgpStats]]) — the
-    * store keeps the statistics at change cost, the server consults
-    * them for free (one pointer read per query, a re-collect only
-    * after a refresh moves the view generation). Ordering-only:
-    * stale or absent statistics can never change results.
-    */
-  def registerDataset(name: String, store: QuadStore,
-      stats: Option[AggView] = None): Unit =
-    datasets.put(name.stripPrefix("/"), Ds(store, stats))
-
-  private[server] def censusFor(ds: Ds): Map[String, Long] = ds.stats match {
-    case None => Map.empty
-    case Some(v) =>
-      val gen = v.refreshedAt
-      if (gen < 0) Map.empty
-      else {
-        val cached = ds.census
-        if (cached._1 == gen) cached._2
-        else {
-          val fresh = v.predicateCounts()
-          ds.census = (gen, fresh)
-          fresh
-        }
-      }
-  }
+  /** Register a dataset under `name` (a leading `/` is dropped). */
+  def registerDataset(name: String, store: QuadStore): Unit =
+    datasets.put(name.stripPrefix("/"), store)
 
   def start(): Unit = server.start()
 
@@ -282,10 +252,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
   private val RESULT_CT = RESULT_OFFERS.map(_.swap).reverse.toMap
   private val GRAPH_CT = GRAPH_OFFERS.map(_.swap).reverse.toMap
 
-  private def handleQuery(ex: HttpExchange, req: Req, ds: Ds): Unit =
-    Sparql.withBgpStats(censusFor(ds)) { handleQueryInner(ex, req, ds) }
-
-  private def handleQueryInner(ex: HttpExchange, req: Req, ds: Ds): Unit = {
+  private def handleQuery(ex: HttpExchange, req: Req, ds: QuadStore): Unit = {
     val queryText = req.method match {
       case "GET" =>
         req.param("query").getOrElse(bad(400, "missing query parameter"))
@@ -296,7 +263,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     }
     val dflt = req.params.getOrElse("default-graph-uri", Seq.empty).map(Term.iri)
     val named = req.params.getOrElse("named-graph-uri", Seq.empty).map(Term.iri)
-    val quads = Sparql.datasetOf(ds.store.quads(), dflt, named)
+    val quads = Sparql.datasetOf(ds.quads(), dflt, named)
 
     // ?explain=1 — the compiled Spark plan instead of results (the
     // engine's analogue of Fuseki's arq:queryExplain): lets a user
@@ -330,7 +297,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     }
   }
 
-  private def respondGraph(ex: HttpExchange, ds: Ds, quads: DataFrame): Unit = {
+  private def respondGraph(ex: HttpExchange, ds: QuadStore, quads: DataFrame): Unit = {
     import org.apache.spark.sql.Row
     def lineIt(df: DataFrame): Iterator[String] =
       df.toLocalIterator().asScala.map((r: Row) => r.getString(0))
@@ -343,13 +310,13 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
               .cast(quads.schema("graph").dataType))
             .dropDuplicates())), "\n")
       case "turtle" =>
-        val pfx = ds.store.prefixes()
+        val pfx = ds.prefixes()
         respondLines(ex, GRAPH_CT("turtle"),
           TurtleWriter.prefixHeader(pfx).iterator ++
             lineIt(TurtleWriter.turtleLines(quads.filter(col("graph").isNull), pfx)),
           "\n")
       case "trig" =>
-        val pfx = ds.store.prefixes()
+        val pfx = ds.prefixes()
         respondLines(ex, GRAPH_CT("trig"),
           TurtleWriter.prefixHeader(pfx).iterator ++
             lineIt(TurtleWriter.turtleLines(quads, pfx)), "\n")
@@ -384,11 +351,11 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     * keeps re-graphed GSP payloads on the driver decode (the bulk
     * route re-decodes raw bytes and would lose the graph override).
     */
-  private def applyEvents(ds: Ds, events: Seq[MaterialisedEvent],
+  private def applyEvents(ds: QuadStore, events: Seq[MaterialisedEvent],
       noBulk: Boolean = false): Unit = {
     val sink =
-      if (noBulk) new QuadStoreSink(spark, ds.store, Long.MaxValue)
-      else new QuadStoreSink(spark, ds.store)
+      if (noBulk) new QuadStoreSink(spark, ds, Long.MaxValue)
+      else new QuadStoreSink(spark, ds)
     // a FRESH batch id past the store's committed history — the same
     // resume contract a projector restart uses (never replay over an
     // existing segment). The id read + apply run under the store's
@@ -408,7 +375,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     catch { case e: PayloadException => bad(400, e.getMessage) }
   }
 
-  private def handleUpdate(ex: HttpExchange, req: Req, ds: Ds): Unit = {
+  private def handleUpdate(ex: HttpExchange, req: Req, ds: QuadStore): Unit = {
     if (req.method != "POST") bad(405, "update requires POST")
     val text =
       if (req.ct == "application/sparql-update") req.bodyText
@@ -423,7 +390,7 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
     respond(ex, 204, "text/plain", "")
   }
 
-  private def handlePatch(ex: HttpExchange, req: Req, ds: Ds): Unit = {
+  private def handlePatch(ex: HttpExchange, req: Req, ds: QuadStore): Unit = {
     if (req.method != "POST") bad(405, "patch requires POST")
     if (!RdfParse.PatchTypes.contains(req.ct))
       bad(415, s"patch endpoint expects ${RdfParse.CT_PATCH}")
@@ -443,11 +410,11 @@ final class SparqlHttp(spark: SparkSession, port: Int = 0,
       case None => None
     }
 
-  private def handleGsp(ex: HttpExchange, req: Req, ds: Ds): Unit = {
+  private def handleGsp(ex: HttpExchange, req: Req, ds: QuadStore): Unit = {
     val target = gspTarget(req.params)
     req.method match {
       case "GET" =>
-        val all = ds.store.quads()
+        val all = ds.quads()
         val scoped = target match {
           case Some(None) => all.filter(col("graph").isNull)
           case Some(Some(g)) =>

@@ -43,6 +43,15 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     */
   final case class QTriple(s: Node, p: Node, o: Node) extends Node
 
+  /** The variables a node mentions, quoted-triple components
+    * included, in slot order (a repeated variable repeats).
+    */
+  private[sparql] def nodeVars(n: Node): Seq[String] = n match {
+    case Var(v) => Seq(v)
+    case QTriple(s, p, o) => Seq(s, p, o).flatMap(nodeVars)
+    case Const(_) => Seq.empty
+  }
+
   final case class TriplePattern(graph: Option[Node], s: Node, p: Node, o: Node)
 
   /** A group `{ ... }` is an ORDERED element list: SPARQL scopes BIND
@@ -138,10 +147,17 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   final case class PathElem(graph: Option[Node], s: Node, path: PathExpr,
       o: Node) extends GroupElem
 
+  /** An expression node: a filter ([[FExpr]]) or value ([[VExpr]])
+    * expression. [[mapChildren]] is the one place that knows each
+    * node's expression children; [[transform]] and [[collect]] are
+    * the walks built on it.
+    */
+  sealed trait Expr
+
   /** FILTER expressions: comparisons over value expressions composed
     * with `&&` / `||` (SPARQL `ConditionalAndExpression`).
     */
-  sealed trait FExpr
+  sealed trait FExpr extends Expr
   final case class FCmp(l: VExpr, op: String, r: VExpr) extends FExpr
   final case class FAnd(l: FExpr, r: FExpr) extends FExpr
   final case class FOr(l: FExpr, r: FExpr) extends FExpr
@@ -164,7 +180,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     */
   final case class FEbv(e: VExpr) extends FExpr
   /** `[NOT] EXISTS { pattern }` as an EXPRESSION operand (§17.4.1.4 —
-    * inside `||` / `&&` / `!` / IF conditions of a FILTER), beyond the
+    * in any operand position of a FILTER expression), beyond the
     * standalone `FILTER [NOT] EXISTS` form. Rewritten before
     * compilation into a boolean mark column ([[rewriteExists]]); it
     * never reaches [[compileFilter]] directly.
@@ -176,7 +192,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   /** Value expressions usable in BIND, SELECT expressions and FILTER
     * comparison operands.
     */
-  sealed trait VExpr
+  sealed trait VExpr extends Expr
   final case class VVar(name: String) extends VExpr
   final case class VConst(term: Term) extends VExpr
   final case class VCoalesce(args: Seq[VExpr]) extends VExpr
@@ -218,6 +234,60 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     */
   final case class VAgg(func: String, arg: Option[VExpr],
       isDistinct: Boolean = false, separator: String = " ") extends VExpr
+
+  /** Rebuild `e` with `f` applied to each of its expression children,
+    * left to right; a node without any returns as it is. `f` must map
+    * an FExpr to an FExpr and a VExpr to a VExpr. [[FExists]]'s
+    * pattern and the [[Node]] operands of [[FRegex]], [[FStrFn]] and
+    * [[FTest]] are not expression children.
+    */
+  def mapChildren[E <: Expr](e: E)(f: Expr => Expr): E = {
+    def fx(x: FExpr) = f(x).asInstanceOf[FExpr]
+    def vx(x: VExpr) = f(x).asInstanceOf[VExpr]
+    (e match {
+      case FCmp(l, op, r) => FCmp(vx(l), op, vx(r))
+      case FAnd(l, r) => FAnd(fx(l), fx(r))
+      case FOr(l, r) => FOr(fx(l), fx(r))
+      case FNot(a) => FNot(fx(a))
+      case FIn(a, items, positive) => FIn(vx(a), items.map(vx), positive)
+      case FSameTerm(l, r) => FSameTerm(vx(l), vx(r))
+      case FLangMatches(tag, range) => FLangMatches(vx(tag), range)
+      case FEbv(a) => FEbv(vx(a))
+      case VCoalesce(args) => VCoalesce(args.map(vx))
+      case VFn(fn, a) => VFn(fn, vx(a))
+      case VBin(op, l, r) => VBin(op, vx(l), vx(r))
+      case VFnN(fn, args) => VFnN(fn, args.map(vx))
+      case VIf(c, t, el) => VIf(fx(c), vx(t), vx(el))
+      case VBool(c) => VBool(fx(c))
+      case VCast(dt, a) => VCast(dt, vx(a))
+      case a: VAgg => a.copy(arg = a.arg.map(vx))
+      case leaf => leaf
+    }).asInstanceOf[E]
+  }
+
+  /** Top-down rewrite: `rule` applies to a node first, then the walk
+    * goes on into the children of what it returned.
+    */
+  def transform[E <: Expr](e: E)(
+      rule: PartialFunction[Expr, Expr]): E =
+    mapChildren(rule.applyOrElse(e, identity[Expr]).asInstanceOf[E])(
+      transform(_)(rule))
+
+  /** What `rule` yields at each node it matches, in pre-order; the
+    * subtree under a matched node is not searched.
+    */
+  def collect[T](e: Expr)(rule: PartialFunction[Expr, T]): Seq[T] = {
+    val out = Seq.newBuilder[T]
+    def visit(x: Expr): Expr = {
+      rule.lift(x) match {
+        case Some(t) => out += t
+        case None => mapChildren(x)(visit)
+      }
+      x
+    }
+    visit(e)
+    out.result()
+  }
 
   sealed trait Projection
   case object SelectAll extends Projection
@@ -460,9 +530,9 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           if q.groupBy.isEmpty && q.having.isEmpty &&
             !items.exists {
               case _: ItemAgg => true
-              case ItemExpr(e, _) => aggsOfV(e).nonEmpty
+              case ItemExpr(e, _) => aggsOf(e).nonEmpty
               case _ => false
-            } && !q.orderBy.exists(k => aggsOfV(k.expr).nonEmpty) =>
+            } && !q.orderBy.exists(k => aggsOf(k.expr).nonEmpty) =>
         val names = items.collect { case ItemVar(n) => n }
         // a projected expression is maybe-unbound unless it cannot error
         val exprMaybe = items.collect {
@@ -507,7 +577,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         if (!q.distinct) orderKeys = q.orderBy.zipWithIndex.map { case (k, i) =>
           k.expr match {
             case VVar(n) if projNames.contains(n) => k
-            case e if varsOfV(e).subsetOf(wCols) =>
+            case e if varsOf(e).subsetOf(wCols) =>
               preOrd += compileExpr(e,
                 n => if (wCols.contains(n)) col(n)
                      else lit(null).cast(Term.Schema)).as(s"#ord$i")
@@ -530,7 +600,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         }.foreach(n => throw new RdfParseException(
           s"projected variable ?$n is not in GROUP BY"))
         items.collect { case ItemExpr(e, as) =>
-          val frees = varsOfV(substAggs(e, _ => VConst(Term.lit(""))))
+          val frees = varsOf(substAggs(e, _ => VConst(Term.lit(""))))
           (frees -- q.groupBy -- tvVars).foreach(n => throw new RdfParseException(
             s"?$n in expression projection ?$as is neither aggregated nor a GROUP BY key"))
         }
@@ -620,8 +690,8 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         def hiddenName(a: VAgg): String =
           hidden.getOrElseUpdate(a, s"#agg${hidden.size}")
         (items.collect { case ItemExpr(e, _) => e } ++ q.orderBy.map(_.expr))
-          .foreach(e => aggsOfV(e).foreach(hiddenName))
-        q.having.foreach(f => aggsOfF(f).foreach(hiddenName))
+          .foreach(e => aggsOf(e).foreach(hiddenName))
+        q.having.foreach(f => aggsOf(f).foreach(hiddenName))
         val hiddenCols = hidden.toSeq.map { case (a, n) =>
           termAgg(a.func, a.arg, a.isDistinct, a.separator).as(n)
         }
@@ -658,7 +728,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // HAVING: FILTER semantics over the grouped solution — group
         // keys resolve directly, aggregate calls via the hidden columns
         val kept0 = q.having.foldLeft(grouped) { (d, f) =>
-          d.filter(compileFilter(substAggsF(f, a => VVar(hiddenName(a))), resolverOf(d)))
+          d.filter(compileFilter(substAggs(f, a => VVar(hiddenName(a))), resolverOf(d)))
         }
         // §18.2.4.3: the trailing VALUES data joins the grouped,
         // HAVING-filtered solution — before select expressions — via
@@ -680,7 +750,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
         // survive the projection — they are dropped after the sort
         orderKeys = q.orderBy.map(k =>
           k.copy(expr = substAggs(k.expr, a => VVar(hiddenName(a)))))
-        val orderHidden = q.orderBy.flatMap(k => aggsOfV(k.expr))
+        val orderHidden = q.orderBy.flatMap(k => aggsOf(k.expr))
           .distinct.map(a => col(hiddenName(a)))
         kept.select((items.map {
           case ItemVar(n) => col(n)
@@ -765,7 +835,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     * treated as complete: a predicate absent from a non-empty map
     * estimates to ZERO rows (its leaf empties the whole join — the
     * best possible first pick). Staleness only affects ordering,
-    * never results. Thread-scoped so concurrent HTTP queries cannot
+    * never results. Thread-scoped so concurrent queries cannot
     * see each other's stats.
     */
   private val bgpStats =
@@ -821,22 +891,12 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
 
   // blank-node labels are non-distinguished VARIABLES (deblank): they
   // carry connectivity and are never constants
-  private def nodeVars(n: Node): Set[String] = n match {
-    case Var(v) => Set(v)
-    case Const(t) if t != null && t.isBlank => Set("#bn:" + t.lex)
-    case QTriple(s, p, o) => nodeVars(s) ++ nodeVars(p) ++ nodeVars(o)
-    case _ => Set.empty
-  }
-  private def isConstNode(n: Node): Boolean = n match {
-    case Var(_) => false
-    case other => nodeVars(other).isEmpty
-  }
+  private def runVars(n: Node): Seq[String] = nodeVars(deblank(n))
+  private def isConstNode(n: Node): Boolean = runVars(n).isEmpty
   private def runElemVars(e: GroupElem): Set[String] = e match {
     case PatElem(tp) =>
-      tp.graph.toSeq.flatMap(nodeVars).toSet ++ nodeVars(tp.s) ++
-        nodeVars(tp.p) ++ nodeVars(tp.o)
-    case PathElem(g, s, _, o) =>
-      g.toSeq.flatMap(nodeVars).toSet ++ nodeVars(s) ++ nodeVars(o)
+      (tp.graph.toSeq ++ Seq(tp.s, tp.p, tp.o)).flatMap(runVars).toSet
+    case PathElem(g, s, _, o) => (g.toSeq ++ Seq(s, o)).flatMap(runVars).toSet
     case _ => Set.empty
   }
   // constant subjects/objects bind to few rows; a constant predicate
@@ -1171,8 +1231,9 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     * active graph `g`, recursing through all group elements EXCEPT
     * nested GRAPH blocks (they establish their own active graph) and
     * SERVICE (evaluated remotely — the active graph does not travel).
+    * `GRAPH g { … }` and an update's `WITH <g>` both scope through it.
     */
-  private def pushGraph(p: Pattern, g: Node): Pattern = p match {
+  private[sparql] def pushGraph(p: Pattern, g: Node): Pattern = p match {
     case Group(es) => Group(es.map(pushGraphElem(_, g)))
     case Union(bs) => Union(bs.map(pushGraph(_, g)))
   }
@@ -1189,39 +1250,12 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       case _ => SubSelectElem(q.copy(pattern = pushGraph(q.pattern, g)))
     }
     // a FILTER's leaf patterns live in embedded [NOT] EXISTS operands
-    case FilterElem(f) => FilterElem(pushGraphF(f, g))
+    case FilterElem(f) => FilterElem(transform(f) {
+      case FExists(inner, pos) => FExists(pushGraph(inner, g), pos)
+    })
     // BIND/VALUES carry no leaf patterns; a nested GraphElem and
     // SERVICE keep their own scope
     case other => other
-  }
-
-  /** Push the active graph into a filter expression's embedded
-    * `[NOT] EXISTS` operands (anywhere in the tree, incl. IF
-    * conditions — mirrors [[rewriteExists]]'s traversal).
-    */
-  private def pushGraphF(f0: FExpr, g: Node): FExpr = {
-    def fw(f: FExpr): FExpr = f match {
-      case FExists(inner, pos) => FExists(pushGraph(inner, g), pos)
-      case FAnd(a, b) => FAnd(fw(a), fw(b))
-      case FOr(a, b) => FOr(fw(a), fw(b))
-      case FNot(e) => FNot(fw(e))
-      case FCmp(l, op, r) => FCmp(vw(l), op, vw(r))
-      case FIn(e, items, p) => FIn(vw(e), items.map(vw), p)
-      case FSameTerm(l, r) => FSameTerm(vw(l), vw(r))
-      case FEbv(e) => FEbv(vw(e))
-      case other => other
-    }
-    def vw(v: VExpr): VExpr = v match {
-      case VIf(c, t, e) => VIf(fw(c), vw(t), vw(e))
-      case VBool(c) => VBool(fw(c))
-      case VCoalesce(args) => VCoalesce(args.map(vw))
-      case VFn(fn, a) => VFn(fn, vw(a))
-      case VBin(op, l, r) => VBin(op, vw(l), vw(r))
-      case VFnN(fn, args) => VFnN(fn, args.map(vw))
-      case VCast(dt, a) => VCast(dt, vw(a))
-      case other => other
-    }
-    fw(f0)
   }
 
   /** Rewrite a sub-SELECT under `GRAPH ?v` into its per-graph form:
@@ -1261,7 +1295,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       (q.projection match {
         case SelectItems(items) => items.exists {
           case _: ItemAgg => true
-          case ItemExpr(e, _) => aggsOfV(e).nonEmpty
+          case ItemExpr(e, _) => aggsOf(e).nonEmpty
           case _ => false
         }
         case SelectAll => false

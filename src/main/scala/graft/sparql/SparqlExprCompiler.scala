@@ -1,6 +1,6 @@
 package graft.sparql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TermOps
@@ -190,7 +190,7 @@ private[sparql] trait SparqlExprCompiler { this: Sparql.type =>
         // split('') are out of this subset's scope.)
         case "ENCODE_FOR_URI" =>
           onLit(0)(plainStrTerm(array_join(
-            transform(split(lex(0), ""), c =>
+            functions.transform(split(lex(0), ""), c =>
               when(c.rlike("^[A-Za-z0-9\\-_.~]$"), c)
                 .otherwise(regexp_replace(upper(hex(encode(c, "UTF-8"))),
                   "(..)", "%$1"))), "")))

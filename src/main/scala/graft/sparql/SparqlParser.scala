@@ -201,11 +201,11 @@ import Sparql._
         (projection match {
           case SelectItems(items) => items.exists {
             case _: ItemAgg => true
-            case ItemExpr(e, _) => aggsOfV(e).nonEmpty
+            case ItemExpr(e, _) => aggsOf(e).nonEmpty
             case _ => false
           }
           case _ => false
-        }) || orderBy.exists(k => aggsOfV(k.expr).nonEmpty)
+        }) || orderBy.exists(k => aggsOf(k.expr).nonEmpty)
       val (fullPattern, trailingValues) =
         if (tryKeyword("VALUES")) {
           val v = parseValuesElem()

@@ -48,12 +48,7 @@ private[sparql] object SparqlTemplates {
       val slots = Seq(
         tp.graph.getOrElse(Const(null)) -> "graph",
         tp.s -> "subject", tp.p -> "predicate", tp.o -> "obj")
-      def varsIn(n: Node): Seq[String] = n match {
-        case Var(v) => Seq(v)
-        case QTriple(s, p, o) => Seq(s, p, o).flatMap(varsIn)
-        case _ => Seq.empty
-      }
-      val vars = slots.flatMap { case (n, _) => varsIn(n) }
+      val vars = slots.flatMap { case (n, _) => nodeVars(n) }
       // a template var absent from the solutions is unbound in every
       // row → the whole pattern instantiates to nothing
       if (vars.exists(v => !sols.columns.contains(v))) None
@@ -98,11 +93,6 @@ private[sparql] object SparqlTemplates {
     val pre = if (blankScope.isEmpty) "" else blankScope + ":"
     val cset = sols.columns.toSet
     val withId = sols.withColumn("#bsol", monotonically_increasing_id())
-    def varsIn(n: Node): Seq[String] = n match {
-      case Var(v) => Seq(v)
-      case QTriple(s, p, o) => Seq(s, p, o).flatMap(varsIn)
-      case _ => Seq.empty
-    }
     def nodeCol(n: Node): Column = n match {
       case Var(v) => col(v)
       case Const(null) => lit(null).cast(Term.Schema)
@@ -118,7 +108,7 @@ private[sparql] object SparqlTemplates {
     val elems: Seq[Column] = tpl.flatMap { tp =>
       val slots = Seq(tp.graph.getOrElse(Const(null)) -> "graph",
         tp.s -> "subject", tp.p -> "predicate", tp.o -> "obj")
-      val vars = slots.flatMap { case (n, _) => varsIn(n) }
+      val vars = slots.flatMap { case (n, _) => nodeVars(n) }
       if (vars.exists(v => !cset.contains(v))) None
       else {
         val slotCols = slots.map { case (n, as) => as -> nodeCol(n) }.toMap

@@ -116,18 +116,6 @@ object SparqlUpdate {
       case None => tps
       case Some(n) => tps.map(tp => if (tp.graph.isEmpty) tp.copy(graph = Some(n)) else tp)
     }
-    def gp(pat: Pattern): Pattern = withGraph match {
-      case None => pat
-      case Some(n) => pat match {
-        case Group(elems) => Group(elems.map {
-          case PatElem(tp) if tp.graph.isEmpty => PatElem(g(Seq(tp)).head)
-          case pe: PathElem if pe.graph.isEmpty => pe.copy(graph = Some(n))
-          case OptElem(inner) => OptElem(gp(inner))
-          case other => other
-        })
-        case Union(bs) => Union(bs.map(gp))
-      }
-    }
     // UsingClause* (spec §3.1.3): the WHERE-side dataset clause
     def parseUsing(): (Seq[Term], Seq[Term]) = {
       val u = scala.collection.mutable.ArrayBuffer[Term]()
@@ -141,9 +129,12 @@ object SparqlUpdate {
       }
       (u.toSeq, un.toSeq)
     }
-    // with a USING clause present, WITH no longer scopes the WHERE
-    def scopeWhere(pat: Pattern, u: Seq[Term], un: Seq[Term]): Pattern =
-      if (u.isEmpty && un.isEmpty) gp(pat) else pat
+    // WITH scopes the WHERE as GRAPH would, unless a USING clause is
+    // present
+    def scopeWhere(pat: Pattern, u: Seq[Term] = Seq.empty,
+        un: Seq[Term] = Seq.empty): Pattern =
+      if (u.isEmpty && un.isEmpty) withGraph.fold(pat)(pushGraph(pat, _))
+      else pat
     val isInsert = p.tryKeyword("INSERT")
     val isDelete = !isInsert && p.tryKeyword("DELETE")
     if (withGraph.isDefined && !isInsert && !isDelete)
@@ -165,7 +156,7 @@ object SparqlUpdate {
           throw new RdfParseException("WITH applies only to DELETE/INSERT ... WHERE")
         QuadDataOp("D", parseQuadData(p, allowBlank = false))
       } else if (p.tryKeyword("WHERE")) {
-        val pat = gp(p.parseGroup())
+        val pat = scopeWhere(p.parseGroup())
         rejectBlanks(patternsOf(pat), "DELETE WHERE")
         ModifyOp(patternsOf(pat), Seq.empty, pat)
       } else {

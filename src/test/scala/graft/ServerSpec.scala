@@ -369,7 +369,7 @@ class ServerSpec extends AnyFunSuite {
     }
   }
 
-  test("statistics view steers queries: census cached per generation, results exact") {
+  test("statistics view census steers executeWithStats; results exact") {
     val store = new QuadStore(spark, Harness.scratchDir("httpds").toString)
     store.addQuads(0, (1 to 20).flatMap { i =>
       Seq(
@@ -383,20 +383,24 @@ class ServerSpec extends AnyFunSuite {
       Harness.scratchDir("httpstats").toString, Seq("predicate"))
     view.refresh()
     val srv = new SparqlHttp(spark)
-    srv.registerDataset("ds", store, Some(view))
+    srv.registerDataset("ds", store)
     srv.start()
     try {
       val base = s"http://127.0.0.1:${srv.boundPort}"
-      // a 2-leaf BGP over both predicates: correct rows with stats on
+      // a 2-leaf BGP over both predicates
       val q = "SELECT ?s ?c ?r WHERE { ?s <http://x/common> ?c . " +
         "?s <http://x/rare> ?r } ORDER BY ?s ?r"
       val r = get(s"$base/ds/query?query=" +
         java.net.URLEncoder.encode(q, "UTF-8"), accept = "text/csv")
       assert(r.statusCode == 200)
       assert(r.body.trim.linesIterator.size == 22) // header + 21 rows
-      // the census the server consults is the maintained counts
-      assert(view.predicateCounts() ==
-        Map("http://x/common" -> 20L, "http://x/rare" -> 21L))
+      // the census is the maintained counts, and steering the join
+      // order by it returns the same rows as the endpoint
+      val census = view.predicateCounts()
+      assert(census == Map("http://x/common" -> 20L, "http://x/rare" -> 21L))
+      val steered = Sparql.executeWithStats(store.quads(), q, census).collect()
+      assert(steered.length == 21)
+      assert(steered.toSeq == Sparql.execute(store.quads(), q).collect().toSeq)
     } finally srv.stop()
   }
 

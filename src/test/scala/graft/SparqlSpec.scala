@@ -528,6 +528,10 @@ class SparqlSpec extends AnyFunSuite {
          |<http://x/a> <http://x/flag> "y" .
          |<http://x/b> <http://x/p> "2" .
          |<http://x/c> <http://x/p> "9" .
+         |<http://x/e> <http://x/flag> "y" .
+         |<http://x/d> <http://x/p> "4" <http://x/g> .
+         |<http://x/d> <http://x/flag> "y" <http://x/g> .
+         |<http://x/e> <http://x/p> "5" <http://x/g> .
          |""".stripMargin) -> "application/n-quads")
     def subjects(q: String): Seq[String] =
       Sparql.execute(store.quads(), q).collect()
@@ -561,6 +565,42 @@ class SparqlSpec extends AnyFunSuite {
     assert(subjects(
       "SELECT ?s { ?s <http://x/p> ?v FILTER EXISTS { ?s <http://x/flag> ?f } }")
       == Seq("http://x/a"))
+    // under IF under langMatches
+    assert(subjects(
+      """SELECT ?s { ?s <http://x/p> ?v
+        |  FILTER(langMatches(IF(EXISTS { ?s <http://x/flag> ?f }, "en", "fr"), "en"))
+        |}""".stripMargin) == Seq("http://x/a"))
+    // the same inside GRAPH: the EXISTS matches in <g> only (e is
+    // flagged in the default graph, d in <g>)
+    assert(subjects(
+      """SELECT ?s { GRAPH <http://x/g> { ?s <http://x/p> ?v
+        |  FILTER(langMatches(IF(EXISTS { ?s <http://x/flag> ?f }, "en", "fr"), "en"))
+        |} }""".stripMargin) == Seq("http://x/d"))
+  }
+
+  test("mapChildren reaches every expression child slot") {
+    import Sparql._
+    val made = scala.collection.mutable.ArrayBuffer[String]()
+    def v(): VVar = { made += s"v${made.size}"; VVar(made.last) }
+    def f(): FExpr = FEbv(v())
+    // one instance of every node kind with expression children, a
+    // distinct variable in each child slot
+    val nodes: Seq[Expr] = Seq(
+      FCmp(v(), "<", v()), FAnd(f(), f()), FOr(f(), f()), FNot(f()),
+      FIn(v(), Seq(v(), v()), positive = true), FSameTerm(v(), v()),
+      FLangMatches(v(), "en"), FEbv(v()),
+      VCoalesce(Seq(v(), v())), VFn("STR", v()), VBin("+", v(), v()),
+      VFnN("CONCAT", Seq(v(), v())), VIf(f(), v(), v()), VBool(f()),
+      VCast(Term.XSD_INTEGER, v()), VAgg("SUM", Some(v())))
+    assert(nodes.flatMap(e => collect(e) { case VVar(n) => n }) == made)
+    nodes.foreach(e => assert(transform(e) { case x: VVar => x } == e))
+    // the kinds above plus the leaf kinds are every kind there is
+    import scala.reflect.runtime.universe.{Type, typeOf}
+    def kinds(t: Type): Set[String] =
+      t.typeSymbol.asClass.knownDirectSubclasses.map(_.name.toString)
+    val leaves = Set("FRegex", "FStrFn", "FTest", "FExists", "FFlag", "VVar", "VConst")
+    assert(kinds(typeOf[FExpr]) ++ kinds(typeOf[VExpr]) ==
+      nodes.map(_.getClass.getSimpleName).toSet ++ leaves)
   }
 
   test("EXISTS inside OPTIONAL: local correlation works, outer correlation errors") {

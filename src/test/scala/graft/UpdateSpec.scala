@@ -325,6 +325,23 @@ class UpdateSpec extends AnyFunSuite {
       ("http://x/g", "http://x/a", "http://x/new", "1"),
       (null, "http://x/a", "http://x/old", "default"),
       (null, "http://x/a", "http://x/flag", "y")))
+    // WITH also scopes UNION branches, nested groups, MINUS and
+    // FILTER NOT EXISTS; the default graph holds the same subjects
+    def withWhere(where: String) = stateNT(ingest(
+      s"""PREFIX x: <http://x/>
+        |INSERT DATA { GRAPH x:g { x:a x:old "1" . x:a x:keep "k" . x:c x:old "3" }
+        |              x:a x:old "default" . x:c x:old "dc" } ;
+        |WITH x:g DELETE { ?s x:old ?o } WHERE $where""".stripMargin -> CT_RU))
+    val defaults = Set[(String, String, String, String)](
+      (null, "http://x/a", "http://x/old", "default"),
+      (null, "http://x/c", "http://x/old", "dc"))
+    val gKeep = ("http://x/g", "http://x/a", "http://x/keep", "k")
+    val gA = ("http://x/g", "http://x/a", "http://x/old", "1")
+    Seq("{ { ?s x:old ?o } UNION { ?s x:none ?o } }", "{ { ?s x:old ?o } }")
+      .foreach(w => assert(withWhere(w) == defaults + gKeep, w))
+    Seq("{ ?s x:old ?o MINUS { ?s x:keep ?k } }",
+        "{ ?s x:old ?o FILTER NOT EXISTS { ?s x:keep ?k } }")
+      .foreach(w => assert(withWhere(w) == defaults + gKeep + gA, w))
   }
 
   test("WITH <g> also scopes property paths in the WHERE pattern") {
