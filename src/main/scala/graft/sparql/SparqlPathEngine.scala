@@ -1,7 +1,12 @@
 package graft.sparql
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 import graft.plans.Checkpoints
 import graft.rdf.{RdfParseException, Term}
@@ -9,11 +14,14 @@ import graft.rdf.{RdfParseException, Term}
 /** Property-path engine: evaluates a [[Sparql.PathExpr]] to a
   * (ps, po) pair relation — sequence/alternative/inverse by relational
   * composition, `+`/`*` as a distributed fixpoint over
-  * localCheckpoint'd rounds. A round that is dead when its fixpoint
-  * function returns is unpersisted there; every checkpoint the
-  * returned plan still reads (fixpoint, seeded parts, dictionary,
-  * zero-length nodes) is [[Checkpoints.register]]ed, so the caller's
-  * [[Checkpoints.withScope]] frees it once the result is consumed.
+  * localCheckpoint'd rounds, and a `+`/`*` with a constant endpoint as
+  * a BFS from it whose frontier expands on the driver while its
+  * visited set fits under the broadcast threshold. A round that is
+  * dead when its fixpoint function returns is unpersisted there; every
+  * checkpoint the returned plan still reads (fixpoint, seeded parts
+  * past the driver's cap, dictionary, zero-length nodes) is
+  * [[Checkpoints.register]]ed, so the caller's [[Checkpoints.withScope]]
+  * frees it once the result is consumed.
   * Mixed into [[Sparql]]; split out for reviewability only.
   */
 private[sparql] trait SparqlPathEngine { this: Sparql.type =>
@@ -96,12 +104,15 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     * the wrong plan — at scale it computes every reachable pair before
     * throwing almost all of them away. Instead run ALP the way §18.4
     * actually phrases it: breadth-first frontier expansion from the
-    * seed over the path's ONE-STEP relation. Rounds = reachable
+    * seed over the path's ONE-STEP relation. Hops = reachable
     * diameter from the seed (vs log2 of the whole graph's diameter for
-    * the doubling closure), but every round joins only the frontier —
-    * broadcast-sized — against the step relation, instead of
-    * re-joining the full closure with itself. Under `GRAPH ?var` the
-    * frontier carries the graph key, so all graphs expand in one loop.
+    * the doubling closure), but every hop reads only the step rows
+    * leaving the frontier, instead of re-joining the full closure with
+    * itself. The frontier is small by construction: [[seededClosure]]
+    * keeps it on the driver only while the visited set fits under the
+    * broadcast threshold, and hands larger ones to a distributed loop.
+    * Under `GRAPH ?var` the frontier carries the graph key, so all
+    * graphs expand in one loop.
     *
     * Returns None when no endpoint is constant or the path is not a
     * top-level closure — callers fall back to [[pathPairs]]. `*`'s
@@ -128,29 +139,81 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     }
   }
 
-  /** BFS fixpoint over `edges` from `seed`: all (seed, node) pairs
-    * with a ≥1-step path, set semantics. `forward = false` evaluates
-    * against the flipped relation and flips the result back (the
-    * object-seeded case). Checkpoint hygiene mirrors [[closure]]:
-    * per-round localCheckpoints, superseded rounds unpersisted
-    * immediately, the parts registered with the caller's scope.
+  /** BFS from `seed` over the one-step relation `edges`: all
+    * (seed, node) pairs with a ≥1-step path, set semantics.
+    * `forward = false` evaluates against the flipped relation and
+    * flips the result back (the object-seeded case).
+    *
+    * The frontier expands on the driver, one Spark job per hop: the
+    * materialized step relation is filtered by an in-set of the
+    * frontier's (pg?, ps) keys and the (pg?, po) rows it reaches are
+    * collected; the visited set is subtracted on the driver and what is
+    * new is the next frontier. The driver holds the visited set only
+    * while it fits under [[bridge.broadcastRows]] (the size Spark would
+    * ship to every task as a local or broadcast relation); it comes back
+    * as a local relation. Past that cap — or from the start when the
+    * broadcast threshold is ≤ 0 — the visited set and the frontier go to
+    * [[distributedBfs]], which continues exactly where the driver
+    * stopped.
     */
   private[sparql] def seededClosure(edges: DataFrame, seed: Term,
       grouped: Boolean, forward: Boolean): DataFrame = {
-    def pg(prefix: String = ""): Seq[Column] =
-      if (grouped) Seq(col(s"${prefix}pg")) else Seq.empty
-    // materialize the one-step relation ONCE, hash-partitioned on its
-    // join key: every hop of every round joins against it, and without
-    // the checkpoint each hop re-derives it from the source scan
+    val spark = edges.sparkSession
+    val pg: Seq[Column] = if (grouped) Seq(col("pg")) else Seq.empty
+    // materialize the one-step relation ONCE: every hop reads it, and
+    // without the checkpoint each hop re-derives it from the source scan
     // (measured: 24 re-scans for a 6-round stride-4 loop — most of the
-    // entry's wall time). localCheckpoint preserves the partitioning,
-    // so each hop's join shuffles only the frontier side — the step
-    // relation never moves again. Freed after the loop.
-    val stepKey = pg() :+ col("ps")
+    // entry's wall time). Freed once the closure is materialized.
     val step = (
       if (forward) edges
-      else edges.select(pg() ++ Seq(col("po").as("ps"), col("ps").as("po")): _*)
-    ).repartition(stepKey: _*).localCheckpoint()
+      else edges.select(pg ++ Seq(col("po").as("ps"), col("ps").as("po")): _*)
+    ).localCheckpoint()
+    // a reached node is a (pg?, po) row; its terms are also the
+    // (pg?, ps) key of the hop out of it
+    val nodeCols = pg :+ col("po")
+    val nodeSchema = step.select(nodeCols: _*).schema
+    val cap = bridge.broadcastRows(spark, nodeSchema)
+    val toKey = CatalystTypeConverters.createToCatalystConverter(nodeSchema)
+    def hop(from: Column): Set[Row] = step.filter(from).select(nodeCols: _*).collect().toSet
+    def local(rows: Set[Row]): DataFrame = spark.createDataFrame(rows.toSeq.asJava, nodeSchema)
+    val visited =
+      if (cap < 0) distributedBfs(step, grouped,
+        Seq(step.filter(termEqFields("ps", seed)).select(nodeCols: _*).distinct()))
+      else {
+        var frontier = hop(termEqFields("ps", seed))
+        var seen = frontier
+        while (frontier.nonEmpty && seen.size <= cap) {
+          val keys = InSet(bridge.expression(struct(pg :+ col("ps"): _*)), frontier.map(toKey))
+          frontier = hop(bridge.column(keys)) -- seen
+          seen ++= frontier
+        }
+        if (seen.size <= cap) local(seen)
+        else distributedBfs(step, grouped,
+          Seq(frontier, seen -- frontier).filter(_.nonEmpty).map(local))
+      }
+    Checkpoints.unpersist(step)
+    val tl = Term.column(seed)
+    if (forward) visited.select(pg ++ Seq(tl.as("ps"), col("po")): _*)
+    else visited.select(pg ++ Seq(col("po").as("ps"), tl.as("po")): _*)
+  }
+
+  /** The exact distributed BFS over the one-step relation `step`, for
+    * a visited set past the driver's cap. `start` holds disjoint
+    * (pg?, po) node sets: the frontier first, then any nodes visited
+    * before it. Returns the (pg?, po) visited set. Each round advances several hops
+    * and materializes its NEW nodes as one checkpointed part,
+    * anti-joined against the parts before it; superseded state is
+    * unpersisted at once and the parts are [[Checkpoints.register]]ed
+    * with the caller's scope.
+    */
+  private def distributedBfs(step: DataFrame, grouped: Boolean,
+      start: Seq[DataFrame]): DataFrame = {
+    def pg(prefix: String = ""): Seq[Column] =
+      if (grouped) Seq(col(s"${prefix}pg")) else Seq.empty
+    // hash-partitioned on the join key: localCheckpoint preserves the
+    // partitioning, so each hop's join shuffles only the frontier side
+    // — the step relation never moves again. Freed after the loop.
+    val keyed = step.repartition(pg() :+ col("ps"): _*).localCheckpoint()
     // each round's NEW nodes (pg?, po) become one checkpointed part —
     // the origin is always the seed, so parts hold nodes, not pairs.
     // The visited set is rebuilt per round as a fresh union over the
@@ -173,12 +236,11 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
       (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), ck,
         obs.get("n").asInstanceOf[Long])
     }
-    val (init, initCk, initN) = ckpt(step.filter(termEqFields("ps", seed))
-      .select(pg() :+ col("po"): _*).distinct())
-    var parts = List(init)
-    var handles = List(initCk)
-    var frontier = init
-    var done = initN == 0
+    val materialized = start.map(ckpt)
+    var parts = materialized.map(_._1).toList
+    var handles = materialized.map(_._2).toList
+    var frontier = parts.head
+    var done = materialized.head._3 == 0
     // advance STRIDE edge-steps per materialized round: the chained
     // frontier joins stay frontier-sized, but fixpoint job overhead
     // (checkpoint + count per round) drops by the stride; the loop
@@ -196,7 +258,7 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
       // distinct per hop: without it, path multiplicity compounds
       // across the chained joins (b^stride rows on branching graphs)
       def oneStep(f: DataFrame): DataFrame =
-        f.alias("f").join(step.alias("e"), cond)
+        f.alias("f").join(keyed.alias("e"), cond)
           .select(pg("e.").map(_.as("pg")) :+ col("e.po").as("po"): _*)
           .distinct()
       val hops = Iterator.iterate(oneStep(frontier))(oneStep)
@@ -214,12 +276,9 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
       }
     }
     // every part is materialized; nothing reads the step relation again
-    Checkpoints.unpersist(step)
+    Checkpoints.unpersist(keyed)
     handles.foreach(Checkpoints.register)
-    val tl = Term.column(seed)
-    val all = parts.reduce(_.unionByName(_))
-    if (forward) all.select(pg() ++ Seq(tl.as("ps"), col("po")): _*)
-    else all.select(pg() ++ Seq(col("po").as("ps"), tl.as("po")): _*)
+    parts.reduce(_.unionByName(_))
   }
 
   /** Whether a path can match with LENGTH ZERO — `*`/`?` and

@@ -150,15 +150,10 @@ object OpLog {
   }
 
   /** The most quads a fold may hold and still serve reads from the
-    * driver: Spark's own size estimate for it as a local relation of op
-    * rows stays under `spark.sql.autoBroadcastJoinThreshold`, the size below which
-    * Spark ships a relation to every task anyway. A threshold ≤ 0 means
-    * never (-1).
+    * driver: [[bridge.broadcastRows]] of op rows (-1, never, when the
+    * broadcast threshold is ≤ 0).
     */
-  def driverFoldCap(spark: SparkSession): Long = {
-    val limit = bridge.broadcastThreshold(spark)
-    if (limit <= 0) -1L else (BigInt(limit) / bridge.localRelationRowBytes(OP_SCHEMA)).toLong
-  }
+  def driverFoldCap(spark: SparkSession): Long = bridge.broadcastRows(spark, OP_SCHEMA)
 
   /** [[overlay]] of a driver fold over `base`, or its [[live]] quads
     * alone with no base. The base loses every quad the fold touched

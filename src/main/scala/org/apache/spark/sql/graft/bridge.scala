@@ -39,16 +39,19 @@ object bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
 
-  /** Spark's own per-row size estimate for a `LocalRelation` of
-    * `schema` (its `computeStats` multiplies it by the row count), and
-    * the session's `spark.sql.autoBroadcastJoinThreshold` the planner
-    * compares such estimates against (≤ 0 = never broadcast).
+  /** The most rows of `schema` the driver may hold: the most a
+    * `LocalRelation` can have while Spark's own size estimate for it
+    * (its `computeStats`: rows × per-row size) stays under the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the size below which Spark
+    * ships a relation to every task anyway. A threshold ≤ 0 means
+    * never (-1).
     */
-  def localRelationRowBytes(schema: StructType): BigInt =
-    EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(schema))
-  def broadcastThreshold(spark: SparkSession): Long =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  def broadcastRows(spark: SparkSession, schema: StructType): Long = {
+    val limit = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.autoBroadcastJoinThreshold
+    if (limit <= 0) -1L
+    else (BigInt(limit) / EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(schema))).toLong
+  }
 
   /** Write `rows`, internal rows of `schema`, as ONE parquet file in the
     * directory `dir`, on the calling thread and with no Spark job. It

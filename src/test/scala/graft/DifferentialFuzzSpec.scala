@@ -1126,15 +1126,26 @@ class DifferentialFuzzSpec extends AnyFunSuite {
     info(s"${N / 2} generated, $skipped skipped")
   }
 
-  test(s"differential: engine matches the naive evaluator on $N random queries") {
+  /** Generated case `i`: default-graph triples, named-graph quads and
+    * the query, all drawn from one seeded stream.
+    */
+  private def generated(i: Int) = {
+    val rnd = new scala.util.Random(SEED * 1000003L + i)
+    val data = genData(rnd)
+    val named = genNamedData(rnd)
+    (data, named, genQuery(rnd))
+  }
+
+  /** Runs generated cases (triples, named quads, query) through the
+    * engine and the naive evaluator and fails on the first divergence,
+    * with its repro. Returns how many were skipped.
+    */
+  private def differential(
+      cases: Seq[(Seq[(Term, Term, Term)], Seq[(Term, Term, Term, Term)], GenQuery)]): Int = {
     import spark.implicits._
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     var skipped = 0
-    (0 until N).foreach { i =>
-      val rnd = new scala.util.Random(SEED * 1000003L + i)
-      val data = genData(rnd)
-      val named = genNamedData(rnd)
-      val q = genQuery(rnd)
+    cases.zipWithIndex.foreach { case ((data, named, q), i) =>
       if (q.project.isEmpty && q.aggQ.isEmpty) skipped += 1
       else {
         val naive = evalNaive(data, q, named)
@@ -1167,7 +1178,53 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       if (failures.nonEmpty)
         fail(failures.head) // first divergence with its full repro
     }
+    skipped
+  }
+
+  test(s"differential: engine matches the naive evaluator on $N random queries") {
+    val skipped = differential((0 until N).map(generated))
     info(s"$N generated, $skipped skipped (empty projection / size cap)")
+  }
+
+  test("differential: seeded closures past the driver's cap take the distributed loop") {
+    // a `+`/`*` path with a constant endpoint runs its BFS on the driver
+    // while the visited set stays under the broadcast threshold, which
+    // the generated datasets never reach. At 1 byte the driver holds no
+    // node, so every closure hands its first hop to the distributed
+    // loop. Each case is a generated closure pattern that reaches a node
+    // only on its second hop, so that loop has work left, run on its
+    // own: the rest of its generated query mostly filters the closure
+    // down to its first hop.
+    def deep(data: Seq[(Term, Term, Term)], pt: PathTP): Boolean = {
+      val inner = pt.path match {
+        case PPlusE(i) => Some(i)
+        case PStarE(i) => Some(i)
+        case _ => None
+      }
+      val from = (pt.s, pt.o) match {
+        case (C(t), V(_)) => inner.map(i => (t, pathPairsN(data, i)))
+        case (V(_), C(t)) => inner.map(i => (t, pathPairsN(data, i).map(_.swap)))
+        case _ => None
+      }
+      from.exists { case (seed, pairs) =>
+        val first = pairs.collect { case (a, b) if a == seed => b }.toSet
+        pairs.exists { case (a, b) => first(a) && !first(b) }
+      }
+    }
+    val cases = (0 until 20 * N).iterator.flatMap { i =>
+      val (data, named, q) = generated(i)
+      q.paths.find(deep(data, _)).map { pt =>
+        (data, named, GenQuery(bgp = Seq.empty, paths = Seq(pt), union = None,
+          optionals = Seq.empty, minus = None, notExists = None, binds = Seq.empty,
+          filters = Seq.empty, project = Seq(pt.s, pt.o).collect { case V(v) => v },
+          distinct = false, aggQ = None, having = None, values = None))
+      }
+    }.take(3).toSeq
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, 1L)
+    val skipped = try differential(cases) finally spark.conf.set(key, prev)
+    assert(cases.size == 3 && skipped == 0)
   }
 
   // --- ORDER BY / LIMIT / OFFSET differential --------------------------------

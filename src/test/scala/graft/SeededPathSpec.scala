@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,8 +10,9 @@ import graft.sparql.Sparql
 
 /** Path closures at sizes the small fixtures never reach: the seeded
   * (constant-endpoint) closure on a chain long enough to run many BFS
-  * rounds — the shape the scale entry uses — checked against the
-  * unseeded doubling closure, and the dictionary-encoded doubling
+  * hops — the shape the scale entry uses — checked against the
+  * unseeded doubling closure, on the driver and past the driver's cap
+  * in the distributed loop, and the dictionary-encoded doubling
   * closure that one-step relations of 65 536+ edges take.
   */
 class SeededPathSpec extends AnyFunSuite {
@@ -89,6 +91,115 @@ class SeededPathSpec extends AnyFunSuite {
         .select(col("o").getField("lex").as("l")).collect().map(_.getString(0)).toSet
       assert(seeded == full && seeded.size == 9)
     }
+  }
+
+  private val Next = s"<${NS}next>"
+  private def n(i: Long) = s"<${NS}n/$i>"
+
+  /** `n/s next n/o` for the (s, o) id pairs of `edges`: every edge in
+    * the default graph and in named graph `g/0`, and the edges whose
+    * source is not a multiple of 3 in `g/1` as well.
+    */
+  private def quadsOf(edges: DataFrame): DataFrame = {
+    def iri(lex: Column) = Term.column(Term.IRI, lex)
+    def node(id: Column) = iri(concat(lit(s"${NS}n/"), id.cast("string")))
+    def in(graph: Column, e: DataFrame) = e.select(graph.as("graph"),
+      node(col("s")).as("subject"), iri(lit(s"${NS}next")).as("predicate"),
+      node(col("o")).as("obj"))
+    in(lit(null).cast(termType), edges)
+      .unionByName(in(iri(lit(s"${NS}g/0")), edges))
+      .unionByName(in(iri(lit(s"${NS}g/1")), edges.filter(col("s") % 3 =!= 0)))
+  }
+
+  private def chainEdges = spark.range(25).select(col("id").as("s"), (col("id") + 1).as("o"))
+
+  /** A binary tree under 0 with a cycle back to it (6 → 0) and a cross
+    * edge (8 → 2).
+    */
+  private def branchingEdges = {
+    val s = spark
+    import s.implicits._
+    Seq(0L -> 1L, 0L -> 2L, 1L -> 3L, 1L -> 4L, 2L -> 5L, 2L -> 6L, 3L -> 7L,
+      4L -> 8L, 6L -> 0L, 8L -> 2L).toDF("s", "o")
+  }
+
+  private def withThreshold[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Every seeded shape — subject-seeded `+` and `*` from `k`,
+    * object-seeded `+` into `t`, and `+` from `k` under `GRAPH ?g` — run
+    * with the broadcast threshold at `bytes`: each equals the unseeded
+    * closure filtered to its seed, each took the distributed loop (it
+    * pins the parts of its visited set in the query's scope; the driver
+    * BFS pins nothing), and nothing stays pinned after the scope.
+    */
+  private def handOff(edges: DataFrame, k: Long, t: Long, bytes: Long): Unit = {
+    val q = quadsOf(edges)
+    def rows(query: String, cols: String*): Set[Seq[String]] =
+      Sparql.execute(q, query).select(cols.map(c => col(c).getField("lex")): _*)
+        .collect().map(_.toSeq.map(_.toString)).toSet
+    // the unseeded closures as (g?, s, x) lexical forms
+    val (plus, star, graphPlus) = Checkpoints.withScope((
+      rows(s"SELECT ?s ?x { ?s $Next+ ?x }", "s", "x"),
+      rows(s"SELECT ?s ?x { ?s $Next* ?x }", "s", "x"),
+      rows(s"SELECT ?g ?s ?x { GRAPH ?g { ?s $Next+ ?x } }", "g", "s", "x")))
+    def lex(i: Long) = s"${NS}n/$i"
+    val shapes = Seq(
+      ("+", s"SELECT ?x { ${n(k)} $Next+ ?x }", Seq("x"),
+        plus.collect { case Seq(s, x) if s == lex(k) => Seq(x) }),
+      ("*", s"SELECT ?x { ${n(k)} $Next* ?x }", Seq("x"),
+        star.collect { case Seq(s, x) if s == lex(k) => Seq(x) }),
+      ("object +", s"SELECT ?x { ?x $Next+ ${n(t)} }", Seq("x"),
+        plus.collect { case Seq(s, x) if x == lex(t) => Seq(s) }),
+      ("GRAPH ?g +", s"SELECT ?g ?x { GRAPH ?g { ${n(k)} $Next+ ?x } }", Seq("g", "x"),
+        graphPlus.collect { case Seq(g, s, x) if s == lex(k) => Seq(g, x) }))
+    for ((shape, seeded, cols, expected) <- shapes) withClue(s"$shape: ") {
+      val before = TestSpark.pinned()
+      val (got, handedOff) = withThreshold(bytes)(Checkpoints.withScope {
+        val got = rows(seeded, cols: _*)
+        (got, (TestSpark.pinned() -- before).nonEmpty)
+      })
+      assert(expected.nonEmpty)
+      assert(got == expected)
+      assert(handedOff, "the distributed loop did not run")
+      assert(TestSpark.awaitPinned(before) == before)
+    }
+  }
+
+  // Spark estimates a node row at 8 bytes plus 20 per string field: 88
+  // bytes, 168 under GRAPH ?var. So the driver BFS hands off partway
+  // through: 1 800 bytes hold 20 nodes (10 under GRAPH ?var) of the
+  // chain's 25, and 300 bytes hold 3 (1) of the tree's
+  test("seeded closures hand off to the distributed loop past the cap: chain") {
+    handOff(chainEdges, k = 0, t = 25, bytes = 1800)
+  }
+
+  test("seeded closures hand off to the distributed loop past the cap: branching, cyclic") {
+    handOff(branchingEdges, k = 0, t = 2, bytes = 300)
+  }
+
+  test("seeded closures run the distributed loop from the seed when the threshold is -1") {
+    handOff(branchingEdges, k = 1, t = 8, bytes = -1)
+  }
+
+  test("a seeded closure runs one Spark job per hop on the driver") {
+    // a 5-level binary tree under 1: node i → 2i, 2i + 1
+    val q = quadsOf(spark.range(2, 64).select((col("id") / 2).cast("long").as("s"),
+      col("id").as("o")))
+    val before = TestSpark.pinned()
+    val (reached, jobs) = TestSpark.jobsOf(Checkpoints.withScope(
+      Sparql.execute(q, s"SELECT ?x { ${n(1)} $Next+ ?x }").collect().length))
+    assert(reached == 62)
+    // one job materializes the step relation and one runs each of the
+    // 6 hops (the last finds nothing); the local result reads with at
+    // most one more (23 jobs when each BFS round ran in Spark)
+    info(s"$jobs Spark jobs")
+    assert(jobs <= 1 + 6 + 1, s"$jobs jobs")
+    assert(TestSpark.awaitPinned(before) == before)
   }
 
   test("encoded closure: exact +/* counts over 66k edges, grouped and not, nothing pinned") {
