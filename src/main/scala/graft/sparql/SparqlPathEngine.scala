@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.plans.Checkpoints
 import graft.rdf.{RdfParseException, Term}
@@ -146,52 +147,79 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
     *
     * The frontier expands on the driver, one Spark job per hop: the
     * materialized step relation is filtered by an in-set of the
-    * frontier's (pg?, ps) keys and the (pg?, po) rows it reaches are
-    * collected; the visited set is subtracted on the driver and what is
-    * new is the next frontier. The driver holds the visited set only
-    * while it fits under [[bridge.broadcastRows]] (the size Spark would
-    * ship to every task as a local or broadcast relation); it comes back
-    * as a local relation. Past that cap — or from the start when the
-    * broadcast threshold is ≤ 0 — the visited set and the frontier go to
-    * [[distributedBfs]], which continues exactly where the driver
-    * stopped.
+    * frontier's (pg?, ps) keys and the new (pg?, po) nodes it reaches
+    * are collected; they are the next frontier. The driver holds the
+    * visited set only while it fits under [[bridge.broadcastRows]] (the
+    * size Spark would ship to every task as a local or broadcast
+    * relation); it comes back as a local relation. A hop that would
+    * take it past that cap is dropped and the visited set before it
+    * goes to [[distributedBfs]], which continues exactly where the
+    * driver stopped; at a broadcast threshold ≤ 0 it runs from the seed.
     */
   private[sparql] def seededClosure(edges: DataFrame, seed: Term,
       grouped: Boolean, forward: Boolean): DataFrame = {
     val spark = edges.sparkSession
     val pg: Seq[Column] = if (grouped) Seq(col("pg")) else Seq.empty
-    // materialize the one-step relation ONCE: every hop reads it, and
-    // without the checkpoint each hop re-derives it from the source scan
-    // (measured: 24 re-scans for a 6-round stride-4 loop — most of the
-    // entry's wall time). Freed once the closure is materialized.
-    val step = (
+    val flipped =
       if (forward) edges
       else edges.select(pg ++ Seq(col("po").as("ps"), col("ps").as("po")): _*)
-    ).localCheckpoint()
     // a reached node is a (pg?, po) row; its terms are also the
     // (pg?, ps) key of the hop out of it
     val nodeCols = pg :+ col("po")
-    val nodeSchema = step.select(nodeCols: _*).schema
+    val nodeSchema = flipped.select(nodeCols: _*).schema
     val cap = bridge.broadcastRows(spark, nodeSchema)
-    val toKey = CatalystTypeConverters.createToCatalystConverter(nodeSchema)
-    def hop(from: Column): Set[Row] = step.filter(from).select(nodeCols: _*).collect().toSet
-    def local(rows: Set[Row]): DataFrame = spark.createDataFrame(rows.toSeq.asJava, nodeSchema)
+    val fromSeed = termEqFields("ps", seed)
     val visited =
-      if (cap < 0) distributedBfs(step, grouped,
-        Seq(step.filter(termEqFields("ps", seed)).select(nodeCols: _*).distinct()))
+      if (cap < 0) distributedBfs(flipped, grouped, fromSeed, Seq.empty)
       else {
-        var frontier = hop(termEqFields("ps", seed))
-        var seen = frontier
-        while (frontier.nonEmpty && seen.size <= cap) {
-          val keys = InSet(bridge.expression(struct(pg :+ col("ps"): _*)), frontier.map(toKey))
-          frontier = hop(bridge.column(keys)) -- seen
-          seen ++= frontier
+        // materialize the one-step relation ONCE: every hop reads it,
+        // and without the checkpoint each hop re-derives it from the
+        // source scan (measured: 24 re-scans for a 6-round stride-4
+        // loop — most of the entry's wall time)
+        val step = flipped.localCheckpoint()
+        val toKey = CatalystTypeConverters.createToCatalystConverter(nodeSchema)
+        def in(c: Column, values: Set[Any]) = bridge.column(InSet(bridge.expression(c), values))
+        // the frontier's rows of the step relation: a hash lookup of the
+        // key's lexical form first, and the full struct key (ordered
+        // comparisons) only on the rows that pass it
+        def out(frontier: Set[Row]): Column = {
+          val lex = frontier.map[Any](r => UTF8String.fromString(r.getStruct(r.length - 1).getAs[String]("lex")))
+          in(col("ps.lex"), lex) && in(struct(pg :+ col("ps"): _*), frontier.map[Any](toKey))
         }
-        if (seen.size <= cap) local(seen)
-        else distributedBfs(step, grouped,
-          Seq(frontier, seen -- frontier).filter(_.nonEmpty).map(local))
+        // the nodes one hop out of `from` that `seen` lacks, or None when
+        // the visited set would pass the cap. Each task returns at most
+        // cap + 1 distinct nodes: one that reaches that many has more new
+        // ones than the room left, so the hop overflows, and one that
+        // reaches fewer has returned them all. The driver stops adding
+        // nodes once the hop overflows, so it holds at most about twice
+        // the cap.
+        def hop(from: Column, seen: Set[Row]): Option[Set[Row]] = {
+          val most = math.min(cap + 1, Int.MaxValue).toInt
+          var reached = Set.empty[Row]
+          var over = false
+          spark.sparkContext.runJob(step.filter(from).select(nodeCols: _*).rdd,
+            (rows: Iterator[Row]) => rows.distinct.take(most).toArray,
+            (_: Int, rows: Array[Row]) => if (!over) {
+              reached ++= rows.iterator.filterNot(seen)
+              over = rows.length == most || seen.size + reached.size > cap
+            })
+          Option.when(!over)(reached)
+        }
+        var frontier = Set.empty[Row]
+        var seen = Set.empty[Row]
+        var next = hop(fromSeed, seen)
+        while (next.exists(_.nonEmpty)) {
+          frontier = next.get
+          seen ++= frontier
+          next = hop(out(frontier), seen)
+        }
+        val v =
+          if (next.isDefined) spark.createDataFrame(seen.toSeq.asJava, nodeSchema)
+          else distributedBfs(step, grouped, fromSeed, Seq(frontier, seen -- frontier)
+            .filter(_.nonEmpty).map(rows => spark.createDataFrame(rows.toSeq.asJava, nodeSchema)))
+        Checkpoints.unpersist(step)
+        v
       }
-    Checkpoints.unpersist(step)
     val tl = Term.column(seed)
     if (forward) visited.select(pg ++ Seq(tl.as("ps"), col("po")): _*)
     else visited.select(pg ++ Seq(col("po").as("ps"), tl.as("po")): _*)
@@ -200,14 +228,15 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
   /** The exact distributed BFS over the one-step relation `step`, for
     * a visited set past the driver's cap. `start` holds disjoint
     * (pg?, po) node sets: the frontier first, then any nodes visited
-    * before it. Returns the (pg?, po) visited set. Each round advances several hops
+    * before it; empty, the BFS starts with the step rows `fromSeed`
+    * selects. Returns the (pg?, po) visited set. Each round advances several hops
     * and materializes its NEW nodes as one checkpointed part,
     * anti-joined against the parts before it; superseded state is
     * unpersisted at once and the parts are [[Checkpoints.register]]ed
     * with the caller's scope.
     */
   private def distributedBfs(step: DataFrame, grouped: Boolean,
-      start: Seq[DataFrame]): DataFrame = {
+      fromSeed: Column, start: Seq[DataFrame]): DataFrame = {
     def pg(prefix: String = ""): Seq[Column] =
       if (grouped) Seq(col(s"${prefix}pg")) else Seq.empty
     // hash-partitioned on the join key: localCheckpoint preserves the
@@ -236,7 +265,10 @@ private[sparql] trait SparqlPathEngine { this: Sparql.type =>
       (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), ck,
         obs.get("n").asInstanceOf[Long])
     }
-    val materialized = start.map(ckpt)
+    val materialized = (
+      if (start.nonEmpty) start
+      else Seq(keyed.filter(fromSeed).select(pg() :+ col("po"): _*).distinct())
+    ).map(ckpt)
     var parts = materialized.map(_._1).toList
     var handles = materialized.map(_._2).toList
     var frontier = parts.head

@@ -123,6 +123,12 @@ class SeededPathSpec extends AnyFunSuite {
       4L -> 8L, 6L -> 0L, 8L -> 2L).toDF("s", "o")
   }
 
+  /** A hub: 0 → 1..20 → 21 → 22. */
+  private def hubEdges =
+    spark.range(1, 21).select(lit(0L).as("s"), col("id").as("o"))
+      .unionByName(spark.range(1, 21).select(col("id").as("s"), lit(21L).as("o")))
+      .unionByName(spark.range(1).select(lit(21L).as("s"), lit(22L).as("o")))
+
   private def withThreshold[T](bytes: Long)(body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
@@ -180,6 +186,12 @@ class SeededPathSpec extends AnyFunSuite {
 
   test("seeded closures hand off to the distributed loop past the cap: branching, cyclic") {
     handOff(branchingEdges, k = 0, t = 2, bytes = 300)
+  }
+
+  test("seeded closures hand off to the distributed loop when the seed's first hop passes the cap") {
+    // 880 bytes hold 10 nodes (5 under GRAPH ?var); the hub's first hop
+    // reaches 20, in either direction
+    handOff(hubEdges, k = 0, t = 21, bytes = 880)
   }
 
   test("seeded closures run the distributed loop from the seed when the threshold is -1") {
