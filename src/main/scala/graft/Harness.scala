@@ -46,6 +46,19 @@ object Harness {
     spark
   }
 
+  /** Run `body` with the session conf `overrides` set, then restore
+    * each key: set back to its saved value if it had one, unset if not.
+    */
+  def withConf[T](spark: SparkSession, overrides: (String, String)*)(body: => T): T = {
+    val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Run one entry inside a [[Checkpoints.withScope]] — the body must
     * consume its result — then sweep whatever the scope did not free,
     * so a leak cannot tax the entries after it. The sweep is a safety

@@ -7,7 +7,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
+
+import graft.store.StateFile
 
 /** Durable offset state with a JSON state file — byte-compatible with
   * the reference's FusekiOffsetStore (format
@@ -24,7 +25,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   *    FusekiOffsetStore.java:224-255, README.md:189-191)
   *  - stored dataset name must match configured, prefix tolerated for
   *    legacy trailing segments (FusekiOffsetStore.java:170-177)
-  *  - defensive write: backup → temp → ATOMIC_MOVE → drop backup
+  *  - defensive write: backup → [[StateFile.replace]] → drop backup
   *    (writeStateFile, FusekiOffsetStore.java:330-390)
   *  - copyTo refuses the live file (FusekiOffsetStore.java:400-405)
   */
@@ -70,22 +71,11 @@ final class OffsetStore(val datasetName: String, val stateFile: Path, consumerGr
   // --- read path --------------------------------------------------------------
 
   private def loadStateFile(): Unit = {
-    if (!Files.exists(stateFile)) {
-      // prefer an orphaned temp (crash between temp write and move),
-      // then a backup
-      val temp = sibling(".temp")
-      val backup = sibling(".backup")
-      if (Files.exists(temp) && tryLoad(temp)) { return }
-      if (Files.exists(backup) && tryLoad(backup)) { return }
-      return
-    }
-    if (!tryLoad(stateFile)) {
-      discardCorrupt()
-      val temp = sibling(".temp")
-      val backup = sibling(".backup")
-      if (Files.exists(temp) && tryLoad(temp)) return
-      if (Files.exists(backup) && tryLoad(backup)) return
-    }
+    val loaded = Files.exists(stateFile) && (tryLoad(stateFile) || { discardCorrupt(); false })
+    // a missing or corrupt main file: prefer an orphaned temp (crash
+    // between temp write and move), then a backup
+    if (!loaded)
+      Seq(StateFile.temp(stateFile), sibling(".backup")).find(p => Files.exists(p) && tryLoad(p))
   }
 
   /** Load one candidate file. Corruption (unparseable JSON, size/depth
@@ -150,14 +140,14 @@ final class OffsetStore(val datasetName: String, val stateFile: Path, consumerGr
 
   // --- write path -------------------------------------------------------------
 
+  /** The backup copy brackets the one state-file swap
+    * ([[StateFile.replace]], whose `.temp` the loader recovers from).
+    */
   private def writeStateFile(): Unit = {
     val backup = sibling(".backup")
-    val temp = sibling(".temp")
     if (Files.exists(stateFile))
       Files.copy(stateFile, backup, StandardCopyOption.REPLACE_EXISTING)
-    Files.write(temp, renderJson().getBytes(UTF_8))
-    Files.move(temp, stateFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    StateFile.replace(stateFile, renderJson())
     Files.deleteIfExists(backup)
   }
 

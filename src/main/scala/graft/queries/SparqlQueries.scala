@@ -121,10 +121,10 @@ object SparqlQueries {
         col("bal").getField("lex").cast("double").as("s_acctbal"))
     },
     // Cost-based BGP ordering from the store's own maintained census:
-    // an AggView grouped by predicate feeds executeWithStats, which
-    // breaks same-boundedness-class ties by real leaf cardinality
-    // (BgpReorderSpec pins the picked orders; this entry pins that the
-    // stats path returns oracle-exact results end-to-end).
+    // an AggView grouped by predicate feeds the query's EvalContext
+    // census, which breaks same-boundedness-class ties by real leaf
+    // cardinality (BgpReorderSpec pins the picked orders; this entry
+    // pins that the stats path returns oracle-exact results end-to-end).
     "sparql_stats_bgp" -> { (s, dir) =>
       import s.implicits._
       val store = fixture("sqstats", dir, s) { st =>
@@ -144,10 +144,10 @@ object SparqlQueries {
       val view = new graft.store.AggView(s, store,
         graft.Harness.scratchDir("sqstatsview").toString, Seq("predicate"))
       view.refresh()
-      val res = Sparql.executeWithStats(store.quads(),
+      val res = Sparql.execute(store.quads(),
         s"SELECT ?s ?name ?nk { ?s <${NS}name> ?name . " +
           s"?s <${NS}nationkey> ?nk } ORDER BY ?s",
-        view.predicateCounts())
+        Sparql.EvalContext(census = view.predicateCounts()))
       res.select(
         regexp_extract(col("s").getField("lex"), "supp/(\\d+)$", 1)
           .cast("long").as("s_suppkey"),

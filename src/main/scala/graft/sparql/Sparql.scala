@@ -357,11 +357,17 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     * output reproducible — the oracle-safe form; the no-context
     * [[execute]] overload draws a fresh clock and seed per query,
     * which is the ARQ behavior.
+    *
+    * `census` is a predicate-cardinality census (lex → count) steering
+    * the BGP join order ([[reorderBgpRuns]]); the store maintains one
+    * incrementally (`AggView(..., Seq("predicate")).predicateCounts()`).
+    * Empty means no statistics.
     */
   final case class EvalContext(
       now: java.time.Instant = java.time.Instant.now(),
       seed: Long = scala.util.Random.nextLong(),
-      service: ServiceClient = SparqlService.Http) {
+      service: ServiceClient = SparqlService.Http,
+      census: Map[String, Long] = Map.empty) {
     private val sites = new java.util.concurrent.atomic.AtomicInteger(0)
     /** A distinct deterministic sub-seed per builtin call site. */
     private[sparql] def nextSiteSeed(): Long =
@@ -827,37 +833,6 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   private def compile(quads: DataFrame, pattern: Pattern): DataFrame =
     compileSol(quads, pattern).df
 
-  /** Per-thread predicate-cardinality census consulted by the BGP
-    * reorder — the store side maintains it incrementally
-    * ([[graft.store.AggView]] grouped by predicate), so the ordering
-    * is COST-BASED where Catalyst has no statistics at all (these are
-    * self-joins of one DataFrame; CBO never sees them). The census is
-    * treated as complete: a predicate absent from a non-empty map
-    * estimates to ZERO rows (its leaf empties the whole join — the
-    * best possible first pick). Staleness only affects ordering,
-    * never results. Thread-scoped so concurrent queries cannot
-    * see each other's stats.
-    */
-  private val bgpStats =
-    new ThreadLocal[Map[String, Long]] {
-      override def initialValue: Map[String, Long] = Map.empty
-    }
-
-  /** Run `f` with a predicate→count census steering BGP join order. */
-  def withBgpStats[T](stats: Map[String, Long])(f: => T): T = {
-    val prev = bgpStats.get()
-    bgpStats.set(stats)
-    try f finally bgpStats.set(prev)
-  }
-
-  /** [[execute]] with a predicate-cardinality census (lex → count)
-    * steering the BGP join order — pair with
-    * `AggView(..., Seq("predicate")).predicateCounts()`.
-    */
-  def executeWithStats(quads: DataFrame, text: String,
-      predicateCounts: Map[String, Long]): DataFrame =
-    withBgpStats(predicateCounts)(execute(quads, text))
-
   /** Join-order heuristic for BGPs. Inner joins of triple patterns are
     * commutative, but the compiler folds them in author order and
     * Catalyst never reorders them (no table stats, CBO off), so at
@@ -872,11 +847,19 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     * left joins don't commute, and a pattern may legally share a
     * variable with a later BIND target (§10.1) only on its own side
     * of the BIND.
+    *
+    * `census` (the query's [[EvalContext]] census) makes the order
+    * COST-BASED where Catalyst has no statistics at all (these are
+    * self-joins of one DataFrame; CBO never sees them). It is treated
+    * as complete: a predicate absent from a non-empty census estimates
+    * to ZERO rows (its leaf empties the whole join — the best possible
+    * first pick). Staleness only affects ordering, never results.
     */
-  private[sparql] def reorderBgpRuns(elems: Seq[GroupElem]): Seq[GroupElem] = {
+  private[sparql] def reorderBgpRuns(elems: Seq[GroupElem],
+      census: Map[String, Long] = Map.empty): Seq[GroupElem] = {
     val out = Seq.newBuilder[GroupElem]
     val run = scala.collection.mutable.ArrayBuffer.empty[GroupElem]
-    def flush(): Unit = { out ++= reorderJoinRun(run.toSeq); run.clear() }
+    def flush(): Unit = { out ++= reorderJoinRun(run.toSeq, census); run.clear() }
     elems.foreach {
       case e @ (PatElem(_) | PathElem(_, _, _, _)) => run += e
       case other => flush(); out += other
@@ -886,8 +869,9 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
   }
 
   /** Spec-convenience wrapper over [[reorderJoinRun]] for plain BGPs. */
-  private[sparql] def reorderBgp(tps: Seq[TriplePattern]): Seq[TriplePattern] =
-    reorderJoinRun(tps.map(PatElem.apply)).collect { case PatElem(tp) => tp }
+  private[sparql] def reorderBgp(tps: Seq[TriplePattern],
+      census: Map[String, Long] = Map.empty): Seq[TriplePattern] =
+    reorderJoinRun(tps.map(PatElem.apply), census).collect { case PatElem(tp) => tp }
 
   // blank-node labels are non-distinguished VARIABLES (deblank): they
   // carry connectivity and are never constants
@@ -913,15 +897,14 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     case _ => 0
   }
 
-  /** Estimated leaf cardinality from the thread's predicate census:
+  /** Estimated leaf cardinality from the predicate census `stats`:
     * the count of a constant-IRI predicate (absent from a non-empty
     * census = 0 — the census is complete), MaxValue when unknowable
     * (variable predicate, closure path, no census). Only a
     * same-boundedness-class tie-break: a constant object still beats
     * a merely-rare predicate.
     */
-  private def runElemEst(e: GroupElem): Long = {
-    val stats = bgpStats.get()
+  private def runElemEst(e: GroupElem, stats: Map[String, Long]): Long = {
     if (stats.isEmpty) Long.MaxValue
     else e match {
       case PatElem(tp) => tp.p match {
@@ -958,7 +941,8 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
     case _ => Long.MaxValue
   }
 
-  private def reorderJoinRun(es: Seq[GroupElem]): Seq[GroupElem] =
+  private def reorderJoinRun(es: Seq[GroupElem],
+      census: Map[String, Long]): Seq[GroupElem] =
     if (es.size <= 1) es
     else {
       val remaining = scala.collection.mutable.ArrayBuffer(es.zipWithIndex: _*)
@@ -969,7 +953,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
           runElemVars(e).intersect(bound).nonEmpty }
         val pool = if (connected.nonEmpty) connected else remaining
         val (e, i) = pool.minBy { case (t, j) =>
-          (-runElemScore(t), runElemEst(t), j) }
+          (-runElemScore(t), runElemEst(t, census), j) }
         picked += e
         bound ++= runElemVars(e)
         remaining -= ((e, i))
@@ -1026,7 +1010,7 @@ object Sparql extends SparqlPathEngine with SparqlExprCompiler with SparqlFilter
       val existsElems = elems.collect { case e: ExistsElem => e }
       val bindingElems = elems.filterNot(e =>
         e.isInstanceOf[FilterElem] || e.isInstanceOf[ExistsElem])
-      reorderBgpRuns(bindingElems).foreach {
+      reorderBgpRuns(bindingElems, currentCtx.census).foreach {
         case PatElem(tp) =>
           val (pdf, leafNonNull) = compilePattern(quads, deblankTp(tp))
           val next = Sol(pdf, Set.empty, leafNonNull)

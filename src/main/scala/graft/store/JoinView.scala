@@ -1,8 +1,5 @@
 package graft.store
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,46 +29,17 @@ import graft.rdf.Term
   *     touched set map-side before the star join.
   *
   * A full star join runs only on the first refresh or when compaction
-  * passed the view's as-of point (the same CDC-replayability floor as
-  * [[AggView]]). Persistence is the store's pointer discipline:
-  * generation directory + atomic `_view` pointer move, so a reader
-  * holding the old generation keeps a consistent snapshot.
+  * passed the view's as-of point. Persistence, that CDC-replayability
+  * floor and the refresh skeleton are [[IncrementalView]]'s.
   *
   * Multiplicities are SPARQL's: a subject with two objects under one
   * predicate contributes the cross product of its leaf matches, and a
-  * subject missing ANY leaf contributes nothing (inner star).
+  * subject missing ANY leaf contributes nothing (inner star). The
+  * rows are `subject` + `o0`…`o{k-1}` term structs.
   */
 final class JoinView(spark: SparkSession, store: QuadStore, path: String,
-    predicates: Seq[Term]) {
+    predicates: Seq[Term]) extends IncrementalView(spark, store, path) {
   require(predicates.nonEmpty, "a star view needs at least one predicate")
-
-  private val dir = Paths.get(path)
-  Files.createDirectories(dir)
-  private def pointerFile = dir.resolve("_view")
-
-  private def readPointer(): Option[(Long, String)] =
-    if (!Files.exists(pointerFile)) None
-    else new String(Files.readAllBytes(pointerFile), StandardCharsets.UTF_8)
-      .trim.split(" ", 2) match {
-        case Array(b, name) => Some((b.toLong, name))
-        case _ => None
-      }
-
-  private def writePointer(batch: Long, name: String): Unit = {
-    val tmp = dir.resolve("_view.temp")
-    Files.write(tmp, s"$batch $name".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, pointerFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Batch the persisted rows reflect; −1 before the first refresh. */
-  def refreshedAt: Long = readPointer().map(_._1).getOrElse(-1L)
-
-  /** The maintained rows: `subject` + `o0`…`o{k-1}` term structs. */
-  def result(): DataFrame = readPointer() match {
-    case Some((_, name)) => spark.read.parquet(dir.resolve(name).toString)
-    case None => throw new IllegalStateException("view never refreshed")
-  }
 
   /** The star join over `state`, optionally restricted to a (small,
     * broadcast) subject set before any join runs.
@@ -89,36 +57,21 @@ final class JoinView(spark: SparkSession, store: QuadStore, path: String,
     }.reduce((a, b) => a.join(b, Seq("subject")))
   }
 
-  /** Bring the view up to the store's current committed batch; returns
-    * that batch. Incremental (touched-subject recompute) when the CDC
-    * window is replayable, one full star join otherwise.
+  /** One full star join. */
+  protected def initial(state: DataFrame): DataFrame = starJoin(state, None)
+
+  /** Touched-subject recompute: the prior rows of the subjects the
+    * window touched with a view predicate are dropped and recomputed
+    * against the state as of `to`.
     */
-  def refresh(): Long = synchronized {
-    val to = store.currentBatchId
-    val current = readPointer()
-    val from = current.map(_._1).getOrElse(-1L)
-    if (to <= from) return from
-    val predLex = predicates.map(_.lex)
-    val next = current match {
-      case Some((f, _)) if f >= store.highWaterBatchId =>
-        val touched = store.changes(f, to)
-          .filter(col("graph").isNull &&
-            col("predicate.termType") === Term.IRI &&
-            col("predicate.lex").isin(predLex: _*))
-          .select(col("subject")).distinct()
-        if (touched.isEmpty) result() // net-irrelevant window
-        else {
-          val kept = result()
-            .join(broadcast(touched), Seq("subject"), "left_anti")
-          kept.unionByName(starJoin(store.quadsAt(to), Some(touched)))
-        }
-      case _ => starJoin(store.quadsAt(to), None)
-    }
-    val gen = current.map(_._2.stripPrefix("data-").split("-g").last.toInt + 1)
-      .getOrElse(0)
-    val name = s"data-b$to-g$gen"
-    next.write.mode("overwrite").parquet(dir.resolve(name).toString)
-    writePointer(to, name)
-    to
+  protected def advance(prior: DataFrame, from: Long, to: Long): DataFrame = {
+    val touched = store.changes(from, to)
+      .filter(col("graph").isNull &&
+        col("predicate.termType") === Term.IRI &&
+        col("predicate.lex").isin(predicates.map(_.lex): _*))
+      .select(col("subject")).distinct()
+    if (touched.isEmpty) prior // net-irrelevant window
+    else prior.join(broadcast(touched), Seq("subject"), "left_anti")
+      .unionByName(starJoin(store.quadsAt(to), Some(touched)))
   }
 }

@@ -1,7 +1,6 @@
 package graft.store
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
@@ -20,9 +19,10 @@ import graft.rdf.{PatchOp, Quad}
   * Layout: an LSM-ish op log. Each committed micro-batch writes one
   * immutable parquet segment of (op A|D, seq, graph, subject,
   * predicate, obj) rows, then atomically swings the `_version` pointer
-  * file. A batch whose ops the driver holds ([[commitRows]]) writes its
-  * segment as one file from the calling thread, with no Spark job; a
-  * DataFrame batch ([[commitOps]]) writes it with a Spark job. Readers
+  * file ([[StateFile.replace]], like every state file here). A batch
+  * whose ops the driver holds ([[commitRows]]) writes its segment as
+  * one file from the calling thread, with no Spark job; a DataFrame
+  * batch ([[commitOps]]) writes it with a Spark job. Readers
   * list only committed segments, so a crash mid-write is invisible (the
   * reference gets the same from DatasetGraph transactions,
   * FusekiProjector.java:484-490/514-573).
@@ -100,17 +100,13 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 
   private case class Version(segments: Seq[SegRef], highWater: Long)
 
-  private def readVersion(): Version = {
-    if (!Files.exists(versionFile)) Version(Seq.empty, -1L)
-    else {
-      val lines = new String(Files.readAllBytes(versionFile), StandardCharsets.UTF_8)
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+  private def readVersion(): Version =
+    StateFile.read(versionFile).fold(Version(Seq.empty, -1L)) { text =>
+      val lines = text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
       val hw = lines.collectFirst { case l if l.startsWith("#hw:") => l.drop(4).toLong }
         .getOrElse(-1L)
-      val segs = lines.filterNot(_.startsWith("#")).map(SegRef.parse)
-      Version(segs, hw)
+      Version(lines.filterNot(_.startsWith("#")).map(SegRef.parse), hw)
     }
-  }
 
   /** The published driver fold; a reader whose version does not list
     * the same segments reads segments instead.
@@ -138,8 +134,10 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * compaction high-water, -1 for an empty store — the "as of now"
     * point for [[AggView]]-style consumers.
     */
-  def currentBatchId: Long =
-    math.max(availableBatches().maxOption.getOrElse(-1L), highWaterBatchId)
+  def currentBatchId: Long = {
+    val v = readVersion()
+    (v.segments.flatMap(_.batchId) :+ v.highWater).max
+  }
 
   /** One past committed history: the id a FRESH writer (projector
     * restart, HTTP mutation) must append under, so it never replays
@@ -153,19 +151,13 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     */
   def highWaterBatchId: Long = readVersion().highWater
 
-  /** Atomic pointer update: temp + ATOMIC_MOVE, with a `.backup` of the
-    * previous pointer (the reference's defensive state-file dance,
-    * FusekiOffsetStore.java:330-390).
+  /** Atomic pointer update ([[StateFile.replace]]): a reader sees the old
+    * pointer or the new one, never a torn one, so no backup is kept.
     */
-  private def writeVersion(v: Version): Unit = {
-    val tmp = dir.resolve("_version.temp")
-    val body = (if (v.highWater >= 0) Seq(s"#hw:${v.highWater}") else Seq.empty) ++
-      v.segments.map(_.name)
-    Files.write(tmp, body.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    if (Files.exists(versionFile))
-      Files.copy(versionFile, dir.resolve("_version.backup"), StandardCopyOption.REPLACE_EXISTING)
-    Files.move(tmp, versionFile, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeVersion(v: Version): Unit =
+    StateFile.replace(versionFile,
+      ((if (v.highWater >= 0) Seq(s"#hw:${v.highWater}") else Seq.empty) ++
+        v.segments.map(_.name)).mkString("\n"))
 
   // --- writes ---------------------------------------------------------------
 
@@ -637,21 +629,15 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 
   private def retiredFile = dir.resolve("_retired")
 
-  /** The gc grace journal: dead path → millis first seen dead. */
+  /** The gc grace journal: dead path → millis first seen dead; a corrupt
+    * line reads as never-seen.
+    */
   private def readRetired(): Map[String, Long] =
-    if (!Files.exists(retiredFile)) Map.empty
-    else new String(Files.readAllBytes(retiredFile), StandardCharsets.UTF_8)
-      .split("\n").toSeq.flatMap { line =>
-        line.split("\t", 2) match {
-          case Array(k, t) => t.toLongOption.map(k -> _)
-          case _ => None // corrupt line: treat as never-seen
-        }
-      }.toMap
+    StateFile.readMap(retiredFile).flatMap { case (k, t) => t.toLongOption.map(k -> _) }
 
   private def writeRetired(entries: Map[String, Long]): Unit =
     if (entries.isEmpty) Files.deleteIfExists(retiredFile)
-    else Files.write(retiredFile, entries.toSeq.sortBy(_._1)
-      .map { case (k, t) => s"$k\t$t" }.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    else StateFile.replaceMap(retiredFile, entries.map { case (k, t) => k -> t.toString })
 
   // --- prefix state ---------------------------------------------------------
 
@@ -662,12 +648,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * RDFChangesApply; row 6 of SURVEY §2.1). Tiny, driver-side state —
     * single-writer like the version pointer.
     */
-  def prefixes(): Map[String, String] = {
-    if (!Files.exists(prefixFile)) Map.empty
-    else new String(Files.readAllBytes(prefixFile), StandardCharsets.UTF_8)
-      .split("\n").filter(_.contains("\t"))
-      .map { l => val Array(k, v) = l.split("\t", 2); k -> v }.toMap
-  }
+  def prefixes(): Map[String, String] = StateFile.readMap(prefixFile)
 
   /** Apply PA (add) / PD (delete) prefix ops in order. */
   def updatePrefixes(ops: Seq[(String, String, String)]): Unit = writeLock.synchronized {
@@ -678,11 +659,7 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
       case ("PD", p, _) => m -= p
       case _ => ()
     }
-    val tmp = dir.resolve("_prefixes.temp")
-    Files.write(tmp, m.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, prefixFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    StateFile.replaceMap(prefixFile, m)
   }
 }
 

@@ -151,25 +151,18 @@ object StreamingQueries {
     // aggregations flat; custom-state +0.3 s) favors RocksDB locally.
     // At scale the choice is structural, not a tuning knob: the HDFS
     // store holds state in JVM heap maps, so state beyond memory NEEDS
-    // RocksDB. Every override is session-scoped and restored below.
-    val overrides = Seq(
+    // RocksDB. Every override is session-scoped (`Harness.withConf`).
+    graft.Harness.withConf(spark,
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
+      df.writeStream.format("memory").queryName(name).outputMode(mode)
         .option("checkpointLocation", graft.Harness.scratchDir("ckpt").toString)
         .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+        .start().awaitTermination()
     }
-    df.sparkSession.table(name)
+    spark.table(name)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

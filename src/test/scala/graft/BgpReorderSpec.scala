@@ -76,19 +76,13 @@ class BgpReorderSpec extends AnyFunSuite {
     val absent = tp(v("s"), iri("ghost"), v("c"))
     assert(Sparql.reorderBgp(Seq(common, rare)) == Seq(common, rare))
     val census = Map("http://x/common" -> 1000000L, "http://x/rare" -> 10L)
-    Sparql.withBgpStats(census) {
-      assert(Sparql.reorderBgp(Seq(common, rare)) == Seq(rare, common))
-      assert(Sparql.reorderBgp(Seq(common, rare, absent)) ==
-        Seq(absent, rare, common))
-    }
+    assert(Sparql.reorderBgp(Seq(common, rare), census) == Seq(rare, common))
+    assert(Sparql.reorderBgp(Seq(common, rare, absent), census) ==
+      Seq(absent, rare, common))
     // stats NEVER promote a leaf across a boundedness class: the
     // constant-object leaf still leads over the rarest predicate
     val constObj = tp(v("s"), iri("common"), iri("K"))
-    Sparql.withBgpStats(census) {
-      assert(Sparql.reorderBgp(Seq(rare, constObj)).head == constObj)
-    }
-    // the thread-scoped census resets after the block
-    assert(Sparql.reorderBgp(Seq(common, rare)) == Seq(common, rare))
+    assert(Sparql.reorderBgp(Seq(rare, constObj), census).head == constObj)
   }
 
   test("census estimates path leaves: link/inverse/alternative/negated-set") {
@@ -99,22 +93,20 @@ class BgpReorderSpec extends AnyFunSuite {
       PAlt(PLink(Term.iri("http://x/common")), PLink(Term.iri("http://x/rare"))),
       v("c"))
     val census = Map("http://x/common" -> 1000000L, "http://x/rare" -> 10L)
-    Sparql.withBgpStats(census) {
-      assert(Sparql.reorderBgpRuns(Seq(commonAlt, rareInv)) ==
-        Seq(rareInv, commonAlt))
-      // negated set `!common` = total - common = 10 edges: beats the
-      // alternative (1,000,010) but loses to the inverse link (10) only
-      // by author order
-      val neg = PathElem(None, v("a"),
-        PNeg(Seq(Term.iri("http://x/common")), Seq.empty), v("d"))
-      assert(Sparql.reorderBgpRuns(Seq(commonAlt, neg)) ==
-        Seq(neg, commonAlt))
-      // a closure stays unknowable: the estimated leaf leads
-      val closure = PathElem(None, v("a"),
-        PPlus(PLink(Term.iri("http://x/rare"))), v("e"))
-      assert(Sparql.reorderBgpRuns(Seq(closure, rareInv)) ==
-        Seq(rareInv, closure))
-    }
+    assert(Sparql.reorderBgpRuns(Seq(commonAlt, rareInv), census) ==
+      Seq(rareInv, commonAlt))
+    // negated set `!common` = total - common = 10 edges: beats the
+    // alternative (1,000,010) but loses to the inverse link (10) only
+    // by author order
+    val neg = PathElem(None, v("a"),
+      PNeg(Seq(Term.iri("http://x/common")), Seq.empty), v("d"))
+    assert(Sparql.reorderBgpRuns(Seq(commonAlt, neg), census) ==
+      Seq(neg, commonAlt))
+    // a closure stays unknowable: the estimated leaf leads
+    val closure = PathElem(None, v("a"),
+      PPlus(PLink(Term.iri("http://x/rare"))), v("e"))
+    assert(Sparql.reorderBgpRuns(Seq(closure, rareInv), census) ==
+      Seq(rareInv, closure))
   }
 
   test("runs never cross OPTIONAL/BIND boundaries") {

@@ -1220,10 +1220,8 @@ class DifferentialFuzzSpec extends AnyFunSuite {
           distinct = false, aggQ = None, having = None, values = None))
       }
     }.take(3).toSeq
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, 1L)
-    val skipped = try differential(cases) finally spark.conf.set(key, prev)
+    val skipped = Harness.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "1")(differential(cases))
     assert(cases.size == 3 && skipped == 0)
   }
 

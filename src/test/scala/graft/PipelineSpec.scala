@@ -457,10 +457,8 @@ class PipelineSpec extends AnyFunSuite {
   test("bucketed corpus layout: co-located join plans with NO exchange") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val dir = Harness.scratchDir("graft-bucketed")
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // forbid broadcast: the pin proves co-location, not small-size luck
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try Harness.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       CorpusLayout.writeBucketed(docs, "bt_docs", s"$dir/docs", nBuckets = 8)
       CorpusLayout.writeBucketed(
         docs.select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("n_tokens")),
@@ -482,7 +480,6 @@ class PipelineSpec extends AnyFunSuite {
         "doc_id")
       assert(flat.queryExecution.executedPlan.toString.contains("Exchange"))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       CorpusLayout.dropTable(spark, "bt_docs")
       CorpusLayout.dropTable(spark, "bt_stats")
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)

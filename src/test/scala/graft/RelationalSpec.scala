@@ -90,14 +90,9 @@ class RelationalSpec extends AnyFunSuite {
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false")
-    val saved = start.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      start.foreach { case (k, v) => spark.conf.set(k, v) }
+    Harness.withConf(spark, start: _*) {
       assert(SparkEntry.queries("streaming_window")(spark, sf).count() > 0)
       assert(start.map { case (k, _) => k -> spark.conf.get(k) } == start)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

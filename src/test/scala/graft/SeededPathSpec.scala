@@ -129,13 +129,6 @@ class SeededPathSpec extends AnyFunSuite {
       .unionByName(spark.range(1, 21).select(col("id").as("s"), lit(21L).as("o")))
       .unionByName(spark.range(1).select(lit(21L).as("s"), lit(22L).as("o")))
 
-  private def withThreshold[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, bytes)
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** Every seeded shape — subject-seeded `+` and `*` from `k`,
     * object-seeded `+` into `t`, and `+` from `k` under `GRAPH ?g` — run
     * with the broadcast threshold at `bytes`: each equals the unseeded
@@ -165,7 +158,8 @@ class SeededPathSpec extends AnyFunSuite {
         graphPlus.collect { case Seq(g, s, x) if s == lex(k) => Seq(g, x) }))
     for ((shape, seeded, cols, expected) <- shapes) withClue(s"$shape: ") {
       val before = TestSpark.pinned()
-      val (got, handedOff) = withThreshold(bytes)(Checkpoints.withScope {
+      val (got, handedOff) = Harness.withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> bytes.toString)(Checkpoints.withScope {
         val got = rows(seeded, cols: _*)
         (got, (TestSpark.pinned() -- before).nonEmpty)
       })

@@ -369,7 +369,7 @@ class ServerSpec extends AnyFunSuite {
     }
   }
 
-  test("statistics view census steers executeWithStats; results exact") {
+  test("statistics view census in the EvalContext steers the BGP order; results exact") {
     val store = new QuadStore(spark, Harness.scratchDir("httpds").toString)
     store.addQuads(0, (1 to 20).flatMap { i =>
       Seq(
@@ -398,7 +398,7 @@ class ServerSpec extends AnyFunSuite {
       // order by it returns the same rows as the endpoint
       val census = view.predicateCounts()
       assert(census == Map("http://x/common" -> 20L, "http://x/rare" -> 21L))
-      val steered = Sparql.executeWithStats(store.quads(), q, census).collect()
+      val steered = Sparql.execute(store.quads(), q, Sparql.EvalContext(census = census)).collect()
       assert(steered.length == 21)
       assert(steered.toSeq == Sparql.execute(store.quads(), q).collect().toSeq)
     } finally srv.stop()

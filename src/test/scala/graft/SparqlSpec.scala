@@ -254,9 +254,7 @@ class SparqlSpec extends AnyFunSuite {
     val q = "SELECT ?s ?a ?b ?c { ?s <http://x/p1> ?a . " +
       "?s <http://x/p2> ?b . ?s <http://x/p3> ?c }"
     // force the join path bucketing serves (broadcast would hide it)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
+    Harness.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val res = Sparql.execute(t, q)
       val plan = res.queryExecution.executedPlan.toString
       // non-null === join keys + catalog bucket spec ⇒ every leaf scan
@@ -268,7 +266,7 @@ class SparqlSpec extends AnyFunSuite {
       // the plain (store) layout must agree on results — and shuffles
       val base = Sparql.execute(store.quads(), q)
       assert(base.count() == 200)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("FROM graph predicates reach the parquet scan") {

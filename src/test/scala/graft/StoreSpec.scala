@@ -10,7 +10,7 @@ import graft.connect.OffsetStore
 import graft.rdf.{NQuadsParser, Quad, Term}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
-import graft.store.{AggView, OpLog, QuadStore}
+import graft.store.{AggView, OpLog, QuadStore, StateFile}
 
 /** QuadStore scale/robustness behavior added in round 2, plus the
   * offset-key and blank-node-label fixes.
@@ -428,6 +428,41 @@ class StoreSpec extends AnyFunSuite {
     assert(store.gc(graceMillis = 60_000L, nowMillis = t0 + 60_000L) == 0)
   }
 
+  test("an orphaned .temp beside any state file is ignored and replaced by the next write") {
+    // what a crash between a state file's temp write and its move leaves
+    // behind; parseable, so a read that took it would show
+    val stray = Map("_version" -> "s00000099-b99", "_prefixes" -> "bad\thttp://bad/",
+      "_retired" -> "s00000000-b0-a\t0", "_view" -> "99 data-b99-g9")
+    def run(dirty: Boolean): Seq[Any] = {
+      val (dir, viewDir) = (Harness.scratchDir("qstemp"), Harness.scratchDir("qstempview"))
+      val store = new QuadStore(spark, dir.toString)
+      val view = new AggView(spark, store, viewDir.toString, Seq("predicate"))
+      store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
+      store.updatePrefixes(Seq(("PA", "ex", "http://example/")))
+      store.addQuads(0, Seq(q("a", "1"), q("c", "1"))) // retires the first copy
+      view.refresh()
+      def reads() = (store.currentBatchId, state(store.quads()), store.prefixes(),
+        view.refreshedAt, view.result().count())
+      val writes = Seq[(String, java.nio.file.Path, () => Any)](
+        ("_version", dir, () => store.addQuads(1, Seq(q("d", "1")))),
+        ("_prefixes", dir, () => store.updatePrefixes(Seq(("PA", "ex2", "http://example/2")))),
+        ("_retired", dir, () => store.gc(graceMillis = 60000L, nowMillis = 100000L)),
+        ("_view", viewDir, () => view.refresh()))
+      writes.flatMap { case (name, at, write) =>
+        val file = at.resolve(name)
+        if (dirty) {
+          val before = reads()
+          Files.writeString(StateFile.temp(file), stray(name))
+          assert(reads() == before, s"a read took $name.temp")
+        }
+        val result = write()
+        assert(!Files.exists(StateFile.temp(file)), s"$name.temp survived its write")
+        Seq(result, StateFile.read(file))
+      } :+ reads()
+    }
+    assert(run(dirty = true) == run(dirty = false))
+  }
+
   test("a bucket emptied by deletes does not resurrect from the older base") {
     val store = new QuadStore(spark, Harness.scratchDir("qsempty").toString,
       numBuckets = 2)
@@ -527,11 +562,8 @@ class StoreSpec extends AnyFunSuite {
     assert(scansTail(reopened.quads()) && !scansTail(store.quads()))
     assert(state(reopened.quads()) == state(store.quads()))
     // past the broadcast threshold the fold does not stay on the driver
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try store.addQuads(5, Seq(q("g", "1")))
-    finally spark.conf.set(key, old)
+    Harness.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      store.addQuads(5, Seq(q("g", "1"))))
     assert(scansTail(store.quads()))
     assert(state(store.quads()).size == 5)
   }
